@@ -9,7 +9,8 @@ import graft.etl.{Billing, Enrich, Ingest, InvoiceSink}
   * (/root/reference/src/openstack_billing_db/main.py:33-155).
   *
   * Reads nova-shaped parquet tables (`instances`, `instance_extra`,
-  * `instance_actions`) from --data-dir, folds the billing window through
+  * `instance_actions`) from --data-dir, or parses them from a mysqldump
+  * (--dump-file, --fetch-dump), folds the billing window through
   * the state machine, prices per-project service-unit hours, and writes
   * the 16-column invoice CSV. Rates arrive as CLI decimals exactly like
   * main.py:95-121; S3 upload becomes key computation only (zero-egress
@@ -175,10 +176,11 @@ object Main {
     // --dump-file: the reference's whole fetch.py entry path collapsed
     // into one hop — a mysqldump (plain or .sql.gz, local or s3a://;
     // gzip is non-splittable, so DumpConvert stages .gz through one
-    // streaming gunzip and parses the splittable copy in parallel)
-    // converts to parquet once and the run proceeds off the converted
-    // layout. A reference user can point the CLI straight at today's
-    // dump key.
+    // streaming gunzip and parses the splittable copy in parallel), or a
+    // per-controller dump directory merged by --dump-merge, is parsed
+    // once into memory and billed straight from the parse: no parquet
+    // copy, no second read. A reference user can point the CLI straight
+    // at today's dump key.
     // --fetch-dump: the reference's WHOLE fetch.py path (fetch.py:11-95)
     // — list today's (or --fetch-date's) per-controller prefixes in
     // fallback order, take the first object of the first non-empty
@@ -199,28 +201,28 @@ object Main {
         println(s"[main] selected dump key: $key")
         new org.apache.hadoop.fs.Path(root, key).toString
       } else cfg.dumpFile
-    val dataDir =
-      if (dumpFile.nonEmpty) {
-        val conv = java.nio.file.Files.createTempDirectory("graft-dump-pq").toString
-        etl.DumpConvert.convert(spark, dumpFile, conv, cfg.dumpMerge)
-        conv
-      } else cfg.dataDir
-    val instances = Ingest.table(spark, dataDir, "instances")
-    val extra = Ingest.table(spark, dataDir, "instance_extra")
-    val actions = Ingest.table(spark, dataDir, "instance_actions")
+    val dump =
+      if (dumpFile.nonEmpty) Some(etl.DumpConvert.tables(spark, dumpFile, cfg.dumpMerge))
+      else None
+    try {
+      def table(name: String) = dump.fold(Ingest.table(spark, cfg.dataDir, name))(_(name))
+      val instances = table("instances")
+      val extra = table("instance_extra")
+      val actions = table("instance_actions")
 
-    val enriched = Enrich.enrichInstances(instances, extra, startUs)
-    val su = Billing.instanceSuHours(actions, enriched, rates, startUs, endUs, outages)
-    val invoices = Billing.projectInvoices(su, rates)
+      val enriched = Enrich.enrichInstances(instances, extra, startUs)
+      val su = Billing.instanceSuHours(actions, enriched, rates, startUs, endUs, outages)
+      val invoices = Billing.projectInvoices(su, rates)
 
-    val isoFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ssxxx")
-    val rows = InvoiceSink.csvRows(invoices, invoiceMonth,
-      start.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
-      end.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
-      // timespec="seconds" parity with billing.py:160
-      java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
-        .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).format(isoFmt))
-    InvoiceSink.writeCsv(rows, cfg.outputDir)
+      val isoFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ssxxx")
+      val rows = InvoiceSink.csvRows(invoices, invoiceMonth,
+        start.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
+        end.atOffset(java.time.ZoneOffset.UTC).format(isoFmt),
+        // timespec="seconds" parity with billing.py:160
+        java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
+          .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).format(isoFmt))
+      InvoiceSink.writeCsv(rows, cfg.outputDir)
+    } finally dump.foreach(_.release())
 
     // S7 — the triple upload (billing.py:244-293): same body to primary
     // (skippable, --no-upload-to-primary), daily, and archive keys, in

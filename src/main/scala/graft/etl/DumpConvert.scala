@@ -1,19 +1,26 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** S3 — the migration path off the reference's dump pipeline: mysqldump
-  * text → the nova-shaped parquet layout `Main`/`Ingest.table` read.
+  * text → the three nova-shaped tables the billing pipeline reads.
   *
   * The reference converts mysqldump → SQLite with an external binary and
-  * re-reads it per run (fetch.py:98-124, model.py:180-186); a Spark user
-  * converts ONCE to parquet and gets pruned columnar scans forever after.
-  * The conversion itself is distributed: `spark.read.text` splits the dump
-  * file across executors, each `INSERT INTO` line parses where it lands
-  * (mysqldump writes one extended-INSERT statement per line), and only the
-  * CREATE TABLE column lists — a few KB of DDL lines — ever reach the
-  * driver.
+  * re-reads it per run (fetch.py:98-124, model.py:180-186). Here
+  * [[tables]] reads the dump once, in place: `Main --dump-file` bills
+  * straight from its DataFrames with no load step, and the convert CLI
+  * ([[convert]]) writes the same DataFrames out as parquet, so that later
+  * runs get pruned columnar scans.
+  *
+  * The parse is distributed: `spark.read.text` splits the dump file
+  * across executors, each `INSERT INTO` line of any pipeline table is
+  * routed by its prefix and parses where it lands (mysqldump writes one
+  * extended-INSERT statement per line), and only the CREATE TABLE column
+  * lists — a few KB of DDL lines — ever reach the driver. The dump text is
+  * scanned twice, whatever the number of tables: once for the DDL, once
+  * for every INSERT.
   *
   * Gzip is NOT a splittable codec — the real dumps are `.sql.gz`
   * (fetch.py:28-39), and reading one through `spark.read.text` directly
@@ -21,9 +28,8 @@ import org.apache.spark.sql.functions._
   * hole: `.gz` inputs stream-gunzip once (the inherently serial step —
   * same cost the reference pays in its explicit `gzip -d`) into a
   * decompressed staging copy, and the expensive part — the INSERT parse —
-  * runs distributed over that splittable copy. With that staging, a
-  * multi-GB dump converts with no single-process bottleneck in the parse;
-  * only the gunzip itself is serial, and it is IO-bound, not CPU-bound.
+  * runs distributed over that splittable copy. Only the gunzip itself is
+  * serial, and it is IO-bound, not CPU-bound.
   *
   * Value grammar handled (mysqldump defaults): single-quoted strings with
   * backslash escapes, bare numerics, NULL, parenthesized tuples separated
@@ -46,42 +52,36 @@ object DumpConvert {
       "instance_uuid" -> "string", "created_at" -> "timestamp",
       "action" -> "string", "message" -> "string"))
 
-  /** Decode a mysqldump single-quoted literal body (escapes per the MySQL
-    * string grammar; `''` doubling also accepted).
+  /** Nova's auto-increment key of `instance_actions`, kept when the dump
+    * declares it: `Billing` breaks same-second ties by it, as the
+    * reference does by SQLite rowid.
     */
-  private def unescape(s: String): String = {
-    val b = new StringBuilder(s.length)
+  private val ActionId = "id" -> "long"
+
+  /** Offset of the first case-insensitive `VALUES` keyword, or -1. */
+  private def valuesAt(s: String): Int = {
     var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        b.append(s.charAt(i + 1) match {
-          case 'n' => '\n'; case 'r' => '\r'; case 't' => '\t'
-          case '0' => '\u0000'; case 'b' => '\b'; case 'Z' => '\u001a'
-          case other => other // covers \' \" \\ and pass-through
-        })
-        i += 2
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
+    while (i + 6 <= s.length && !s.regionMatches(true, i, "VALUES", 0, 6)) i += 1
+    if (i + 6 <= s.length) i else -1
   }
 
-  /** Parse every `(...)` tuple after the VALUES keyword of one INSERT
-    * statement. None = SQL NULL. Pure function — safe inside executors.
+  /** Every `(...)` tuple after the VALUES keyword of one INSERT
+    * statement, as a row array (null = SQL NULL). String literals decode
+    * their escapes per the MySQL string grammar (`''` doubling also
+    * accepted). Pure function — safe inside executors.
     */
-  def parseTuples(stmt: String): Seq[Seq[Option[String]]] = {
-    val vi = stmt.toUpperCase.indexOf("VALUES")
+  private def parseRows(s: String): Seq[Array[String]] = {
+    val vi = valuesAt(s)
     if (vi < 0) return Seq.empty
-    val s = stmt
     var i = vi + "VALUES".length
-    val tuples = Seq.newBuilder[Seq[Option[String]]]
-    var tuple: scala.collection.mutable.Builder[Option[String], Seq[Option[String]]] = null
+    val rows = Seq.newBuilder[Array[String]]
+    var row: scala.collection.mutable.ArrayBuffer[String] = null
     while (i < s.length) {
       s.charAt(i) match {
         case '(' =>
-          tuple = Seq.newBuilder[Option[String]]; i += 1
+          row = scala.collection.mutable.ArrayBuffer.empty[String]; i += 1
         case ')' =>
-          if (tuple != null) { tuples += tuple.result(); tuple = null }
+          if (row != null) { rows += row.toArray; row = null }
           i += 1
         case '\'' =>
           // string literal: scan to the closing quote honoring \-escapes
@@ -91,12 +91,18 @@ object DumpConvert {
           var done = false
           while (!done && i < s.length) {
             val c = s.charAt(i)
-            if (c == '\\' && i + 1 < s.length) { b.append(c).append(s.charAt(i + 1)); i += 2 }
-            else if (c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') { b.append("\\'"); i += 2 }
+            if (c == '\\' && i + 1 < s.length) {
+              b.append(s.charAt(i + 1) match {
+                case 'n' => '\n'; case 'r' => '\r'; case 't' => '\t'
+                case '0' => '\u0000'; case 'b' => '\b'; case 'Z' => '\u001a'
+                case other => other // covers \' \" \\ and pass-through
+              })
+              i += 2
+            } else if (c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') { b.append('\''); i += 2 }
             else if (c == '\'') { done = true; i += 1 }
             else { b.append(c); i += 1 }
           }
-          if (tuple != null) tuple += Some(unescape(b.toString))
+          if (row != null) row += b.toString
         case c if c == ',' || c.isWhitespace || c == ';' =>
           i += 1
         case _ =>
@@ -104,19 +110,22 @@ object DumpConvert {
           val j = s.indexWhere(ch => ch == ',' || ch == ')' || ch.isWhitespace, i)
           val end = if (j < 0) s.length else j
           val tok = s.substring(i, end)
-          if (tuple != null)
-            tuple += (if (tok.equalsIgnoreCase("NULL")) None else Some(tok))
+          if (row != null) row += (if (tok.equalsIgnoreCase("NULL")) null else tok)
           i = end
       }
     }
-    tuples.result()
+    rows.result()
   }
+
+  /** [[parseRows]] with NULL as None — the value grammar's test surface. */
+  def parseTuples(stmt: String): Seq[Seq[Option[String]]] =
+    parseRows(stmt).map(_.toSeq.map(Option(_)))
 
   /** The explicit column list of a `--complete-insert` statement
     * (`INSERT INTO t (a, b) VALUES ...`), if present before VALUES.
     */
   def insertColumns(stmt: String): Option[Seq[String]] = {
-    val vi = stmt.toUpperCase.indexOf("VALUES")
+    val vi = valuesAt(stmt)
     if (vi < 0) return None
     val head = stmt.substring(0, vi)
     val open = head.indexOf('(')
@@ -186,7 +195,7 @@ object DumpConvert {
       dst.toString
     }
 
-  /** The single dump file, verified: the parse relies on
+  /** The single dump file, verified: the DDL pass relies on
     * `monotonically_increasing_id` reflecting file-offset order, which
     * Spark's text source guarantees for ONE file but not for a directory
     * or glob (multi-file listing order is a filesystem detail).
@@ -217,79 +226,29 @@ object DumpConvert {
     createColumns(lines)
   }
 
-  /** One table of the dump as a typed DataFrame: distributed parse of its
-    * INSERT lines, columns named from CREATE order, cast to the target
-    * schema. Unknown target columns (absent from this dump's DDL) fail
-    * loudly rather than silently producing nulls.
+  /** How one dump's INSERT lines of one table become target-order rows:
+    * the statement prefixes that select them, the target columns, and
+    * their positions in the table's CREATE order.
     */
-  def loadTable(spark: SparkSession, dumpPath: String, table: String): DataFrame = {
-    val staged = stageSplittable(spark, dumpPath)
-    loadTableWith(spark, staged, table, tableColumns(spark, staged))
-  }
+  private final case class Route(table: String, prefixes: Seq[String],
+      targets: Seq[String], createPos: Array[Int])
 
-  /** Same, with the dump's DDL map precomputed — `convert` scans the DDL
-    * once for all three tables instead of once per table.
+  /** The pipeline tables of one parse — the rows materialized once, each
+    * table a typed projection of them.
     */
-  private def loadTableWith(spark: SparkSession, dumpPath: String,
-      table: String, allCols: Map[String, Seq[String]]): DataFrame = {
-    import spark.implicits._
-    val createOrder = allCols.getOrElse(table,
+  final class DumpTables private[DumpConvert] (
+      source: String, byName: Map[String, DataFrame], rows: org.apache.spark.rdd.RDD[_]) {
+
+    /** One table, typed as [[tableSchemas]], plus `instance_actions.id`
+      * when every dump that declares the table declares it.
+      */
+    def apply(table: String): DataFrame = byName.getOrElse(table,
       throw new IllegalArgumentException(
-        s"dump has no CREATE TABLE `$table` — tables found: " +
-          allCols.keys.mkString(", ")))
-    val target = tableSchemas.getOrElse(table,
-      throw new IllegalArgumentException(s"no target schema for $table"))
-    val missing = target.map(_._1).filterNot(createOrder.contains)
-    require(missing.isEmpty,
-      s"dump's `$table` lacks columns the pipeline needs: ${missing.mkString(", ")}")
+        s"no dump in $source has CREATE TABLE `$table` — tables found: " +
+          byName.keys.toSeq.sorted.mkString(", ")))
 
-    val prefix = s"INSERT INTO `$table` "
-    val prefixNoTick = s"INSERT INTO $table "
-    // `--complete-insert` dumps write an explicit column list; those
-    // statements realign to CREATE order per line (absent columns → NULL)
-    // instead of being silently mis-mapped
-    val order = createOrder
-    val raw: Dataset[Seq[Option[String]]] = spark.read.textFile(dumpPath)
-      .filter((l: String) => l.startsWith(prefix) || l.startsWith(prefixNoTick))
-      .flatMap { (l: String) =>
-        val tuples = parseTuples(l)
-        insertColumns(l) match {
-          case None => tuples
-          case Some(cs) =>
-            val idx = order.map(cs.indexOf)
-            tuples.map(t => idx.map(i => if (i >= 0 && i < t.length) t(i) else None))
-        }
-      }
-    val n = createOrder.length
-    val rows = raw.map(t => t.padTo(n, None).take(n).map(_.orNull))
-      .map(vals => vals.toArray) // Array[String] row in CREATE order
-    val asCols = createOrder.zipWithIndex.map { case (c, i) =>
-      element_at(col("value"), i + 1).as(c)
-    }
-    rows.toDF("value").select(asCols: _*)
-      .select(target.map { case (c, t) => col(c).cast(t).as(c) }: _*)
-  }
-
-  /** Convert the whole dump to the parquet layout `Main --data-dir`
-    * expects: one `<out>/<table>.parquet` per pipeline table. A
-    * DIRECTORY input routes to [[convertDir]] — the multi-controller
-    * operational layout.
-    */
-  def convert(spark: SparkSession, dumpPath: String, outDir: String,
-      merge: String = "first"): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dumpPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.getFileStatus(p).isDirectory) convertDir(spark, dumpPath, outDir, merge)
-    else {
-      // stage ONCE for all three tables: the gunzip cost is paid one time,
-      // every per-table parse below splits across executors
-      val staged = stageSplittable(spark, dumpPath)
-      val allCols = tableColumns(spark, staged)
-      tableSchemas.keys.toSeq.sorted.foreach { t =>
-        loadTableWith(spark, staged, t, allCols)
-          .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-      }
-    }
+    /** Free the materialized rows; the tables are unusable afterwards. */
+    def release(): Unit = rows.unpersist(blocking = true)
   }
 
   /** The `.sql`/`.sql.gz` dumps under `dumpDir`, including one directory
@@ -307,48 +266,125 @@ object DumpConvert {
       .map(_.getPath.toString).sorted.toSeq
   }
 
-  /** Multi-controller conversion: each controller uploads its own dump of
-    * the same database, and any one of them may be stale, partial, or
-    * empty. Per pipeline table:
+  /** Load the pipeline tables of a dump file, or of a directory of
+    * per-controller dumps, from one parse.
+    *
+    * Each dump is staged ([[stageSplittable]]), its DDL read
+    * ([[tableColumns]]), and then every dump's INSERT lines of every
+    * pipeline table are parsed in ONE `spark.read.text` pass, cast to the
+    * target types, and materialized by an eager local checkpoint; staged
+    * copies are deleted right after. A table whose CREATE lacks a
+    * pipeline column fails here, loudly, rather than producing nulls.
+    * `--complete-insert` statements realign to the target columns per
+    * line (absent columns → NULL).
+    *
+    * A directory holds each controller's dump of the same database, and
+    * any one of them may be stale, partial, or empty. Per pipeline table:
     *
     *   - `merge = "first"`: the first (controller-ordered) dump whose
     *     parse yields rows for that table wins — the reference's
     *     first-non-empty-listing fallback (fetch.py:42-74), applied
     *     per-table instead of wholesale so one controller's truncated
-    *     dump can't blank a table another controller has;
+    *     dump can't blank a table another controller has. When every
+    *     dump's table is empty, the first declaring dump's empty,
+    *     correctly-typed table is used;
     *   - `merge = "union"`: all dumps' rows concatenate (sharded
     *     sources, where each dump holds a disjoint slice).
     *
-    * Nothing serializes through the driver: every candidate parse is the
-    * same distributed INSERT scan [[loadTable]] runs, the `first` probe
-    * is a limit-1 existence check per candidate (no materialization),
-    * and `union` is a plan-level concatenation of distributed scans.
+    * The caller owns the materialized rows: call `release()` when done.
+    * They are held in executor memory, spilling to disk, and, like any
+    * local checkpoint, cannot be recomputed if an executor is lost.
     */
-  def convertDir(spark: SparkSession, dumpDir: String, outDir: String,
-      merge: String = "first"): Unit = {
+  def tables(spark: SparkSession, dumpPath: String,
+      merge: String = "first"): DumpTables = {
     require(merge == "first" || merge == "union",
       s"merge must be 'first' or 'union', got '$merge'")
-    val p = new org.apache.hadoop.fs.Path(dumpDir)
+    val p = new org.apache.hadoop.fs.Path(dumpPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val dumps = listDumps(fs, p)
-    require(dumps.nonEmpty, s"no .sql/.sql.gz dumps found under $dumpDir")
-    // stage + DDL-scan each dump once, not once per table
+    val dumps =
+      if (fs.getFileStatus(p).isDirectory) listDumps(fs, p) else Seq(dumpPath)
+    require(dumps.nonEmpty, s"no .sql/.sql.gz dumps found under $dumpPath")
     val staged = dumps.map(d => stageSplittable(spark, d))
-    val colMaps = staged.map(d => d -> tableColumns(spark, d))
-    tableSchemas.keys.toSeq.sorted.foreach { t =>
-      val candidates = colMaps.collect {
-        case (d, cols) if cols.contains(t) => loadTableWith(spark, d, t, cols)
+    try {
+      val ddl = staged.map(tableColumns(spark, _))
+      val keepId = ddl.flatMap(_.get("instance_actions")).forall(_.contains(ActionId._1))
+      val targets = tableSchemas.map { case (t, cs) =>
+        t -> (if (t == "instance_actions" && keepId) cs :+ ActionId else cs)
       }
-      require(candidates.nonEmpty,
-        s"no dump under $dumpDir has CREATE TABLE `$t`")
-      val chosen = merge match {
-        // all-empty falls back to the first candidate: an empty but
-        // correctly-typed table, same as single-dump zero-INSERT behavior
-        case "first" => candidates.find(!_.isEmpty).getOrElse(candidates.head)
-        case "union" => candidates.reduce(_.unionByName(_))
+      val names = targets.keys.toSeq.sorted
+      val routes = ddl.map(cols => names.filter(cols.contains).map { t =>
+        val createOrder = cols(t)
+        val wanted = targets(t).map(_._1)
+        val missing = wanted.filterNot(createOrder.contains)
+        require(missing.isEmpty,
+          s"dump's `$t` lacks columns the pipeline needs: ${missing.mkString(", ")}")
+        Route(t, Seq(s"INSERT INTO `$t` ", s"INSERT INTO $t "),
+          wanted, wanted.map(createOrder.indexOf).toArray)
+      })
+
+      import spark.implicits._
+      val raw = staged.zip(routes).zipWithIndex.map { case ((path, rs), src) =>
+        spark.read.textFile(path)
+          .flatMap { (l: String) =>
+            rs.find(r => r.prefixes.exists(pre => l.startsWith(pre))) match {
+              case None => Nil
+              case Some(r) =>
+                val pos = insertColumns(l) match {
+                  case None => r.createPos
+                  case Some(cs) => r.targets.map(cs.indexOf).toArray
+                }
+                parseRows(l).map { t =>
+                  (r.table, pos.map(i => if (i >= 0 && i < t.length) t(i) else null))
+                }
+            }
+          }
+          .toDF("tbl", "value").withColumn("src", lit(src))
+      }.reduce(_.unionByName(_))
+      // one nullable struct per table; a row fills the one it belongs to
+      val parsed = raw.select(col("src") +: names.map { t =>
+        when(col("tbl") === t, struct(targets(t).zipWithIndex.map { case ((c, ty), i) =>
+          col("value")(i).cast(ty).as(c)
+        }: _*)).as(t)
+      }: _*).localCheckpoint(eager = true)
+
+      // rows per (dump, table), read only where dumps compete for a table
+      lazy val counts = parsed.groupBy("src")
+        .agg(count(col(names.head)).as(names.head), names.tail.map(t => count(col(t)).as(t)): _*)
+        .collect().map(r => r.getInt(0) -> r).toMap
+      def rowsOf(src: Int, t: String): Long = counts.get(src).fold(0L)(_.getAs[Long](t))
+      val byName = names.flatMap { t =>
+        val declaring = routes.indices.filter(routes(_).exists(_.table == t))
+        Option.when(declaring.nonEmpty) {
+          val rows = parsed.filter(col(t).isNotNull)
+          val picked =
+            if (merge == "union" || declaring.size == 1) rows
+            else rows.filter(col("src") ===
+              declaring.find(rowsOf(_, t) > 0).getOrElse(declaring.head))
+          t -> picked.select(col(s"$t.*"))
+        }
+      }.toMap
+      new DumpTables(dumpPath, byName,
+        parsed.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }.get)
+    } finally staged.zip(dumps).foreach { case (s, d) =>
+      if (s != d) {
+        val sp = new org.apache.hadoop.fs.Path(s)
+        val sfs = sp.getFileSystem(spark.sessionState.newHadoopConf())
+        sfs.cancelDeleteOnExit(sp)
+        sfs.delete(sp, false)
       }
-      chosen.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
+  }
+
+  /** Convert a dump file or a per-controller dump directory (see
+    * [[tables]] for `merge`) to the parquet layout `Main --data-dir`
+    * expects: one `<out>/<table>.parquet` per pipeline table.
+    */
+  def convert(spark: SparkSession, dumpPath: String, outDir: String,
+      merge: String = "first"): Unit = {
+    val dump = tables(spark, dumpPath, merge)
+    try tableSchemas.keys.toSeq.sorted.foreach { t =>
+      dump(t).write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+    } finally dump.release()
   }
 
   /** CLI: runMain graft.etl.DumpConvert <dump.sql|dumpDir> <outDir> [first|union] */

@@ -78,4 +78,62 @@ class MainSpec extends AnyFunSuite {
     assert(byCol("Rate") == "0.013")
     assert(byCol("Cost") == "0.26") // 20 × 0.013, cents-rounded
   }
+
+  test("--dump-file leaves no staged copy, parquet copy or persisted rows behind") {
+    val spark = SparkTestSession.spark
+    val dump =
+      """CREATE TABLE `instances` (
+        |  `uuid` varchar(36) NOT NULL,
+        |  `hostname` varchar(255) DEFAULT NULL,
+        |  `instance_type_id` int DEFAULT NULL,
+        |  `memory_mb` int DEFAULT NULL,
+        |  `vcpus` int DEFAULT NULL,
+        |  `deleted_at` datetime DEFAULT NULL,
+        |  `deleted` int DEFAULT NULL,
+        |  `project_id` varchar(255) DEFAULT NULL
+        |);
+        |INSERT INTO `instances` VALUES ('i1','host1',1,8192,2,NULL,0,'projA');
+        |CREATE TABLE `instance_extra` (
+        |  `instance_uuid` varchar(36) NOT NULL,
+        |  `pci_requests` text
+        |);
+        |INSERT INTO `instance_extra` VALUES ('i1',NULL);
+        |CREATE TABLE `instance_actions` (
+        |  `id` int NOT NULL AUTO_INCREMENT,
+        |  `instance_uuid` varchar(36) NOT NULL,
+        |  `created_at` datetime DEFAULT NULL,
+        |  `action` varchar(255) DEFAULT NULL,
+        |  `message` varchar(255) DEFAULT NULL
+        |);
+        |INSERT INTO `instance_actions` VALUES (1,'i1','2024-01-01 00:00:00','create',''),(2,'i1','2024-01-01 10:00:00','delete','');
+        |""".stripMargin
+    val gz = java.nio.file.Files.createTempFile("nova-hygiene", ".sql.gz")
+    val out = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(gz))
+    out.write(dump.getBytes("UTF-8")); out.close()
+    val outDir = java.nio.file.Files.createTempDirectory("graft-hygiene-csv").toString
+
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    def leftovers(): Set[String] = {
+      val s = java.nio.file.Files.list(tmp)
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(n => n.startsWith("graft-stage-") || n.startsWith("graft-dump-pq")).toSet
+      finally s.close()
+    }
+    val before = leftovers()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Main.run(Main.parseArgs(Seq(
+      "--dump-file", gz.toString, "--output-dir", outDir,
+      "--start", "2024-01-01", "--end", "2024-02-01",
+      "--invoice-month", "2024-01",
+      "--rate-cpu-su", "0.013")), spark)
+    assert(leftovers() -- before == Set.empty)
+    // the shared session may hold other suites' persisted RDDs: the run
+    // must add none
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet -- persistedBefore == Set.empty)
+    val csv = java.nio.file.Files.list(java.nio.file.Paths.get(outDir))
+      .toArray.map(_.toString).filter(_.endsWith(".csv"))
+    val lines = scala.io.Source.fromFile(csv(0)).getLines().toSeq
+    val byCol = lines.head.split(",", -1).zip(lines(1).split(",", -1)).toMap
+    assert(byCol("Cost") == "0.26")
+  }
 }

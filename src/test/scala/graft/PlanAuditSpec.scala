@@ -370,6 +370,34 @@ class PlanAuditSpec extends AnyFunSuite {
       costField.get.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
   }
 
+  test("Billing.instanceSuHours scans instance_actions once and plans no LeftSemi") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-plan-billing").toString
+    Seq(("i1", "host1", 1L, 8192L, 2, None: Option[java.sql.Timestamp], 0, "projA"))
+      .toDF("uuid", "hostname", "instance_type_id", "memory_mb", "vcpus",
+        "deleted_at", "deleted", "project_id")
+      .write.parquet(s"$d/instances.parquet")
+    Seq(("i1", null: String)).toDF("instance_uuid", "pci_requests")
+      .write.parquet(s"$d/instance_extra.parquet")
+    Seq((1L, "i1", new java.sql.Timestamp(0L), "create", ""))
+      .toDF("id", "instance_uuid", "created_at", "action", "message")
+      .write.parquet(s"$d/instance_actions.parquet")
+    def t(name: String) = etl.Ingest.table(spark, d, name)
+    val start = graft.core.Types.utcMicros(2024, 1, 1)
+    val end = graft.core.Types.utcMicros(2024, 2, 1)
+    val rates = graft.core.Types.Rates(
+      cpu = BigDecimal("0.013"), gpuA100 = BigDecimal(0), gpuA100sxm4 = BigDecimal(0),
+      gpuV100 = BigDecimal(0), gpuA2 = BigDecimal(0), gpuK80 = BigDecimal(0),
+      includeStoppedRuntime = false)
+    val su = etl.Billing.instanceSuHours(t("instance_actions"),
+      etl.Enrich.enrichInstances(t("instances"), t("instance_extra"), start),
+      rates, start, end)
+    val p = su.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(countOf(p, "Location: InMemoryFileIndex \\[[^\\]]*instance_actions\\.parquet") == 1,
+      p.linesIterator.take(40).mkString("\n"))
+    assert(!p.contains("LeftSemi"), p.linesIterator.take(40).mkString("\n"))
+  }
+
   test("sim_ood_distance is a pure scan-side map — zero exchanges") {
     val p = plan("sim_ood_distance")
     assert(countOf(p, "\\(\\d+\\) Exchange") == 0, p.linesIterator.take(20).mkString("\n"))

@@ -184,9 +184,12 @@ class DumpConvertSpec extends AnyFunSuite {
       assert(stagedParts > 1,
         s"staged copy should split, got $stagedParts partition(s)")
       // and the INSERT lines parse identically through the staged path
-      val rows = DumpConvert.loadTable(spark, gz.toString, "instance_extra")
-      assert(rows.rdd.getNumPartitions > 1)
-      assert(rows.count() == 2000)
+      val dump = DumpConvert.tables(spark, gz.toString)
+      try {
+        val rows = dump("instance_extra")
+        assert(rows.rdd.getNumPartitions > 1)
+        assert(rows.count() == 2000)
+      } finally dump.release()
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
@@ -262,7 +265,7 @@ class DumpConvertSpec extends AnyFunSuite {
     val spark = graft.SparkTestSession.spark
     val root = writeControllerFixture()
     val out = java.nio.file.Files.createTempDirectory("graft-ctl-first").toString
-    DumpConvert.convertDir(spark, root.toString, out, "first")
+    DumpConvert.convert(spark, root.toString, out, "first")
     def uuids(t: String, c: String) = spark.read.parquet(s"$out/$t.parquet")
       .select(c).collect().map(_.getString(0)).toSeq.sorted
     // instances: ctl-0 parsed first but has zero rows → ctl-1 wins;
@@ -277,7 +280,7 @@ class DumpConvertSpec extends AnyFunSuite {
     val spark = graft.SparkTestSession.spark
     val root = writeControllerFixture()
     val out = java.nio.file.Files.createTempDirectory("graft-ctl-union").toString
-    DumpConvert.convertDir(spark, root.toString, out, "union")
+    DumpConvert.convert(spark, root.toString, out, "union")
     def uuids(t: String, c: String) = spark.read.parquet(s"$out/$t.parquet")
       .select(c).collect().map(_.getString(0)).toSeq.sorted
     assert(uuids("instances", "uuid") == Seq("i1", "i2"))
@@ -349,8 +352,11 @@ class DumpConvertSpec extends AnyFunSuite {
         |""".stripMargin
     val f = java.nio.file.Files.createTempFile("graft-dump-ci", ".sql")
     java.nio.file.Files.writeString(f, dump)
-    val rows = DumpConvert.loadTable(spark, f.toString, "instance_extra")
-      .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSet
+    val loaded = DumpConvert.tables(spark, f.toString)
+    val rows =
+      try loaded("instance_extra").collect()
+        .map(r => (r.getString(0), Option(r.getString(1)))).toSet
+      finally loaded.release()
     assert(rows == Set(("i1", Some("[]")), ("i2", None)))
   }
 
@@ -364,9 +370,12 @@ class DumpConvertSpec extends AnyFunSuite {
         |""".stripMargin
     val f = java.nio.file.Files.createTempFile("graft-dump-empty", ".sql")
     java.nio.file.Files.writeString(f, dump)
-    val df = DumpConvert.loadTable(spark, f.toString, "instance_extra")
-    assert(df.count() == 0)
-    assert(df.schema.fieldNames.toSeq == Seq("instance_uuid", "pci_requests"))
+    val loaded = DumpConvert.tables(spark, f.toString)
+    try {
+      val df = loaded("instance_extra")
+      assert(df.count() == 0)
+      assert(df.schema.fieldNames.toSeq == Seq("instance_uuid", "pci_requests"))
+    } finally loaded.release()
   }
 
   test("missing pipeline column in the dump fails loudly") {
@@ -380,7 +389,73 @@ class DumpConvertSpec extends AnyFunSuite {
     val f = java.nio.file.Files.createTempFile("graft-dump-bad", ".sql")
     java.nio.file.Files.writeString(f, dump)
     val e = intercept[IllegalArgumentException](
-      DumpConvert.loadTable(spark, f.toString, "instances"))
+      DumpConvert.tables(spark, f.toString))
     assert(e.getMessage.contains("lacks columns"))
+  }
+
+  test("one parse: the staged text is read twice — the DDL pass and one INSERT pass") {
+    val spark = graft.SparkTestSession.spark
+    // all three tables, many INSERT lines, split into several partitions:
+    // the read count must not grow with the tables or the splits
+    val body = fullDdl + (1 to 300).map(i =>
+      instInsert(s"i$i") + extraInsert(s"i$i") + actionInserts(s"i$i")).mkString
+    val lines = body.count(_ == '\n')
+    val gz = java.nio.file.Files.createTempFile("nova-one-scan", ".sql.gz")
+    val out = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(gz))
+    out.write(body.getBytes("UTF-8")); out.close()
+
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val readingStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        val n = Option(e.taskMetrics).fold(0L)(_.inputMetrics.recordsRead)
+        if (n > 0) { records.addAndGet(n); readingStages.add(e.stageId) }
+      }
+    }
+    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8192")
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    val dump =
+      try DumpConvert.tables(spark, gz.toString)
+      finally {
+        org.apache.spark.TestListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+      }
+    try {
+      assert(records.get == 2L * lines, s"records read ${records.get}, dump lines $lines")
+      assert(readingStages.size == 2, s"stages reading the dump: $readingStages")
+      assert(dump("instances").count() == 300)
+      assert(dump("instance_extra").count() == 300)
+      assert(dump("instance_actions").count() == 600)
+    } finally dump.release()
+  }
+
+  test("same-second events bill in instance_actions.id order, not INSERT order") {
+    val spark = graft.SparkTestSession.spark
+    // ids 2 (stop) and 3 (start) share a second but are written 3 first:
+    // id order leaves the VM running to the window end (744 h), INSERT
+    // order would stop it after 10 h
+    val dump = fullDdl.replace(
+      "CREATE TABLE `instance_actions` (\n",
+      "CREATE TABLE `instance_actions` (\n  `id` int NOT NULL AUTO_INCREMENT,\n") +
+      instInsert("i1") + extraInsert("i1") +
+      "INSERT INTO `instance_actions` VALUES (1,'i1','2024-01-01 00:00:00','create','')," +
+      "(3,'i1','2024-01-01 10:00:00','start',''),(2,'i1','2024-01-01 10:00:00','stop','');\n"
+    val f = java.nio.file.Files.createTempFile("graft-dump-ties", ".sql")
+    java.nio.file.Files.writeString(f, dump)
+    val outDir = java.nio.file.Files.createTempDirectory("graft-ties-csv").toString
+    graft.Main.run(graft.Main.parseArgs(Seq(
+      "--dump-file", f.toString, "--output-dir", outDir,
+      "--start", "2024-01-01", "--end", "2024-02-01",
+      "--invoice-month", "2024-01",
+      "--rate-cpu-su", "0.013")), spark)
+    val csv = java.nio.file.Files.list(java.nio.file.Paths.get(outDir))
+      .toArray.map(_.toString).filter(_.endsWith(".csv"))
+    val lines = scala.io.Source.fromFile(csv(0)).getLines().toSeq
+    val byCol = lines.head.split(",", -1).zip(lines(1).split(",", -1)).toMap
+    assert(byCol("SU Hours (GBhr or SUhr)") == "1488") // 744 h × 2 SU
   }
 }
