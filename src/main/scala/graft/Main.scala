@@ -91,8 +91,14 @@ object Main {
       case "--include-stopped-runtime" :: t =>
         go(t, c.copy(rates = c.rates.copy(includeStoppedRuntime = true)))
       case "--exclude-interval" :: v :: t =>
-        val Array(s, e) = v.split(",", 2)
-        go(t, c.copy(excludeIntervals = c.excludeIntervals :+ (ldt(s), ldt(e))))
+        val (from, to) = v.split(",", 2) match {
+          case Array(a, b) => (ldt(a), ldt(b))
+          case _ => throw new IllegalArgumentException(
+            s"--exclude-interval expects START,END, got '$v'")
+        }
+        // a reversed interval would ADD billable time in the runtime fold
+        require(!to.isBefore(from), s"--exclude-interval end before start: '$v'")
+        go(t, c.copy(excludeIntervals = c.excludeIntervals :+ (from, to)))
       case Nil => c
       case other :: _ =>
         throw new IllegalArgumentException(s"Unknown argument: $other")
@@ -142,6 +148,8 @@ object Main {
     val (defStart, defEnd) = InvoiceSink.defaultWindow(java.time.LocalDate.now())
     val start = cfg.start.getOrElse(defStart)
     val end = cfg.end.getOrElse(defEnd)
+    require(!end.isBefore(start),
+      s"--end $end is before --start $start (after defaulting)")
     // Reference quirk preserved (main.py:60): the default invoice month
     // comes from the DEFAULT start's month, even when --start overrides
     // the window.

@@ -29,18 +29,18 @@ import org.apache.spark.sql.functions._
   *     the measured frontier and the solved nprobe, or the named raise
   *     with the guaranteed closer
   *   mode cross   <sfDir> [cosThreshold] [batchSize]
-  *     the frozen-index probe economics, FAT vs SLIM (r14): build +
-  *     persist both artifact forms of the even-half index
-  *     ([[graft.ops.SimilarityOps.lshIndexEntries]] and
-  *     [[graft.ops.SimilarityOps.lshIndexEntriesSlim]] +
-  *     [[graft.ops.SimilarityOps.lshIndexVectors]]), report their
-  *     on-disk bytes, then time a fixed-size batch probe against each
-  *     — run at two sf dirs to see the probe walls stay ~flat while
-  *     the index grows 10×, and the slim artifact stay ~corpus-sized
-  *     where the fat one multiplies every vector (1+probes)·tables×
+  *     the frozen-index probe economics: build + persist the
+  *     even-half index artifact pair
+  *     ([[graft.ops.SimilarityOps.lshIndexEntriesSlim]] +
+  *     [[graft.ops.SimilarityOps.lshIndexVectors]]), report its
+  *     on-disk bytes, then time a fixed-size batch probe
+  *     ([[graft.ops.SimilarityOps.nearDupPairsLshCrossSlim]]) — run at
+  *     two sf dirs to see the probe wall stay ~flat while the index
+  *     grows 10×, and the artifact stay ~corpus-sized
   *
-  * A bare first argument that looks like a path keeps the original
-  * knn-probe calling convention. The round-12 PLANS demonstrations:
+  * A bare first argument containing a `/` is an sf dir and keeps the
+  * original knn-probe calling convention; any other first argument
+  * that is not a mode fails by name. The round-12 PLANS demonstrations:
   * knn 0.9 passes at sf0.01 (head recall ≈ 0.99) and fails by name at
   * ×10; lsh 0.99 escalates 8→16 tables at sf0.01 and raises UNREACHABLE
   * (needed L ≈ 74 > the 32 ceiling) at ×10; minhash solves the SAME
@@ -49,11 +49,15 @@ import org.apache.spark.sql.functions._
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
+    val modes = Seq("knn", "lsh", "minhash", "ivf", "cross")
     val (mode, rest) =
-      if (args.nonEmpty && Set("knn", "lsh", "minhash", "ivf", "cross",
-        "escbench", "setjoin")(args.head))
-        (args.head, args.tail)
-      else ("knn", args)
+      if (args.nonEmpty && modes.contains(args.head)) (args.head, args.tail)
+      else {
+        require(args.isEmpty || args.head.contains("/"),
+          s"unknown mode '${args.head}': expected one of " +
+            s"${modes.mkString(", ")}, or an sf dir path")
+        ("knn", args)
+      }
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -133,100 +137,27 @@ object RecallProbe {
           }
           val tmp = java.nio.file.Files
             .createTempDirectory("graft-cross-probe").toString
-          // FAT artifact: entries carry the full embedding
+          // id-sized entries + single-copy vector table
           val tb = System.nanoTime()
-          ops.SimilarityOps.lshIndexEntries(existing)
-            .write.mode("overwrite").parquet(s"$tmp/fat.parquet")
-          val fat = spark.read.parquet(s"$tmp/fat.parquet")
-          val nIdx = fat.count()
-          val buildS = (System.nanoTime() - tb) / 1e9
-          val tp = System.nanoTime()
-          val nPairs = ops.SimilarityOps.nearDupPairsLshCrossIndexed(
-            fat, batch, threshold).count()
-          val probeS = (System.nanoTime() - tp) / 1e9
-          // SLIM artifact: id-sized entries + single-copy vector table
-          val ts = System.nanoTime()
           ops.SimilarityOps.lshIndexEntriesSlim(existing)
-            .write.mode("overwrite").parquet(s"$tmp/slim.parquet")
+            .write.mode("overwrite").parquet(s"$tmp/entries.parquet")
           ops.SimilarityOps.lshIndexVectors(existing)
             .write.mode("overwrite").parquet(s"$tmp/vectors.parquet")
-          val slim = spark.read.parquet(s"$tmp/slim.parquet")
+          val entries = spark.read.parquet(s"$tmp/entries.parquet")
           val vecs = spark.read.parquet(s"$tmp/vectors.parquet")
-          val buildSlimS = (System.nanoTime() - ts) / 1e9
-          val tq = System.nanoTime()
-          val nPairsSlim = ops.SimilarityOps.nearDupPairsLshCrossSlim(
-            slim, vecs, batch, threshold).count()
-          val probeSlimS = (System.nanoTime() - tq) / 1e9
-          val fatB = dirBytes(s"$tmp/fat.parquet")
-          val slimB = dirBytes(s"$tmp/slim.parquet") +
+          val nIdx = entries.count()
+          val buildS = (System.nanoTime() - tb) / 1e9
+          val tp = System.nanoTime()
+          val nPairs = ops.SimilarityOps.nearDupPairsLshCrossSlim(
+            entries, vecs, batch, threshold).count()
+          val probeS = (System.nanoTime() - tp) / 1e9
+          val bytes = dirBytes(s"$tmp/entries.parquet") +
             dirBytes(s"$tmp/vectors.parquet")
           scala.reflect.io.Path(tmp).deleteRecursively()
-          // a 0-byte slim write (a failed/empty persist) must not
-          // Infinity-format the ratio — name it instead
-          val ratio =
-            if (slimB > 0) f"${fatB.toDouble / slimB}%.1fx smaller"
-            else "ratio n/a: slim artifact is 0 bytes"
           println(f"[recall-probe] cross at $dir (threshold=$threshold, " +
-            f"batch<=$batchSize): FAT build+persist $buildS%.2f s " +
-            f"($nIdx entries, $fatB bytes), probe $probeS%.2f s " +
-            f"($nPairs pairs); SLIM build+persist $buildSlimS%.2f s " +
-            f"($slimB bytes = $ratio), " +
-            f"probe $probeSlimS%.2f s ($nPairsSlim pairs) in $secs total")
-        case "setjoin" =>
-          // phase-count probe for the exact set-similarity join (r17:
-          // prices the indexing-prefix candidate tightening): shingle
-          // rows, per-doc sets, prefix rows, pre-distinct expansion
-          // volume, verify candidates, and the final output count.
-          val threshold = rest.lift(1).map(_.toDouble).getOrElse(0.5)
-          val docs = etl.Ingest.table(spark, dir, "documents")
-            .select(col("doc_id"), col("text"))
-          ops.DedupOps.probeSetJoinCounts(docs, threshold).foreach {
-            case (name, n, s) =>
-              println(f"[recall-probe] setjoin $name: $n ($s%.2f s)")
-          }
-          println(s"[recall-probe] setjoin pre_distinct: " +
-            s"${ops.DedupOps.probeSetJoinPreDistinct(docs, threshold)}")
-          println(s"[recall-probe] setjoin output_pairs: " +
-            s"${ops.DedupOps.similarityJoinExact(docs, threshold).count()} " +
-            s"in $secs")
-        case "escbench" =>
-          // r16 (verdict item 3): price the incremental escalation —
-          // the old head-recall escalation rebuilt the pair surface
-          // from scratch at the solved L (re-paying the first-tables
-          // work; 515 s at the ×100 probe); the new one probes only
-          // the NEW tables and unions. A = the first build (common to
-          // both), B = from-scratch rebuild at 2L (the OLD escalation's
-          // extra work), C = range-probe + union (the NEW escalation's
-          // extra work). Identity B ≡ C is spec-pinned
-          // (NativeFoldEquivalenceSpec); this mode prices it.
-          val threshold = rest.lift(1).map(_.toDouble).getOrElse(0.25)
-          val l0 = rest.lift(2).map(_.toInt).getOrElse(8)
-          val e = emb.cache()
-          e.count() // both arms read the same materialized corpus
-          def timed[T](f: => T): (T, Double) = {
-            val t = System.nanoTime(); val r = f
-            (r, (System.nanoTime() - t) / 1e9)
-          }
-          val (p1, aS) = timed {
-            val p = ops.SimilarityOps.nearDupPairsLsh(
-              e, threshold, tables = l0).cache()
-            p.count(); p
-          }
-          val (nB, bS) = timed {
-            ops.SimilarityOps.nearDupPairsLsh(
-              e, threshold, tables = 2 * l0).count()
-          }
-          val (nC, cS) = timed {
-            p1.unionAll(ops.SimilarityOps.nearDupPairsLshTableRange(
-              e, threshold, fromTable = l0, tables = 2 * l0))
-              .groupBy("vec_a", "vec_b")
-              .agg(max(col("cos_sim")).as("cos_sim"))
-              .count()
-          }
-          println(f"[recall-probe] escbench at $dir (threshold=" +
-            f"$threshold, L=$l0%d -> ${2 * l0}%d): first build $aS%.2f s; " +
-            f"OLD from-scratch rebuild $bS%.2f s ($nB pairs); NEW " +
-            f"incremental union $cS%.2f s ($nC pairs) in $secs total")
+            f"batch<=$batchSize): build+persist $buildS%.2f s " +
+            f"($nIdx entries, $bytes bytes), probe $probeS%.2f s " +
+            f"($nPairs pairs) in $secs total")
         case "minhash" =>
           val threshold = rest.lift(1).map(_.toDouble).getOrElse(
             queries.PipelineQueries.MinhashRecallJaccard)

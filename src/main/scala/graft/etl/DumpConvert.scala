@@ -392,6 +392,8 @@ object DumpConvert {
     val (dumpPath, outDir, merge) = args match {
       case Array(d, o)    => (d, o, "first")
       case Array(d, o, m) => (d, o, m)
+      case _ => throw new IllegalArgumentException(
+        "usage: graft.etl.DumpConvert <dump.sql|dumpDir> <outDir> [first|union]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

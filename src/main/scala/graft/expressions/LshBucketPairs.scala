@@ -30,27 +30,23 @@ import org.apache.spark.sql.types._
   * allocates output structs ONLY for pairs that survive the threshold
   * — three scalars each, no embedding bytes.
   *
-  * Semantics pinned 1:1 to the composed chain (LshBucketPairsSpec):
+  * Semantics pinned 1:1 to the composed chain (NativeFoldEquivalenceSpec):
   *  - pair order (i, j>i) over the SORTED member array, so vec_a is the
   *    sort-lower member exactly as before;
-  *  - probe rule: in-corpus mode drops pk_a = pk_b = 1 (probe×probe);
-  *    cross mode additionally requires side_a < side_b;
+  *  - probe rule: drops pk_a = pk_b = 1 (probe×probe);
   *  - cos = dot(e_a, e_b) / (nrm_a · nrm_b), dot accumulated
   *    left-to-right in double over the min-length prefix;
   *  - the threshold test replicates Spark's nan-safe `>=` on doubles
   *    (NaN compares greater than any threshold).
   *
-  * Input layouts (from the bucket collect's sort_array(collect_list)):
-  *  - in-corpus (`cross = false`):
-  *      array<struct<vec_id: bigint, pk: int, embedding: array<float|double>, nrm: double>>
-  *  - cross-corpus (`cross = true`):
-  *      array<struct<side: int, vec_id: bigint, pk: int, embedding: ..., nrm: double>>
+  * Input (the bucket collect's sort_array(collect_list)):
+  *   array<struct<vec_id: bigint, pk: int, embedding: array<float|double>, nrm: double>>
   *
   * Returns array<struct<vec_a: bigint, vec_b: bigint, cos: double>>.
   */
 @ExpressionDescription(
   usage = "_FUNC_(ms) - threshold-surviving in-bucket cosine pairs of a sorted LSH bucket member array.")
-case class LshBucketPairs(child: Expression, threshold: Double, cross: Boolean)
+case class LshBucketPairs(child: Expression, threshold: Double)
     extends UnaryExpression {
 
   private def fields: Option[Array[StructField]] = child.dataType match {
@@ -58,29 +54,21 @@ case class LshBucketPairs(child: Expression, threshold: Double, cross: Boolean)
     case _ => None
   }
 
-  private def embFieldIdx: Int = if (cross) 3 else 2
-
   override def checkInputDataTypes(): TypeCheckResult = fields match {
-    case Some(fs) if fs.length == (if (cross) 5 else 4) =>
-      val baseOk =
-        (!cross || fs(0).dataType == IntegerType) &&
-          fs(if (cross) 1 else 0).dataType == LongType &&
-          fs(if (cross) 2 else 1).dataType == IntegerType &&
-          fs(if (cross) 4 else 3).dataType == DoubleType
-      val embOk = fs(embFieldIdx).dataType match {
-        case ArrayType(FloatType | DoubleType, _) => true
-        case _ => false
-      }
-      if (baseOk && embOk) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"lsh_bucket_pairs(cross=$cross) got ${child.dataType.simpleString}")
+    case Some(fs) if fs.length == 4 &&
+        fs(0).dataType == LongType && fs(1).dataType == IntegerType &&
+        fs(3).dataType == DoubleType &&
+        (fs(2).dataType match {
+          case ArrayType(FloatType | DoubleType, _) => true
+          case _ => false
+        }) => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"lsh_bucket_pairs requires an array of bucket-member structs, got " +
-        child.dataType.simpleString)
+      "lsh_bucket_pairs requires array<struct<bigint, int, " +
+        s"array<float|double>, double>>, got ${child.dataType.simpleString}")
   }
 
   private lazy val elemFloat: Boolean =
-    fields.exists(fs => fs(embFieldIdx).dataType match {
+    fields.exists(fs => fs(2).dataType match {
       case ArrayType(FloatType, _) => true
       case _ => false
     })
@@ -90,12 +78,12 @@ case class LshBucketPairs(child: Expression, threshold: Double, cross: Boolean)
 
   override protected def nullSafeEval(input: Any): Any =
     LshBucketPairs.pairs(
-      input.asInstanceOf[ArrayData], threshold, cross, elemFloat)
+      input.asInstanceOf[ArrayData], threshold, elemFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.expressions.LshBucketPairs.pairs(" +
-        s"$c, $threshold, $cross, $elemFloat);")
+        s"$c, $threshold, $elemFloat);")
 
   override protected def withNewChildInternal(
       newChild: Expression): LshBucketPairs = copy(child = newChild)
@@ -108,24 +96,20 @@ object LshBucketPairs {
     StructField("vec_b", LongType, nullable = false),
     StructField("cos", DoubleType, nullable = false))), containsNull = false)
 
-  def pairs(ms: ArrayData, threshold: Double, cross: Boolean,
+  def pairs(ms: ArrayData, threshold: Double,
       elemFloat: Boolean): ArrayData = {
     val m = ms.numElements()
-    val nf = if (cross) 5 else 4
-    val off = if (cross) 1 else 0
-    val sides = if (cross) new Array[Int](m) else null
     val ids = new Array[Long](m)
     val pks = new Array[Int](m)
     val embs = new Array[ArrayData](m)
     val nrms = new Array[Double](m)
     var i = 0
     while (i < m) {
-      val r = ms.getStruct(i, nf)
-      if (cross) sides(i) = r.getInt(0)
-      ids(i) = r.getLong(off)
-      pks(i) = r.getInt(off + 1)
-      embs(i) = r.getArray(off + 2)
-      nrms(i) = r.getDouble(off + 3)
+      val r = ms.getStruct(i, 4)
+      ids(i) = r.getLong(0)
+      pks(i) = r.getInt(1)
+      embs(i) = r.getArray(2)
+      nrms(i) = r.getDouble(3)
       i += 1
     }
     val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
@@ -133,7 +117,7 @@ object LshBucketPairs {
     while (a < m) {
       var b = a + 1
       while (b < m) {
-        if ((!cross || sides(a) < sides(b)) && !(pks(a) == 1 && pks(b) == 1)) {
+        if (!(pks(a) == 1 && pks(b) == 1)) {
           val ea = embs(a)
           val eb = embs(b)
           val n = math.min(ea.numElements(), eb.numElements())

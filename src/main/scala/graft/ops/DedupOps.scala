@@ -385,7 +385,7 @@ object DedupOps {
     * shift tolerance — a bounded ≤ (k+1)·(2k+1)·(k+1) explode factor,
     * LINEAR in the corpus where the in-block expansion was quadratic.
     * Both sides ride ONE shared bucket-collect shuffle keyed by the
-    * segment (the [[SimilarityOps.nearDupPairsLshCross]] pattern) with
+    * segment (the [[SimilarityOps.nearDupPairsLshCrossSlim]] pattern) with
     * the same hot-bucket ceiling, cross-side expansion only, and the
     * (shorter, or equal-length smaller-id) direction rule generating
     * each unordered pair once; survivors dedup BEFORE the Levenshtein
@@ -1092,7 +1092,7 @@ object DedupOps {
   }
 
   /** The MinHash incremental-dedup index as persistable ARTIFACTS —
-    * the band-axis twin of [[SimilarityOps.lshIndexEntries]] (r13):
+    * the band-axis twin of [[SimilarityOps.lshIndexEntriesSlim]] (r13):
     * everything [[incrementalStatus]] needs from the EXISTING corpus,
     * computed once per index generation so a daily batch probe never
     * re-scans (or even references) the existing documents' raw text.
@@ -1184,11 +1184,11 @@ object DedupOps {
           .otherwise("new").as("status"))
   }
 
-  /** Phase handles for [[similarityJoinExact]], factored so the scale
-    * probe can count candidates per phase without duplicating the plan.
+  /** Phase handles for [[similarityJoinExact]], factored so
+    * [[setJoinBuckets]] reads the same prefix rows as the join.
     */
-  private case class SetJoinParts(sh: DataFrame, perdoc: DataFrame,
-      prefix: DataFrame, expanded: DataFrame, cand: DataFrame)
+  private case class SetJoinParts(perdoc: DataFrame, prefix: DataFrame,
+      cand: DataFrame)
 
   def similarityJoinExact(docs: DataFrame, threshold: Double): DataFrame = {
     val eps = 1e-9
@@ -1234,24 +1234,6 @@ object DedupOps {
           (col("n_a") + col("n_b") - col("n_common")).cast("double"), 6)
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
-
-  /** Diagnostic phase counts for the scale probe (shingle rows, per-doc
-    * sets, prefix rows, verify candidates) — counts force each cached
-    * phase exactly once.
-    */
-  def probeSetJoinCounts(docs: DataFrame, threshold: Double): Seq[(String, Long, Double)] = {
-    val p = setJoinParts(docs, threshold)
-    def timed(name: String, df: DataFrame): (String, Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = df.count()
-      (name, n, (System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      timed("shingle_rows", p.sh),
-      timed("perdoc_sets", p.perdoc),
-      timed("prefix_rows", p.prefix),
-      timed("verify_candidates", p.cand))
   }
 
   private def setJoinParts(docs: DataFrame, threshold: Double): SetJoinParts = {
@@ -1318,7 +1300,7 @@ object DedupOps {
     val cand = expanded
       .distinct()
       .cache()
-    SetJoinParts(sh, perdoc, prefix, expanded, cand)
+    SetJoinParts(perdoc, prefix, cand)
   }
 
   /** The original higher-order-function form of the prefix candidate
@@ -1355,14 +1337,6 @@ object DedupOps {
         .as("es"))
       .filter(size(col("es")) > 1)
   }
-
-  /** Pre-distinct expansion volume — how many (pair, shared-prefix-
-    * shingle) occurrences the in-bucket expansion emits before the
-    * distinct dedupes them; the dup factor vs verify_candidates is part
-    * of the scale accounting in PLANS.md.
-    */
-  def probeSetJoinPreDistinct(docs: DataFrame, threshold: Double): Long =
-    setJoinParts(docs, threshold).expanded.count()
 
   /** SimHash bit width: 16 hex digits of md5 × 4 bits. */
   val SimhashBits = 64

@@ -446,13 +446,6 @@ object SimilarityOps {
       Array.fill(LshDim)(if (rnd.nextBoolean()) 1.0 else -1.0)))
   }
 
-  /** Full maximum-width sign signature of an embedding under auto
-    * table `t`'s planes; bucketing takes a prefix of this string.
-    */
-  def autoTableSignature(emb: Column, t: Int): Column =
-    concat(autoTableHyperplanes(t).map(p =>
-      when(dot(emb, typedlit(p.toSeq)) > 0, "1").otherwise("0")): _*)
-
   /** Default probe count per table for [[nearDupPairsLsh]]: each vector
     * additionally enters, per table, the `LshAutoProbes` buckets reached
     * by flipping its lowest-|margin| prefix bits — the Lv et al. 2007
@@ -553,14 +546,6 @@ object SimilarityOps {
     lshPairsCoreFromTable(lshAutoSignatureStage(corpus, tables), threshold,
       targetBucket, fromTable, tables, maxBucket, probes, withMinT = false)
 
-  /** [[lshBucketEntriesAtWidth]] surfaced for the cross-mode
-    * equivalence spec (which reconstructs the operator's internal
-    * shared bucket collect).
-    */
-  private[graft] def lshBucketEntriesAtWidthForSpec(sigs: DataFrame,
-      tables: Int, probes: Int): DataFrame =
-    lshBucketEntriesAtWidth(sigs, tables, probes)
-
   /** [[nearDupPairsLshFrom]] additionally emitting `min_t` — the LOWEST
     * table index in which the pair collided. `min_t < L` selects
     * exactly the pairs an L-table run would return, so one pass at
@@ -577,178 +562,40 @@ object SimilarityOps {
     lshPairsCore(sigs, threshold, targetBucket, tables, maxBucket, probes,
       withMinT = true)
 
-  /** CROSS-CORPUS LSH near-dup pairs — the production daily-increment
-    * shape for embeddings (the vector twin of the MinHash
-    * `dedup_incremental` and of `sim_ivf_append`'s frozen quantizer):
-    * which vectors of a NEW batch near-duplicate something already in
-    * the EXISTING corpus. Candidates are (existing × batch) vectors
-    * sharing any (table, signature) bucket of a FROZEN index geometry:
-    * the adaptive prefix width derives from the EXISTING corpus's
-    * count ALONE — the index was sized when it was built; a probe
-    * batch reads it, it does not reshape it (and so the same batch
-    * probed against the same index always lands in the same buckets,
-    * no matter how large the batch is). Directed multi-probe applies
-    * on BOTH sides — the index stores probe entries, the batch also
-    * flips its lowest-|margin| bits — with probe×probe co-occupancy
-    * excluded, exactly as in the in-corpus generator.
-    *
-    * Scale shape: both sides ride ONE shared bucket-collect shuffle
-    * (the entries union on (table, sig) — no join), the in-bucket
-    * expansion keeps only cross-side pairs, and the hot-bucket
-    * ceiling (stated in per-corpus home members, scaled by the probe
-    * multiplier and the two sides) fails by name on a degenerate key.
-    * Precision is exact: every emitted pair passed the true cosine.
-    *
-    * Returns (existing_id, batch_id, cos_sim), cos ≥ threshold.
-    */
-  def nearDupPairsLshCross(existing: DataFrame, batch: DataFrame,
-      threshold: Double,
-      targetBucket: Int = LshAutoTargetBucket,
-      tables: Int = LshTables,
-      maxBucket: Int = DedupOps.DefaultMaxBucket,
-      probes: Int = LshAutoProbes): DataFrame =
-    nearDupPairsLshCrossIndexed(
-      lshIndexEntries(existing, targetBucket, tables, probes), batch,
-      threshold, tables, maxBucket, probes)
-
-  /** The FROZEN cross-probe index as a self-describing ARTIFACT: the
-    * existing corpus's per-(vector, table) bucket entries — home plus
-    * `probes` flipped-bit probe rows — with the adaptive prefix width
-    * (derived from the existing count ALONE) carried as an explicit
-    * `bits` column. Build ONCE per index generation, persist (the
-    * entries are a TABLE: ~(1+probes)·tables rows of (id, embedding,
-    * nrm, t, sig, pk, bits) per vector), and hand every daily batch to
-    * [[nearDupPairsLshCrossIndexed]] — a probe then touches only this
-    * artifact, never the raw existing embeddings (r12 verdict item 1:
-    * an artifact read repeatedly is a table, not a plan; the inline
-    * form re-scanned the full existing corpus per batch, measured 3.2×
-    * for ×10 index size at fixed batch size).
-    *
-    * Returns (vec_id, embedding, nrm, t, sig, pk, bits).
-    */
-  def lshIndexEntries(existing: DataFrame,
-      targetBucket: Int = LshAutoTargetBucket,
-      tables: Int = LshTables,
-      probes: Int = LshAutoProbes): DataFrame =
-    lshBucketEntries(lshAutoSignatureStage(
-      existing.select(col("vec_id"), col("embedding"), col("nrm")), tables),
-      targetBucket, tables, probes)
-      .withColumn("bits", length(col("sig")).cast("int"))
-
-  /** [[nearDupPairsLshCross]] against a PREBUILT index artifact (from
-    * [[lshIndexEntries]], typically persisted and re-read): the batch
-    * signs itself at the index's frozen width (a 1-row broadcast of
-    * the artifact's `bits` column — no scan of, or reference to, the
-    * existing corpus's raw embeddings anywhere in the probe plan), and
-    * both sides ride the ONE shared bucket-collect shuffle. The
-    * `tables`/`probes` arguments must match the index build's — the
-    * artifact carries entries only for the tables it was built with
-    * (a narrower probe reads a subset; a wider one finds empty
-    * tables), and the probe-pair exclusion assumes both sides' pk
-    * marking. Same output contract as [[nearDupPairsLshCross]]:
-    * (existing_id, batch_id, cos_sim), cos ≥ threshold, exact-cosine
-    * verified.
-    */
-  def nearDupPairsLshCrossIndexed(index: DataFrame, batch: DataFrame,
-      threshold: Double,
-      tables: Int = LshTables,
-      maxBucket: Int = DedupOps.DefaultMaxBucket,
-      probes: Int = LshAutoProbes): DataFrame = {
-    Seq("vec_id", "embedding", "nrm", "t", "sig", "pk", "bits").foreach(c =>
-      require(index.columns.contains(c),
-        s"index frame has no '$c' column — build it with lshIndexEntries"))
-    // the frozen geometry: the batch signs at the INDEX's width
-    val bits = frozenIndexBits(index)
-    val batchDots = (0 until tables).foldLeft(
-      batch.select(col("vec_id"), col("embedding"), col("nrm"))
-        .withColumn("__bits", lit(bits))) { (d, t) =>
-      d.withColumn(s"__ds$t", array(autoTableHyperplanes(t).map(p =>
-        dot(col("embedding"), typedlit(p.toSeq))): _*))
-    }
-    val ent = index
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("t"), col("sig"), col("pk"))
-      .withColumn("side", lit(0))
-      .unionAll(
-        lshBucketEntriesAtWidth(batchDots, tables, probes)
-          .withColumn("side", lit(1)))
-    val members = ent
-      .groupBy("t", "sig")
-      .agg(sort_array(collect_list(struct(
-        col("side"), col("vec_id"), col("pk"), col("embedding"),
-        col("nrm")))).as("ms0"),
-        count(lit(1)).as("__cnt"))
-      .select(col("t"),
-        graft.ops.SessionOps.hotKeyGuarded(col("ms0"), col("__cnt"),
-          concat(col("t").cast("string"), lit("/"), col("sig")),
-          maxBucket.toLong * (1 + probes) * 2,
-          "nearDupPairsLshCross bucket").as("ms"))
-      .filter(size(col("ms")) > 1)
-    // members sort (side, vec_id, …): cross pairs always read
-    // (existing a, batch b); same-side and probe×probe pairs drop —
-    // r16: the expansion + cosine + threshold run in the native
-    // [[graft.expressions.LshBucketPairs]] (cross mode), exactly as in
-    // [[lshPairsCoreFromTable]]; the HOF reference for the spec is
-    // [[lshCrossScoredPairsHof]]
-    val scored = members
-      .select(explode(ColumnBridge.column(
-        graft.expressions.LshBucketPairs(
-          ColumnBridge.expression(col("ms")), threshold, cross = true)))
-        .as("p"))
-      .select(col("p.vec_a").as("existing_id"),
-        col("p.vec_b").as("batch_id"), col("p.cos").as("cos"))
-    scored.groupBy("existing_id", "batch_id")
-      .agg(round(max(col("cos")), 6).as("cos_sim"))
-  }
-
-  /** The original higher-order-function cross-side expansion — the
-    * equivalence reference for [[graft.expressions.LshBucketPairs]]'s
-    * cross mode (see [[lshScoredPairsHof]]).
-    */
-  private[graft] def lshCrossScoredPairsHof(members: DataFrame,
-      threshold: Double): DataFrame =
-    members
-      .select(col("t"), explode(flatten(transform(col("ms"), (a, i) =>
-        transform(
-          filter(slice(col("ms"), i + 2, size(col("ms"))), b =>
-            a.getField("side") < b.getField("side") &&
-              !(a.getField("pk") === 1 && b.getField("pk") === 1)),
-          b =>
-            struct(a.getField("vec_id").as("va"),
-              b.getField("vec_id").as("vb"),
-              a.getField("embedding").as("ea"),
-              b.getField("embedding").as("eb"),
-              a.getField("nrm").as("na"),
-              b.getField("nrm").as("nb")))))).as("p"))
-      .select(col("p.va").as("existing_id"), col("p.vb").as("batch_id"),
-        cosine(col("p.ea"), col("p.eb"), col("p.na"), col("p.nb")).as("cos"))
-      .filter(col("cos") >= threshold)
-
   /** The index artifact's FROZEN prefix width, read as a 1-row
     * `limit(1)` pull (bits is identical on every entry by the build
     * contract — a `max()` here would scan the full artifact column to
-    * learn one int; r13 verdict nit). Fails BY NAME on an empty frame
-    * (e.g. a mis-pathed parquet read) instead of letting a null width
-    * silently sign the batch into nothing (r13 advice).
+    * learn one int; r13 verdict nit). Fails BY NAME on a frame that is
+    * not an index artifact, and on an empty frame (e.g. a mis-pathed
+    * parquet read) instead of letting a null width silently sign the
+    * batch into nothing (r13 advice).
     */
   private def frozenIndexBits(index: DataFrame): Int = {
+    require(index.columns.contains("bits"),
+      "index frame has no 'bits' column — build it with lshIndexEntriesSlim")
     val row = index.select(col("bits").cast("int")).limit(1).collect()
     require(row.nonEmpty && !row(0).isNullAt(0),
       "index artifact is EMPTY (or its bits column is null) — a " +
         "mis-pathed read, not a frozen geometry; build the artifact " +
-        "with lshIndexEntries / lshIndexEntriesSlim")
+        "with lshIndexEntriesSlim")
     row(0).getInt(0)
   }
 
-  /** The SLIM frozen index: [[lshIndexEntries]] WITHOUT the embedding
-    * payload — (vec_id, t, sig, pk, bits) only. The fat artifact
-    * carries the full vector on every one of its (1+probes)·tables
-    * entry rows per vector (~24 embedding copies per vector at the
-    * defaults — a petabyte-scale write amplification when the corpus
-    * is 100 TB of embeddings; r13 verdict item 1). Here the vectors
-    * live ONCE, in the [[lshIndexVectors]] side table, and
-    * [[nearDupPairsLshCrossSlim]] joins them back on the CANDIDATE
-    * pairs only — the bucket shuffle carries ids, not vectors.
+  /** The FROZEN cross-probe index over an EXISTING corpus, as a
+    * self-describing ARTIFACT: per (vector, table) the home bucket
+    * entry plus `probes` flipped-bit probe entries, with the adaptive
+    * prefix width — derived from the existing count ALONE: the index
+    * was sized when it was built, a probe batch reads it and does not
+    * reshape it — carried as an explicit `bits` column. Entries carry
+    * ids only, no embedding payload (a vector copied onto each of its
+    * (1+probes)·tables entry rows is ~24 copies at the defaults; r13
+    * verdict item 1): the vectors live ONCE, in the [[lshIndexVectors]]
+    * side table, and [[nearDupPairsLshCrossSlim]] joins them back on
+    * the CANDIDATE pairs only. Build once per index generation, persist
+    * both frames, and hand every daily batch to
+    * [[nearDupPairsLshCrossSlim]] — a probe then touches only the
+    * artifact pair, never the raw existing corpus (r12 verdict item 1:
+    * an artifact read repeatedly is a table, not a plan).
     *
     * Returns (vec_id, t, sig, pk, bits); persist next to
     * [[lshIndexVectors]]'s (vec_id, embedding, nrm).
@@ -757,8 +604,11 @@ object SimilarityOps {
       targetBucket: Int = LshAutoTargetBucket,
       tables: Int = LshTables,
       probes: Int = LshAutoProbes): DataFrame =
-    lshIndexEntries(existing, targetBucket, tables, probes)
-      .select("vec_id", "t", "sig", "pk", "bits")
+    lshBucketEntries(lshAutoSignatureStage(
+      existing.select(col("vec_id"), col("embedding"), col("nrm")), tables),
+      targetBucket, tables, probes)
+      .select(col("vec_id"), col("t"), col("sig"), col("pk"),
+        length(col("sig")).cast("int").as("bits"))
 
   /** The slim artifact PAIR as one handle — [[lshIndexEntriesSlim]]'s
     * bucket entries plus [[lshIndexVectors]]'s single-copy vectors —
@@ -770,31 +620,42 @@ object SimilarityOps {
   /** The slim artifact's vector side table — each existing vector
     * exactly ONCE: (vec_id, embedding, nrm). Together with
     * [[lshIndexEntriesSlim]] this is the persisted form whose total
-    * bytes are ~1× the corpus plus id-sized entry rows, vs the fat
-    * artifact's (1+probes)·tables embedding copies.
+    * bytes are ~1× the corpus plus id-sized entry rows.
     */
   def lshIndexVectors(existing: DataFrame): DataFrame =
     existing.select(col("vec_id"), col("embedding"), col("nrm"))
 
-  /** [[nearDupPairsLshCrossIndexed]] against the SLIM artifact pair
-    * ([[lshIndexEntriesSlim]] + [[lshIndexVectors]], both typically
-    * persisted and re-read). Same frozen-geometry contract (the batch
-    * signs at the artifact's `bits`; `tables`/`probes` must match the
-    * build) and same output contract — (existing_id, batch_id,
-    * cos_sim), cos ≥ threshold, exact-cosine verified — but the ONE
-    * shared bucket-collect shuffle now carries (side, vec_id, pk)
-    * structs only: candidate id-pairs come out of the buckets,
-    * de-duplicated (a pair can collide in several tables) BEFORE any
-    * vector bytes move, and the embeddings join in exactly once per
-    * surviving candidate — existing side from the single-copy vector
-    * table, batch side from the (small, broadcast) batch itself.
+  /** CROSS-CORPUS LSH near-dup pairs — the production daily-increment
+    * shape for embeddings (the vector twin of the MinHash
+    * `dedup_incremental` and of `sim_ivf_append`'s frozen quantizer):
+    * which vectors of a NEW batch near-duplicate something in the
+    * EXISTING corpus, probed against that corpus's persisted artifact
+    * pair ([[lshIndexEntriesSlim]] + [[lshIndexVectors]]). Candidates
+    * are (existing × batch) vectors sharing any (table, signature)
+    * bucket of the FROZEN index geometry: the batch signs itself at the
+    * artifact's `bits`, so the same batch probed against the same index
+    * always lands in the same buckets, no matter how large the batch
+    * is. Directed multi-probe applies on BOTH sides — the index stores
+    * probe entries, the batch also flips its lowest-|margin| bits —
+    * with probe×probe co-occupancy excluded, exactly as in the
+    * in-corpus generator. The `tables`/`probes` arguments must match
+    * the index build's: the artifact carries entries only for the
+    * tables it was built with.
     *
-    * Scale shape: bucket rows shrink from O(dim) doubles to three
-    * scalars; the vector table is read once, joined on a
-    * candidate-sized (not corpus-sized, not entry-sized) key set; the
-    * hot-bucket ceiling is unchanged. The probe plan touches ONLY the
-    * two artifact frames and the batch (plan-pinned in
-    * LshCrossIndexSpec, like the fat form).
+    * Scale shape: both sides ride ONE shared bucket-collect shuffle
+    * (the entries union on (table, sig) — no join) carrying (side,
+    * vec_id, pk) structs only; candidate id-pairs come out of the
+    * buckets, de-duplicated (a pair can collide in several tables)
+    * BEFORE any vector bytes move, and the embeddings join in exactly
+    * once per surviving candidate — existing side from the single-copy
+    * vector table, batch side from the (small, broadcast) batch itself.
+    * The hot-bucket ceiling (stated in per-corpus home members, scaled
+    * by the probe multiplier and the two sides) fails by name on a
+    * degenerate key. The probe plan touches ONLY the two artifact
+    * frames and the batch (plan-pinned in LshCrossIndexSpec).
+    * Precision is exact: every emitted pair passed the true cosine.
+    *
+    * Returns (existing_id, batch_id, cos_sim), cos ≥ threshold.
     */
   def nearDupPairsLshCrossSlim(entries: DataFrame, vectors: DataFrame,
       batch: DataFrame, threshold: Double,
@@ -853,11 +714,10 @@ object SimilarityOps {
         graft.ops.SessionOps.hotKeyGuarded(col("ms0"), col("__cnt"),
           concat(col("t").cast("string"), lit("/"), col("sig")),
           maxBucket.toLong * (1 + probes) * 2,
-          "nearDupPairsLshCross bucket").as("ms"))
+          "nearDupPairsLshCrossSlim bucket").as("ms"))
       .filter(size(col("ms")) > 1)
     // members sort (side, vec_id, pk): cross pairs always read
-    // (existing a, batch b); same-side and probe×probe pairs drop —
-    // identical candidate relation to the fat probe
+    // (existing a, batch b); same-side and probe×probe pairs drop
     val cand = members
       .select(explode(flatten(transform(col("ms"), (a, i) =>
         transform(
@@ -892,7 +752,7 @@ object SimilarityOps {
     * margins within the prefix — deterministic, oracle-replayable
     * ordering). Returns (vec_id, embedding, nrm, t, sig, pk). Used by
     * the in-corpus collect-expand ([[lshPairsCore]]) and the
-    * cross-corpus probe ([[nearDupPairsLshCross]]).
+    * cross-probe index build ([[lshIndexEntriesSlim]]).
     */
   private def lshBucketEntries(sigs: DataFrame, targetBucket: Int,
       tables: Int, probes: Int, fromTable: Int = 0): DataFrame = {
@@ -1005,7 +865,7 @@ object SimilarityOps {
     val scored = members
       .select(col("t"), explode(ColumnBridge.column(
         graft.expressions.LshBucketPairs(
-          ColumnBridge.expression(col("ms")), threshold, cross = false)))
+          ColumnBridge.expression(col("ms")), threshold)))
         .as("p"))
       .select(col("t"), col("p.vec_a").as("vec_a"),
         col("p.vec_b").as("vec_b"), col("p.cos").as("cos"))
@@ -1493,7 +1353,7 @@ object SimilarityOps {
   }
 
   /** Per-BATCH-vector top-k cap over a CROSS-corpus pair surface
-    * ([[nearDupPairsLshCross]] output): keep each batch vector's `k`
+    * ([[nearDupPairsLshCrossSlim]] output): keep each batch vector's `k`
     * strongest existing-side partners (cosine desc, existing-id
     * tiebreak), so the probe's output is ≤ |batch|·k rows at ANY index
     * size — the [[topKPerVector]] contract restated for the

@@ -413,7 +413,7 @@ object PipelineOracles {
   }
 
   /** The cross-corpus LSH probe replayed (mirrors
-    * SimilarityOps.nearDupPairsLshCross over the even/odd vec_id
+    * SimilarityOps.nearDupPairsLshCrossSlim over the even/odd vec_id
     * split): the prefix width comes from the EXISTING side's count
     * ALONE (`xtab`), each side gets its own dot/signature/probe-entry
     * chain with the SAME planes, and the pair join crosses sides with

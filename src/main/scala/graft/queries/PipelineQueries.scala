@@ -307,13 +307,9 @@ object PipelineQueries {
     * incremental queries probe this frame, and a second batch in the
     * same session pays only its own signing + the shared shuffle,
     * never an existing-side re-scan (r12 verdict item 1 — the inline
-    * form measured 3.2× for ×10 index size at a fixed batch).
-    *
-    * r14: the SLIM artifact pair — id-sized bucket entries plus a
-    * single-copy vector side table — instead of the fat entries that
-    * carried (1+probes)·tables ≈ 24 embedding copies per vector (r13
-    * verdict item 1: the persisted index was a ~24× write
-    * amplification of the corpus).
+    * form measured 3.2× for ×10 index size at a fixed batch). The
+    * artifact is the slim pair: id-sized bucket entries plus a
+    * single-copy vector side table.
     */
   private def lshCrossIndex(s: SparkSession,
       dir: String): SimilarityOps.LshSlimIndex =

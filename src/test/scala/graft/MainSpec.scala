@@ -32,6 +32,37 @@ class MainSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Main.parseArgs(Seq("--data-dir", "/d")))
   }
 
+  test("--exclude-interval without a comma fails by name") {
+    val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+      "--data-dir", "/d", "--output-dir", "/o",
+      "--exclude-interval", "2024-01-10")))
+    assert(e.getMessage.contains("--exclude-interval expects START,END"),
+      e.getMessage)
+  }
+
+  test("a reversed --exclude-interval fails by name") {
+    // end before start would subtract a negative span: billed time grows
+    val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+      "--data-dir", "/d", "--output-dir", "/o",
+      "--exclude-interval", "2024-01-11,2024-01-10")))
+    assert(e.getMessage.contains("--exclude-interval end before start"),
+      e.getMessage)
+  }
+
+  test("a window whose --end falls before --start fails by name") {
+    val spark = SparkTestSession.spark
+    def runWith(window: String*) = intercept[IllegalArgumentException](
+      Main.run(Main.parseArgs(Seq("--data-dir", "/d", "--output-dir", "/o") ++
+        window), spark))
+    val explicit = runWith("--start", "2024-02-01", "--end", "2024-01-01")
+    assert(explicit.getMessage.contains("is before --start"),
+      explicit.getMessage)
+    // --start defaults to the first of yesterday's month, after 2000-01-01
+    val defaulted = runWith("--end", "2000-01-01")
+    assert(defaulted.getMessage.contains("is before --start"),
+      defaulted.getMessage)
+  }
+
   test("end-to-end CLI run: nova-shaped parquet in, 16-column invoice CSV out") {
     val spark = SparkTestSession.spark
     import spark.implicits._

@@ -193,6 +193,11 @@ class DumpConvertSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
+  test("the convert CLI rejects a wrong argument count with its usage line") {
+    val e = intercept[IllegalArgumentException](DumpConvert.main(Array("only.sql")))
+    assert(e.getMessage.startsWith("usage: graft.etl.DumpConvert"), e.getMessage)
+  }
+
   test("directory dump path is rejected: single-file contract") {
     val spark = graft.SparkTestSession.spark
     val dir = java.nio.file.Files.createTempDirectory("graft-dump-dir")

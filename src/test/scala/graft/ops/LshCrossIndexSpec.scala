@@ -4,16 +4,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The frozen cross-probe index as an ARTIFACT
-  * (SimilarityOps.lshIndexEntries +
-  * SimilarityOps.nearDupPairsLshCrossIndexed — r12 verdict item 1): a
-  * daily batch probes a persisted bucket-entry table, never the
-  * existing corpus's raw embeddings. This spec pins (a) the indexed
-  * probe returning exactly the inline probe's pairs, (b) the probe
-  * PLAN touching only the materialized artifact — no scan of the
-  * existing side's source anywhere in it, (c) the per-batch-vector
-  * top-k cap bounding the output, and (d) the artifact schema check
-  * failing by name.
+/** The frozen cross-probe index as an ARTIFACT PAIR
+  * (SimilarityOps.lshIndexEntriesSlim + SimilarityOps.lshIndexVectors,
+  * probed by SimilarityOps.nearDupPairsLshCrossSlim — r12 verdict item
+  * 1): a daily batch probes a persisted bucket-entry table and a
+  * single-copy vector table, never the existing corpus's raw source.
+  * This spec pins (a) every probed pair against a brute-force
+  * existing × batch cosine reference, (b) the probe PLAN touching only
+  * the persisted pair — no scan of the existing side's source anywhere
+  * in it, (c) the parquet round trip and the frozen width, (d) the
+  * per-batch-vector top-k cap bounding the output, and (e) the artifact
+  * schema and emptiness checks failing by name.
   */
 class LshCrossIndexSpec extends AnyFunSuite {
 
@@ -42,38 +43,50 @@ class LshCrossIndexSpec extends AnyFunSuite {
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("the indexed probe returns exactly the inline probe's pairs") {
+  /** Build the slim artifact pair from `existing` and probe `batch`. */
+  private def probe(existing: DataFrame, batch: DataFrame,
+      threshold: Double): DataFrame =
+    SimilarityOps.nearDupPairsLshCrossSlim(
+      SimilarityOps.lshIndexEntriesSlim(existing),
+      SimilarityOps.lshIndexVectors(existing), batch, threshold)
+
+  /** Every (existing, batch) pair whose exact cosine clears `threshold`,
+    * with its rounded cosine — the all-pairs truth an LSH probe samples.
+    */
+  private def bruteForce(existing: DataFrame, batch: DataFrame,
+      threshold: Double): Map[(Long, Long), Double] =
+    existing.select(col("vec_id").as("e"), col("embedding").as("ea"),
+        col("nrm").as("na"))
+      .crossJoin(batch.select(col("vec_id").as("b"),
+        col("embedding").as("eb"), col("nrm").as("nb")))
+      .select(col("e"), col("b"), SimilarityOps.cosine(col("ea"),
+        col("eb"), col("na"), col("nb")).as("cos"))
+      .filter(col("cos") >= threshold)
+      .select(col("e"), col("b"), round(col("cos"), 6))
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+      .toMap
+
+  /** Every probed pair is a true pair with the brute-force cosine. */
+  private def assertWithinBruteForce(got: DataFrame, existing: DataFrame,
+      batch: DataFrame, threshold: Double): Unit = {
+    val truth = bruteForce(existing, batch, threshold)
+    got.collect().foreach { r =>
+      val key = (r.getLong(0), r.getLong(1))
+      assert(truth.get(key).contains(r.getDouble(2)),
+        s"$key cos=${r.getDouble(2)} is not a brute-force pair " +
+          s"(truth=${truth.get(key)})")
+    }
+  }
+
+  test("probed pairs match a brute-force cosine reference; clones are found") {
     val existing = emb(randomRows(300, 32, 0L))
     val batch = emb(Seq((1003L, vec(3L, 32)), (1007L, vec(7L, 32))) ++
       randomRows(80, 32, 2000L))
-    val inline = pairSet(
-      SimilarityOps.nearDupPairsLshCross(existing, batch, 0.3))
-    val idx = SimilarityOps.lshIndexEntries(existing)
-    val indexed = pairSet(
-      SimilarityOps.nearDupPairsLshCrossIndexed(idx, batch, 0.3))
-    assert(inline == indexed,
-      s"only-inline=${inline -- indexed} only-indexed=${indexed -- inline}")
-    assert(indexed.contains((3L, 1003L)) && indexed.contains((7L, 1007L)))
-  }
-
-  test("a batch probe touches ONLY the entries artifact — no existing-side scan in the plan") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-cross-index").toString
-    val existingPath = s"$tmp/existing.parquet"
-    emb(randomRows(200, 16, 0L)).write.mode("overwrite")
-      .parquet(existingPath)
-    // build the artifact FROM the persisted source, then materialize it
-    // (the production shape: the index is written once and re-read; the
-    // localCheckpoint stands in for the persisted-artifact read)
-    val idx = SimilarityOps.lshIndexEntries(
-      spark.read.parquet(existingPath)).localCheckpoint()
-    val probe = SimilarityOps.nearDupPairsLshCrossIndexed(
-      idx, emb(randomRows(40, 16, 5000L)), 0.3)
-    val plan = probe.queryExecution.optimizedPlan.toString
-    assert(!plan.contains(existingPath),
-      s"the probe plan re-scans the existing corpus:\n$plan")
-    probe.count() // and it executes against the artifact alone
-    scala.reflect.io.Path(tmp).deleteRecursively()
+    val got = probe(existing, batch, 0.3)
+    assertWithinBruteForce(got, existing, batch, 0.3)
+    val pairs = pairSet(got)
+    assert(pairs.contains((3L, 1003L)) && pairs.contains((7L, 1007L)), pairs)
+    assert(pairs.size > 2, "degenerate test corpus: only the planted clones")
   }
 
   test("the artifact round-trips through parquet: a re-read index probes identically") {
@@ -83,13 +96,14 @@ class LshCrossIndexSpec extends AnyFunSuite {
       .createTempDirectory("graft-cross-roundtrip").toString
     val existing = emb(randomRows(250, 16, 0L))
     val batch = emb(Seq((1005L, vec(5L, 16))) ++ randomRows(60, 16, 3000L))
-    val idx = SimilarityOps.lshIndexEntries(existing)
-    idx.write.mode("overwrite").parquet(s"$tmp/index.parquet")
-    val reread = spark.read.parquet(s"$tmp/index.parquet")
-    val fresh = pairSet(
-      SimilarityOps.nearDupPairsLshCrossIndexed(idx, batch, 0.3))
-    val persisted = pairSet(
-      SimilarityOps.nearDupPairsLshCrossIndexed(reread, batch, 0.3))
+    SimilarityOps.lshIndexEntriesSlim(existing).write.mode("overwrite")
+      .parquet(s"$tmp/entries.parquet")
+    SimilarityOps.lshIndexVectors(existing).write.mode("overwrite")
+      .parquet(s"$tmp/vectors.parquet")
+    val fresh = pairSet(probe(existing, batch, 0.3))
+    val persisted = pairSet(SimilarityOps.nearDupPairsLshCrossSlim(
+      spark.read.parquet(s"$tmp/entries.parquet"),
+      spark.read.parquet(s"$tmp/vectors.parquet"), batch, 0.3))
     assert(fresh == persisted,
       s"only-fresh=${fresh -- persisted} only-persisted=${persisted -- fresh}")
     assert(persisted.contains((5L, 1005L)))
@@ -101,10 +115,11 @@ class LshCrossIndexSpec extends AnyFunSuite {
     // probed against the SAME index must land in the same buckets no
     // matter who computes the width — bits rides the artifact
     val existing = emb(randomRows(300, 32, 0L))
-    val idx = SimilarityOps.lshIndexEntries(existing)
+    val idx = SimilarityOps.lshIndexEntriesSlim(existing)
     val bits = idx.select(max(col("bits"))).collect()(0).getInt(0)
     // 300 vectors / targetBucket 32 → ceil=10 buckets → 4-bit prefix
     assert(bits == 4, s"expected the adaptive 4-bit width, got $bits")
+    assert(SimilarityOps.slimIndexBits(idx) == bits)
     assert(idx.select(min(length(col("sig")))).collect()(0).getInt(0) == bits,
       "every entry's signature must be exactly the frozen width")
   }
@@ -117,7 +132,7 @@ class LshCrossIndexSpec extends AnyFunSuite {
       base.zipWithIndex.map { case (v, d) => v + (if (d == i % 16) 1e-4 * (i + 1) else 0.0) }
     val existing = emb((0 until 20).map(i => (i.toLong, jitter(i))))
     val batch = emb(Seq((1000L, base)))
-    val cross = SimilarityOps.nearDupPairsLshCross(existing, batch, 0.99)
+    val cross = probe(existing, batch, 0.99)
     val uncapped = cross.count()
     assert(uncapped > 3, s"the clump must emit many pairs, got $uncapped")
     val capped = SimilarityOps.topKPerBatchVector(cross, 3)
@@ -133,11 +148,18 @@ class LshCrossIndexSpec extends AnyFunSuite {
 
   test("a frame that is not an index artifact fails BY NAME") {
     val notIdx = emb(randomRows(10, 8, 0L))
+    val batch = emb(randomRows(5, 8, 100L))
     val e = intercept[IllegalArgumentException] {
-      SimilarityOps.nearDupPairsLshCrossIndexed(
-        notIdx, emb(randomRows(5, 8, 100L)), 0.5)
+      SimilarityOps.nearDupPairsLshCrossSlim(
+        notIdx, SimilarityOps.lshIndexVectors(notIdx), batch, 0.5)
     }
-    assert(e.getMessage.contains("lshIndexEntries"), e.getMessage)
+    assert(e.getMessage.contains("lshIndexEntriesSlim"), e.getMessage)
+    val eVec = intercept[IllegalArgumentException] {
+      SimilarityOps.nearDupPairsLshCrossSlim(
+        SimilarityOps.lshIndexEntriesSlim(notIdx),
+        notIdx.select("vec_id"), batch, 0.5)
+    }
+    assert(eVec.getMessage.contains("lshIndexVectors"), eVec.getMessage)
   }
 
   test("an EMPTY index artifact fails BY NAME, not a silent 0-pair probe") {
@@ -146,42 +168,13 @@ class LshCrossIndexSpec extends AnyFunSuite {
     // null width and returning nothing (r13 advice)
     val existing = emb(randomRows(50, 16, 0L))
     val batch = emb(randomRows(5, 16, 100L))
-    val emptyFat = SimilarityOps.lshIndexEntries(existing).limit(0)
-    val eFat = intercept[IllegalArgumentException] {
-      SimilarityOps.nearDupPairsLshCrossIndexed(emptyFat, batch, 0.5)
-    }
-    assert(eFat.getMessage.contains("EMPTY") &&
-      eFat.getMessage.contains("lshIndexEntries"), eFat.getMessage)
-    val emptySlim = SimilarityOps.lshIndexEntriesSlim(existing).limit(0)
-    val eSlim = intercept[IllegalArgumentException] {
-      SimilarityOps.nearDupPairsLshCrossSlim(emptySlim,
+    val empty = SimilarityOps.lshIndexEntriesSlim(existing).limit(0)
+    val e = intercept[IllegalArgumentException] {
+      SimilarityOps.nearDupPairsLshCrossSlim(empty,
         SimilarityOps.lshIndexVectors(existing), batch, 0.5)
     }
-    assert(eSlim.getMessage.contains("EMPTY"), eSlim.getMessage)
-  }
-
-  test("the SLIM artifact probe returns exactly the fat probe's pairs") {
-    val existing = emb(randomRows(300, 32, 0L))
-    val batch = emb(Seq((1003L, vec(3L, 32)), (1007L, vec(7L, 32))) ++
-      randomRows(80, 32, 2000L))
-    val fat = pairSet(SimilarityOps.nearDupPairsLshCrossIndexed(
-      SimilarityOps.lshIndexEntries(existing), batch, 0.3))
-    val slim = pairSet(SimilarityOps.nearDupPairsLshCrossSlim(
-      SimilarityOps.lshIndexEntriesSlim(existing),
-      SimilarityOps.lshIndexVectors(existing), batch, 0.3))
-    assert(fat == slim,
-      s"only-fat=${fat -- slim} only-slim=${slim -- fat}")
-    assert(slim.contains((3L, 1003L)) && slim.contains((7L, 1007L)))
-    // and the cos_sim VALUES match the fat form's rounded maxima
-    val fatV = SimilarityOps.nearDupPairsLshCrossIndexed(
-      SimilarityOps.lshIndexEntries(existing), batch, 0.3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
-      .toMap
-    SimilarityOps.nearDupPairsLshCrossSlim(
-      SimilarityOps.lshIndexEntriesSlim(existing),
-      SimilarityOps.lshIndexVectors(existing), batch, 0.3)
-      .collect().foreach(r =>
-        assert(fatV((r.getLong(0), r.getLong(1))) == r.getDouble(2)))
+    assert(e.getMessage.contains("EMPTY") &&
+      e.getMessage.contains("lshIndexEntriesSlim"), e.getMessage)
   }
 
   test("the slim artifact stores each vector ONCE and probes from the persisted pair alone") {
@@ -203,16 +196,15 @@ class LshCrossIndexSpec extends AnyFunSuite {
       "the vector side table is single-copy: one row per existing vector")
     assert(entries.count() > vectors.count(),
       "entries fan out (1+probes)·tables per vector — the payload " +
-        "they no longer carry is the artifact-bytes win")
-    val probe = SimilarityOps.nearDupPairsLshCrossSlim(
-      entries, vectors, emb(randomRows(40, 16, 5000L)), 0.3)
-    val plan = probe.queryExecution.optimizedPlan.toString
+        "they do not carry is the artifact-bytes win")
+    val batch = emb(Seq((1009L, vec(9L, 16))) ++ randomRows(40, 16, 5000L))
+    val got = SimilarityOps.nearDupPairsLshCrossSlim(
+      entries, vectors, batch, 0.3)
+    val plan = got.queryExecution.optimizedPlan.toString
     assert(!plan.contains(existingPath),
       s"the slim probe plan re-scans the existing corpus:\n$plan")
-    // equivalence against the inline probe on the same inputs
-    val inline = pairSet(SimilarityOps.nearDupPairsLshCross(
-      src, emb(randomRows(40, 16, 5000L)), 0.3))
-    assert(pairSet(probe) == inline)
+    assertWithinBruteForce(got, src, batch, 0.3)
+    assert(pairSet(got).contains((9L, 1009L)))
     scala.reflect.io.Path(tmp).deleteRecursively()
   }
 }

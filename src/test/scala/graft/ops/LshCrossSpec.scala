@@ -4,11 +4,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cross-corpus LSH near-dup probe (SimilarityOps.nearDupPairsLshCross):
-  * a new batch probes the FROZEN index geometry of an existing corpus —
-  * the prefix width derives from the existing count alone. The oracle
-  * row (`dedup_embedding_incremental`) pins the cross-engine replay;
-  * this spec pins the operator's contracts.
+/** Cross-corpus LSH near-dup probe
+  * (SimilarityOps.nearDupPairsLshCrossSlim over the artifact pair
+  * lshIndexEntriesSlim + lshIndexVectors): a new batch probes the FROZEN
+  * index geometry of an existing corpus — the prefix width derives from
+  * the existing count alone. The oracle row
+  * (`dedup_embedding_incremental`) pins the cross-engine replay; this
+  * spec pins the operator's contracts.
   */
 class LshCrossSpec extends AnyFunSuite {
 
@@ -34,13 +36,20 @@ class LshCrossSpec extends AnyFunSuite {
   private def randomRows(n: Int, dim: Int, idBase: Long): Seq[(Long, Array[Double])] =
     (0 until n).map(i => (idBase + i, vec(idBase + i, dim)))
 
+  /** Build the slim artifact pair from `existing` and probe `batch`. */
+  private def probe(existing: DataFrame, batch: DataFrame, threshold: Double,
+      maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame =
+    SimilarityOps.nearDupPairsLshCrossSlim(
+      SimilarityOps.lshIndexEntriesSlim(existing),
+      SimilarityOps.lshIndexVectors(existing), batch, threshold,
+      maxBucket = maxBucket)
+
   test("an exact cross-side clone is always found; output is cross-side only") {
     val existing = emb(randomRows(200, 32, 0L))
     // batch: clones of existing vectors 3 and 7 plus unrelated noise
     val batch = emb(Seq((1003L, vec(3L, 32)), (1007L, vec(7L, 32))) ++
       randomRows(50, 32, 2000L))
-    val got = SimilarityOps.nearDupPairsLshCross(existing, batch, 0.99)
-      .collect()
+    val got = probe(existing, batch, 0.99).collect()
     val pairs = got.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((3L, 1003L)) && pairs.contains((7L, 1007L)),
       s"exact clones share every signature bit, they MUST collide: $pairs")
@@ -51,7 +60,7 @@ class LshCrossSpec extends AnyFunSuite {
   test("an empty batch probes to an empty result, not an error") {
     val existing = emb(randomRows(100, 16, 0L))
     val batch = emb(Seq.empty)
-    assert(SimilarityOps.nearDupPairsLshCross(existing, batch, 0.5).count() == 0)
+    assert(probe(existing, batch, 0.5).count() == 0)
   }
 
   test("the index geometry is FROZEN: growing the batch never loses a pair") {
@@ -59,10 +68,9 @@ class LshCrossSpec extends AnyFunSuite {
     // found with a small batch is still found when the batch grows
     val existing = emb(randomRows(200, 32, 0L))
     val b1 = Seq((1003L, vec(3L, 32)))
-    val small = SimilarityOps.nearDupPairsLshCross(
-      existing, emb(b1), 0.99).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val grown = SimilarityOps.nearDupPairsLshCross(
-      existing, emb(b1 ++ randomRows(300, 32, 5000L)), 0.99)
+    val small = probe(existing, emb(b1), 0.99)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val grown = probe(existing, emb(b1 ++ randomRows(300, 32, 5000L)), 0.99)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(small.subsetOf(grown), s"$small not in $grown")
   }
@@ -72,9 +80,8 @@ class LshCrossSpec extends AnyFunSuite {
     val existing = emb((0 until 30).map(i => (i.toLong, one)))
     val batch = emb((0 until 30).map(i => (1000L + i, one)))
     val e = intercept[Exception] {
-      SimilarityOps.nearDupPairsLshCross(existing, batch, 0.5, maxBucket = 1)
-        .collect()
+      probe(existing, batch, 0.5, maxBucket = 1).collect()
     }
-    assert(e.getMessage.contains("nearDupPairsLshCross"), e.getMessage)
+    assert(e.getMessage.contains("nearDupPairsLshCrossSlim"), e.getMessage)
   }
 }

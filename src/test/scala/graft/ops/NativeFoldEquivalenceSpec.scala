@@ -149,7 +149,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
         org.apache.spark.sql.graft.ColumnBridge.column(
           graft.expressions.LshBucketPairs(
             org.apache.spark.sql.graft.ColumnBridge.expression(col("ms")),
-            0.2, cross = false))).as("p"))
+            0.2))).as("p"))
       .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
         col("p.cos").as("cos"))
       .groupBy("vec_a", "vec_b")
@@ -159,44 +159,6 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
     assert(collectSorted(native) == collectSorted(ref))
     assert(native.filter(isnan(col("cos_sim"))).count() > 0,
       "zero-norm vector produced no NaN pair — edge case not exercised")
-  }
-
-  test("lsh cross mode: native bucket expansion == HOF chain") {
-    val all = SimilarityOps.withNorm(randomCorpus(7, 60, 16))
-    val existing = all.filter(col("vec_id") % 2 === 0)
-    val batch = all.filter(col("vec_id") % 2 === 1)
-    val index = SimilarityOps.lshIndexEntries(existing,
-      targetBucket = 8, tables = 4, probes = 2)
-    val native = SimilarityOps.nearDupPairsLshCrossIndexed(
-      index, batch, 0.2, tables = 4, probes = 2)
-    // the HOF reference reads the same shared bucket collect the
-    // operator builds internally: reconstruct it here
-    val bits = index.select(col("bits")).limit(1).collect()(0).getInt(0)
-    val batchDots = (0 until 4).foldLeft(
-      batch.select(col("vec_id"), col("embedding"), col("nrm"))
-        .withColumn("__bits", lit(bits))) { (d, t) =>
-      d.withColumn(s"__ds$t", array(
-        SimilarityOps.autoTableHyperplanes(t).map(p =>
-          SimilarityOps.dot(col("embedding"), typedlit(p.toSeq))): _*))
-    }
-    val ent = index
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("t"), col("sig"), col("pk"))
-      .withColumn("side", lit(0))
-      .unionAll(SimilarityOps
-        .lshBucketEntriesAtWidthForSpec(batchDots, 4, 2)
-        .withColumn("side", lit(1)))
-    val members = ent
-      .groupBy("t", "sig")
-      .agg(sort_array(collect_list(struct(
-        col("side"), col("vec_id"), col("pk"), col("embedding"),
-        col("nrm")))).as("ms"))
-      .filter(size(col("ms")) > 1)
-    val hof = SimilarityOps.lshCrossScoredPairsHof(members, 0.2)
-      .groupBy("existing_id", "batch_id")
-      .agg(round(max(col("cos")), 6).as("cos_sim"))
-    assert(collectSorted(native) == collectSorted(hof))
-    assert(native.count() > 0, "degenerate test corpus: no cross pairs")
   }
 
   test("shingles: native == HOF, k in 1..4, incl. short/empty/unicode docs") {
