@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with the suite total at
   * SPARK_GRAFT_SF_DIR, plus a per-query sidecar.
   *
@@ -36,6 +34,11 @@ import org.apache.spark.sql.SparkSession
   * The stdout line carries the per-pass totals and the calib series
   * (short — the driver's stdout tail capture is ~2 KB); the per-query
   * min/max detail goes to the `bench_queries.json` sidecar and stderr.
+  *
+  * The session comes from [[GraftSession.local]]; its sized codegen
+  * cache, and why a many-query run needs it, is documented there.
+  * `SPARK_GRAFT_BENCH_ONLY=q` times one query: a warm-up, then three
+  * timed passes.
   */
 object Bench {
 
@@ -71,35 +74,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r16: the generated-class cache (static default 100 entries) is
-      // far too small for a 331-query suite — every pass was evicting
-      // every query's codegen classes, so each timed pass re-Janino-
-      // compiled AND re-JITed from cold (root-caused via event logs on
-      // dedup_setjoin_exact, the r15 "in-suite inflation" watch item:
-      // pass walls fell monotonically 5.3/2.7/2.8 in isolation and the
-      // ×10 18-query window measured 34.4 → 22.0 s with the cache
-      // sized). Sized to the workload's distinct codegen units, not to
-      // this machine — the same thrash hits any driver/executor running
-      // a many-query workload; cost is metaspace, ~KB per class. Env-
-      // overridable like every scale-dependent setting.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run — an iteration aid;
     // the driver's full run leaves it unset
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val spark = GraftSession.local()
     val ordered = selected.toSeq.sortBy(_._1)
 
     // SPARK_GRAFT_BENCH_EVICT=N clears the plan-canonical cache registry

@@ -104,8 +104,12 @@ object Main {
         throw new IllegalArgumentException(s"Unknown argument: $other")
     }
     val c = go(args.toList, Config())
-    require(c.dataDir.nonEmpty || c.dumpFile.nonEmpty || c.fetchDump.nonEmpty,
-      "--data-dir, --dump-file, or --fetch-dump is required")
+    val sources = Seq("--data-dir" -> c.dataDir, "--dump-file" -> c.dumpFile,
+      "--fetch-dump" -> c.fetchDump).collect { case (flag, v) if v.nonEmpty => flag }
+    require(sources.nonEmpty, "--data-dir, --dump-file, or --fetch-dump is required")
+    // run() would bill one of them and silently ignore the others
+    require(sources.size == 1,
+      s"give one input source, got ${sources.mkString(" and ")}")
     require(c.outputDir.nonEmpty, "--output-dir is required")
     c
   }
@@ -128,15 +132,9 @@ object Main {
       java.nio.file.Files.readString(java.nio.file.Paths.get(pathOrUrl))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try run(parseArgs(args.toIndexedSeq), spark)
+    val cfg = parseArgs(args.toIndexedSeq)
+    val spark = GraftSession.local()
+    try run(cfg, spark)
     finally spark.stop()
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main that prices the three recall CONTRACTS at a chosen
@@ -59,18 +58,7 @@ object RecallProbe {
         ("knn", args)
       }
     val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sized generated-class cache (r16, see Bench.scala) — identical
-      // results, steady-state JIT across a many-query run
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     def emb = ops.SimilarityOps.withNorm(
       etl.Ingest.table(spark, dir, "embeddings")
         .select(col("vec_id"), col("embedding")))

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Scale-up measurement tool: writes an N× synthetic copy of an sf dir
   * (ids offset per copy so joins/dedup keys stay consistent and no
@@ -12,7 +13,9 @@ import org.apache.spark.sql.functions._
   *   runMain graft.ScaleUp [factor] [query ...]
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_SCALE_OUT
-  * (default /tmp/graft_scaleup).
+  * (default /tmp/graft_scaleup), SPARK_GRAFT_CPUS (default 4, via
+  * [[GraftSession.local]]). Unknown query names fail before any data is
+  * written; a query that fails at either scale prints FAILED.
   */
 object ScaleUp {
 
@@ -124,6 +127,16 @@ object ScaleUp {
     }
   }
 
+  /** One markdown row of the scale table: seconds at 1× and at the
+    * factor, and their ratio. A failed run (None) prints FAILED, never a
+    * number, and a ratio is printed only when both runs succeeded.
+    */
+  def tableRow(q: String, a: Option[Double], b: Option[Double]): String = {
+    def secs(t: Option[Double]) = t.fold("FAILED")(x => f"$x%.2fs")
+    val ratio = a.zip(b).fold("FAILED") { case (x, y) => f"${y / x}%.1f×" }
+    s"| $q | ${secs(a)} | ${secs(b)} | $ratio |"
+  }
+
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val queries = if (args.length > 1) args.tail.toSeq
@@ -132,20 +145,11 @@ object ScaleUp {
         "aj3_asof_bucketed", "text_tfidf_topterms", "mix_downsample",
         "cdc_latest", "w4b_quartile_approx", "text_bigrams",
         "dedup_setjoin_exact", "sim_lsh_topk", "pack_sequences")
+    // checked before the ×N write, so a typo costs nothing
+    val selected = SparkEntry.selectQueries(Some(queries.mkString(",")))
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scaleup")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sized generated-class cache (r16, see Bench.scala) — identical
-      // results, steady-state JIT across a many-query run
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // SPARK_GRAFT_SCALE_SKIP_GEN=1 reuses an already-written scaled dir
     // (same factor!) so iterating on one query's plan doesn't pay the
@@ -159,22 +163,23 @@ object ScaleUp {
       }
     }
 
-    def bench(dir: String, name: String): Double = {
-      val fn = SparkEntry.queries(name)
-      try { fn(spark, dir).count() } catch { case _: Throwable => return -1.0 }
-      (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
+    def bench(dir: String, name: String): Option[Double] = {
+      val fn = selected(name)
+      try {
         fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.min
+        Some((1 to 3).map { _ =>
+          val t0 = System.nanoTime()
+          fn(spark, dir).count()
+          (System.nanoTime() - t0) / 1e9
+        }.min)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[scaleup] $name at $dir failed: ${e.getMessage}")
+        None
+      }
     }
     println(f"| Query | 1x | ${factor}x | ratio |")
     println("|---|---|---|---|")
-    queries.foreach { q =>
-      val a = bench(src, q)
-      val b = bench(out, q)
-      println(f"| $q | $a%.2fs | $b%.2fs | ${b / a}%.1f× |")
-    }
+    queries.foreach(q => println(tableRow(q, bench(src, q), bench(out, q))))
     spark.stop()
   }
 }

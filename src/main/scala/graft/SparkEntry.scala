@@ -73,6 +73,22 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CoreQueries.queries ++ PipelineQueries.queries
 
+  /** The queries a comma-separated name list selects (the
+    * `SPARK_GRAFT_*_ONLY` variables), or all of them when the list is
+    * unset. A name that is not a query, or a list that names none, is an
+    * error: a typo must not pass for a fast, clean, empty run.
+    */
+  def selectQueries(only: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val all = queries
+      val unknown = names.filterNot(all.contains)
+      require(unknown.isEmpty,
+        s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+      require(names.nonEmpty, s"query list '$list' names no query")
+      all.filter { case (k, _) => names(k) }
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

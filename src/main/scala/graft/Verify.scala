@@ -1,32 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // sized generated-class cache (r16, see Bench.scala) — identical
-      // results, steady-state JIT across a many-query run
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val (sfDir, outDir) = args match {
+      case Array(s, o) => (s, o)
+      case _ => throw new IllegalArgumentException(
+        "usage: graft.Verify <sfDir> <outDir>")
+    }
     // SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump — an iteration
     // aid; the driver's run leaves it unset.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    val spark = GraftSession.local()
+    new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -395,14 +395,7 @@ object DumpConvert {
       case _ => throw new IllegalArgumentException(
         "usage: graft.etl.DumpConvert <dump.sql|dumpDir> <outDir> [first|union]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     try convert(spark, dumpPath, outDir, merge)
     finally spark.stop()
     println(s"[dump-convert] wrote ${tableSchemas.size} tables to $outDir")

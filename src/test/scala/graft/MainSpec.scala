@@ -32,6 +32,18 @@ class MainSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Main.parseArgs(Seq("--data-dir", "/d")))
   }
 
+  test("more than one input source fails by name") {
+    def sources(flags: String*) = intercept[IllegalArgumentException](
+      Main.parseArgs(flags.flatMap(f => Seq(f, "/x")) ++ Seq("--output-dir", "/o")))
+      .getMessage
+    assert(sources("--data-dir", "--dump-file")
+      .contains("got --data-dir and --dump-file"))
+    assert(sources("--dump-file", "--fetch-dump")
+      .contains("got --dump-file and --fetch-dump"))
+    assert(sources("--data-dir", "--dump-file", "--fetch-dump")
+      .contains("got --data-dir and --dump-file and --fetch-dump"))
+  }
+
   test("--exclude-interval without a comma fails by name") {
     val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
       "--data-dir", "/d", "--output-dir", "/o",

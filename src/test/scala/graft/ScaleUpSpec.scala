@@ -92,4 +92,12 @@ class ScaleUpSpec extends AnyFunSuite {
     assert(imgs.distinct.size == cs.size,
       "two copy indices produced the same transformed vector")
   }
+
+  test("a failed run prints FAILED for its seconds and the ratio, not a number") {
+    assert(ScaleUp.tableRow("q", Some(0.5), Some(2.0)) == "| q | 0.50s | 2.00s | 4.0× |")
+    assert(ScaleUp.tableRow("q", Some(0.5), None) == "| q | 0.50s | FAILED | FAILED |")
+    assert(ScaleUp.tableRow("q", None, Some(2.0)) == "| q | FAILED | 2.00s | FAILED |")
+    // failing at both scales used to read as a 1.0× ratio
+    assert(ScaleUp.tableRow("q", None, None) == "| q | FAILED | FAILED | FAILED |")
+  }
 }
