@@ -33,10 +33,10 @@ object Main {
       dumpFile: String = "",
       fetchDump: String = "",
       fetchDate: Option[java.time.LocalDate] = None,
-      dumpMerge: String = "first",
+      dumpMerge: Option[String] = None,
       ratesFile: String = "",
       outagesFile: String = "",
-      clusterName: String = etl.OutagesConfig.DefaultCluster,
+      clusterName: Option[String] = None,
       outputDir: String = "",
       uploadDest: String = "",
       uploadToPrimary: Boolean = true, // main.py:136 default True
@@ -65,10 +65,10 @@ object Main {
       case "--fetch-dump" :: v :: t => go(t, c.copy(fetchDump = v))
       case "--fetch-date" :: v :: t =>
         go(t, c.copy(fetchDate = Some(java.time.LocalDate.parse(v))))
-      case "--dump-merge" :: v :: t => go(t, c.copy(dumpMerge = v))
+      case "--dump-merge" :: v :: t => go(t, c.copy(dumpMerge = Some(v)))
       case "--rates-file" :: v :: t => go(t, c.copy(ratesFile = v))
       case "--outages-file" :: v :: t => go(t, c.copy(outagesFile = v))
-      case "--cluster-name" :: v :: t => go(t, c.copy(clusterName = v))
+      case "--cluster-name" :: v :: t => go(t, c.copy(clusterName = Some(v)))
       case "--output-dir" :: v :: t => go(t, c.copy(outputDir = v))
       case "--upload-dest" :: v :: t => go(t, c.copy(uploadDest = v))
       case "--no-upload-to-primary" :: t =>
@@ -111,6 +111,15 @@ object Main {
     require(sources.size == 1,
       s"give one input source, got ${sources.mkString(" and ")}")
     require(c.outputDir.nonEmpty, "--output-dir is required")
+    // a qualifier without the flag it qualifies would be silently ignored
+    Seq(("--dump-merge", c.dumpMerge.isDefined, "--dump-file", c.dumpFile),
+      ("--fetch-date", c.fetchDate.isDefined, "--fetch-dump", c.fetchDump),
+      ("--cluster-name", c.clusterName.isDefined, "--outages-file", c.outagesFile))
+      .foreach { case (flag, given, needs, v) =>
+        require(!given || v.nonEmpty, s"$flag applies only with $needs")
+      }
+    c.dumpMerge.foreach(m => require(m == "first" || m == "union",
+      s"--dump-merge must be 'first' or 'union', got '$m'"))
     c
   }
 
@@ -174,7 +183,7 @@ object Main {
       if (cfg.outagesFile.nonEmpty)
         etl.OutagesConfig.outagesDuring(
           etl.OutagesConfig.parse(readConfigSource(cfg.outagesFile)),
-          start, end, cfg.clusterName)
+          start, end, cfg.clusterName.getOrElse(etl.OutagesConfig.DefaultCluster))
       else Seq.empty
     val outages =
       (cfg.excludeIntervals ++ fileOutages).map { case (s, e) => (toUs(s), toUs(e)) }
@@ -208,7 +217,8 @@ object Main {
         new org.apache.hadoop.fs.Path(root, key).toString
       } else cfg.dumpFile
     val dump =
-      if (dumpFile.nonEmpty) Some(etl.DumpConvert.tables(spark, dumpFile, cfg.dumpMerge))
+      if (dumpFile.nonEmpty)
+        Some(etl.DumpConvert.tables(spark, dumpFile, cfg.dumpMerge.getOrElse("first")))
       else None
     try {
       def table(name: String) = dump.fold(Ingest.table(spark, cfg.dataDir, name))(_(name))

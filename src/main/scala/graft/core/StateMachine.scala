@@ -41,11 +41,7 @@ object StateMachine {
     "delete"   -> "Deleted"
   )
 
-  /** Incremental fold buffer: the machine's full state between events.
-    * Exposed so the Structured Streaming variant
-    * (graft.streaming.StreamingBilling) folds the SAME transition logic
-    * event-at-a-time across micro-batches.
-    */
+  /** Fold buffer: the machine's full state between events. */
   final case class StateBuf(
       current: String, enteredAtUs: Long, runningUs: Long, stoppedUs: Long) {
     def exitAt(t: Long): StateBuf = current match {

@@ -22,28 +22,8 @@ object Types {
       Runtime(runningUs - other.runningUs, stoppedUs - other.stoppedUs)
     def +(other: Runtime): Runtime =
       Runtime(runningUs + other.runningUs, stoppedUs + other.stoppedUs)
-    def runningSeconds: Double = runningUs / 1e6
-    def stoppedSeconds: Double = stoppedUs / 1e6
   }
   object Runtime { val zero: Runtime = Runtime(0L, 0L) }
-
-  /** Compute flavor (model.py:28-46). `serviceUnits` reproduces the
-    * reference formula `gpu_count or int(max(vcpus, memory/4096))`:
-    * GPU count when a GPU flavor (non-zero), otherwise the CPU SU count
-    * with Python `int()` truncation semantics (floor for positives).
-    */
-  final case class Flavor(
-      id: Long,
-      serviceUnitType: String,
-      vcpus: Int,
-      memoryMb: Long,
-      storageGb: Int,
-      gpuCount: Int = 0
-  ) {
-    def serviceUnits: Long =
-      if (gpuCount != 0) gpuCount.toLong
-      else math.max(vcpus.toDouble, memoryMb / 4096.0).toLong
-  }
 
   /** Per-SU-type hourly rates (billing.py:19-35). Money is BigDecimal
     * end-to-end; rounding HALF_UP to cents happens only at the sink

@@ -53,21 +53,6 @@ object DumpFetch {
       .map(p => list(p).sorted)
       .collectFirst { case keys if keys.nonEmpty => keys.head }
 
-  /** Local download target: `/tmp/{basename}` (fetch.py:75-76). */
-  def localDownloadPath(key: String, tmpDir: String = "/tmp"): String =
-    s"$tmpDir/${key.split('/').last}"
-
-  /** Post-gunzip filename: strip one trailing `.gz` (fetch.py:83-92 —
-    * `gzip -d` renames in place); non-.gz paths pass through unchanged.
-    */
-  def uncompressedPath(path: String): String =
-    if (path.endsWith(".gz")) path.dropRight(3) else path
-
-  /** The Hadoop-IO form of a selected key — what `spark.read`/`Files`
-    * consume when the cluster has S3 credentials configured.
-    */
-  def s3aUri(bucket: String, key: String): String = s"s3a://$bucket/$key"
-
   /** A prefix-listing function backed by Hadoop `FileSystem` — the same
     * API over `file://` fixtures and `s3a://` buckets, which is what lets
     * [[selectDumpKey]] run end-to-end with zero network (and against the

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Multi-column data layout for file-level skipping.
@@ -19,11 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Interleave the low `bits` bits of two non-negative long columns,
-    * `a`'s bits in the odd positions (major), `b`'s in the even. Callers
-    * scale each column into [0, 2^bits) first — rank, modulo, or
-    * min/max scaling, whatever preserves the locality they care about.
-    */
   /** Hilbert-curve distance of (a, b) on the 2^bits grid — the
     * space-filling key with true ADJACENCY: consecutive keys are grid
     * neighbors (|Δa|+|Δb| = 1, proven in LayoutHilbertSpec), so a
@@ -65,6 +60,11 @@ object Layout {
       }).getField("d")
   }
 
+  /** Interleave the low `bits` bits of two non-negative long columns,
+    * `a`'s bits in the odd positions (major), `b`'s in the even. Callers
+    * scale each column into [0, 2^bits) first — rank, modulo, or
+    * min/max scaling, whatever preserves the locality they care about.
+    */
   def zorderKey(a: Column, b: Column, bits: Int): Column = {
     require(bits >= 1 && bits <= 31, "bits must be in [1, 31]")
     // cast to long up front: Spark's shiftleft on an int column wraps
@@ -76,21 +76,4 @@ object Layout {
         .bitwiseOR(shiftleft(shiftright(bl, i).bitwiseAND(lit(1L)), 2 * i))
     }.reduce(_.bitwiseOR(_))
   }
-
-  /** Range-partition by the z-key and sort files internally by it: every
-    * output file covers one contiguous z-range = a small union of quad
-    * cells, i.e. a tight rectangle-ish envelope in (a, b) space.
-    */
-  def writeZOrdered(
-      df: DataFrame,
-      a: String,
-      b: String,
-      bits: Int,
-      numFiles: Int,
-      path: String): Unit =
-    df.withColumn("__zkey", zorderKey(col(a), col(b), bits))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-      .write.mode("overwrite").parquet(path)
 }

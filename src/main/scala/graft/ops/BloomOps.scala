@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * a scalar subquery, parameters are Spark's. This object is the
   * composable Column-API form: deterministic bit layout (the spec pins
   * false-positive behavior against the (1−e^(−kn/m))^k envelope),
-  * inspectable words, and [[pruneStats]] measuring what the filter
-  * actually bought. Both are oracle-checked against the plain semi join.
+  * inspectable words. Both are oracle-checked against the plain semi
+  * join.
   */
 object BloomOps {
 
@@ -86,26 +86,5 @@ object BloomOps {
       .filter(mightContain(col(factKey), words, numBits, numHashes))
       .join(dim.select(col(dimKey)).distinct(),
         col(factKey) === col(dimKey), "left_semi")
-  }
-
-  /** Diagnostic: probe-side survival counts — total rows, bloom
-    * survivors, exact matches. The false-positive overhead is
-    * `(candidates − matches) / (total − matches)`; spec-asserted against
-    * the theoretical (1 − e^(−kn/m))^k envelope.
-    */
-  def pruneStats(fact: DataFrame, dim: DataFrame, factKey: String,
-      dimKey: String, numBits: Int, numHashes: Int): DataFrame = {
-    val words = buildBits(dim, col(dimKey), numBits, numHashes)
-    val exact = dim.select(col(dimKey)).distinct()
-    fact
-      .withColumn("__bloom",
-        coalesce(mightContain(col(factKey), words, numBits, numHashes),
-          lit(false)))
-      .join(exact.withColumn("__hit", lit(1L)),
-        col(factKey) === col(dimKey), "left")
-      .agg(
-        count(lit(1)).as("n_total"),
-        sum(when(col("__bloom"), 1L).otherwise(0L)).as("n_candidates"),
-        sum(coalesce(col("__hit"), lit(0L))).as("n_matches"))
   }
 }

@@ -63,14 +63,6 @@ object DedupOps {
   def shingled(docs: DataFrame): DataFrame =
     shingledAll(docs).distinct()
 
-  /** Digests computed per shingle row. Each yields four 8-hex-char (32
-    * bit) minhash lanes — 2 MD5 calls per row instead of 8 (MessageDigest
-    * instantiation dominated the aggregation; measured ~4× less hash
-    * work), at the cost of 32-bit instead of 128-bit minhashes, which is
-    * ample: minhash collisions matter per-bucket and 2^32 ≫ any bucket.
-    */
-  val DigestsPerRow: Int = MinHashes / 4
-
   /** MinHash signature: per hash lane i, min over shingles of an
     * 8-hex-char slice of md5("d:"+shingle) — `MinHashes` permutation
     * approximations in ONE aggregation pass over a projection that
@@ -92,6 +84,9 @@ object DedupOps {
     require(bands >= 1 && minHashes % 4 == 0,
       s"bands·$RowsPerBand lanes must pack into 4-lane md5 digests, " +
         s"got $bands bands")
+    // each digest yields four 8-hex-char (32-bit) lanes: a quarter of
+    // the md5 calls (MessageDigest instantiation dominated the
+    // aggregation), and 2^32 is ample — collisions matter per bucket
     val digests = (0 until minHashes / 4).map(d =>
       md5(concat(lit(s"$d:"), col("shingle"))).as(s"m$d"))
     val projected = sh.select(col("doc_id") +: digests: _*)
@@ -928,20 +923,11 @@ object DedupOps {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_contaminated"))
 
-  /** The distinct shingle sets of exactly the docs appearing in `pairs`:
-    * the candidate endpoints (LSH survivors — few) broadcast-semi-filter
-    * the DOCUMENTS table BEFORE tokenization, so the tokenize → explode →
-    * shingle work and the distinct shuffle are candidate-sized, never the
-    * corpus (filtering the exploded shingle stream instead still paid a
-    * full corpus tokenize+shingle — measured ~2× slower at sf0.1). Cache
-    * the (tiny) result when feeding [[ngramJaccard]], which reads it
-    * three times.
-    */
-  def candidateShingles(pairs: DataFrame, docs: DataFrame): DataFrame =
-    shingledAll(candidateDocs(pairs, docs)).distinct()
-
   /** `docs` semi-filtered to the endpoints of `pairs` (broadcast — LSH
-    * survivors are few by construction).
+    * survivors are few by construction) BEFORE tokenization, so the
+    * tokenize → explode → shingle work is candidate-sized, never the
+    * corpus (filtering the exploded shingle stream instead still paid a
+    * full corpus tokenize+shingle — measured ~2× slower at sf0.1).
     */
   def candidateDocs(pairs: DataFrame, docs: DataFrame): DataFrame = {
     val cand = pairs.select(col("doc_a").as("doc_id"))
@@ -961,32 +947,22 @@ object DedupOps {
       .groupBy("doc_id")
       .agg(collect_set(col("shingle")).as("shset"))
 
-  /** n-gram Jaccard verification of candidate pairs: each endpoint's
-    * distinct shingle set collapses to ONE array row, the pair attaches
-    * both arrays via two joins, and |A∩B| is a codegen'd
-    * `array_intersect` in the final projection — |A∪B| = |A|+|B|−|A∩B|.
-    * Long/long division → double is identical IEEE math in DuckDB.
+  /** n-gram Jaccard verification of candidate pairs over pre-aggregated
+    * (doc_id, shset) rows from [[candidateShingleSets]]: each endpoint's
+    * distinct shingle set is ONE array row, the pair attaches both
+    * arrays via two joins, and |A∩B| is a codegen'd `array_intersect`
+    * in the final projection — |A∪B| = |A|+|B|−|A∩B|. Long/long
+    * division → double is identical IEEE math in DuckDB.
     *
-    * One aggregation + two joins (the earlier shingle-equi-join form —
+    * Two joins and a projection (the earlier shingle-equi-join form —
     * two joins INTO the exploded shingle table, a pair-grouped count,
     * then two more joins for |A|/|B| — ran 2.5× slower at sf0.1: six
     * sequential shuffle/broadcast stages of pure scheduling latency).
     * Per-doc arrays are bounded by doc length (shingles ≤ tokens), the
     * same bound [[simhash]] already enforces — LSH survivors are few, so
-    * the array rows stay broadcast-sized at any corpus scale.
-    *
-    * `sh` is a (doc_id, shingle) table — pre-filter it to the pair
-    * endpoints with [[candidateShingles]] so nothing here is
-    * corpus-sized. Prefer [[ngramJaccardSets]] over a cached
-    * [[candidateShingleSets]] when the same sets are reused: the cache
-    * then holds the POST-aggregation arrays and re-runs skip the shuffle.
-    */
-  def ngramJaccard(pairs: DataFrame, sh: DataFrame): DataFrame =
-    ngramJaccardSets(pairs,
-      sh.groupBy("doc_id").agg(collect_set(col("shingle")).as("shset")))
-
-  /** Jaccard over pre-aggregated (doc_id, shset) rows from
-    * [[candidateShingleSets]]: two joins and a projection, nothing else.
+    * the array rows stay broadcast-sized at any corpus scale. Cache the
+    * sets when they are reused: the cache then holds the
+    * POST-aggregation arrays and re-runs skip the shuffle.
     */
   def ngramJaccardSets(pairs: DataFrame, docsets: DataFrame): DataFrame =
     pairs

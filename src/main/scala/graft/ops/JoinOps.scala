@@ -182,35 +182,6 @@ object JoinOps {
       rightTs: String,
       values: Seq[String],
       bucketWidth: Long
-  ): DataFrame =
-    asofJoinBucketed(left, right, key, leftTs, rightTs, values, bucketWidth,
-      prior = true)
-
-  /** Forward variant of [[asofJoinPriorBucketed]]: smallest
-    * `rightTs >= leftTs` per key, same (key, bucket) sweep with the
-    * carry direction reversed (first right row of LATER buckets).
-    */
-  def asofJoinNextBucketed(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      values: Seq[String],
-      bucketWidth: Long
-  ): DataFrame =
-    asofJoinBucketed(left, right, key, leftTs, rightTs, values, bucketWidth,
-      prior = false)
-
-  private def asofJoinBucketed(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      leftTs: String,
-      rightTs: String,
-      values: Seq[String],
-      bucketWidth: Long,
-      prior: Boolean
   ): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     val reserved = values.toSet ++
@@ -223,55 +194,42 @@ object JoinOps {
     val rvType = StructType(
       StructField("asof_ts", right.schema(rightTs).dataType) +:
         values.map(v => StructField(v, right.schema(v).dataType)))
-    // tie tags as in asofJoin: prior → right sorts before left at equal
-    // ts (backward frame sees it); next → after (forward frame sees it)
-    val (lTag, rTag) = if (prior) (1, 0) else (0, 1)
+    // tie tags as in asofJoin: right (0) sorts before left (1) at equal
+    // ts, so the backward frame sees it
     val lSide = left.select(
       Seq(col(key), col(leftTs)) ++ lPayload.map(col) :+
-        lit(null).cast(rvType).as("__rv") :+ lit(lTag).as("__side"): _*)
+        lit(null).cast(rvType).as("__rv") :+ lit(1).as("__side"): _*)
     val rSide = right
       .filter(col(key).isNotNull && col(rightTs).isNotNull)
       .select(
         Seq(col(key), col(rightTs).as(leftTs)) ++
           lPayload.map(c => lit(null).cast(left.schema(c).dataType).as(c)) :+
           struct((col(rightTs).as("asof_ts") +: values.map(col)): _*).as("__rv") :+
-          lit(rTag).as("__side"): _*)
+          lit(0).as("__side"): _*)
     val unioned = lSide.unionByName(rSide)
       .withColumn("__bkt", expr(s"$leftTs div ${bucketWidth}L"))
-    // per-bucket boundary summary: LAST right row for the backward carry,
-    // FIRST for the forward one
-    val boundary = struct(col(leftTs), col("__rv"))
+    // per-bucket boundary summary: the LAST right row, carried forward
     val summaries = unioned
-      .filter(col("__side") === rTag)
+      .filter(col("__side") === 0)
       .groupBy(col(key), col("__bkt"))
-      .agg((if (prior) max(boundary) else min(boundary)).as("__m"))
+      .agg(max(struct(col(leftTs), col("__rv"))).as("__m"))
       .select(col(key), col("__bkt"), col("__m.__rv").as("__last_rv"))
-    val wSpineBase = Window.partitionBy(key).orderBy("__bkt")
-    val wSpine =
-      if (prior) wSpineBase.rowsBetween(Window.unboundedPreceding, -1)
-      else wSpineBase.rowsBetween(1, Window.unboundedFollowing)
-    val carryExpr =
-      if (prior) last(col("__last_rv"), ignoreNulls = true).over(wSpine)
-      else first(col("__last_rv"), ignoreNulls = true).over(wSpine)
+    val wSpine = Window.partitionBy(key).orderBy("__bkt")
+      .rowsBetween(Window.unboundedPreceding, -1)
     val carries = unioned
       .filter(col(leftTs).isNotNull)
       .select(col(key), col("__bkt")).distinct()
       .join(summaries, Seq(key, "__bkt"), "left")
-      .withColumn("__carry", carryExpr)
+      .withColumn("__carry", last(col("__last_rv"), ignoreNulls = true).over(wSpine))
       .select(col(key), col("__bkt"), col("__carry"))
-    val wB = Window.partitionBy(col(key), col("__bkt"))
-      .orderBy(col(leftTs), col("__side"))
-    val filled =
-      if (prior)
-        last(col("__rv"), ignoreNulls = true)
-          .over(wB.rowsBetween(Window.unboundedPreceding, 0))
-      else
-        first(col("__rv"), ignoreNulls = true)
-          .over(wB.rowsBetween(0, Window.unboundedFollowing))
+    val filled = last(col("__rv"), ignoreNulls = true).over(
+      Window.partitionBy(col(key), col("__bkt"))
+        .orderBy(col(leftTs), col("__side"))
+        .rowsBetween(Window.unboundedPreceding, 0))
     unioned
       .join(carries, Seq(key, "__bkt"), "left")
       .withColumn("__rv", when(col(leftTs).isNotNull, coalesce(filled, col("__carry"))))
-      .filter(col("__side") === lTag)
+      .filter(col("__side") === 1)
       .select(
         (Seq(col(key), col(leftTs)) ++ lPayload.map(col) :+
           col("__rv").getField("asof_ts").as("asof_ts")) ++

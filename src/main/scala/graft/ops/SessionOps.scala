@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Gap-based sessionization over the events stream table — the batch
-  * formulation of the session-window pattern (the streaming analog is
-  * `flatMapGroupsWithState`, see graft.streaming). One shuffle on the
+/** Gap-based sessionization over the events table — the batch
+  * formulation of the session-window pattern. One shuffle on the
   * session key; everything after is window functions over the same
   * partitioning, so no second exchange.
   */

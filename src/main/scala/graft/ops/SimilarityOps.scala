@@ -360,11 +360,6 @@ object SimilarityOps {
       .agg(max(col("cos")).as("cos"), min(col("t")).as("min_t"))
   }
 
-  /** Multi-table LSH top-k over the OR-amplified candidates. */
-  def lshTopKTables(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    topK(lshTableCandidates(corpus, queries)
-      .select(col("query_id"), col("neighbor_id"), col("cos")), k)
-
   // ─── Auto-sized LSH buckets: the scale-path candidate generator ─────
   //
   // The fixed-cardinality blockings (label cells in [[nearDupPairs]],
@@ -562,25 +557,6 @@ object SimilarityOps {
     lshPairsCore(sigs, threshold, targetBucket, tables, maxBucket, probes,
       withMinT = true)
 
-  /** The index artifact's FROZEN prefix width, read as a 1-row
-    * `limit(1)` pull (bits is identical on every entry by the build
-    * contract — a `max()` here would scan the full artifact column to
-    * learn one int; r13 verdict nit). Fails BY NAME on a frame that is
-    * not an index artifact, and on an empty frame (e.g. a mis-pathed
-    * parquet read) instead of letting a null width silently sign the
-    * batch into nothing (r13 advice).
-    */
-  private def frozenIndexBits(index: DataFrame): Int = {
-    require(index.columns.contains("bits"),
-      "index frame has no 'bits' column — build it with lshIndexEntriesSlim")
-    val row = index.select(col("bits").cast("int")).limit(1).collect()
-    require(row.nonEmpty && !row(0).isNullAt(0),
-      "index artifact is EMPTY (or its bits column is null) — a " +
-        "mis-pathed read, not a frozen geometry; build the artifact " +
-        "with lshIndexEntriesSlim")
-    row(0).getInt(0)
-  }
-
   /** The FROZEN cross-probe index over an EXISTING corpus, as a
     * self-describing ARTIFACT: per (vector, table) the home bucket
     * entry plus `probes` flipped-bit probe entries, with the adaptive
@@ -661,28 +637,6 @@ object SimilarityOps {
       batch: DataFrame, threshold: Double,
       tables: Int = LshTables,
       maxBucket: Int = DedupOps.DefaultMaxBucket,
-      probes: Int = LshAutoProbes): DataFrame =
-    nearDupPairsLshCrossSlimAt(entries, vectors, batch, threshold,
-      slimIndexBits(entries), tables, maxBucket, probes)
-
-  /** The slim index artifact's frozen prefix width, as the one driver
-    * pull a probe needs — public (r15, advice) so a REPEATED prober
-    * (the streaming twin's per-micro-batch plan) reads it ONCE up
-    * front and hands it to [[nearDupPairsLshCrossSlimAt]], keeping the
-    * per-batch plan purely lazy instead of re-running a limit(1) Spark
-    * job per micro-batch for a width frozen for the stream's lifetime.
-    */
-  def slimIndexBits(entries: DataFrame): Int = frozenIndexBits(entries)
-
-  /** [[nearDupPairsLshCrossSlim]] with the artifact's frozen width
-    * supplied by the caller (from [[slimIndexBits]]) — zero driver
-    * work, fully lazy plan construction.
-    */
-  def nearDupPairsLshCrossSlimAt(entries: DataFrame, vectors: DataFrame,
-      batch: DataFrame, threshold: Double,
-      bits: Int,
-      tables: Int = LshTables,
-      maxBucket: Int = DedupOps.DefaultMaxBucket,
       probes: Int = LshAutoProbes): DataFrame = {
     Seq("vec_id", "t", "sig", "pk", "bits").foreach(c =>
       require(entries.columns.contains(c),
@@ -692,6 +646,17 @@ object SimilarityOps {
       require(vectors.columns.contains(c),
         s"vectors frame has no '$c' column — build it with " +
           "lshIndexVectors"))
+    // the artifact's frozen prefix width as a 1-row limit(1) pull: bits
+    // is identical on every entry by the build contract, so a max()
+    // would scan the whole column to learn one int. An empty frame (a
+    // mis-pathed read) fails by name instead of letting a null width
+    // silently sign the batch into nothing.
+    val bitsRow = entries.select(col("bits").cast("int")).limit(1).collect()
+    require(bitsRow.nonEmpty && !bitsRow(0).isNullAt(0),
+      "index artifact is EMPTY (or its bits column is null) — a " +
+        "mis-pathed read, not a frozen geometry; build the artifact " +
+        "with lshIndexEntriesSlim")
+    val bits = bitsRow(0).getInt(0)
     val batchN = batch.select(col("vec_id"), col("embedding"), col("nrm"))
     val batchDots = (0 until tables).foldLeft(
       batchN.withColumn("__bits", lit(bits))) { (d, t) =>
@@ -1687,7 +1652,7 @@ object SimilarityOps {
 
   /** SPANN-style boundary replication (Chen et al., NeurIPS 2021): the
     * third recall axis after query-side probing ([[ivfTopKMultiProbe]]'s
-    * nprobe) and table OR-ing ([[lshTopKTables]]). Instead of each query
+    * nprobe) and table OR-ing ([[lshTableCandidates]]). Instead of each query
     * opening more cells at SEARCH time, each corpus vector is indexed
     * into its `replicas` nearest cells at BUILD time — the boundary
     * vectors that nprobe chases across cells are already present in the
@@ -2492,15 +2457,9 @@ object SimilarityOps {
     * DECIMAL(18,0)→(28,0)×(10,0) products — the 18-wide staging
     * overflowed at sf0.1's scatter magnitudes; |v|² precomputed in
     * exact Scala integer arithmetic); the fraction derives through
-    * identical doubles + an integer floor. The quotient itself runs
-    * over the dim²-row cached scatter — corpus-independent.
+    * identical doubles + an integer floor. The quotient runs over an
+    * already-collected dim²-row scatter vector — corpus-independent.
     */
-  def pcaVarianceExplained(emb: DataFrame, dim: Int, mu: Array[Double],
-      v: Array[Long]): DataFrame =
-    pcaVarFromScatter(emb.sparkSession,
-      pcaScatterVector(emb, mu, dim), dim, v)
-
-  /** The quotient over an already-collected scatter vector. */
   def pcaVarFromScatter(spark: org.apache.spark.sql.SparkSession,
       scatter: Array[Long], dim: Int, v: Array[Long]): DataFrame = {
     import spark.implicits._

@@ -35,25 +35,6 @@ object SkewOps {
       .agg(sum(col("__partial")).as(s"sum_$valueCol"))
   }
 
-  /** Salted distinct-count (exact): spread the distinct-build shuffle by
-    * hashing the value into the salt, so one hot key's distinct set is
-    * built across `saltFactor` reducers, then merged.
-    */
-  def saltedCountDistinct(
-      df: DataFrame,
-      keyCols: Seq[String],
-      valueCol: String,
-      saltFactor: Int = 16
-  ): DataFrame = {
-    val keys = keyCols.map(col)
-    df
-      .withColumn("__salt", pmod(xxhash64(col(valueCol)), lit(saltFactor)))
-      .groupBy(keys :+ col("__salt"): _*)
-      .agg(countDistinct(col(valueCol)).as("__partial"))
-      .groupBy(keys: _*)
-      .agg(sum(col("__partial")).as(s"n_distinct_$valueCol"))
-  }
-
   /** Salted broadcast-side replication for a skewed join: replicate the
     * small side `saltFactor`× with an explicit salt column and salt the
     * big side's key, so one hot join key spreads over `saltFactor`
@@ -71,16 +52,5 @@ object SkewOps {
       pmod(xxhash64(monotonically_increasing_id()), lit(saltFactor)))
     val replicatedSmall = small.withColumn("__salt", explode(array(salts: _*)))
     saltedBig.join(broadcast(replicatedSmall), Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Diagnostic: per-key row counts with share of total — feed this to
-    * decide saltFactor.
-    */
-  def keySkewProfile(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val keys = keyCols.map(col)
-    val counts = df.groupBy(keys: _*).agg(count(lit(1)).as("n_rows"))
-    counts.withColumn("share",
-      round(col("n_rows") / sum(col("n_rows")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy()), 6))
   }
 }

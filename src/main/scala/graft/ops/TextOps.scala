@@ -276,10 +276,10 @@ object TextOps {
   def bigrams(toks: Column): Column = shingles(toks, 2)
 
   /** The Gopher-style conjunctive quality verdict as one struct column
-    * (rule booleans + final keep) — shared by the batch query
-    * `text_gopher_rules` and the streaming curation path, so the two
-    * cannot drift. Entirely scan-side; see the query's oracle for the
-    * DuckDB replay of every band.
+    * (rule booleans + final keep) — shared by `text_gopher_rules` and
+    * the quality stage of `pipeline_full`, so the two cannot drift.
+    * Entirely scan-side; see the query's oracle for the DuckDB replay of
+    * every band.
     */
   def gopherRules(toks: Column): Column = {
     val n = size(toks).cast("long")

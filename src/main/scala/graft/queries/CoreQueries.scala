@@ -331,11 +331,10 @@ object CoreQueries {
     // bf1_bloom_prune: bf1 drives Spark's internal bloom_filter_agg /
     // might_contain through SQL text; this one is the composable
     // DataFrame-operator form (ops/BloomOps) with a deterministic,
-    // inspectable bit set — and pruneStats exposes the measured
-    // candidate/match counts the internal form hides. The oracle is the
-    // plain EXISTS semi join: row equality proves the bloom introduces
-    // nothing and loses nothing. The lineitem probe scan drops
-    // non-candidates BEFORE any exchange.
+    // inspectable bit set. The oracle is the plain EXISTS semi join:
+    // row equality proves the bloom introduces nothing and loses
+    // nothing. The lineitem probe scan drops non-candidates BEFORE any
+    // exchange.
     "sj4_bloom_semijoin" -> ((s, dir) => {
       val big = table(s, dir, "orders").filter(col("o_totalprice") > 200)
       BloomOps.bloomSemiJoin(
@@ -1122,7 +1121,7 @@ object CoreQueries {
     }),
 
     // LAYOUT1 — the z-order interleave key itself, oracle-checked: the
-    // pure shift/mask/or codegen chain Layout.writeZOrdered sorts by
+    // pure shift/mask/or codegen chain a z-ordered write sorts by
     // (BucketingSpec proves the per-file envelope property; this row
     // pins the KEY ARITHMETIC cross-engine, so the layout both engines
     // would produce from the same data is the same layout). Inputs are

@@ -134,7 +134,11 @@ class BucketingSpec extends AnyFunSuite {
     }
 
     val zout = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    graft.etl.Layout.writeZOrdered(ev, "a", "b", bits = 10, numFiles = 16, zout)
+    // range-partition on the z-key and sort within files: every file
+    // covers one contiguous z-range
+    ev.withColumn("zkey", graft.etl.Layout.zorderKey(col("a"), col("b"), 10))
+      .repartitionByRange(16, col("zkey")).sortWithinPartitions("zkey")
+      .drop("zkey").write.mode("overwrite").parquet(zout)
     val (za, zb) = perFileCoverage(zout)
 
     val lout = java.nio.file.Files.createTempDirectory("graft-lead").toString

@@ -61,6 +61,33 @@ class MainSpec extends AnyFunSuite {
       e.getMessage)
   }
 
+  test("--dump-merge without --dump-file fails by name") {
+    val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+      "--data-dir", "/d", "--output-dir", "/o", "--dump-merge", "union")))
+    assert(e.getMessage.contains("--dump-merge applies only with --dump-file"),
+      e.getMessage)
+    // an unknown merge mode fails here too, before any session starts
+    val bad = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+      "--dump-file", "/d.sql", "--output-dir", "/o", "--dump-merge", "all")))
+    assert(bad.getMessage.contains("--dump-merge must be 'first' or 'union'"),
+      bad.getMessage)
+  }
+
+  test("--fetch-date without --fetch-dump fails by name") {
+    val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+      "--dump-file", "/d.sql", "--output-dir", "/o",
+      "--fetch-date", "2024-01-01")))
+    assert(e.getMessage.contains("--fetch-date applies only with --fetch-dump"),
+      e.getMessage)
+  }
+
+  test("--cluster-name without --outages-file fails by name") {
+    val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+      "--data-dir", "/d", "--output-dir", "/o", "--cluster-name", "stack")))
+    assert(e.getMessage.contains("--cluster-name applies only with --outages-file"),
+      e.getMessage)
+  }
+
   test("a window whose --end falls before --start fails by name") {
     val spark = SparkTestSession.spark
     def runWith(window: String*) = intercept[IllegalArgumentException](

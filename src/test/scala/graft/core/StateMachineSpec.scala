@@ -247,13 +247,4 @@ class StateMachineSpec extends AnyFunSuite {
     assert(r == Runtime.zero)
     assert(run(Nil, jan1_2000, feb1_2000) == Runtime.zero)
   }
-
-  // model.py:38-46 service-unit formula (F1)
-  test("service units: gpu count wins, else truncated max(vcpus, mem/4GiB)") {
-    assert(Flavor(1, "cpu", 1, 4096, 20).serviceUnits == 1)
-    assert(Flavor(1, "cpu", 2, 4096, 20).serviceUnits == 2)
-    assert(Flavor(1, "cpu", 1, 6144, 20).serviceUnits == 1) // int(1.5) truncates
-    assert(Flavor(1, "cpu", 1, 8192, 20).serviceUnits == 2)
-    assert(Flavor(1, "gpu_v100", 8, 65536, 20, gpuCount = 2).serviceUnits == 2)
-  }
 }

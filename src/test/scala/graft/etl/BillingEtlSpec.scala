@@ -8,7 +8,7 @@ import graft.core.Types.Rates
 
 /** End-to-end billing pipeline over a nova-shaped in-memory fixture:
   * enrichment (R2/R3/F1-F3) → state machine (K1/K2) → aggregation (A1-A3)
-  * → pivots (R7/R8) → CSV contract (S6) and key templates (S7).
+  * → CSV contract (S6) and key templates (S7).
   */
 class BillingEtlSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -61,6 +61,17 @@ class BillingEtlSpec extends AnyFunSuite {
     assert(rows("i4") == (("cpu", 0, 1L)))       // null pci → cpu
   }
 
+  // model.py:38-46 service-unit formula (F1)
+  test("service units: gpu count wins, else truncated max(vcpus, mem/4GiB)") {
+    val su = Seq((0, 1, 4096L), (0, 2, 4096L), (0, 1, 6144L), (0, 1, 8192L),
+      (2, 8, 65536L))
+      .toDF("gpu_count", "vcpus", "memory_mb")
+      .select(Enrich.serviceUnits(col("gpu_count"), col("vcpus"), col("memory_mb")))
+      .collect().map(_.getLong(0)).toSeq
+    // int(1.5) truncates at 6144 MB; a non-zero gpu_count overrides 16
+    assert(su == Seq(1L, 2L, 1L, 2L, 2L))
+  }
+
   test("billing: runtime → ceil hours → su_hours per instance") {
     val su = Billing.instanceSuHours(actions, enriched, rates, start, end)
       .collect().map(r => r.getAs[String]("uuid") ->
@@ -86,7 +97,7 @@ class BillingEtlSpec extends AnyFunSuite {
     assert(su("i1") == 8L) // 10h − 2h outage
   }
 
-  test("A1/A2 aggregate + R8 pivot + R7 unpivot round-trip") {
+  test("A1/A2 aggregate: per-(project, SU type) hours and cost") {
     val su = Billing.instanceSuHours(actions, enriched, rates, start, end)
     val long = Billing.projectInvoices(su, rates)
     val got = long.collect().map(r => (r.getAs[String]("project_id"),
@@ -95,19 +106,9 @@ class BillingEtlSpec extends AnyFunSuite {
     assert(got(("projA", "cpu")) == ((20L, "0.260000")))       // 20 × 0.013
     assert(got(("projA", "gpu_v100")) == ((12L, "14.568000"))) // 12 × 1.214
     assert(got(("projB", "cpu")) == ((1L, "0.013000")))        // i4's 1h
-
-    val wide = InvoiceSink.pivotWide(long.select("project_id", "su_type", "su_hours"))
-    val wrow = wide.filter($"project_id" === "projA").collect()(0)
-    assert(wrow.getAs[Long]("cpu_su_hours") == 20L)
-    assert(wrow.getAs[Long]("gpu_v100_su_hours") == 12L)
-    assert(wrow.getAs[Long]("gpu_k80_su_hours") == 0L)
-
-    val roundTrip = InvoiceSink.unpivotLong(wide, rates)
-      .select("project_id", "su_type", "su_hours", "cost")
-    val back = roundTrip.collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("su_hours")).toMap
-    assert(back == Map(("projA", "cpu") -> 20L, ("projA", "gpu_v100") -> 12L,
-      ("projB", "cpu") -> 1L))
+    // one row per billed (project, SU type), none for types never used
+    assert(got.keySet == Set(("projA", "cpu"), ("projA", "gpu_v100"),
+      ("projB", "cpu")))
   }
 
   test("S6 CSV contract: 16 columns, '|' quote, HALF_UP cents") {
@@ -252,21 +253,6 @@ class BillingEtlSpec extends AnyFunSuite {
     val q = quarantined.select("uuid", "quarantine_reason").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(q("c1") == "invalid pci count two")
-  }
-
-  test("partitioned invoice sink: dynamic month overwrite, partition pruning layout") {
-    val long = Billing.projectInvoices(
-      Billing.instanceSuHours(actions, enriched, rates, start, end), rates)
-    val dir = java.nio.file.Files.createTempDirectory("inv_part").toString
-    InvoiceSink.writePartitioned(long, "2024-01", dir)
-    InvoiceSink.writePartitioned(long, "2024-02", dir)
-    // overwriting one month leaves the other intact (dynamic mode)
-    InvoiceSink.writePartitioned(long.limit(1), "2024-02", dir)
-    val months = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("invoice_month=")).sorted
-    assert(months.toSeq == Seq("invoice_month=2024-01", "invoice_month=2024-02"))
-    val back = spark.read.parquet(dir)
-    assert(back.filter($"invoice_month" === "2024-01").count() == long.count())
-    assert(back.filter($"invoice_month" === "2024-02").count() == 1)
   }
 
   test("F6 default window") {

@@ -126,14 +126,4 @@ class DumpFetchSpec extends AnyFunSuite {
     }
     assert(e.getMessage == "No database dumps found for 20240101")
   }
-
-  test("local path, gunzip-name derivation, s3a form") {
-    val key = "dbs/nerc-ctl-0/nova-20240202000002.sql.gz"
-    assert(DumpFetch.localDownloadPath(key) == "/tmp/nova-20240202000002.sql.gz")
-    assert(DumpFetch.uncompressedPath("/tmp/nova-20240202000002.sql.gz") ==
-      "/tmp/nova-20240202000002.sql")
-    assert(DumpFetch.uncompressedPath("/tmp/nova.sql") == "/tmp/nova.sql")
-    assert(DumpFetch.s3aUri("nerc-osp-backups", key) ==
-      "s3a://nerc-osp-backups/dbs/nerc-ctl-0/nova-20240202000002.sql.gz")
-  }
 }

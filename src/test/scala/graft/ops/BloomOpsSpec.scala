@@ -50,18 +50,4 @@ class BloomOpsSpec extends AnyFunSuite {
     assert(got == want)
     assert(got == Set((1L, "a"), (3L, "c"), (9L, "e")))
   }
-
-  test("pruneStats: candidates between matches and total, matches exact") {
-    val fact = (0L until 1000L).toDF("fk")
-    val dim = (0L until 50L).toDF("dk")
-    val r = BloomOps.pruneStats(fact, dim, "fk", "dk", Bits, Hashes)
-      .collect().head
-    val (total, cand, matches) =
-      (r.getAs[Long]("n_total"), r.getAs[Long]("n_candidates"),
-        r.getAs[Long]("n_matches"))
-    assert(total == 1000L)
-    assert(matches == 50L)
-    assert(cand >= matches && cand < total,
-      s"bloom pruned nothing: candidates=$cand")
-  }
 }

@@ -86,10 +86,14 @@ class PcaSpec extends AnyFunSuite {
     assert(proj == Seq(0L, 0L))
   }
 
-  test("pcaVarianceExplained: ≈1 on a rank-1 corpus, 0 on zero scatter") {
+  test("pcaVarFromScatter: ≈1 on a rank-1 corpus, 0 on zero scatter") {
+    def varianceExplained(emb: org.apache.spark.sql.DataFrame,
+        mu: Array[Double], v: Array[Long]) =
+      SimilarityOps.pcaVarFromScatter(spark,
+        SimilarityOps.pcaScatterVector(emb, mu, 2), 2, v).collect().head
     val emb = corr.toDF("vec_id", "embedding")
     val (mu, v) = SimilarityOps.pcaComponent(emb, 2, 3)
-    val row = SimilarityOps.pcaVarianceExplained(emb, 2, mu, v).collect().head
+    val row = varianceExplained(emb, mu, v)
     assert(row.getLong(0) == 2L)
     assert(row.getLong(1) > 0L, "trace must be positive on a varying corpus")
     // the data is exactly rank-1 (all points on the line y = x/3): the
@@ -99,7 +103,7 @@ class PcaSpec extends AnyFunSuite {
     val const = Seq(1L -> Array(2f, 5f), 2L -> Array(2f, 5f))
       .toDF("vec_id", "embedding")
     val (m2, v2) = SimilarityOps.pcaComponent(const, 2, 3)
-    val r2 = SimilarityOps.pcaVarianceExplained(const, 2, m2, v2).collect().head
+    val r2 = varianceExplained(const, m2, v2)
     assert(r2.getLong(1) == 0L && r2.getLong(2) == 0L)
   }
 

@@ -85,6 +85,23 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(math.abs(en._4 - (en._2 * 1000000L + en._3)) <= 1, en.toString)
   }
 
+  test("dpCounts: NULL and '|'-containing keys are distinct groups with distinct seeds") {
+    // a NULL lang must stay its own group, and values containing the '|'
+    // separator must not alias: ('a|b','s') and ('a','b|s') would share
+    // one seed under a plain '|' join
+    val df = Seq[(Option[String], String)]((None, "s"), (None, "s"),
+      (None, "s"), (Some("a|b"), "s"), (Some("a|b"), "s"), (Some("a"), "b|s"))
+      .toDF("lang", "source")
+    val out = ProfileOps.dpCounts(df, Seq("lang", "source"))
+      .collect().map(r => (Option(r.getString(0)), r.getString(1)) ->
+        ((r.getLong(2), r.getLong(3)))).toMap
+    assert(out.size == 3, out.toString)
+    assert(out((None, "s"))._1 == 3L && out((Some("a|b"), "s"))._1 == 2L &&
+      out((Some("a"), "b|s"))._1 == 1L, out.toString)
+    assert(out((Some("a|b"), "s"))._2 != out((Some("a"), "b|s"))._2,
+      s"separator-straddling keys drew identical noise: $out")
+  }
+
   test("personalizedPagerank: mass stays near seeds, sums to ~1, zero unreachable") {
     // chain: 1 -> 2 -> 3, and isolated-from-seeds node 4 -> 5
     val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")

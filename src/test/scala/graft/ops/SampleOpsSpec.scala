@@ -159,4 +159,22 @@ class SampleOpsSpec extends AnyFunSuite {
       "value", 0.2).collect().map(r => r.getString(0) -> r.getLong(4)).toMap
     assert(again("wild") == wildSampled)
   }
+
+  test("weightedReservoir: duplicate (key, weight) rows each hold a rank") {
+    // stratum "a" holds key 1 twice (weight 1e6 ⇒ score ≈ 0, the
+    // stratum's certain top) and key 3 twice: legitimate duplicates
+    // the sample must keep as separate candidates, not collapse
+    val rows = Seq(("a", 1L, 1e6), ("a", 1L, 1e6), ("a", 2L, 3.0),
+      ("a", 3L, 9.0), ("a", 3L, 9.0), ("a", 4L, 0.001),
+      ("b", 7L, 2.0), ("b", 8L, 4.0), ("b", 9L, 0.001))
+      .toDF("stratum", "key", "weight")
+    val out = SampleOps.weightedReservoir(rows, "key", "stratum",
+      col("weight"), 3)
+      .collect().map(r => (r.getAs[String]("stratum"), r.getAs[Long]("rk"),
+        r.getAs[Long]("key")))
+    val a = out.filter(_._1 == "a").map(t => t._2 -> t._3).sorted.toSeq
+    assert(a.map(_._1) == Seq(1L, 2L, 3L), s"stratum a: $a")
+    assert(a.take(2).map(_._2) == Seq(1L, 1L), s"key 1 must hold two ranks: $a")
+    assert(out.count(_._1 == "b") == 3)
+  }
 }

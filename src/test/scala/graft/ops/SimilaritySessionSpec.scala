@@ -89,11 +89,6 @@ class SimilaritySessionSpec extends AnyFunSuite {
     assert(byN.contains(1L) && byN(1L).getAs[Int]("min_t") == 0)
     assert(byN.contains(4L) && byN(4L).getAs[Int]("min_t") == 0)
     assert(!byN.contains(3L))
-    // the OR-amplified top-k dedupes too, and covers the 1-table slice
-    val top = SimilarityOps.lshTopKTables(c, qs, 4)
-      .select("query_id", "neighbor_id").collect()
-    assert(top.length == top.distinct.length)
-    assert(Set(1L, 4L).subsetOf(top.map(_.getAs[Long]("neighbor_id")).toSet))
   }
 
   test("IVF nprobe: probe-1 ≡ trained-cell assignment; more probes never lose neighbors") {

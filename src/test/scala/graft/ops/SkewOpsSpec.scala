@@ -25,14 +25,6 @@ class SkewOpsSpec extends AnyFunSuite {
     assert(salted == direct)
   }
 
-  test("saltedCountDistinct equals direct countDistinct") {
-    val direct = skewed.groupBy("key").agg(countDistinct("val_small")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = SkewOps.saltedCountDistinct(skewed, Seq("key"), "val_small").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == direct)
-  }
-
   test("saltedEquiJoin equals plain join") {
     val dim = Seq(("hot", "HOT"), ("k1", "K1"), ("k2", "K2")).toDF("key", "name")
     val direct = skewed.join(dim, Seq("key")).groupBy("key", "name")
@@ -42,11 +34,5 @@ class SkewOpsSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(salted == direct)
-  }
-
-  test("keySkewProfile flags the hot key") {
-    val prof = SkewOps.keySkewProfile(skewed, Seq("key")).collect()
-      .map(r => r.getString(0) -> r.getDouble(2)).toMap
-    assert(prof("hot") == 0.9)
   }
 }

@@ -150,9 +150,9 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("ngram jaccard: 1.0 for identical docs, high for near dups") {
-    val sh = DedupOps.shingled(docs)
     val pairs = Seq((0L, 1L), (0L, 2L)).toDF("doc_a", "doc_b")
-    val j = DedupOps.ngramJaccard(pairs, sh).collect()
+    val j = DedupOps.ngramJaccardSets(pairs,
+      DedupOps.candidateShingleSets(pairs, docs)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(j((0L, 1L)) == 1.0)
     assert(j((0L, 2L)) > 0.3 && j((0L, 2L)) < 1.0)
