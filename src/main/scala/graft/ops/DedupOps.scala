@@ -1481,10 +1481,13 @@ object DedupOps {
       .select(col("doc_id"), posexplode(TextOps.tokens(col("text"))))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
         col("col").as("tok"))
+    // the spans share `docs`' lineage: a renamed key keeps the join
+    // condition an explicit two-sided equality
     val spans = substringSpans(docs, k, minCount)
+      .withColumnRenamed("doc_id", "s_doc_id")
     val kept = toks.join(spans,
-      toks("doc_id") === spans("doc_id") &&
-        toks("p") >= spans("span_start") && toks("p") < spans("span_end"),
+      col("doc_id") === col("s_doc_id") &&
+        col("p") >= col("span_start") && col("p") < col("span_end"),
       "left_anti")
     val rebuilt = kept
       .groupBy("doc_id")

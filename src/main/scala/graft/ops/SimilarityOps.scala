@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.expressions.{CellOutput, CentroidBook, CentroidDistances}
+
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and IVF-style
   * bucket-restricted top-k as the scale path (search only the query's
@@ -1343,49 +1345,25 @@ object SimilarityOps {
       .select(col("existing_id"), col("batch_id"), col("cos_sim"))
   }
 
-  /** Lloyd's k-means coarse-quantizer training — the step that turns
-    * [[ivfTopK]]'s "given" cells into TRAINED cells (what a real IVF
-    * index builds). Driver-iterated exactly like Spark MLlib's KMeans:
-    * each iteration is one distributed assign+update pass whose k×dim
-    * result collects to the driver and becomes the next iteration's
-    * broadcast constants — the only driver data ever held is the
-    * centroid matrix itself.
-    *
-    * Every arithmetic step is cross-engine deterministic, so the final
-    * assignment oracle-checks in DuckDB:
-    *   - init: the first k vectors by id (data-deterministic, no RNG);
-    *   - assignment: argmin over cells of round(|c|² − 2·x·c, dp) with
-    *     cell-id tiebreak — |x|² is cell-independent and dropped; dots
-    *     are the same left-to-right double accumulation on both engines
-    *     ([[dot]] ≡ `list_dot_product`);
-    *   - update: per-(cell, dim) mean from EXACT decimal sums of
-    *     round(component, dp) — partitioning-independent — divided once
-    *     and re-rounded.
-    * Empty cells drop out on both sides (their id simply vanishes).
-    *
-    * Split as [[kmeansCentroids]] (training → the k×dim matrix) +
-    * [[kmeansCells]] (assignment) so [[ivfTopKMultiProbe]] can rank
-    * probe cells against the same trained centroids.
+  /** Native distances of the `[offset, offset + len)` slice of `vecCol`
+    * to every cell of the centroid matrix: d = round(|c|² − 2·x·c, dp),
+    * |x|² cell-independent and dropped, cells ordered by (d, cell) — the
+    * deterministic argmin/rank rule both engines share
+    * ([[graft.expressions.CentroidDistances]]; one kernel call per row,
+    * the centroids ride the plan as one reference object, not literals).
     */
-  private def sqNorm(c: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < c.length) { s += c(i) * c(i); i += 1 }
-    s
+  private def centroidDistances(cs: Seq[(Long, Array[Double])], vecCol: Column,
+      roundDp: Int, output: CellOutput, offset: Int = 0,
+      len: Int = -1): Column = {
+    val book = CentroidBook(cs)
+    ColumnBridge.column(CentroidDistances(ColumnBridge.expression(vecCol),
+      book, offset, if (len < 0) book.dim else len, roundDp, output))
   }
 
-  /** Per-cell `struct(d, cell)` distance candidates for `vecCol` against
-    * the centroid matrix: d = round(|c|² − 2·x·c, dp) — |x|² is
-    * cell-independent and dropped; the (d, cell) struct order is the
-    * deterministic argmin/rank rule both engines share.
-    */
-  private def cellCandidates(cs: Seq[(Long, Array[Double])], vecCol: Column,
-      roundDp: Int): Seq[Column] =
-    cs.map { case (id, c) =>
-      struct(
-        round(lit(sqNorm(c)) - lit(2.0) * dot(vecCol, typedlit(c.toSeq)),
-          roundDp).as("d"),
-        lit(id).as("cell"))
-    }
+  /** The `n` nearest cell ids of `vecCol`, nearest first. */
+  private def rankedCells(cs: Seq[(Long, Array[Double])], vecCol: Column,
+      roundDp: Int, n: Int): Column =
+    centroidDistances(cs, vecCol, roundDp, CellOutput.Ranked(n))
 
   /** Nearest-cell assignment of the `embedding` column. */
   def assignCell(cs: Seq[(Long, Array[Double])], roundDp: Int = 6): Column =
@@ -1398,7 +1376,7 @@ object SimilarityOps {
     * assigned cell), collected as a labels×dim matrix. With
     * [[assignCell]] as the predictor this is the cheapest supervised
     * baseline an embedding column supports: train = one pass, predict =
-    * scan-side argmin against the prototype literals, and the whole
+    * scan-side native argmin against the prototypes, and the whole
     * train→predict→evaluate chain shares the audited k-means
     * arithmetic contract (6dp-rounded components, DECIMAL sums, cell
     * tiebreak), so it replays in the oracle.
@@ -1420,17 +1398,39 @@ object SimilarityOps {
     }.toSeq.sortBy(_._1)
   }
 
-  /** [[assignCell]]'s argmin over an EXPLICIT vector column — product
-    * quantization assigns per subspace slice, not the whole embedding.
+  /** [[assignCell]]'s argmin over the `[offset, offset + len)` slice of
+    * a vector column — product quantization assigns per subspace slice,
+    * not the whole embedding.
     */
   private def assignCellOn(cs: Seq[(Long, Array[Double])], vecCol: Column,
-      roundDp: Int): Column =
-    array_min(array(cellCandidates(cs, vecCol, roundDp): _*))
+      roundDp: Int, offset: Int = 0, len: Int = -1): Column =
+    centroidDistances(cs, vecCol, roundDp, CellOutput.Nearest, offset, len)
       .getField("cell")
 
-  /** The trained centroid matrix alone (see [[kmeansCells]] for the
-    * arithmetic contract) — what [[ivfTopKMultiProbe]] ranks probe cells
-    * against. Empty when no seed vectors exist.
+  /** Lloyd's k-means coarse-quantizer training — the step that turns
+    * [[ivfTopK]]'s "given" cells into TRAINED cells (what a real IVF
+    * index builds). Driver-iterated exactly like Spark MLlib's KMeans:
+    * each iteration is one distributed assign+update pass whose k×dim
+    * result collects to the driver and becomes the next iteration's
+    * broadcast constants — the only driver data ever held is the
+    * centroid matrix itself.
+    *
+    * Every arithmetic step is cross-engine deterministic, so the final
+    * assignment oracle-checks in DuckDB:
+    *   - init: the first k vectors by id (data-deterministic, no RNG);
+    *   - assignment: argmin over cells of round(|c|² − 2·x·c, dp) with
+    *     cell-id tiebreak — |x|² is cell-independent and dropped; dots
+    *     are the same left-to-right double accumulation on both engines
+    *     (the native centroid kernel ≡ `list_dot_product`);
+    *   - update: per-(cell, dim) mean from EXACT decimal sums of
+    *     round(component, dp) — partitioning-independent — divided once
+    *     and re-rounded.
+    * Empty cells drop out on both sides (their id simply vanishes).
+    *
+    * Split as [[kmeansCentroids]] (training → the k×dim matrix) +
+    * [[kmeansCells]] (assignment) so [[ivfTopKMultiProbe]] can rank
+    * probe cells against the same trained centroids. Empty when no seed
+    * vectors exist.
     */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int,
       roundDp: Int = 6): Seq[(Long, Array[Double])] = {
@@ -1505,11 +1505,7 @@ object SimilarityOps {
       col("embedding").as("q_emb"),
       col("nrm").as("q_nrm"))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        explode(slice(
-          array_sort(array(cellCandidates(centroids, col("q_emb"), roundDp): _*)),
-          1, nprobe)).as("pc"))
-      .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("pc").getField("cell").as("cell"))
+        explode(rankedCells(centroids, col("q_emb"), roundDp, nprobe)).as("cell"))
     val scored = corpus
       .withColumn("cell", assignCell(centroids, roundDp))
       .join(broadcast(probes), Seq("cell"))
@@ -1609,11 +1605,9 @@ object SimilarityOps {
       col("embedding").as("q_emb"),
       col("nrm").as("q_nrm"))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        posexplode(slice(
-          array_sort(array(cellCandidates(centroids, col("q_emb"), roundDp): _*)),
-          1, maxProbe)))
+        posexplode(rankedCells(centroids, col("q_emb"), roundDp, maxProbe)))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        col("pos"), col("col").getField("cell").as("cell"))
+        col("pos"), col("col").as("cell"))
     val scanned = corpus
       .withColumn("cell", assignCell(centroids, roundDp))
       .join(broadcast(probes), Seq("cell"))
@@ -1678,11 +1672,8 @@ object SimilarityOps {
       col("nrm").as("q_nrm"))
     val replicated = corpus
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        explode(slice(
-          array_sort(array(cellCandidates(centroids, col("embedding"), roundDp): _*)),
-          1, replicas)).as("pc"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("pc").getField("cell").as("cell"))
+        explode(rankedCells(centroids, col("embedding"), roundDp, replicas))
+          .as("cell"))
     val scored = replicated
       .join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1774,7 +1765,7 @@ object SimilarityOps {
       roundDp: Int): Seq[Column] =
     cs.map { case (id, c) =>
       struct(
-        round(dot(vecCol, vecCol) + lit(sqNorm(c))
+        round(dot(vecCol, vecCol) + lit(CentroidBook.sqNorm(c))
           - lit(2.0) * dot(vecCol, typedlit(c.toSeq)), roundDp).as("d"),
         lit(id).as("cid"))
     }
@@ -2020,13 +2011,13 @@ object SimilarityOps {
     * redundancy — paraphrases and templated content that share no
     * shingles at all.
     *
-    * Scale shape: one corpus scan assigns cells (centroids ride the plan
-    * as literals — k×dim doubles), ONE shuffle on the cell key, and the
-    * quadratic pair expansion happens only inside a cell's collected
-    * member list, exactly the [[nearDupPairs]] single-branch pattern. The
-    * drop rule needs no iteration: "dominated by any earlier near-dup"
-    * is a one-shot EXISTS over in-cell ordered pairs, which is what the
-    * paper's implementation computes per cluster.
+    * Scale shape: one corpus scan assigns cells (the k×dim centroids
+    * ride the plan as the native kernel's book), ONE shuffle on the cell
+    * key, and the quadratic pair expansion happens only inside a cell's
+    * collected member list, exactly the [[nearDupPairs]] single-branch
+    * pattern. The drop rule needs no iteration: "dominated by any
+    * earlier near-dup" is a one-shot EXISTS over in-cell ordered pairs,
+    * which is what the paper's implementation computes per cluster.
     *
     * The centroid distance reuses the assignment functional
     * `round(|c|² − 2·x·c, dp)` — already exact across engines — so the
@@ -2055,7 +2046,7 @@ object SimilarityOps {
         .filter(lit(false))
     val assigned = n
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        array_min(array(cellCandidates(cents, col("embedding"), roundDp): _*))
+        centroidDistances(cents, col("embedding"), roundDp, CellOutput.Nearest)
           .as("best"))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("best").getField("cell").as("cell"),
@@ -2116,10 +2107,6 @@ object SimilarityOps {
   // init/argmin/decimal-update arithmetic per subspace), so codes, ADC
   // distances, and the recall evaluation all oracle-check in DuckDB.
 
-  /** Subspace `s` (0-based) of an embedding: `subDim` components. */
-  private def subVec(emb: Column, s: Int, subDim: Int): Column =
-    slice(emb, s * subDim + 1, subDim)
-
   /** Train the `m` per-subspace codebooks with the SAME deterministic
     * Lloyd's arithmetic as [[kmeansCentroids]] — identical init (first k
     * vectors by id, sliced), argmin (round(|c|²−2·x_s·c, dp) with cell
@@ -2151,7 +2138,7 @@ object SimilarityOps {
       val upd = emb
         .select(
           array(books.zipWithIndex.map { case (cb, s) =>
-            assignCellOn(cb, subVec(col("embedding"), s, subDim), roundDp)
+            assignCellOn(cb, col("embedding"), roundDp, s * subDim, subDim)
           }: _*).as("cells"),
           col("embedding"))
         .select(col("cells"), posexplode(col("embedding")))
@@ -2183,8 +2170,10 @@ object SimilarityOps {
 
   /** Encode the corpus: `vec_id` plus one BIGINT code per subspace — the
     * compressed representation that replaces the float32 embeddings at
-    * serving time. Codes are whole-stage-codegen argmins over broadcast
-    * centroid literals; the corpus is scanned once, nothing shuffles.
+    * serving time. Each code is one call into the native centroid
+    * kernel ([[graft.expressions.CentroidDistances]]), which argmins the
+    * subspace slice of the embedding in place; the corpus is scanned
+    * once, nothing shuffles.
     */
   def pqCodes(emb: DataFrame, books: Seq[Seq[(Long, Array[Double])]],
       subDim: Int, roundDp: Int = 6): DataFrame = {
@@ -2194,7 +2183,7 @@ object SimilarityOps {
           books.indices.map(s => lit(-1L).as(s"code_$s")): _*)
         .filter(lit(false))
     emb.select(col("vec_id") +: books.indices.map { s =>
-      assignCellOn(books(s), subVec(col("embedding"), s, subDim), roundDp)
+      assignCellOn(books(s), col("embedding"), roundDp, s * subDim, subDim)
         .as(s"code_$s")
     }: _*)
   }
@@ -2202,12 +2191,13 @@ object SimilarityOps {
   /** ADC top-k: each query precomputes one `cell → round(|c|² − 2·q_s·c,
     * dp)` lookup map per subspace (the query-independent |q_s|² term is
     * dropped — it cancels in the per-query ranking, the same reduction
-    * the assignment argmin uses), and every corpus candidate costs m map
-    * probes summed left-to-right instead of a dim-wide dot product. The
-    * m×k tables ride the BROADCAST side; the corpus side touches only
-    * its codes. Ranking is (adist asc, neighbor_id) — each term is
-    * rounded, the sum order is fixed, so the rank is cross-engine
-    * deterministic.
+    * the assignment argmin uses; each table is one native kernel call
+    * over the query's subspace slice), and every corpus candidate costs
+    * m map probes summed left-to-right instead of a dim-wide dot
+    * product. The m×k tables ride the BROADCAST side; the corpus side
+    * touches only its codes, computed once per corpus row. Ranking is
+    * (adist asc, neighbor_id) — each term is rounded, the sum order is
+    * fixed, so the rank is cross-engine deterministic.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame,
       books: Seq[Seq[(Long, Array[Double])]], subDim: Int, k: Int,
@@ -2217,16 +2207,19 @@ object SimilarityOps {
         lit(-1L).as("rank"), lit(0.0).as("adist"))
     if (books.exists(_.isEmpty)) return empty.filter(lit(false))
     def tab(s: Int, qEmb: Column): Column =
-      map(books(s).flatMap { case (id, c) =>
-        Seq(lit(id),
-          round(lit(sqNorm(c)) -
-            lit(2.0) * dot(subVec(qEmb, s, subDim), typedlit(c.toSeq)),
-            roundDp))
-      }: _*)
+      map_from_arrays(typedlit(books(s).map(_._1)),
+        centroidDistances(books(s), qEmb, roundDp, CellOutput.Table,
+          s * subDim, subDim))
     val q = queries.select(
       col("vec_id").as("query_id") +:
         books.indices.map(s => tab(s, col("embedding")).as(s"tab_$s")): _*)
-    val scored = pqCodes(corpus, books, subDim, roundDp)
+    // Each corpus row is encoded once. A deterministic Project's columns
+    // are evaluated where first used, which for the nested-loop join
+    // below is its per-query loop; a generator evaluates its input once
+    // per row, so the codes pass through a one-row inline.
+    val codes = pqCodes(corpus, books, subDim, roundDp)
+    val scored = codes
+      .select(inline(array(struct(codes.columns.map(col): _*))))
       .withColumnRenamed("vec_id", "neighbor_id")
       .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -2249,12 +2242,16 @@ object SimilarityOps {
     * queries×shortlist — recall then depends only on the true neighbor
     * making the shortlist, not on ADC's rank resolution, which is why
     * the measured recall jumps vs raw [[pqTopK]] at tiny extra cost.
+    *
+    * `shortlist` is [[pqTopK]]'s output at the shortlist size; only its
+    * (query_id, neighbor_id) pairs are read. A caller that also reports
+    * raw ADC at k ≤ shortlist filters the same frame to `rank <= k`:
+    * row_number over (adist, neighbor_id) is a total order, so that is
+    * exactly [[pqTopK]] at k, and ADC runs once.
     */
   def pqTopKRefined(corpus: DataFrame, queries: DataFrame,
-      books: Seq[Seq[(Long, Array[Double])]], subDim: Int, k: Int,
-      shortlist: Int, roundDp: Int = 6): DataFrame = {
-    val cand = pqTopK(corpus, queries, books, subDim, shortlist, roundDp)
-      .select(col("query_id"), col("neighbor_id"))
+      shortlist: DataFrame, k: Int, roundDp: Int = 6): DataFrame = {
+    val cand = shortlist.select(col("query_id"), col("neighbor_id"))
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
     // queries×shortlist rows + the query vectors: both tiny — the corpus
@@ -2502,7 +2499,7 @@ object SimilarityOps {
     require(cs.nonEmpty, "oodDistance needs a trained centroid matrix")
     val cands = cs.map { case (id, c) =>
       struct(
-        round(dot(col("embedding"), col("embedding")) + lit(sqNorm(c)) -
+        round(dot(col("embedding"), col("embedding")) + lit(CentroidBook.sqNorm(c)) -
           lit(2.0) * dot(col("embedding"), typedlit(c.toSeq)), roundDp)
           .as("d"),
         lit(id).as("cell"))

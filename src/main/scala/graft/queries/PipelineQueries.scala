@@ -1411,14 +1411,18 @@ object PipelineQueries {
       val qs = emb.filter(col("vec_id") < IvfQueryCount)
       val exact = SimilarityOps.bruteTopKL2(emb, qs, IvfK)
         .select(col("query_id"), col("neighbor_id"))
-      val adc = SimilarityOps.pqTopK(emb, qs, books, PqSubDim, IvfK)
-        .select(col("query_id"), col("neighbor_id"))
-      val refined = SimilarityOps.pqTopKRefined(
-        emb, qs, books, PqSubDim, IvfK, PqShortlist)
+      // one ADC pass at the shortlist size serves both rankers: raw
+      // ADC's top-k is its rank <= IvfK rows (row_number over (adist,
+      // neighbor_id) is a total order). They are flagged, not filtered:
+      // a rank filter would fold into the window's group limit and plan
+      // a second ADC pass instead of reusing the shortlist's exchange.
+      val shortlist = SimilarityOps.pqTopK(emb, qs, books, PqSubDim, PqShortlist)
+      val adc = shortlist.select(col("query_id"), col("neighbor_id"),
+        when(col("rank") <= IvfK, 1L).otherwise(0L).as("hita"))
+      val refined = SimilarityOps.pqTopKRefined(emb, qs, shortlist, IvfK)
         .select(col("query_id"), col("neighbor_id"))
       exact
-        .join(broadcast(adc.withColumn("hita", lit(1L))),
-          Seq("query_id", "neighbor_id"), "left")
+        .join(broadcast(adc), Seq("query_id", "neighbor_id"), "left")
         .join(broadcast(refined.withColumn("hitr", lit(1L))),
           Seq("query_id", "neighbor_id"), "left")
         .groupBy("query_id")

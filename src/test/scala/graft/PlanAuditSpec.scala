@@ -917,4 +917,45 @@ class PlanAuditSpec extends AnyFunSuite {
       !p.contains("BroadcastNestedLoopJoin"),
       p.linesIterator.take(25).mkString("\n"))
   }
+
+  test("sim_recall_pq: one ADC pass serves the raw and the refined recall") {
+    val df = SparkEntry.queries("sim_recall_pq")(spark, dir)
+    df.collect() // settle the adaptive plan: reused exchanges show only then
+    val p = df.queryExecution.executedPlan.toString
+    val fin = p.substring(p.indexOf("== Final Plan =="), p.indexOf("== Initial Plan =="))
+    // the exact L2 truth and ONE ADC scan; the refine stage reuses the
+    // shortlist's exchange
+    assert(countOf(fin, "BroadcastNestedLoopJoin") == 2, fin)
+    assert(fin.contains("ReusedExchange"), fin)
+  }
+
+  test("PQ and IVF centroid distances: every generated method under HotSpot's JIT limit, no unrolled vec_dot(slice(") {
+    // HotSpot does not JIT-compile a method over 8,000 bytes of bytecode
+    // (-XX:-DontCompileHugeMethods): per-cell unrolled argmins ran such
+    // methods interpreted, once per (corpus row, query) pair
+    import org.apache.spark.sql.functions.col
+    import graft.ops.SimilarityOps
+    import graft.queries.PipelineQueries._
+    val emb = graft.queries.CoreQueries.table(spark, "/root/testdata/sf0.01", "embeddings")
+    val normed = SimilarityOps.withNorm(emb)
+    val qs = normed.filter(col("vec_id") < IvfQueryCount)
+    val books = SimilarityOps.pqCodebooks(emb, PqM, PqSubDim, PqK, PqIters)
+    val cents = SimilarityOps.kmeansCentroids(emb, KmeansK, KmeansIters)
+    val frames = Seq(
+      "pqCodes" -> SimilarityOps.pqCodes(emb, books, PqSubDim),
+      "pqTopK" -> SimilarityOps.pqTopK(emb, qs, books, PqSubDim, IvfK),
+      "kmeansCells" -> SimilarityOps.kmeansCells(emb, cents, 6),
+      "ivfTopKMultiProbe" ->
+        SimilarityOps.ivfTopKMultiProbe(normed, qs, cents, IvfK, IvfNprobe))
+    for ((name, df) <- frames) {
+      df.collect() // settle the adaptive plan
+      val plan = df.queryExecution.executedPlan
+      val subtrees = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+      assert(subtrees.nonEmpty, name)
+      val widest = subtrees.map(_._3.maxMethodCodeSize).max
+      assert(widest < 8000, s"$name: a generated method is $widest bytes")
+      assert(!(plan.toString +: subtrees.map(_._1)).exists(_.contains("vec_dot(slice(")),
+        s"$name: ${plan.toString.linesIterator.take(25).mkString("\n")}")
+    }
+  }
 }

@@ -203,8 +203,8 @@ class SimilaritySessionSpec extends AnyFunSuite {
     // shortlist covering the whole corpus makes the exact re-rank total
     val books = SimilarityOps.pqCodebooks(pvecs, m = 2, subDim = 2, k = 2, iters = 2)
     val qs = pvecs.filter(col("vec_id") === 0)
-    val refined = SimilarityOps.pqTopKRefined(pvecs, qs, books, subDim = 2,
-      k = 5, shortlist = 10)
+    val refined = SimilarityOps.pqTopKRefined(pvecs, qs,
+      SimilarityOps.pqTopK(pvecs, qs, books, subDim = 2, k = 10), k = 5)
       .orderBy("rank").collect()
       .map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Double]("d")))
     val exact = SimilarityOps.bruteTopKL2(pvecs, qs, k = 5)

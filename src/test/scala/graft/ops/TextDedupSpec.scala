@@ -287,6 +287,39 @@ class TextDedupSpec extends AnyFunSuite {
       3L -> "u1 u2 u3 u4 u5 u6 u7 u8", 4L -> "v1 v2 v3"))
   }
 
+  test("substringClean: the span join compares two distinct keys, never doc_id with itself") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo}
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val appender = new AbstractAppender("trivially-true-equals", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("trivially true equals predicate")) warned.add(m)
+      }
+    }
+    appender.start()
+    ctx.getConfiguration.getRootLogger.addAppender(appender, null, null)
+    ctx.updateLoggers()
+    val clean = try DedupOps.substringClean(docs, k = 4, minCount = 2)
+    finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(appender.getName)
+      ctx.updateLoggers()
+    }
+    assert(warned.isEmpty, warned)
+    val selfEq = clean.queryExecution.analyzed.collect {
+      case j: Join => j.condition.toSeq.flatMap(_.collect {
+        case e @ EqualTo(a: Attribute, b: Attribute) if a.exprId == b.exprId => e
+      })
+    }.flatten
+    assert(selfEq.isEmpty, selfEq)
+  }
+
   test("substringSpans equals a sequential reference on random small-vocab corpora") {
     import spark.implicits._
     // small vocabulary forces repeated k-grams; the reference recomputes
