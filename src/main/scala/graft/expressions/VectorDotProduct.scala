@@ -47,20 +47,9 @@ case class VectorDotProduct(left: Expression, right: Expression)
   private lazy val leftIsFloat = elemType(left).contains(FloatType)
   private lazy val rightIsFloat = elemType(right).contains(FloatType)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val aa = a.asInstanceOf[ArrayData]
-    val bb = b.asInstanceOf[ArrayData]
-    val n = math.min(aa.numElements(), bb.numElements())
-    var d = 0.0
-    var i = 0
-    while (i < n) {
-      val x = if (leftIsFloat) aa.getFloat(i).toDouble else aa.getDouble(i)
-      val y = if (rightIsFloat) bb.getFloat(i).toDouble else bb.getDouble(i)
-      d += x * y
-      i += 1
-    }
-    d
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorDotProduct.dot(a.asInstanceOf[ArrayData], leftIsFloat,
+      b.asInstanceOf[ArrayData], rightIsFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -82,4 +71,23 @@ case class VectorDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VectorDotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+object VectorDotProduct {
+
+  /** The dot product of the first min(|a|, |b|) components, accumulated
+    * left to right in double: the order the generated loop above uses.
+    */
+  def dot(a: ArrayData, aIsFloat: Boolean, b: ArrayData, bIsFloat: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var d = 0.0
+    var i = 0
+    while (i < n) {
+      val x = if (aIsFloat) a.getFloat(i).toDouble else a.getDouble(i)
+      val y = if (bIsFloat) b.getFloat(i).toDouble else b.getDouble(i)
+      d += x * y
+      i += 1
+    }
+    d
+  }
 }

@@ -5,6 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.expressions.BlockPairs
+import graft.expressions.PairScorer.{AllPairs, PrefixBound}
+
 /** Deduplication operators for LLM training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard verification — all shuffle-
   * bounded (never an unbucketed O(n²) self-join; candidate generation goes
@@ -155,7 +158,7 @@ object DedupOps {
         concat(col("band").cast("string"), lit(":"), col("h").cast("string")),
         maxBucket.toLong, "candidatePairs bucket").as("ids"))
       .select(explode(
-        graft.expressions.ArrayUnorderedPairs.of(col("ids"))).as("p"))
+        BlockPairs.of(col("ids"), AllPairs)).as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()
 
@@ -351,7 +354,7 @@ object DedupOps {
       .filter(size(col("ms")) > 1)
     members
       .select(explode(
-        graft.expressions.ArrayUnorderedPairs.of(col("ms"))).as("p"))
+        BlockPairs.of(col("ms"), AllPairs)).as("p"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         levenshtein(col("p.a.__s"), col("p.b.__s"), maxDist).as("dist"))
       // threshold form returns -1 past maxDist — exclude it with the
@@ -617,7 +620,7 @@ object DedupOps {
       .filter(size(col("ms")) > 1)
     members
       .select(explode(
-        graft.expressions.ArrayUnorderedPairs.of(col("ms"))).as("p"))
+        BlockPairs.of(col("ms"), AllPairs)).as("p"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         jw(col("p.a.__s"), col("p.b.__s")).as("jw_micro"))
       .filter(col("jw_micro") >= minMicro)
@@ -676,7 +679,7 @@ object DedupOps {
       .agg(sort_array(collect_set(col("doc_id"))).as("ds"))
       .filter(size(col("ds")) between (2, maxDf))
       .select(explode(
-        graft.expressions.ArrayUnorderedPairs.of(col("ds"))).as("p"))
+        BlockPairs.of(col("ds"), AllPairs)).as("p"))
       .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -1161,9 +1164,9 @@ object DedupOps {
   }
 
   /** Phase handles for [[similarityJoinExact]], factored so
-    * [[setJoinBuckets]] reads the same prefix rows as the join.
+    * [[setJoinBuckets]] reads the same prefix buckets as the join.
     */
-  private case class SetJoinParts(perdoc: DataFrame, prefix: DataFrame,
+  private case class SetJoinParts(perdoc: DataFrame, buckets: DataFrame,
       cand: DataFrame)
 
   def similarityJoinExact(docs: DataFrame, threshold: Double): DataFrame = {
@@ -1261,27 +1264,25 @@ object DedupOps {
     // Subsumes the length filter (the bound is ≤ min(n_a, n_b)).
     // Measured: 409k → far fewer verify candidates at sf0.1, t=0.5.
     // r16: the in-bucket positional-bound expansion runs in the native
-    // [[graft.expressions.PrefixCandidatePairs]] — the HOF form (kept
+    // [[graft.expressions.BlockPairs]] generator — the HOF form (kept
     // as [[setJoinExpandHof]], the property-test reference) was the
     // same interpreted slice-copy shape as the LSH bucket expansion
-    val expanded = prefix
+    val buckets = prefix
       .groupBy("shingle")
       .agg(sort_array(collect_set(struct(col("doc_id"), col("rk"), col("n"))))
         .as("es"))
       .filter(size(col("es")) > 1)
-      .select(explode(ColumnBridge.column(
-        graft.expressions.PrefixCandidatePairs(
-          ColumnBridge.expression(col("es")), threshold, eps))).as("p"))
+    val cand = buckets
+      .select(explode(BlockPairs.of(col("es"), PrefixBound(threshold, eps))).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"))
-    val cand = expanded
       .distinct()
       .cache()
-    SetJoinParts(perdoc, prefix, cand)
+    SetJoinParts(perdoc, buckets, cand)
   }
 
   /** The original higher-order-function form of the prefix candidate
-    * expansion — the equivalence reference for
-    * [[graft.expressions.PrefixCandidatePairs]]'s spec: same bucket
+    * expansion — the equivalence reference for the
+    * [[graft.expressions.BlockPairs]] prefix-bound scorer: same bucket
     * entry frame (shingle, es) in, same (doc_a, doc_b) rows out.
     */
   private[graft] def setJoinExpandHof(buckets: DataFrame,
@@ -1305,14 +1306,8 @@ object DedupOps {
     * letting the native and HOF expansions read identical buckets.
     */
   private[graft] def setJoinBuckets(docs: DataFrame,
-      threshold: Double): DataFrame = {
-    val p = setJoinParts(docs, threshold)
-    p.prefix
-      .groupBy("shingle")
-      .agg(sort_array(collect_set(struct(col("doc_id"), col("rk"), col("n"))))
-        .as("es"))
-      .filter(size(col("es")) > 1)
-  }
+      threshold: Double): DataFrame =
+    setJoinParts(docs, threshold).buckets
 
   /** SimHash bit width: 16 hex digits of md5 × 4 bits. */
   val SimhashBits = 64
@@ -1408,7 +1403,7 @@ object DedupOps {
       .agg(sort_array(collect_set(struct(col("doc_id"), col("simhash")))).as("members"))
       .filter(size(col("members")) > 1)
       .select(explode(
-        graft.expressions.ArrayUnorderedPairs.of(col("members"))).as("p"))
+        BlockPairs.of(col("members"), AllPairs)).as("p"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
         expr("bit_hamming(p.a.simhash, p.b.simhash)").as("hamming"))
       .distinct()

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.expressions.{CellOutput, CentroidBook, CentroidDistances}
+import graft.expressions.{BlockPairs, CellOutput, CentroidBook, CentroidDistances}
+import graft.expressions.PairScorer.Cosine
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and IVF-style
@@ -520,8 +521,8 @@ object SimilarityOps {
       tables: Int = LshTables,
       maxBucket: Int = DedupOps.DefaultMaxBucket,
       probes: Int = LshAutoProbes): DataFrame =
-    lshPairsCore(sigs, threshold, targetBucket, tables, maxBucket, probes,
-      withMinT = false)
+    lshPairsCoreFromTable(sigs, threshold, targetBucket, tables, maxBucket,
+      probes, withMinT = false)
 
   /** Pairs of the table RANGE [fromTable, tables) only — the
     * incremental-escalation probe (r16, verdict item 3): the wide-pool
@@ -541,7 +542,7 @@ object SimilarityOps {
       maxBucket: Int = DedupOps.DefaultMaxBucket,
       probes: Int = LshAutoProbes): DataFrame =
     lshPairsCoreFromTable(lshAutoSignatureStage(corpus, tables), threshold,
-      targetBucket, fromTable, tables, maxBucket, probes, withMinT = false)
+      targetBucket, tables, maxBucket, probes, withMinT = false, fromTable)
 
   /** [[nearDupPairsLshFrom]] additionally emitting `min_t` — the LOWEST
     * table index in which the pair collided. `min_t < L` selects
@@ -556,8 +557,8 @@ object SimilarityOps {
       tables: Int = LshTables,
       maxBucket: Int = DedupOps.DefaultMaxBucket,
       probes: Int = LshAutoProbes): DataFrame =
-    lshPairsCore(sigs, threshold, targetBucket, tables, maxBucket, probes,
-      withMinT = true)
+    lshPairsCoreFromTable(sigs, threshold, targetBucket, tables, maxBucket,
+      probes, withMinT = true)
 
   /** The FROZEN cross-probe index over an EXISTING corpus, as a
     * self-describing ARTIFACT: per (vector, table) the home bucket
@@ -718,7 +719,7 @@ object SimilarityOps {
     * flip indices are the 1-based positions of the lowest (|dot|, idx)
     * margins within the prefix — deterministic, oracle-replayable
     * ordering). Returns (vec_id, embedding, nrm, t, sig, pk). Used by
-    * the in-corpus collect-expand ([[lshPairsCore]]) and the
+    * the in-corpus collect-expand ([[lshPairsCoreFromTable]]) and the
     * cross-probe index build ([[lshIndexEntriesSlim]]).
     */
   private def lshBucketEntries(sigs: DataFrame, targetBucket: Int,
@@ -784,17 +785,8 @@ object SimilarityOps {
         col("ts.t").as("t"), col("ts.sig").as("sig"), col("ts.pk").as("pk"))
   }
 
-  private def lshPairsCore(sigs: DataFrame, threshold: Double,
-      targetBucket: Int,
-      tables: Int,
-      maxBucket: Int,
-      probes: Int,
-      withMinT: Boolean): DataFrame =
-    lshPairsCoreFromTable(sigs, threshold, targetBucket, 0, tables,
-      maxBucket, probes, withMinT)
-
-  /** [[lshPairsCore]] over the table RANGE [fromTable, tables) — the
-    * incremental-escalation engine (r16): table t's hyperplanes are
+  /** The in-corpus LSH pairs of the table RANGE [fromTable, tables) —
+    * the incremental-escalation engine (r16): table t's hyperplanes are
     * bit-identical at every pool width, so the pairs of an L′-table run
     * are exactly (pairs of the first L tables) ∪ (pairs of tables
     * [L, L′)) de-duplicated — an escalation can probe ONLY the new
@@ -802,38 +794,22 @@ object SimilarityOps {
     */
   private def lshPairsCoreFromTable(sigs: DataFrame, threshold: Double,
       targetBucket: Int,
-      fromTable: Int,
       tables: Int,
       maxBucket: Int,
       probes: Int,
-      withMinT: Boolean): DataFrame = {
-    val exploded = lshBucketEntries(sigs, targetBucket, tables, probes,
-      fromTable)
-    val members = exploded
-      .groupBy("t", "sig")
-      .agg(sort_array(collect_list(struct(
-        col("vec_id"), col("pk"), col("embedding"), col("nrm")))).as("ms0"),
-        count(lit(1)).as("__cnt"))
-      .select(col("t"),
-        // the ceiling is stated in HOME members; multi-probe multiplies
-        // expected bucket ENTRIES by (1+probes), so the guard scales
-        // with it — a corpus that sat under the guard at probes=0 keeps
-        // the same headroom at any probe count (r11-advice)
-        graft.ops.SessionOps.hotKeyGuarded(col("ms0"), col("__cnt"),
-          concat(col("t").cast("string"), lit("/"), col("sig")),
-          maxBucket.toLong * (1 + probes), "nearDupPairsLsh bucket").as("ms"))
-      .filter(size(col("ms")) > 1)
+      withMinT: Boolean,
+      fromTable: Int = 0): DataFrame = {
     // r16: the in-bucket pair expansion + exact-cosine filter run in
-    // the native [[graft.expressions.LshBucketPairs]] expression — the
-    // HOF chain (kept as [[lshScoredPairsHof]], the property-test
+    // the native [[graft.expressions.BlockPairs]] generator — the HOF
+    // chain (kept as [[lshScoredPairsHof]], the property-test
     // reference) was interpreted and copied both 64-double embeddings
     // into a struct per CANDIDATE pair before the threshold cut; the
-    // native loop allocates only for pairs that survive.
-    val scored = members
-      .select(col("t"), explode(ColumnBridge.column(
-        graft.expressions.LshBucketPairs(
-          ColumnBridge.expression(col("ms")), threshold)))
-        .as("p"))
+    // native loop allocates only for pairs that survive. A zero-norm
+    // vector's cosine is NaN and passes (NativeFoldEquivalenceSpec).
+    val scored = lshBucketMembers(sigs, targetBucket, tables, maxBucket,
+        probes, fromTable)
+      .select(col("t"), explode(BlockPairs.of(col("ms"),
+        Cosine(threshold, raiseOnZeroNorm = false))).as("p"))
       .select(col("t"), col("p.vec_a").as("vec_a"),
         col("p.vec_b").as("vec_b"), col("p.cos").as("cos"))
     // same cosine double in every colliding table's row — max() is
@@ -847,9 +823,9 @@ object SimilarityOps {
   }
 
   /** The original higher-order-function in-bucket expansion — kept as
-    * the equivalence reference [[graft.expressions.LshBucketPairs]] is
-    * property-tested against (the canonicalizeRegex pattern): same
-    * member frame in, same (t, vec_a, vec_b, cos) rows out.
+    * the equivalence reference the [[graft.expressions.BlockPairs]]
+    * cosine scorer is property-tested against (the canonicalizeRegex
+    * pattern): same member frame in, same (t, vec_a, vec_b, cos) rows out.
     */
   private[graft] def lshScoredPairsHof(members: DataFrame,
       threshold: Double): DataFrame =
@@ -869,9 +845,9 @@ object SimilarityOps {
         cosine(col("p.ea"), col("p.eb"), col("p.na"), col("p.nb")).as("cos"))
       .filter(col("cos") >= threshold)
 
-  /** [[lshScoredPairsHof]]'s member frame for a table range — the spec
-    * entry point that lets the native and HOF expansions read the SAME
-    * bucket collect.
+  /** The sorted bucket member lists (t, ms) of a table range — read by
+    * [[lshPairsCoreFromTable]], and by the specs so that the native and
+    * HOF expansions read the SAME bucket collect.
     */
   private[graft] def lshBucketMembers(sigs: DataFrame, targetBucket: Int,
       tables: Int, maxBucket: Int, probes: Int,
@@ -882,6 +858,10 @@ object SimilarityOps {
         col("vec_id"), col("pk"), col("embedding"), col("nrm")))).as("ms0"),
         count(lit(1)).as("__cnt"))
       .select(col("t"),
+        // the ceiling is stated in HOME members; multi-probe multiplies
+        // expected bucket ENTRIES by (1+probes), so the guard scales
+        // with it — a corpus that sat under the guard at probes=0 keeps
+        // the same headroom at any probe count (r11-advice)
         graft.ops.SessionOps.hotKeyGuarded(col("ms0"), col("__cnt"),
           concat(col("t").cast("string"), lit("/"), col("sig")),
           maxBucket.toLong * (1 + probes), "nearDupPairsLsh bucket").as("ms"))
@@ -1963,25 +1943,24 @@ object SimilarityOps {
       .select(graft.ops.SessionOps.hotKeyGuarded(
         col("ms"), size(col("ms")).cast("long"), col("label").cast("string"),
         maxBucket.toLong, "nearDupPairs cell").as("ms"))
-    // r17: fused native expand+cosine+threshold ([[CellCosinePairs]],
-    // the LshBucketPairs pattern without the probe rule) — the HOF
-    // form below ([[cellPairsHof]]) materialized a struct carrying both
-    // 64-double embeddings per CANDIDATE pair before the cosine ran;
-    // at ×100 cell occupancy that allocation was the wall. Survivors
-    // only reach the explode; values bit-identical (CellCosinePairsSpec).
+    // r17: fused native expand+cosine+threshold ([[BlockPairs]]; label
+    // cells carry no probe keys) — the HOF form below ([[cellPairsHof]])
+    // materialized a struct carrying both 64-double embeddings per
+    // CANDIDATE pair before the cosine ran; at ×100 cell occupancy that
+    // allocation was the wall. Survivors only reach the explode; values
+    // bit-identical, and a zero-norm member raises DIVIDE_BY_ZERO like
+    // the HOF form's ANSI divide (CellCosinePairsSpec).
     members
-      .select(explode(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.expressions.CellCosinePairs(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("ms")),
-          threshold))).as("p"))
+      .select(explode(BlockPairs.of(col("ms"),
+        Cosine(threshold, raiseOnZeroNorm = true))).as("p"))
       .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
         round(col("p.cos"), 6).as("cos_sim"))
   }
 
   /** The pre-r17 interpreted expansion of [[nearDupPairs]]'s collect
-    * arm — kept as the equivalence reference for
-    * [[graft.expressions.CellCosinePairs]] (CellCosinePairsSpec pins
-    * the two identical, including the zero-norm NaN-cosine edge).
+    * arm — kept as the equivalence reference for the
+    * [[graft.expressions.BlockPairs]] cosine scorer (CellCosinePairsSpec
+    * pins the two identical, and both raising on a zero-norm member).
     */
   private[graft] def cellPairsHof(members: DataFrame,
       threshold: Double): DataFrame =
@@ -2213,13 +2192,8 @@ object SimilarityOps {
     val q = queries.select(
       col("vec_id").as("query_id") +:
         books.indices.map(s => tab(s, col("embedding")).as(s"tab_$s")): _*)
-    // Each corpus row is encoded once. A deterministic Project's columns
-    // are evaluated where first used, which for the nested-loop join
-    // below is its per-query loop; a generator evaluates its input once
-    // per row, so the codes pass through a one-row inline.
-    val codes = pqCodes(corpus, books, subDim, roundDp)
-    val scored = codes
-      .select(inline(array(struct(codes.columns.map(col): _*))))
+    // each corpus row is encoded once
+    val scored = oncePerRow(pqCodes(corpus, books, subDim, roundDp))
       .withColumnRenamed("vec_id", "neighbor_id")
       .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -2233,6 +2207,21 @@ object SimilarityOps {
       .select(col("query_id"), col("neighbor_id"), col("rank"),
         round(col("adist"), roundDp).as("adist"))
   }
+
+  /** `df` with its columns computed once per row. A deterministic
+    * Project's columns are evaluated where first used, which for a join
+    * above it is the per-match loop; a generator evaluates its input
+    * once per row, so the columns pass through a one-row inline.
+    */
+  private def oncePerRow(df: DataFrame): DataFrame =
+    df.select(inline(array(struct(df.columns.map(col): _*))))
+
+  /** `corpus` as (neighbor_id, embedding, sq) with sq = |x|², computed
+    * once per corpus row rather than once per (row, query) pair.
+    */
+  private def withSqNorm(corpus: DataFrame): DataFrame =
+    oncePerRow(corpus.select(col("vec_id").as("neighbor_id"), col("embedding"),
+      dot(col("embedding"), col("embedding")).as("sq")))
 
   /** PQ search the way production systems actually run it (FAISS's
     * refine stage): ADC produces a `shortlist`-sized candidate set per
@@ -2257,12 +2246,11 @@ object SimilarityOps {
     // queries×shortlist rows + the query vectors: both tiny — the corpus
     // is scanned once with a broadcast hash join on neighbor_id
     val candQ = cand.join(broadcast(q), Seq("query_id"))
-    val scored = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding"))
+    val scored = withSqNorm(corpus)
       .join(broadcast(candQ), Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("embedding"), col("embedding")) -
-          lit(2.0) * dot(col("embedding"), col("q_emb")), roundDp).as("d"))
+        round(col("sq") - lit(2.0) * dot(col("embedding"), col("q_emb")),
+          roundDp).as("d"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("d").asc, col("neighbor_id"))
     scored
@@ -2283,11 +2271,11 @@ object SimilarityOps {
     val q = queries.select(
       col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
-    val scored = corpus
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("embedding"), col("embedding")) -
-          lit(2.0) * dot(col("embedding"), col("q_emb")), roundDp).as("d"))
+    val scored = withSqNorm(corpus)
+      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        round(col("sq") - lit(2.0) * dot(col("embedding"), col("q_emb")),
+          roundDp).as("d"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("d").asc, col("neighbor_id"))
     scored

@@ -1007,17 +1007,11 @@ object PipelineQueries {
     // pairs cached: duplicateClusters evaluates them twice (the size
     // check + the collect/loop), and the plan is canonically identical
     // to dedup_jaccard's cached pairs — one shared cache entry.
-    // SPARK_GRAFT_DEDUP_DRIVER_MAX_EDGES overrides the union-find size
-    // gate (0 forces the distributed min-label propagation path) — the
-    // ScaleUp stress harness uses it to measure the propagation path,
-    // which a real 100 TB dup graph would take; the driver's runs leave
-    // it unset.
     "dedup_clusters" -> ((s, dir) =>
       DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
         DedupOps.candidatePairs(dedupBands(s, dir)).cache(),
-        driverMaxEdges = sys.env.get("SPARK_GRAFT_DEDUP_DRIVER_MAX_EDGES")
-          .map(_.toLong).getOrElse(1L << 20))),
+        driverMaxEdges = 1L << 20)),
 
     // per-source duplication-rate data card: which ingest source is
     // feeding the dup clusters — the number that decides where to point
@@ -1112,8 +1106,7 @@ object PipelineQueries {
       DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
         DedupOps.candidatePairs(dedupBands(s, dir)).cache(),
-        driverMaxEdges = sys.env.get("SPARK_GRAFT_DEDUP_DRIVER_MAX_EDGES")
-          .map(_.toLong).getOrElse(1L << 20))
+        driverMaxEdges = 1L << 20)
         .select(col("doc_id"), col("cluster_id"),
           SampleOps.splitOf(col("cluster_id")).as("split"))),
 
@@ -2835,7 +2828,8 @@ object PipelineQueries {
         .agg(sort_array(collect_set(col("source"))).as("ss"))
         .filter(size(col("ss")) > 1)
         .select(explode(
-          graft.expressions.ArrayUnorderedPairs.of(col("ss"))).as("p"))
+          graft.expressions.BlockPairs.of(col("ss"),
+            graft.expressions.PairScorer.AllPairs)).as("p"))
         .select(col("p.a").as("source_a"), col("p.b").as("source_b"))
         .groupBy("source_a", "source_b")
         .agg(count(lit(1)).as("n_shared_grams"))

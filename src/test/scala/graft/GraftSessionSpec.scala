@@ -15,17 +15,35 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.codegen.cache.maxEntries") == "4000")
   }
 
-  test("no main source outside GraftSession.scala builds its own session") {
+  private lazy val sources: Seq[Path] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"main sources not found at ${root.toAbsolutePath}")
-    val sources = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    def name(p: Path) = p.getFileName.toString
+    Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+  }
+  private def name(p: Path) = p.getFileName.toString
+
+  test("no main source outside GraftSession.scala builds its own session") {
     assert(sources.exists(name(_) == "GraftSession.scala"))
     val builders = sources.filter(p =>
       name(p) != "GraftSession.scala" &&
         Files.readString(p).contains("SparkSession.builder("))
     assert(builders.isEmpty,
       s"build the session with GraftSession, not in: ${builders.mkString(", ")}")
+  }
+
+  test("no main source outside the entry points reads the environment") {
+    // settings are read where a process starts; below that they are
+    // parameters. The staging directory is a deployment path.
+    val entryPoints = Set("GraftSession.scala", "Bench.scala", "Verify.scala",
+      "ScaleUp.scala", "Profile.scala")
+    val staging = "sys.env.getOrElse(\"SPARK_GRAFT_STAGING_DIR\","
+    assert(sources.exists(name(_) == "DumpConvert.scala"))
+    val readers = sources.filter { p =>
+      val text = Files.readString(p)
+      val rest = if (name(p) == "DumpConvert.scala") text.replace(staging, "") else text
+      !entryPoints(name(p)) && (rest.contains("sys.env") || rest.contains("System.getenv"))
+    }
+    assert(readers.isEmpty,
+      s"read the environment in an entry point and pass the value, not in: ${readers.mkString(", ")}")
   }
 }

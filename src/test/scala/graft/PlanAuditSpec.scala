@@ -958,4 +958,36 @@ class PlanAuditSpec extends AnyFunSuite {
         s"$name: ${plan.toString.linesIterator.take(25).mkString("\n")}")
     }
   }
+
+  test("bruteTopKL2 computes |x|² below its join, not once per (row, query) pair") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.functions.col
+    import graft.expressions.VectorDotProduct
+    import graft.queries.PipelineQueries._
+    val emb = graft.queries.CoreQueries.table(spark, "/root/testdata/sf0.01", "embeddings")
+    val df = graft.ops.SimilarityOps.bruteTopKL2(emb, emb.filter(col("vec_id") < IvfQueryCount), IvfK)
+    df.collect()
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case other => other.children
+    }
+    def selfDots(p: SparkPlan): Int = p.expressions.map(_.collect {
+      case VectorDotProduct(l, r) if l.semanticEquals(r) => 1
+    }.sum).sum
+    // every node from the root down to the join, and everything under it
+    def walk(p: SparkPlan): (Seq[SparkPlan], Seq[SparkPlan]) = p match {
+      case j: BroadcastNestedLoopJoinExec =>
+        (Nil, Iterator.iterate(Seq[SparkPlan](j))(_.flatMap(kids)).takeWhile(_.nonEmpty).flatten.toSeq)
+      case _ =>
+        val below = kids(p).map(walk)
+        (p +: below.flatMap(_._1), below.flatMap(_._2))
+    }
+    val (above, under) = walk(df.queryExecution.executedPlan)
+    assert(under.nonEmpty, "no nested-loop join in the plan")
+    assert(above.map(selfDots).sum == 0, above.mkString("\n"))
+    assert(under.map(selfDots).sum == 1, under.mkString("\n"))
+  }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.SparkTestSession
 
-/** Pins the native unordered-pair expansion to the composed
+/** Pins the all-pairs scorer of the native pair generator
+  * ([[BlockPairs]]) to the composed
   * `flatten(transform(xs, (a,i) => transform(slice(xs, i+2, size(xs)),
   * b => struct(a, b))))` form it replaces at six sites (winnow, source
   * overlap, simhash blocks, banded MinHash, edit-distance/Jaro block
@@ -25,7 +26,7 @@ class ArrayUnorderedPairsSpec extends AnyFunSuite {
     val rows = Seq(Seq.empty[Long], Seq(7L), Seq(1L, 2L), Seq(3L, 3L, 3L)) ++
       Seq.fill(200)(Seq.fill(rnd.nextInt(12))(rnd.nextLong()))
     val bad = rows.toDF("xs")
-      .select(ArrayUnorderedPairs.of(col("xs")).as("got"),
+      .select(BlockPairs.of(col("xs"), PairScorer.AllPairs).as("got"),
         composed(col("xs")).as("want"))
       .filter(not(col("got") <=> col("want"))).count()
     assert(bad == 0)
@@ -36,7 +37,7 @@ class ArrayUnorderedPairsSpec extends AnyFunSuite {
       None, Some(Seq(Some("a"), None, Some("b"))),
       Some(Seq(Some("x"), Some(""), Some("héllo"), None)))
     val bad = rows.toDF("xs")
-      .select(ArrayUnorderedPairs.of(col("xs")).as("got"),
+      .select(BlockPairs.of(col("xs"), PairScorer.AllPairs).as("got"),
         composed(col("xs")).as("want"))
       .filter(not(col("got") <=> col("want"))).count()
     assert(bad == 0)
@@ -50,13 +51,13 @@ class ArrayUnorderedPairsSpec extends AnyFunSuite {
       .select(sort_array(transform(col("ms0"),
         m => struct(m.getField("_1").as("doc_id"), m.getField("_2").as("s")))).as("ms"))
     val bad = df
-      .select(ArrayUnorderedPairs.of(col("ms")).as("got"),
+      .select(BlockPairs.of(col("ms"), PairScorer.AllPairs).as("got"),
         composed(col("ms")).as("want"))
       .filter(not(col("got") <=> col("want"))).count()
     assert(bad == 0)
     // field projection through the pair struct matches the site usage
     val proj = df.filter(size(col("ms")) > 1)
-      .select(explode(ArrayUnorderedPairs.of(col("ms"))).as("p"))
+      .select(explode(BlockPairs.of(col("ms"), PairScorer.AllPairs)).as("p"))
       .select(col("p.a.doc_id").as("da"), col("p.b.doc_id").as("db"),
         col("p.a.s").as("sa"), col("p.b.s").as("sb"))
     val ref = df.filter(size(col("ms")) > 1)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 import graft.ops.SimilarityOps
 
-/** Pins the fused cell expansion (CellCosinePairs, nearDupPairs's r17
-  * collect arm) to the interpreted HOF chain it replaces
+/** Pins the fused cell expansion (the [[BlockPairs]] cosine scorer,
+  * nearDupPairs's r17 collect arm) to the interpreted HOF chain it replaces
   * (SimilarityOps.cellPairsHof): identical (vec_a, vec_b, cos_sim)
   * rows on random cells — including sub-threshold pairs dropped, pair
   * orientation from the sorted member array, and the zero-norm
@@ -29,8 +29,8 @@ class CellCosinePairsSpec extends AnyFunSuite {
 
   private def native(ms: org.apache.spark.sql.DataFrame, t: Double) =
     ms.select(explode(org.apache.spark.sql.graft.ColumnBridge.column(
-      CellCosinePairs(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("ms")), t)))
+      BlockPairs(org.apache.spark.sql.graft.ColumnBridge.expression(col("ms")),
+        PairScorer.Cosine(t, raiseOnZeroNorm = true))))
       .as("p"))
       .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
         round(col("p.cos"), 6).as("cos_sim"))

@@ -140,16 +140,16 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
     val members = SimilarityOps.lshBucketMembers(
       sigs, targetBucket = 8, tables = 4,
       maxBucket = DedupOps.DefaultMaxBucket, probes = 2)
-    // reference = the r16 in-bucket fused native (LshBucketPairs) over
-    // the FAT member frame — the HOF column chain would itself raise
-    // under ANSI on the zero divisor; the in-bucket native's Java
-    // division is the semantics the operator always had
+    // reference = the r16 in-bucket fused native (the BlockPairs cosine
+    // scorer) over the FAT member frame — the HOF column chain would
+    // itself raise under ANSI on the zero divisor; the in-bucket native's
+    // Java division is the semantics the operator always had
     val ref = members
       .select(col("t"), explode(
         org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.expressions.LshBucketPairs(
+          graft.expressions.BlockPairs(
             org.apache.spark.sql.graft.ColumnBridge.expression(col("ms")),
-            0.2))).as("p"))
+            graft.expressions.PairScorer.Cosine(0.2, raiseOnZeroNorm = false)))).as("p"))
       .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
         col("p.cos").as("cos"))
       .groupBy("vec_a", "vec_b")
@@ -229,9 +229,9 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
     val buckets = DedupOps.setJoinBuckets(docs, 0.5)
     val nat = buckets
       .select(explode(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.expressions.PrefixCandidatePairs(
+        graft.expressions.BlockPairs(
           org.apache.spark.sql.graft.ColumnBridge.expression(col("es")),
-          0.5, 1e-9))).as("p"))
+          graft.expressions.PairScorer.PrefixBound(0.5, 1e-9)))).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"))
     val hof = DedupOps.setJoinExpandHof(buckets, 0.5)
     assert(collectSorted(nat) == collectSorted(hof))
