@@ -72,33 +72,29 @@ object Bench {
     dt
   }
 
+  /** `SPARK_GRAFT_BENCH_EVICT`'s query interval; below 1 fails by name. */
+  def evictInterval(setting: Option[String]): Option[Int] =
+    setting.map(_.toInt).map { n =>
+      require(n >= 1, s"SPARK_GRAFT_BENCH_EVICT must be >= 1, got $n"); n
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run — an iteration aid;
     // the driver's full run leaves it unset
     val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    val evictEvery = evictInterval(sys.env.get("SPARK_GRAFT_BENCH_EVICT"))
     val spark = GraftSession.local()
     val ordered = selected.toSeq.sortBy(_._1)
 
-    // SPARK_GRAFT_BENCH_EVICT=N clears the plan-canonical cache registry
-    // every N queries (same positions in warm-up and every timed pass).
-    // This is the SCALE-RUN memory bound (r11 verdict item 4): the suite
-    // holds ~all family caches simultaneously by design — the modeled
-    // train-once/serve-many workflow — which at ×10 data exceeds the
-    // 16 GiB default heap, previously forcing SPARK_DRIVER_MEM=64g.
-    // Periodic eviction caps simultaneous cache volume at one window's
-    // worth. The cost model: queries right after an eviction boundary
-    // rebuild their family's shared cache IN EVERY PASS, inflating their
-    // min — so the knob stays UNSET for the driver's headline artifact
-    // (numbers stay comparable across rounds) and is set by the ×10/×100
-    // harness where fitting in the default heap is the requirement.
-    // ModelCache.clear() rides the same boundary (r12 verdict item 7):
-    // the driver memos — trained models AND the localCheckpoint'd
-    // edge/arc/index artifacts — are part of the cache volume the knob
-    // exists to bound, not an exemption from it. Dropping the memo
-    // reference is the release mechanism for checkpointed frames (the
-    // ContextCleaner reclaims the backing blocks once unreferenced).
-    val evictEvery = sys.env.get("SPARK_GRAFT_BENCH_EVICT").map(_.toInt)
+    // SPARK_GRAFT_BENCH_EVICT=N clears the cached frames and the
+    // ModelCache memos every N queries (same positions in warm-up and
+    // every timed pass): the scale-run memory bound, since the suite
+    // holds ~all family caches at once, which at ×10 data exceeds the
+    // default heap. Queries right after a boundary rebuild their
+    // family's cache in every pass, so the headline run leaves it unset.
+    // Dropping a memo reference lets the ContextCleaner reclaim its
+    // checkpointed blocks.
     def maybeEvict(i: Int): Unit = evictEvery.foreach { n =>
       if ((i + 1) % n == 0) {
         spark.catalog.clearCache()
@@ -147,27 +143,6 @@ object Bench {
       val ts = times.getOrElse(name, Nil)
       if (ts.exists(_ < 0)) name -> (-1.0, -1.0)
       else name -> (ts.min, ts.max)
-    }
-    // SPARK_GRAFT_BENCH_MEMOBYTES=1: report the bytes pinned by the
-    // session's cached/checkpointed artifacts (the kNN edge/arc sets,
-    // the cross-probe index, the pair-surface memos) before and after
-    // a full evict — the measured answer to "do the session memos stay
-    // artifact-sized?" (r13 verdict item 5). The after-evict read polls
-    // briefly: checkpointed blocks are reclaimed by the ContextCleaner
-    // once the memo reference drops, which is asynchronous.
-    if (sys.env.contains("SPARK_GRAFT_BENCH_MEMOBYTES")) {
-      def storage(tag: String): Unit = {
-        val infos = spark.sparkContext.getRDDStorageInfo
-        System.err.println(s"[bench] memo-bytes $tag: " +
-          s"rdds=${infos.length} mem=${infos.map(_.memSize).sum} " +
-          s"disk=${infos.map(_.diskSize).sum} " +
-          s"memoEntries=${graft.ops.ModelCache.size}")
-      }
-      storage("before-evict")
-      spark.catalog.clearCache()
-      graft.ops.ModelCache.clear()
-      (0 until 10).foreach { _ => System.gc(); Thread.sleep(500) }
-      storage("after-evict")
     }
     val qs = sidecarJson(results)
     System.err.println(s"[bench] per-query: $qs")

@@ -247,10 +247,11 @@ object Main {
     // keys are computed and reported only.
     val now = java.time.Instant.now()
     if (cfg.uploadDest.nonEmpty) {
+      val conf = spark.sessionState.newHadoopConf()
       val root = new org.apache.hadoop.fs.Path(cfg.uploadDest)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = root.getFileSystem(conf)
       val written = InvoiceSink.uploadInvoice(
-        InvoiceSink.readCsvBytes(cfg.outputDir), invoiceMonth, endUs, now,
+        InvoiceSink.readCsvBytes(cfg.outputDir, conf), invoiceMonth, endUs, now,
         InvoiceSink.fsPut(fs, root), cfg.uploadToPrimary)
       written.foreach(k => println(s"[main] uploaded: $k"))
     }

@@ -137,8 +137,15 @@ object ScaleUp {
     s"| $q | ${secs(a)} | ${secs(b)} | $ratio |"
   }
 
-  def main(args: Array[String]): Unit = {
+  /** The scale factor argument (default 10); below 1 fails by name. */
+  def parseFactor(args: Seq[String]): Int = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
+    require(factor >= 1, s"ScaleUp factor must be >= 1, got $factor")
+    factor
+  }
+
+  def main(args: Array[String]): Unit = {
+    val factor = parseFactor(args.toSeq)
     val queries = if (args.length > 1) args.tail.toSeq
       else Seq("q1_pricing_summary", "billing_invoice", "k1_state_machine",
         "dedup_minhash_pairs", "dedup_exact", "w6_global_cumsum",

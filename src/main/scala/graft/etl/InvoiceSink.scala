@@ -119,15 +119,18 @@ object InvoiceSink {
   }
 
   /** The single CSV file `writeCsv` produced (it coalesces to one part
-    * file) as bytes — what `uploadInvoice` sends.
+    * file) as bytes — what `uploadInvoice` sends. Read through the
+    * Hadoop FileSystem of `dir`, the one `writeCsv` wrote through, so a
+    * `file://` or `s3a://` output dir reads back like a plain path.
     */
-  def readCsvBytes(dir: String): Array[Byte] = {
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    val part =
-      try listing.toArray.map(_.toString).filter(_.endsWith(".csv"))
-      finally listing.close() // Files.list holds a directory handle
+  def readCsvBytes(dir: String, conf: org.apache.hadoop.conf.Configuration =
+      new org.apache.hadoop.conf.Configuration()): Array[Byte] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    val part = fs.listStatus(root).map(_.getPath).filter(_.getName.endsWith(".csv"))
     require(part.length == 1, s"expected exactly one CSV part in $dir, found ${part.length}")
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(part(0)))
+    val in = fs.open(part(0))
+    try in.readAllBytes() finally in.close()
   }
 
   /** F6 — default billing window (main.py:21-30): start = first of (today −

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.{CellOutput, CentroidBook, RowScore}
+
 /** A logistic-regression quality classifier trained IN-ENGINE by full-
   * batch gradient descent — the fasttext-style quality-scoring stage of
   * a curation pipeline (score docs by P(high quality), threshold or
@@ -232,6 +234,19 @@ object ClassifierOps {
       .groupBy("label", "label_pred").agg(count(lit(1)).as("n"))
   }
 
+  /** Per row: every prototype's score s(x, y) in prototype order (`s_all`)
+    * and the label's score (`s_true`; null for a label with no prototype).
+    */
+  private[ops] def conformalScores(emb: DataFrame,
+      protos: Seq[(Long, Array[Double])], roundDp: Int): DataFrame = {
+    val sAll = SimilarityOps.matrixKernel(CentroidBook(protos), col("embedding"),
+      RowScore.FullDist, Some(roundDp), CellOutput.Table)
+    val at = array_position(typedlit(protos.map(_._1)), col("label")).cast("int")
+    emb.select(col("vec_id"), col("label"), sAll.as("s_all"))
+      .select(col("vec_id"), col("label").cast("long").as("label"),
+        get(col("s_all"), at - 1).as("s_true"), col("s_all"))
+  }
+
   /** Split-conformal calibration + evaluation (Vovk et al.; the
     * Angelopoulos-Bates recipe) over the nearest-prototype
     * nonconformity score: s(x, y) = round(|x|² + |c_y|² − 2·x·c_y, 6)
@@ -247,12 +262,12 @@ object ClassifierOps {
     *      set] ≥ 1−α is the conformal guarantee) and mean set size
     *      (the efficiency number that makes the guarantee non-vacuous).
     *
-    * Shape at scale: prototypes ride as literals, both score columns
-    * are scan-side maps; the one corpus-ordered structure is the
-    * calibration rank selection (a window at test scale — the
-    * PrefixOps.exactKth two-phase selection is the drop-in at 100 TB,
-    * same contract). Everything downstream of the 1-row q̂ broadcast is
-    * a single aggregation.
+    * Shape at scale: the scores are a scan-side map (one native kernel
+    * call per row; the oracle SQL inlines the prototypes as literals);
+    * the one corpus-ordered structure is the calibration rank selection
+    * (a window at test scale — the PrefixOps.exactKth two-phase
+    * selection is the drop-in at 100 TB, same contract). Everything
+    * downstream of the 1-row q̂ broadcast is a single aggregation.
     *
     * Returns ONE row: (n_cal, qhat_micro, n_test, n_covered,
     * coverage_ppm, avg_set_micro) — integer/micro surface throughout.
@@ -268,26 +283,9 @@ object ClassifierOps {
       roundDp: Int = 6): DataFrame = {
     require(protos.nonEmpty, "conformalEval needs trained prototypes")
     import org.apache.spark.sql.expressions.Window
-    def sqn(c: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      s
-    }
-    def d2(c: Array[Double]): Column =
-      round(SimilarityOps.dot(col("embedding"), col("embedding")) +
-        lit(sqn(c)) -
-        lit(2.0) * SimilarityOps.dot(col("embedding"), typedlit(c.toSeq)),
-        roundDp)
-    val trueScore = protos.tail
-      .foldLeft(when(col("label") === protos.head._1, d2(protos.head._2))) {
-        case (acc, (id, c)) => acc.when(col("label") === id, d2(c))
-      }
     val thr = (calFrac * SampleOps.HashSpace).toLong
-    val base = emb
-      .select(col("vec_id"), col("label").cast("long").as("label"),
-        trueScore.as("s_true"),
-        array(protos.map(p => d2(p._2)): _*).as("s_all"),
-        (SampleOps.hashDraw(col("vec_id")) < thr).as("is_cal"))
+    val base = conformalScores(emb, protos, roundDp)
+      .withColumn("is_cal", SampleOps.hashDraw(col("vec_id")) < thr)
       .cache()
     val nCal = base.filter(col("is_cal")).agg(count(lit(1)).as("n_cal"))
     val w = Window.orderBy(col("s_true"), col("vec_id"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.{CellOutput, CentroidBook, RowScore}
+
 /** Lexical retrieval and hybrid fusion — the sparse complement to
   * [[SimilarityOps]]' dense ANN family. A training-data pipeline needs
   * both: BM25 for exact-term recall (rare tokens, identifiers, names
@@ -419,6 +421,16 @@ object RetrievalOps {
       .limit(k)
   }
 
+  /** The largest 6-place cosine of `embedding` (norm `nrm`) to a
+    * selected (embedding, norm) set, in micro-units.
+    */
+  private[ops] def maxSimMicro(sel: Seq[(Array[Double], Double)]): Column =
+    array_max(zip_with(
+      SimilarityOps.matrixKernel(CentroidBook.rows(sel.map(_._1)), col("embedding"),
+        RowScore.Dot, None, CellOutput.Table),
+      typedlit(sel.map(_._2)),
+      (d, nrm) => round(round(d / (col("nrm") * nrm), 6) * 1e6).cast("long")))
+
   /** Maximal-Marginal-Relevance diversity re-ranking (Carbonell &
     * Goldstein, "The Use of MMR, Diversity-Based Reranking", SIGIR
     * 1998): greedily select k of the candidate list maximizing
@@ -469,10 +481,7 @@ object RetrievalOps {
     while (sel.length < k) {
       val msimU =
         if (sel.isEmpty) lit(0L)
-        else array_max(array(sel.map { case (_, e, nrm, _, _) =>
-          round(round(SimilarityOps.dot(col("embedding"), typedlit(e.toSeq)) /
-            (col("nrm") * lit(nrm)), 6) * 1e6).cast("long")
-        }: _*))
+        else maxSimMicro(sel.map { case (_, e, nrm, _, _) => (e, nrm) })
       val remaining =
         if (sel.isEmpty) cand
         else cand.filter(!col("neighbor_id").isin(sel.map(_._1): _*))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.expressions.{BlockPairs, CellOutput, CentroidBook, CentroidDistances}
+import graft.expressions.{BlockPairs, CellOutput, CentroidBook, CentroidDistances, RowScore}
 import graft.expressions.PairScorer.Cosine
 
 /** Similarity search over an embedding column (`array<float>`):
@@ -202,8 +202,9 @@ object SimilarityOps {
   val LshSeed = 20260812L
 
   /** The plane constants, deterministic from [[LshSeed]]. Both the Spark
-    * plan (as array literals) and the oracle SQL (inlined `DOUBLE[]`
-    * literals) are generated from THIS value, so they cannot drift.
+    * plan (as one [[CentroidBook]] reference) and the oracle SQL
+    * (inlined `DOUBLE[]` literals) are generated from THIS value, so
+    * they cannot drift.
     */
   lazy val hyperplanes: Seq[Array[Double]] = {
     val rnd = new scala.util.Random(LshSeed)
@@ -212,8 +213,7 @@ object SimilarityOps {
 
   /** Sign signature of an embedding as a `LshPlanes`-char bit string. */
   def lshSignature(emb: Column): Column =
-    concat(hyperplanes.map(p =>
-      when(dot(emb, typedlit(p.toSeq)) > 0, "1").otherwise("0")): _*)
+    matrixKernel(CentroidBook.rows(hyperplanes), emb, RowScore.Dot, None, CellOutput.Signs)
 
   /** LSH-bucketed top-k: like [[ivfTopK]] but the cell is the hyperplane
     * signature instead of a precomputed label — each query probes only
@@ -237,18 +237,6 @@ object SimilarityOps {
     topK(scored, k)
   }
 
-  /** Per-plane margin magnitudes as `struct(am, idx)` candidates: `am` is
-    * |Σ ±x_d| — how close the vector sits to plane `idx`. The
-    * lowest-margin bits are the least reliable signature bits, so they
-    * are the ones multi-probe flips. Every product is exact in double
-    * arithmetic (±1 components), so the (am, idx) sort order is
-    * cross-engine deterministic.
-    */
-  private def lshMargins(emb: Column): Column =
-    array(hyperplanes.zipWithIndex.map { case (p, i) =>
-      struct(abs(dot(emb, typedlit(p.toSeq))).as("am"), lit(i).as("idx"))
-    }: _*)
-
   /** `sig` with 0-based bit `idx` flipped (signatures are "01…" strings). */
   private def flipBit(sig: Column, idx: Column): Column =
     concat(
@@ -260,7 +248,8 @@ object SimilarityOps {
     * query probes its own bucket PLUS the `probes − 1` buckets reached by
     * flipping its lowest-|margin| signature bits — the buckets a true
     * neighbor most likely fell into when it landed on the other side of a
-    * near-tangent plane.
+    * near-tangent plane. Margins |Σ ±x_d| are exact in double (±1
+    * components), so their (margin, plane) order is deterministic.
     *
     * The scale story is the whole point: the probe expansion happens on
     * the BROADCAST (query) side only — `probes×` more tiny rows in the
@@ -281,9 +270,9 @@ object SimilarityOps {
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
         explode(concat(
           array(col("sig0")),
-          transform(
-            slice(array_sort(lshMargins(col("q_emb"))), 1, probes - 1),
-            f => flipBit(col("sig0"), f.getField("idx"))))).as("sig"))
+          transform(matrixKernel(CentroidBook.rows(hyperplanes), col("q_emb"),
+              RowScore.AbsDot, None, CellOutput.Ranked(probes - 1)),
+            i => flipBit(col("sig0"), i.cast("int"))))).as("sig"))
     val scored = corpus
       .withColumn("sig", lshSignature(col("embedding")))
       .join(broadcast(q), Seq("sig"))
@@ -314,8 +303,8 @@ object SimilarityOps {
 
   /** Sign signature of an embedding under table `t`'s planes. */
   def lshTableSignature(emb: Column, t: Int): Column =
-    concat(tableHyperplanes(t).map(p =>
-      when(dot(emb, typedlit(p.toSeq)) > 0, "1").otherwise("0")): _*)
+    matrixKernel(CentroidBook.rows(tableHyperplanes(t)), emb, RowScore.Dot, None,
+      CellOutput.Signs)
 
   /** All L `(t, sig)` table signatures of an embedding, for one
     * scan-side explode: L×b exact ±1-dot products per vector, computed
@@ -444,6 +433,14 @@ object SimilarityOps {
       Array.fill(LshDim)(if (rnd.nextBoolean()) 1.0 else -1.0)))
   }
 
+  /** `df` plus, per table t < `tables`, the max-width plane dots `__ds$t`
+    * of `embedding` (all null for a null one) that the bucketing reads.
+    */
+  private def withPlaneDots(df: DataFrame, tables: Int): DataFrame =
+    df.select(col("*") +: (0 until tables).map(t =>
+      matrixKernel(CentroidBook.rows(autoTableHyperplanes(t)), col("embedding"),
+        RowScore.Dot, None, CellOutput.Table).as(s"__ds$t")): _*)
+
   /** Default probe count per table for [[nearDupPairsLsh]]: each vector
     * additionally enters, per table, the `LshAutoProbes` buckets reached
     * by flipping its lowest-|margin| prefix bits — the Lv et al. 2007
@@ -470,10 +467,7 @@ object SimilarityOps {
     require(tables >= 1 && tables <= LshWideMaxTables,
       s"tables must be in [1, $LshWideMaxTables], got $tables")
     val cnt = corpus.agg(count(lit(1)).as("__n"))
-    (0 until tables).foldLeft(corpus.crossJoin(broadcast(cnt))) { (d, t) =>
-      d.withColumn(s"__ds$t", array(autoTableHyperplanes(t).map(p =>
-        dot(col("embedding"), typedlit(p.toSeq))): _*))
-    }
+    withPlaneDots(corpus.crossJoin(broadcast(cnt)), tables)
   }
 
   /** Embedding-cosine near-dup pairs with LSH-BUCKET candidate
@@ -488,10 +482,10 @@ object SimilarityOps {
     * survives iff its exact cosine clears `threshold`.
     *
     * Scale shape: ONE corpus scan computes all table plane-dots
-    * (tables × [[LshAutoMaxBits]] codegen'd ±1-dots per row; signature
-    * AND margins read the same dots) and the corpus count rides a
-    * 1-row broadcast into the prefix width; one shuffle on (table,
-    * sig) collects bucket members — home and probe rows alike, so
+    * (tables × [[LshAutoMaxBits]] ±1-dots per row, one kernel call per
+    * table; signature AND margins read the same dots), the corpus count
+    * rides a 1-row broadcast into the prefix width; one shuffle on
+    * (table, sig) collects bucket members — home and probe rows alike, so
     * multi-probe adds NO join, only (1+probes)× bucket rows — with a
     * hot-bucket ceiling (a degenerate bucket fails by name); the
     * quadratic expansion happens only inside a bucket, whose EXPECTED
@@ -661,11 +655,7 @@ object SimilarityOps {
         "with lshIndexEntriesSlim")
     val bits = bitsRow(0).getInt(0)
     val batchN = batch.select(col("vec_id"), col("embedding"), col("nrm"))
-    val batchDots = (0 until tables).foldLeft(
-      batchN.withColumn("__bits", lit(bits))) { (d, t) =>
-      d.withColumn(s"__ds$t", array(autoTableHyperplanes(t).map(p =>
-        dot(col("embedding"), typedlit(p.toSeq))): _*))
-    }
+    val batchDots = withPlaneDots(batchN.withColumn("__bits", lit(bits)), tables)
     val ent = entries
       .select(col("vec_id"), col("t"), col("sig"), col("pk"))
       .withColumn("side", lit(0))
@@ -1325,25 +1315,23 @@ object SimilarityOps {
       .select(col("existing_id"), col("batch_id"), col("cos_sim"))
   }
 
-  /** Native distances of the `[offset, offset + len)` slice of `vecCol`
-    * to every cell of the centroid matrix: d = round(|c|² − 2·x·c, dp),
-    * |x|² cell-independent and dropped, cells ordered by (d, cell) — the
-    * deterministic argmin/rank rule both engines share
-    * ([[graft.expressions.CentroidDistances]]; one kernel call per row,
-    * the centroids ride the plan as one reference object, not literals).
+  /** A trained matrix applied to the `[offset, offset + len)` slice of
+    * `vecCol` (`len < 0`: the book's width) by the one native kernel,
+    * [[graft.expressions.CentroidDistances]]: one kernel call per row,
+    * the rows ride the plan as one reference object, not literals.
+    */
+  private[ops] def matrixKernel(book: CentroidBook, vecCol: Column,
+      score: RowScore, roundDp: Option[Int], output: CellOutput,
+      offset: Int = 0, len: Int = -1): Column =
+    ColumnBridge.column(CentroidDistances(ColumnBridge.expression(vecCol),
+      book, offset, if (len < 0) book.dim else len, score, roundDp, output))
+
+  /** d = round(|c|² − 2·x·c, dp) to every cell (|x|² dropped), cells
+    * ordered by (d, cell): the argmin/rank rule both engines share.
     */
   private def centroidDistances(cs: Seq[(Long, Array[Double])], vecCol: Column,
-      roundDp: Int, output: CellOutput, offset: Int = 0,
-      len: Int = -1): Column = {
-    val book = CentroidBook(cs)
-    ColumnBridge.column(CentroidDistances(ColumnBridge.expression(vecCol),
-      book, offset, if (len < 0) book.dim else len, roundDp, output))
-  }
-
-  /** The `n` nearest cell ids of `vecCol`, nearest first. */
-  private def rankedCells(cs: Seq[(Long, Array[Double])], vecCol: Column,
-      roundDp: Int, n: Int): Column =
-    centroidDistances(cs, vecCol, roundDp, CellOutput.Ranked(n))
+      roundDp: Int, output: CellOutput, offset: Int = 0, len: Int = -1): Column =
+    matrixKernel(CentroidBook(cs), vecCol, RowScore.Dist, Some(roundDp), output, offset, len)
 
   /** Nearest-cell assignment of the `embedding` column. */
   def assignCell(cs: Seq[(Long, Array[Double])], roundDp: Int = 6): Column =
@@ -1485,7 +1473,8 @@ object SimilarityOps {
       col("embedding").as("q_emb"),
       col("nrm").as("q_nrm"))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        explode(rankedCells(centroids, col("q_emb"), roundDp, nprobe)).as("cell"))
+        explode(centroidDistances(centroids, col("q_emb"), roundDp,
+          CellOutput.Ranked(nprobe))).as("cell"))
     val scored = corpus
       .withColumn("cell", assignCell(centroids, roundDp))
       .join(broadcast(probes), Seq("cell"))
@@ -1585,7 +1574,8 @@ object SimilarityOps {
       col("embedding").as("q_emb"),
       col("nrm").as("q_nrm"))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
-        posexplode(rankedCells(centroids, col("q_emb"), roundDp, maxProbe)))
+        posexplode(centroidDistances(centroids, col("q_emb"), roundDp,
+          CellOutput.Ranked(maxProbe))))
       .select(col("query_id"), col("q_emb"), col("q_nrm"),
         col("pos"), col("col").as("cell"))
     val scanned = corpus
@@ -1652,8 +1642,8 @@ object SimilarityOps {
       col("nrm").as("q_nrm"))
     val replicated = corpus
       .select(col("vec_id"), col("embedding"), col("nrm"),
-        explode(rankedCells(centroids, col("embedding"), roundDp, replicas))
-          .as("cell"))
+        explode(centroidDistances(centroids, col("embedding"), roundDp,
+          CellOutput.Ranked(replicas))).as("cell"))
     val scored = replicated
       .join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1674,10 +1664,10 @@ object SimilarityOps {
   // derives deterministically from md5, so any engine regenerates it
   // bit-identically (the LSH-hyperplane determinism story, reused).
   //
-  // Scale shape: the projection is a pure scan-side map (outDim dot
-  // products against literal weight vectors, 2/3 of whose entries are
-  // zero); cosine in the projected space is scale-invariant, so the
-  // 1/sqrt(outDim) JL normalization is dropped.
+  // Scale shape: the projection is a pure scan-side map (one native
+  // kernel call per row over the outDim weight rows, 2/3 of whose
+  // entries are zero); cosine in the projected space is
+  // scale-invariant, so the 1/sqrt(outDim) JL normalization is dropped.
 
   /** The fixed sparse weight matrix: `outDim` rows of `inDim` entries in
     * {−1, 0, +1}, entry (j,i) from md5("rp:j:i") — the same derivation
@@ -1700,23 +1690,20 @@ object SimilarityOps {
   /** Projected embeddings: one row per (vec_id, dim j, rounded value) —
     * the exploded form hash-compares robustly across engines.
     */
-  def randomProjectLong(emb: DataFrame, weights: Seq[Seq[Int]]): DataFrame = {
-    val dims = weights.zipWithIndex.map { case (w, j) =>
-      struct(lit(j.toLong).as("j"),
-        round(dot(col("embedding"), typedlit(w.map(_.toDouble))), 6).as("v"))
-    }
-    emb.select(col("vec_id"), explode(array(dims: _*)).as("p"))
-      .select(col("vec_id"), col("p.j").as("j"), col("p.v").as("v"))
-  }
+  def randomProjectLong(emb: DataFrame, weights: Seq[Seq[Int]]): DataFrame =
+    emb.select(col("vec_id"), posexplode(projected(weights)).as(Seq("j", "v")))
+      .select(col("vec_id"), col("j").cast("long").as("j"), col("v"))
 
   /** The projected corpus in [[withNorm]] shape (embedding + nrm), ready
     * for any of the top-k searchers.
     */
-  def randomProject(emb: DataFrame, weights: Seq[Seq[Int]]): DataFrame = {
-    val proj = array(weights.map(w =>
-      round(dot(col("embedding"), typedlit(w.map(_.toDouble))), 6)): _*)
-    withNorm(emb.select(col("vec_id"), proj.as("embedding")))
-  }
+  def randomProject(emb: DataFrame, weights: Seq[Seq[Int]]): DataFrame =
+    withNorm(emb.select(col("vec_id"), projected(weights).as("embedding")))
+
+  /** `embedding` through the weight matrix, coordinates rounded to 6dp. */
+  private def projected(weights: Seq[Seq[Int]]): Column =
+    matrixKernel(CentroidBook.rows(weights.map(_.map(_.toDouble).toArray)),
+      col("embedding"), RowScore.Dot, Some(6), CellOutput.Table)
 
   // ─── k-center coreset (Gonzalez, "Clustering to minimize the maximum
   //     intercluster distance", TCS 1985) ───────────────────────────────
@@ -1728,8 +1715,10 @@ object SimilarityOps {
   // curation (pick maximally-spread exemplars, budget-bounded).
   //
   // Execution shape at 100 TB: each of the k−1 steps is ONE corpus scan
-  // computing min-distance-to-centers against a ≤k-row broadcast
-  // literal, reduced by TakeOrderedAndProject to a SINGLE row (per-
+  // computing min-distance-to-centers against the ≤k selected centers
+  // (one native kernel call per row, the centers by reference; the
+  // oracle SQL inlines them as literals), reduced by
+  // TakeOrderedAndProject to a SINGLE row (per-
   // partition top-1 heaps — only numPartitions rows ever reach the
   // driver). Selection is inherently sequential (step i's candidate
   // depends on centers 0..i−1 — the same driver-iterated contract as
@@ -1740,32 +1729,34 @@ object SimilarityOps {
   // with vec_id tiebreak — the kmeansCentroids arithmetic contract, so
   // the DuckDB oracle replays the whole selection chain.
 
-  /** Per-center `struct(d2, cid)` squared-distance candidates. */
-  private def d2Candidates(cs: Seq[(Long, Array[Double])], vecCol: Column,
-      roundDp: Int): Seq[Column] =
-    cs.map { case (id, c) =>
-      struct(
-        round(dot(vecCol, vecCol) + lit(CentroidBook.sqNorm(c))
-          - lit(2.0) * dot(vecCol, typedlit(c.toSeq)), roundDp).as("d"),
-        lit(id).as("cid"))
-    }
+  /** `struct(d, cell)` of the nearest center under the full squared
+    * distance round(|x|² + |c|² − 2·x·c, dp), ties by center id.
+    */
+  private def nearestFull(cs: Seq[(Long, Array[Double])], vecCol: Column,
+      roundDp: Int): Column =
+    matrixKernel(CentroidBook(cs), vecCol, RowScore.FullDist, Some(roundDp),
+      CellOutput.Nearest)
+
+  /** The k-center seed, the min-vec_id row; None for an empty corpus. */
+  private def kcenterSeed(emb: DataFrame): Option[(Long, Array[Double])] =
+    emb.select(col("vec_id"), col("embedding")).orderBy(col("vec_id")).limit(1)
+      .collect().headOption.map(readVector)
+
+  private def readVector(r: org.apache.spark.sql.Row): (Long, Array[Double]) =
+    (r.getLong(0), r.getSeq[Number](1).map(_.doubleValue).toArray)
 
   /** The selected centers, in selection order. Seed = min vec_id. */
   def kcenterCenters(emb: DataFrame, k: Int,
       roundDp: Int = 6): Seq[(Long, Array[Double])] = {
     require(k >= 1, s"k must be >= 1, got $k")
-    def readRow(r: org.apache.spark.sql.Row): (Long, Array[Double]) =
-      (r.getLong(0), r.getSeq[Number](1).map(_.doubleValue).toArray)
-    val seed = emb.select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(1).collect()
+    val seed = kcenterSeed(emb)
     if (seed.isEmpty) return Seq.empty // empty corpus: benign empty coreset
-    var centers = Vector(readRow(seed(0)))
+    var centers = seed.toVector
     var covered = false // every remaining row is already a center (dmin 0)
     while (centers.length < k && !covered) {
       val next = emb
         .select(col("vec_id"), col("embedding"),
-          array_min(array(d2Candidates(centers, col("embedding"), roundDp): _*))
-            .getField("d").as("dmin"))
+          nearestFull(centers, col("embedding"), roundDp).getField("d").as("dmin"))
         .orderBy(col("dmin").desc, col("vec_id").asc)
         .limit(1)
         .collect()
@@ -1773,7 +1764,7 @@ object SimilarityOps {
       // selected center. Appending it would duplicate a center, and the
       // oracle's LEFT JOIN on cid would then fan out — stop instead.
       if (next.isEmpty || next(0).getDouble(2) <= 0d) covered = true
-      else centers = centers :+ readRow(next(0))
+      else centers = centers :+ readVector(next(0))
     }
     centers
   }
@@ -1801,36 +1792,22 @@ object SimilarityOps {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val l = if (oversample > 0) oversample else 2 * k
-    def readRow(r: org.apache.spark.sql.Row): (Long, Array[Double]) =
-      (r.getLong(0), r.getSeq[Number](1).map(_.doubleValue).toArray)
-    val seed = emb.select(col("vec_id"), col("embedding"))
-      .orderBy(col("vec_id")).limit(1).collect()
+    val seed = kcenterSeed(emb)
     if (seed.isEmpty) return Seq.empty
-    var cands = Vector(readRow(seed(0)))
+    var cands = seed.toVector
     for (_ <- 1 to rounds) {
       val batch = emb
         .select(col("vec_id"), col("embedding"),
-          array_min(array(d2Candidates(cands, col("embedding"), roundDp): _*))
-            .getField("d").as("dmin"))
+          nearestFull(cands, col("embedding"), roundDp).getField("d").as("dmin"))
         .filter(col("dmin") > 0d)
         .orderBy(col("dmin").desc, col("vec_id").asc)
         .limit(l)
         .select(col("vec_id"), col("embedding"))
         .collect()
-      cands = cands ++ batch.map(readRow)
+      cands = cands ++ batch.map(readVector)
     }
-    val spark = emb.sparkSession
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType), nullable = false)))
-    val candDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        cands.map { case (id, e) =>
-          org.apache.spark.sql.Row(id, e.toSeq) }, 1),
-      schema)
+    val candDf = emb.sparkSession.createDataFrame(
+      cands.map { case (id, e) => (id, e.toSeq) }).toDF("vec_id", "embedding")
     kcenterCenters(candDf, k, roundDp)
   }
 
@@ -1852,10 +1829,9 @@ object SimilarityOps {
     emb
       .select(col("vec_id"),
         ordExpr.as("center_ord"),
-        array_min(array(d2Candidates(centers, col("embedding"), roundDp): _*))
-          .as("best"))
+        nearestFull(centers, col("embedding"), roundDp).as("best"))
       .select(col("vec_id"), col("center_ord"),
-        col("best").getField("cid").as("center_id"),
+        col("best").getField("cell").as("center_id"),
         col("best").getField("d").as("d2"))
   }
 
@@ -2478,21 +2454,15 @@ object SimilarityOps {
     * an OOD SCORE needs it back, so the candidate functional here is
     * round(|x|² + |c|² − 2·x·c, dp) with the same (d, cell) tiebreak.
     *
-    * Pure scan-side map (centroids ride as literals), zero shuffles —
-    * the 100 TB outlier pass costs one corpus read. Returns
+    * Pure scan-side map (one native kernel call per row, the centroids
+    * by reference; the oracle SQL inlines them as literals), zero
+    * shuffles — the 100 TB outlier pass costs one corpus read. Returns
     * (vec_id, cell, d2).
     */
   def oodDistance(emb: DataFrame, cs: Seq[(Long, Array[Double])],
       roundDp: Int = 6): DataFrame = {
     require(cs.nonEmpty, "oodDistance needs a trained centroid matrix")
-    val cands = cs.map { case (id, c) =>
-      struct(
-        round(dot(col("embedding"), col("embedding")) + lit(CentroidBook.sqNorm(c)) -
-          lit(2.0) * dot(col("embedding"), typedlit(c.toSeq)), roundDp)
-          .as("d"),
-        lit(id).as("cell"))
-    }
-    emb.select(col("vec_id"), array_min(array(cands: _*)).as("best"))
+    emb.select(col("vec_id"), nearestFull(cs, col("embedding"), roundDp).as("best"))
       .select(col("vec_id"), col("best.cell").as("cell"),
         col("best.d").as("d2"))
   }

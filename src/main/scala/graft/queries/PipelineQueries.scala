@@ -3327,7 +3327,7 @@ object PipelineQueries {
     // embedding-space outlier scoring: full squared L2 distance to the
     // nearest trained centroid (the |x|² term the assignment drops,
     // restored) — the OOD filter for encoder failures / novel inputs;
-    // zero-shuffle scan with the cached centroids as literals.
+    // zero-shuffle scan, the cached centroids passed by reference.
     "sim_ood_distance" -> ((s, dir) =>
       SimilarityOps.oodDistance(
         table(s, dir, "embeddings"), cachedCentroids(s, dir))),

@@ -46,4 +46,28 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(readers.isEmpty,
       s"read the environment in an entry point and pass the value, not in: ${readers.mkString(", ")}")
   }
+
+  test("no main source unrolls a trained matrix as dot(…, typedlit(…))") {
+    // one vec_dot per literal matrix row grows generated methods past
+    // HotSpot's JIT limit and, for wide matrices, past Janino's 64 KB;
+    // a trained matrix rides as one CentroidBook into CentroidDistances
+    val call = "(?<![\\w$])dot\\(".r
+    val unrolled = sources.flatMap { p =>
+      val text = Files.readString(p)
+      call.findAllMatchIn(text).flatMap { m =>
+        // the argument list: up to the parenthesis that closes this call
+        var depth = 1
+        var i = m.end
+        while (i < text.length && depth > 0) {
+          if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+          i += 1
+        }
+        if (text.substring(m.end, i).contains("typedlit("))
+          Some(s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}")
+        else None
+      }
+    }
+    assert(unrolled.isEmpty,
+      s"apply the matrix with CentroidDistances, not unrolled dots, at: ${unrolled.mkString(", ")}")
+  }
 }

@@ -300,7 +300,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(countOf(p, "\\(\\d+\\) Scan parquet") == 1)
   }
 
-  test("sim_kcenter_coreset assignment: zero joins, zero exchanges — centers are literals") {
+  test("sim_kcenter_coreset assignment: zero joins, zero exchanges — centers by reference") {
     val p = plan("sim_kcenter_coreset")
     assert(countOf(p, "\\(\\d+\\) Exchange") == 0, p.linesIterator.take(25).mkString("\n"))
     assert(!p.contains("Join"))
@@ -946,12 +946,26 @@ class PlanAuditSpec extends AnyFunSuite {
       "pqTopK" -> SimilarityOps.pqTopK(emb, qs, books, PqSubDim, IvfK),
       "kmeansCells" -> SimilarityOps.kmeansCells(emb, cents, 6),
       "ivfTopKMultiProbe" ->
-        SimilarityOps.ivfTopKMultiProbe(normed, qs, cents, IvfK, IvfNprobe))
+        SimilarityOps.ivfTopKMultiProbe(normed, qs, cents, IvfK, IvfNprobe),
+      // the other trained matrices: hyperplanes, centers, prototypes
+      "lshAutoSignatureStage" ->
+        SimilarityOps.lshAutoSignatureStage(normed, SimilarityOps.LshAutoMaxTables),
+      "lshTopKMultiProbe" ->
+        SimilarityOps.lshTopKMultiProbe(normed, qs, LshK, LshProbes),
+      "kcenterAssign" ->
+        SimilarityOps.kcenterAssign(emb, SimilarityOps.kcenterCenters(emb, KcenterK)),
+      "oodDistance" -> SimilarityOps.oodDistance(emb, cents),
+      "conformalEval" ->
+        graft.ops.ClassifierOps.conformalEval(emb, SimilarityOps.labelPrototypes(emb)))
     for ((name, df) <- frames) {
       df.collect() // settle the adaptive plan
       val plan = df.queryExecution.executedPlan
       val subtrees = org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
       assert(subtrees.nonEmpty, name)
+      // a stage that does not compile (Janino's 64 KB method limit) runs
+      // interpreted; its statistics read -1
+      assert(subtrees.forall(_._3.maxMethodCodeSize >= 0),
+        s"$name: a whole-stage codegen subtree does not compile")
       val widest = subtrees.map(_._3.maxMethodCodeSize).max
       assert(widest < 8000, s"$name: a generated method is $widest bytes")
       assert(!(plan.toString +: subtrees.map(_._1)).exists(_.contains("vec_dot(slice(")),

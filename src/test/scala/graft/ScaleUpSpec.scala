@@ -100,4 +100,13 @@ class ScaleUpSpec extends AnyFunSuite {
     // failing at both scales used to read as a 1.0× ratio
     assert(ScaleUp.tableRow("q", None, None) == "| q | FAILED | FAILED | FAILED |")
   }
+
+  test("a factor below 1 fails by name before any session starts") {
+    assert(ScaleUp.parseFactor(Nil) == 10)
+    assert(ScaleUp.parseFactor(Seq("1", "q")) == 1)
+    for (bad <- Seq("0", "-3")) {
+      val e = intercept[IllegalArgumentException](ScaleUp.parseFactor(Seq(bad)))
+      assert(e.getMessage.contains("ScaleUp factor must be >= 1"), e.getMessage)
+    }
+  }
 }

@@ -181,7 +181,8 @@ class BillingEtlSpec extends AnyFunSuite {
       "--start", "2024-01-01", "--end", "2024-02-01",
       "--invoice-month", "2024-01", "--rate-cpu-su", "0.013")), spark)
 
-    val body = InvoiceSink.readCsvBytes(outDir)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val body = InvoiceSink.readCsvBytes(outDir, hadoopConf)
     val primary = bucket.resolve(
       "Invoices/2024-01/Service Invoices/NERC OpenStack 2024-01.csv")
     val daily = bucket.resolve(
@@ -208,6 +209,19 @@ class BillingEtlSpec extends AnyFunSuite {
       "Invoices/2024-01/Service Invoices/NERC OpenStack 2024-01.csv")))
     assert(java.nio.file.Files.exists(bucket2.resolve(
       "Invoices/2024-01/Service Invoices/NERC OpenStack 2024-01-31.csv")))
+
+    // an output dir given as a URI (file:// here, s3a:// in production)
+    // reads back through the FileSystem that wrote it, not as a local path
+    val outUri = java.nio.file.Files.createTempDirectory("graft-up-out-uri")
+    val bucket3 = java.nio.file.Files.createTempDirectory("graft-up-bucket3")
+    graft.Main.run(graft.Main.parseArgs(Seq(
+      "--data-dir", dataDir, "--output-dir", outUri.toUri.toString,
+      "--upload-dest", bucket3.toString,
+      "--start", "2024-01-01", "--end", "2024-02-01",
+      "--invoice-month", "2024-01", "--rate-cpu-su", "0.013")), spark)
+    val uriBody = InvoiceSink.readCsvBytes(outUri.toString, hadoopConf)
+    assert(java.nio.file.Files.readAllBytes(bucket3.resolve(
+      "Invoices/2024-01/Service Invoices/NERC OpenStack 2024-01-31.csv")).sameElements(uriBody))
   }
 
   test("lenient enrichment quarantines bad pci rows instead of failing") {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object CellCandidatesReference {
 
-  private def sqNorm(c: Array[Double]): Double = {
+  def sqNorm(c: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < c.length) { s += c(i) * c(i); i += 1 }
     s

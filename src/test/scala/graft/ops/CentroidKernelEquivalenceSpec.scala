@@ -5,17 +5,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.expressions.{CellOutput, CentroidBook, CentroidDistances}
+import graft.expressions.{CellOutput, CentroidBook, CentroidDistances, RowScore}
 
-/** The native centroid kernel ([[graft.expressions.CentroidDistances]])
-  * pinned against the composed `struct(d, cell)` Catalyst form it
-  * replaced ([[CellCandidatesReference]]): nearest cell with its d, the
-  * ranked cell list and the per-cell distance table must match bit for
-  * bit, through both the interpreted path (a local relation is folded
-  * by `eval`) and whole-stage codegen (the same rows behind a shuffle).
-  * Inputs exercise tied distances, duplicate centroids, NaN and ±∞
-  * components, null and short embeddings, float and double elements,
-  * `roundDp` 0 and 6 and a one-cell book.
+/** The native trained-matrix kernel ([[graft.expressions.CentroidDistances]])
+  * pinned against the composed Catalyst forms it replaced: the
+  * `struct(d, cell)` centroid form ([[CellCandidatesReference]]) —
+  * nearest cell with its d, the ranked cell list and the per-cell
+  * distance table — and the unrolled `vec_dot(x, <literal row>)` forms
+  * ([[UnrolledMatrixReference]]) — raw and rounded dots, sign bits,
+  * lowest-margin planes and the full squared distance with its |x|²
+  * term. Every output must match bit for bit, through both the
+  * interpreted path (a local relation is folded by `eval`) and
+  * whole-stage codegen (the same rows behind a shuffle). Inputs
+  * exercise tied distances, duplicate rows, NaN, ±∞ and ±0.0
+  * components, ±1 LSH planes, null and short embeddings, float and
+  * double elements, `roundDp` 0 and 6 and a one-cell book.
   */
 class CentroidKernelEquivalenceSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestSession.spark
@@ -67,7 +71,7 @@ class CentroidKernelEquivalenceSpec extends AnyFunSuite {
 
   private def native(cs: Book, offset: Int, len: Int, dp: Int, out: CellOutput): Column =
     ColumnBridge.column(CentroidDistances(ColumnBridge.expression(col("embedding")),
-      CentroidBook(cs), offset, len, dp, out))
+      CentroidBook(cs), offset, len, RowScore.Dist, Some(dp), out))
 
   /** Row strings of `cols` over `df` as a local relation (interpreted)
     * and behind a shuffle (whole-stage codegen).
@@ -97,10 +101,7 @@ class CentroidKernelEquivalenceSpec extends AnyFunSuite {
       CellCandidatesReference.ranked(cs, ref, dp, k),
       CellCandidatesReference.ranked(cs, ref, dp, 2),
       CellCandidatesReference.table(cs, ref, dp))
-    val (ni, nc) = rows(df, nat)
-    val (ri, rc) = rows(df, refs)
-    assert(ni == ri, s"interpreted, $clue")
-    assert(nc == rc, s"codegen, $clue")
+    assertRows(df, nat, refs, clue)
   }
 
   test("centroid kernel: native == struct form on random books, whole and sliced") {
@@ -158,5 +159,164 @@ class CentroidKernelEquivalenceSpec extends AnyFunSuite {
     assert(!a.queryExecution.optimizedPlan.sameResult(other.queryExecution.optimizedPlan))
     assert(CentroidBook(books(0)) == CentroidBook(rebuilt(books).head))
     assert(CentroidBook(books(0)).hashCode == CentroidBook(rebuilt(books).head).hashCode)
+  }
+
+  /** The kernel over `rows`, ids 0, 1, … in row order. */
+  private def kernel(rows: Seq[Array[Double]], score: RowScore, dp: Option[Int],
+      out: CellOutput): Column = {
+    val book = CentroidBook.rows(rows)
+    ColumnBridge.column(CentroidDistances(ColumnBridge.expression(col("embedding")),
+      book, 0, book.dim, score, dp, out))
+  }
+
+  private def assertRows(df: DataFrame, nat: Seq[Column], ref: Seq[Column],
+      clue: String): Unit = {
+    val (ni, nc) = rows(df, nat)
+    val (ri, rc) = rows(df, ref)
+    assert(ni == ri, s"interpreted, $clue")
+    assert(nc == rc, s"codegen, $clue")
+  }
+
+  /** The same frame through `f` as a local relation and behind a shuffle. */
+  private def assertFrames(df: DataFrame, nat: DataFrame => DataFrame,
+      ref: DataFrame => DataFrame, clue: String): Unit = {
+    def run(d: DataFrame) = d.collect().map(_.toString).toSeq.sorted
+    for ((d, path) <- Seq(df -> "interpreted", df.repartition(2) -> "codegen"))
+      assert(run(nat(d)) == run(ref(d)), s"$path, $clue")
+  }
+
+  /** ±1 hyperplanes, as the LSH family draws them. */
+  private def planes(rnd: scala.util.Random, k: Int, dim: Int): Seq[Array[Double]] =
+    Seq.fill(k)(Array.fill(dim)(if (rnd.nextBoolean()) 1.0 else -1.0))
+
+  /** Half-grid rows carrying ±0.0 and, in one row, a NaN or ±∞ component. */
+  private def signedZeroRows(rnd: scala.util.Random, k: Int, dim: Int): Seq[Array[Double]] =
+    (0 until k).map { j =>
+      val r = Array.fill(dim) {
+        val c = comp(rnd)
+        if (c == 0.0 && rnd.nextBoolean()) -0.0 else c
+      }
+      if (j == k - 1) r(rnd.nextInt(dim)) = specials(rnd.nextInt(3))
+      r
+    }
+
+  /** Vectors whose components are mostly ±0.0: dots land on signed zeros. */
+  private def zeroVectors(rnd: scala.util.Random, dim: Int): Seq[Option[Array[Double]]] =
+    Seq.fill(8)(Some(Array.fill(dim)(rnd.nextInt(4) match {
+      case 0 => -0.0
+      case 1 => 0.0
+      case _ => comp(rnd)
+    })))
+
+  test("matrix kernel: dots, sign bits, low-margin planes and rounded dots == the unrolled vec_dot forms") {
+    for (seed <- 1 to 4; float <- Seq(false, true); dp <- Seq(0, 6)) {
+      val rnd = new scala.util.Random(100 + seed)
+      val dim = 8
+      val df = frame(randomVectors(rnd, dim) ++ zeroVectors(rnd, dim), float)
+      val books = Seq("±1 planes" -> planes(rnd, 6, dim),
+        "±0.0 rows" -> signedZeroRows(rnd, 5, dim),
+        "short rows" -> signedZeroRows(rnd, 4, 4),
+        "duplicate rows" -> { val p = planes(rnd, 3, dim); p ++ p.map(_.clone()) },
+        "one row" -> planes(rnd, 1, dim))
+      for ((what, rs) <- books) {
+        val k = rs.size
+        assertRows(df,
+          Seq(kernel(rs, RowScore.Dot, None, CellOutput.Table),
+            kernel(rs, RowScore.Dot, None, CellOutput.Signs),
+            kernel(rs, RowScore.AbsDot, None, CellOutput.Ranked(k)),
+            kernel(rs, RowScore.AbsDot, None, CellOutput.Ranked(2)),
+            kernel(rs, RowScore.AbsDot, None, CellOutput.Ranked(0)),
+            kernel(rs, RowScore.Dot, Some(dp), CellOutput.Table)),
+          Seq(UnrolledMatrixReference.planeDots(rs, col("embedding")),
+            UnrolledMatrixReference.signature(rs, col("embedding")),
+            UnrolledMatrixReference.lowMarginPlanes(rs, col("embedding"), k),
+            UnrolledMatrixReference.lowMarginPlanes(rs, col("embedding"), 2),
+            UnrolledMatrixReference.lowMarginPlanes(rs, col("embedding"), 0),
+            UnrolledMatrixReference.roundedDots(rs, col("embedding"), dp)),
+          s"$what, seed $seed float $float dp $dp")
+      }
+    }
+  }
+
+  test("matrix kernel: the full squared distance keeps the whole-vector |x|² term") {
+    for (seed <- 1 to 4; float <- Seq(false, true); dp <- Seq(0, 6)) {
+      val rnd = new scala.util.Random(200 + seed)
+      val dim = 8
+      val df = frame(randomVectors(rnd, dim) ++ zeroVectors(rnd, dim), float)
+      val books = Seq("whole" -> randomBook(rnd, 6, dim),
+        // rows narrower than the vectors: |x|² still spans all of x
+        "narrow" -> randomBook(rnd, 5, 4),
+        "±0.0 rows" -> signedZeroRows(rnd, 4, dim).zipWithIndex.map { case (r, i) => (7L - i, r) },
+        "one cell" -> randomBook(rnd, 1, dim))
+      for ((what, cs) <- books) {
+        val book = CentroidBook(cs)
+        def full(out: CellOutput) = ColumnBridge.column(CentroidDistances(
+          ColumnBridge.expression(col("embedding")), book, 0, book.dim,
+          RowScore.FullDist, Some(dp), out))
+        assertRows(df,
+          Seq(full(CellOutput.Nearest).getField("d"), full(CellOutput.Nearest).getField("cell"),
+            full(CellOutput.Table)),
+          Seq(UnrolledMatrixReference.nearestFull(cs, col("embedding"), dp).getField("d"),
+            UnrolledMatrixReference.nearestFull(cs, col("embedding"), dp).getField("cid"),
+            UnrolledMatrixReference.fullTable(cs, col("embedding"), dp)),
+          s"$what, seed $seed float $float dp $dp")
+      }
+    }
+  }
+
+  test("matrix kernel: the LSH, projection, k-center, OOD, conformal and MMR entry points match the unrolled forms") {
+    val rnd = new scala.util.Random(17)
+    val dim = SimilarityOps.LshDim
+    val vs = randomVectors(rnd, dim) ++ zeroVectors(rnd, dim)
+    for (float <- Seq(false, true)) {
+      val df = frame(vs, float)
+      val emb = col("embedding")
+      assertRows(df,
+        SimilarityOps.lshSignature(emb) +:
+          (0 until SimilarityOps.LshTables).map(SimilarityOps.lshTableSignature(emb, _)),
+        UnrolledMatrixReference.signature(SimilarityOps.hyperplanes, emb) +:
+          SimilarityOps.tableHyperplanes.map(UnrolledMatrixReference.signature(_, emb)),
+        s"LSH signatures, float $float")
+      val tables = 3
+      assertFrames(df,
+        d => SimilarityOps.lshAutoSignatureStage(d, tables)
+          .select(col("vec_id") +: (0 until tables).map(t => col(s"__ds$t")): _*),
+        d => d.select(col("vec_id") +: (0 until tables).map(t =>
+          UnrolledMatrixReference.planeDots(SimilarityOps.autoTableHyperplanes(t), emb)): _*),
+        s"auto-L plane dots, float $float")
+
+      val w = SimilarityOps.rpWeights(6, dim)
+      assertFrames(df, SimilarityOps.randomProjectLong(_, w),
+        UnrolledMatrixReference.randomProjectLong(_, w), s"randomProjectLong, float $float")
+      assertFrames(df, SimilarityOps.randomProject(_, w),
+        UnrolledMatrixReference.randomProject(_, w), s"randomProject, float $float")
+
+      val cs = randomBook(rnd, 5, dim) :+ (99L -> Array.fill(dim / 2)(-0.0))
+      for (dp <- Seq(0, 6)) {
+        assertFrames(df, SimilarityOps.kcenterAssign(_, cs, dp),
+          UnrolledMatrixReference.kcenterAssign(_, cs, dp), s"kcenterAssign, float $float dp $dp")
+        assertFrames(df, SimilarityOps.oodDistance(_, cs, dp),
+          UnrolledMatrixReference.oodDistance(_, cs, dp), s"oodDistance, float $float dp $dp")
+        // labels with and without a prototype, and a null label
+        val labeled = df.withColumn("label",
+          when(col("vec_id") % 7 === 6, lit(null)).otherwise((col("vec_id") % 4).cast("int")))
+        val protos = cs.take(3).map { case (_, c) => c }.zipWithIndex
+          .map { case (c, i) => (i.toLong, c) } :+ (1L -> cs(3)._2)
+        assertFrames(labeled, ClassifierOps.conformalScores(_, protos, dp),
+          UnrolledMatrixReference.conformalScores(_, protos, dp),
+          s"conformalScores, float $float dp $dp")
+      }
+
+      // a NaN cosine fails the micro-unit cast in both forms alike, so
+      // the MMR fold reads null and finite non-zero vectors only
+      def finite(v: Option[Array[Double]]) =
+        v.forall(e => e.exists(_ != 0.0) && e.forall(c => !c.isNaN && !c.isInfinite))
+      val normed = SimilarityOps.withNorm(frame(vs.filter(finite), float))
+      val sel = Seq(vs(4), vs(5), vs(12), vs(4)).map(_.get)
+        .map(e => (e, math.sqrt(CellCandidatesReference.sqNorm(e))))
+      for (n <- Seq(1, sel.size))
+        assertRows(normed, Seq(RetrievalOps.maxSimMicro(sel.take(n))),
+          Seq(UnrolledMatrixReference.maxSimMicro(sel.take(n))), s"maxSimMicro $n, float $float")
+    }
   }
 }
