@@ -56,50 +56,54 @@ object Main {
     if (s.length == 10) java.time.LocalDate.parse(s).atStartOfDay()
     else java.time.LocalDateTime.parse(s)
 
+  /** Every flag that takes a value, and what it sets. */
+  private val valueFlags: Map[String, (Config, String) => Config] = Map(
+    "--data-dir" -> ((c, v) => c.copy(dataDir = v)),
+    "--dump-file" -> ((c, v) => c.copy(dumpFile = v)),
+    "--fetch-dump" -> ((c, v) => c.copy(fetchDump = v)),
+    "--fetch-date" -> ((c, v) => c.copy(fetchDate = Some(java.time.LocalDate.parse(v)))),
+    "--dump-merge" -> ((c, v) => c.copy(dumpMerge = Some(v))),
+    "--rates-file" -> ((c, v) => c.copy(ratesFile = v)),
+    "--outages-file" -> ((c, v) => c.copy(outagesFile = v)),
+    "--cluster-name" -> ((c, v) => c.copy(clusterName = Some(v))),
+    "--output-dir" -> ((c, v) => c.copy(outputDir = v)),
+    "--upload-dest" -> ((c, v) => c.copy(uploadDest = v)),
+    "--start" -> ((c, v) => c.copy(start = Some(parseTimeArg(v)))),
+    "--end" -> ((c, v) => c.copy(end = Some(parseTimeArg(v)))),
+    "--invoice-month" -> ((c, v) => c.copy(invoiceMonth = Some(v))),
+    "--rate-cpu-su" -> ((c, v) => c.copy(rates = c.rates.copy(cpu = BigDecimal(v)))),
+    "--rate-gpu-a100-su" -> ((c, v) => c.copy(rates = c.rates.copy(gpuA100 = BigDecimal(v)))),
+    "--rate-gpu-a100sxm4-su" -> ((c, v) =>
+      c.copy(rates = c.rates.copy(gpuA100sxm4 = BigDecimal(v)))),
+    "--rate-gpu-v100-su" -> ((c, v) => c.copy(rates = c.rates.copy(gpuV100 = BigDecimal(v)))),
+    "--rate-gpu-a2-su" -> ((c, v) => c.copy(rates = c.rates.copy(gpuA2 = BigDecimal(v)))),
+    "--rate-gpu-k80-su" -> ((c, v) => c.copy(rates = c.rates.copy(gpuK80 = BigDecimal(v)))),
+    "--exclude-interval" -> { (c, v) =>
+      val (from, to) = v.split(",", 2) match {
+        case Array(a, b) => (parseTimeArg(a), parseTimeArg(b))
+        case _ => throw new IllegalArgumentException(
+          s"--exclude-interval expects START,END, got '$v'")
+      }
+      // a reversed interval would ADD billable time in the runtime fold
+      require(!to.isBefore(from), s"--exclude-interval end before start: '$v'")
+      c.copy(excludeIntervals = c.excludeIntervals :+ (from, to))
+    })
+
   def parseArgs(args: Seq[String]): Config = {
-    def ldt(s: String) = parseTimeArg(s)
     @annotation.tailrec
     def go(rest: List[String], c: Config): Config = rest match {
-      case "--data-dir" :: v :: t   => go(t, c.copy(dataDir = v))
-      case "--dump-file" :: v :: t  => go(t, c.copy(dumpFile = v))
-      case "--fetch-dump" :: v :: t => go(t, c.copy(fetchDump = v))
-      case "--fetch-date" :: v :: t =>
-        go(t, c.copy(fetchDate = Some(java.time.LocalDate.parse(v))))
-      case "--dump-merge" :: v :: t => go(t, c.copy(dumpMerge = Some(v)))
-      case "--rates-file" :: v :: t => go(t, c.copy(ratesFile = v))
-      case "--outages-file" :: v :: t => go(t, c.copy(outagesFile = v))
-      case "--cluster-name" :: v :: t => go(t, c.copy(clusterName = Some(v)))
-      case "--output-dir" :: v :: t => go(t, c.copy(outputDir = v))
-      case "--upload-dest" :: v :: t => go(t, c.copy(uploadDest = v))
+      case Nil => c
       case "--no-upload-to-primary" :: t =>
         go(t, c.copy(uploadToPrimary = false))
-      case "--start" :: v :: t => go(t, c.copy(start = Some(ldt(v))))
-      case "--end" :: v :: t   => go(t, c.copy(end = Some(ldt(v))))
-      case "--invoice-month" :: v :: t => go(t, c.copy(invoiceMonth = Some(v)))
-      case "--rate-cpu-su" :: v :: t =>
-        go(t, c.copy(rates = c.rates.copy(cpu = BigDecimal(v))))
-      case "--rate-gpu-a100-su" :: v :: t =>
-        go(t, c.copy(rates = c.rates.copy(gpuA100 = BigDecimal(v))))
-      case "--rate-gpu-a100sxm4-su" :: v :: t =>
-        go(t, c.copy(rates = c.rates.copy(gpuA100sxm4 = BigDecimal(v))))
-      case "--rate-gpu-v100-su" :: v :: t =>
-        go(t, c.copy(rates = c.rates.copy(gpuV100 = BigDecimal(v))))
-      case "--rate-gpu-a2-su" :: v :: t =>
-        go(t, c.copy(rates = c.rates.copy(gpuA2 = BigDecimal(v))))
-      case "--rate-gpu-k80-su" :: v :: t =>
-        go(t, c.copy(rates = c.rates.copy(gpuK80 = BigDecimal(v))))
       case "--include-stopped-runtime" :: t =>
         go(t, c.copy(rates = c.rates.copy(includeStoppedRuntime = true)))
-      case "--exclude-interval" :: v :: t =>
-        val (from, to) = v.split(",", 2) match {
-          case Array(a, b) => (ldt(a), ldt(b))
-          case _ => throw new IllegalArgumentException(
-            s"--exclude-interval expects START,END, got '$v'")
-        }
-        // a reversed interval would ADD billable time in the runtime fold
-        require(!to.isBefore(from), s"--exclude-interval end before start: '$v'")
-        go(t, c.copy(excludeIntervals = c.excludeIntervals :+ (from, to)))
-      case Nil => c
+      case flag :: v :: t if valueFlags.contains(flag) =>
+        go(t, try valueFlags(flag)(c, v) catch {
+          case e @ (_: NumberFormatException | _: java.time.format.DateTimeParseException) =>
+            throw new IllegalArgumentException(s"$flag: cannot parse '$v' (${e.getMessage})", e)
+        })
+      case flag :: Nil if valueFlags.contains(flag) =>
+        throw new IllegalArgumentException(s"$flag expects a value")
       case other :: _ =>
         throw new IllegalArgumentException(s"Unknown argument: $other")
     }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** The in-block pair generator: every (i, j > i) pair of a sorted member
-  * array that its [[PairScorer]] keeps, as an array of the scorer's
-  * output structs.
+  * array that its candidate rules admit and its [[PairScorer]] keeps,
+  * as an array of the scorer's output structs.
   *
   * Why custom: the composed form
   *
@@ -25,6 +25,12 @@ import org.apache.spark.sql.types._
   * inside the loop, so only the pairs that survive are allocated
   * (operator fusion: the scorer is fused into the generator).
   *
+  * Candidate rules, read from the member struct at bind time, apply
+  * under every scorer: an int `side` field keeps only pairs with
+  * side_a < side_b, and an int `pk` field drops pairs whose members both
+  * have pk = 1. A `side` or `pk` field of another type fails the type
+  * check. A member with neither field runs the bare scorer.
+  *
   * Pair order is the composed form's: outer index ascending, inner
   * j > i ascending. m ≤ 1 yields an empty array and null in gives null
   * out. A block of more than [[BlockPairs.MaxMembers]] members raises by
@@ -37,14 +43,23 @@ import org.apache.spark.sql.types._
 case class BlockPairs(child: Expression, scorer: PairScorer) extends UnaryExpression {
 
   private lazy val bound: Option[BoundScorer] = child.dataType match {
-    case ArrayType(et, containsNull) => scorer.bind(et, containsNull)
+    case ArrayType(et, containsNull) =>
+      val s = et match { case s: StructType => s; case _ => new StructType() }
+      // a rule field of another type fails the type check, not the rule
+      def rule(name: String) = s.fieldNames.indexOf(name) match {
+        case -1 => Some(-1)
+        case i => Some(i).filter(_ => s(i).dataType == IntegerType)
+      }
+      for (side <- rule("side"); pk <- rule("pk"); sc <- scorer.bind(et, containsNull))
+        yield BlockPairs.ruled(sc, s.length, side, pk)
     case _ => None
   }
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (bound.isDefined) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"block_pairs($scorer) requires ${scorer.layout}, got ${child.dataType.simpleString}")
+      s"block_pairs($scorer) requires ${scorer.layout} (any side or pk field int), " +
+        s"got ${child.dataType.simpleString}")
 
   override def dataType: DataType =
     ArrayType(bound.fold[DataType](NullType)(_.outType), containsNull = false)
@@ -89,6 +104,26 @@ object BlockPairs {
     }
     new GenericArrayData(buf.toArray)
   }
+
+  /** `sc` behind the rule fields at these indices (-1: absent). */
+  private def ruled(sc: BoundScorer, width: Int, side: Int, pk: Int): BoundScorer =
+    if (side < 0 && pk < 0) sc
+    else new BoundScorer {
+      val outType = sc.outType
+      def load(ms: ArrayData): ScoredBlock = {
+        val scored = sc.load(ms)
+        // an absent field reads as the member index: a < b passes the
+        // side rule, and two distinct indices are never both 1
+        def ints(f: Int) = Array.tabulate(ms.numElements())(i =>
+          if (f < 0) i else ms.getStruct(i, width).getInt(f))
+        val (sides, pks) = (ints(side), ints(pk))
+        new ScoredBlock {
+          def pair(a: Int, b: Int): InternalRow =
+            if (sides(a) < sides(b) && (pks(a) != 1 || pks(b) != 1)) scored.pair(a, b)
+            else null
+        }
+      }
+    }
 
   /** Column form over a member array column. */
   def of(ms: Column, scorer: PairScorer): Column =
@@ -146,44 +181,36 @@ object PairScorer {
   /** `(vec_a, vec_b, cos)` for pairs whose cosine
     * dot(e_a, e_b) / (nrm_a · nrm_b) passes Spark's NaN-safe
     * `cos >= threshold` (NaN is greater than any threshold). The dot is
-    * [[VectorDotProduct.dot]]. When the members carry a `pk` field, a
-    * pair of two probe entries (pk = 1 on both) is dropped.
+    * [[VectorDotProduct.dot]]. The scorer only scores: which pairs
+    * reach it is decided by [[BlockPairs]]' candidate rules.
     *
     * A zero norm product either raises ANSI `DIVIDE_BY_ZERO`, as
-    * Spark's `/` does (`raiseOnZeroNorm`, the label-cell callers), or
-    * gives the Java division's NaN, which then passes (the LSH callers).
+    * Spark's `/` does (`raiseOnZeroNorm`: label cells and SemDeDup), or
+    * gives the Java division's NaN, which then passes (the LSH pairs).
     */
   final case class Cosine(threshold: Double, raiseOnZeroNorm: Boolean) extends PairScorer {
-    def layout = "array<struct<vec_id: bigint, [pk: int,] " +
-      "embedding: array<float|double>, nrm: double>>"
+    def layout = "array<struct<vec_id: bigint, embedding: array<float|double>, nrm: double>>"
     def bind(member: DataType, containsNull: Boolean): Option[BoundScorer] = member match {
       case s: StructType =>
         for {
           (id, LongType) <- field(s, "vec_id")
           (emb, ArrayType(et @ (FloatType | DoubleType), _)) <- field(s, "embedding")
           (nrm, DoubleType) <- field(s, "nrm")
-          pk <- field(s, "pk") match {
-            case None => Some(-1)
-            case Some((i, IntegerType)) => Some(i)
-            case _ => None
-          }
-        } yield bound(s.length, id, pk, emb, et == FloatType, nrm)
+        } yield bound(s.length, id, emb, et == FloatType, nrm)
       case _ => None
     }
 
-    private def bound(width: Int, id: Int, pk: Int, emb: Int, isFloat: Boolean,
+    private def bound(width: Int, id: Int, emb: Int, isFloat: Boolean,
         nrm: Int): BoundScorer = new BoundScorer {
       val outType = out(("vec_a", LongType, false), ("vec_b", LongType, false),
         ("cos", DoubleType, false))
       def load(ms: ArrayData): ScoredBlock = {
         val rows = Array.tabulate(ms.numElements())(ms.getStruct(_, width))
         val ids = rows.map(_.getLong(id))
-        val probe = rows.map(r => pk >= 0 && r.getInt(pk) == 1)
         val embs = rows.map(_.getArray(emb))
         val nrms = rows.map(_.getDouble(nrm))
         new ScoredBlock {
           def pair(a: Int, b: Int): InternalRow = {
-            if (probe(a) && probe(b)) return null
             val d = VectorDotProduct.dot(embs(a), isFloat, embs(b), isFloat)
             val den = nrms(a) * nrms(b)
             if (raiseOnZeroNorm && den == 0.0) throw ColumnBridge.divideByZeroError()

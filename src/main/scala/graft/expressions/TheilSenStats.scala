@@ -13,14 +13,11 @@ import org.apache.spark.sql.types._
   * primitive loop.
   *
   * Why custom (the CanonicalText/VectorDotProduct pattern): the
-  * composable form —
-  *
-  *   filter(flatten(transform(pts, (p,i) => transform(slice(pts, i+2,
-  *     size(pts)), q => when(q.t > p.t, (q.v - p.v)/((q.t - p.t)/1e6))
-  *     ...)))) |> array_sort |> element_at(·, (n+1)/2)
-  *
-  * — runs INTERPRETED (higher-order functions are CodegenFallback) and
-  * `slice` copies an O(m) struct suffix per anchor element, so a key
+  * composable form — a transform over each anchor's point suffix, then
+  * array_sort and element_at(·, (n+1)/2), kept in test sources as
+  * PairExpansionReference.theilSenHof — runs INTERPRETED (higher-order
+  * functions are CodegenFallback) and `slice` copies an O(m) struct
+  * suffix per anchor element, so a key
   * with m points pays O(m²) boxed-struct allocations before a single
   * slope is computed; at sf0.1 that made `ts_theil_sen` the suite's
   * slowest row (3.1 s for ~3.3M slopes ≈ 1 µs each — allocation, not

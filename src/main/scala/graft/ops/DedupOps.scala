@@ -484,8 +484,8 @@ object DedupOps {
     // distinct count costs no planner expand.
     val members = idxEntries.unionAll(probeEntries)
       .groupBy("__blk", "__l", "__i", "__seg")
-      .agg(sort_array(collect_list(struct(col("__side"), col("doc_id"),
-        col("__len"), col("__s")))).as("ms0"))
+      .agg(sort_array(collect_list(struct(col("__side").as("side"), col("doc_id"),
+        col("__len").as("len"), col("__s").as("s")))).as("ms0"))
       .select(SessionOps.hotKeyGuarded(col("ms0"),
         size(array_distinct(transform(col("ms0"),
           m => m.getField("doc_id")))).cast("long"),
@@ -493,34 +493,25 @@ object DedupOps {
           col("__i").cast("string"), lit("/"), col("__seg")),
         maxPerBlock, "editDistancePairsSegmented").as("ms"))
       .filter(size(col("ms")) > 1)
-    // cross-side pairs only; direction: indexed strictly shorter, or
-    // equal length and smaller doc_id — each unordered pair once
-    val cand = members
-      .select(explode(flatten(transform(col("ms"), (a, i) =>
-        transform(
-          filter(slice(col("ms"), i + 2, size(col("ms"))), b =>
-            a.getField("__side") < b.getField("__side") &&
-              (a.getField("__len") < b.getField("__len") ||
-                (a.getField("__len") === b.getField("__len") &&
-                  a.getField("doc_id") < b.getField("doc_id")))),
-          b =>
-            struct(a.getField("doc_id").as("ia"),
-              b.getField("doc_id").as("ib"),
-              a.getField("__s").as("sa"), b.getField("__s").as("sb"))))))
-        .as("p"))
-      .select(least(col("p.ia"), col("p.ib")).as("doc_a"),
-        greatest(col("p.ia"), col("p.ib")).as("doc_b"),
-        when(col("p.ia") <= col("p.ib"), col("p.sa")).otherwise(col("p.sb"))
-          .as("sa"),
-        when(col("p.ia") <= col("p.ib"), col("p.sb")).otherwise(col("p.sa"))
-          .as("sb"))
-      .distinct()
-    val segPairs = cand
+    val segPairs = passJoinCandidates(members)
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("sa"), col("sb"), maxDist).as("dist"))
       .filter(col("dist") >= 0 && col("dist") <= maxDist)
       .select(col("doc_a"), col("doc_b"), col("dist").cast("long").as("dist"))
     segPairs.unionAll(shortPairs)
+  }
+
+  /** The PassJoin arm's distinct candidates from its (side, doc_id, len, s) buckets. */
+  private[graft] def passJoinCandidates(members: DataFrame): DataFrame = {
+    val (a, b) = (col("p.a"), col("p.b"))
+    def ordered(x: Column, y: Column) = when(a("doc_id") <= b("doc_id"), x).otherwise(y)
+    members.select(explode(BlockPairs.of(col("ms"), AllPairs)).as("p"))
+      .filter(a("len") < b("len") ||
+        (a("len") === b("len") && a("doc_id") < b("doc_id")))
+      .select(least(a("doc_id"), b("doc_id")).as("doc_a"),
+        greatest(a("doc_id"), b("doc_id")).as("doc_b"),
+        ordered(a("s"), b("s")).as("sa"), ordered(b("s"), a("s")).as("sb"))
+      .distinct()
   }
 
   /** The regime boundary for [[editDistancePairsAuto]], in IN-BLOCK
@@ -1163,10 +1154,10 @@ object DedupOps {
           .otherwise("new").as("status"))
   }
 
-  /** Phase handles for [[similarityJoinExact]], factored so
-    * [[setJoinBuckets]] reads the same prefix buckets as the join.
+  /** Phase handles for [[similarityJoinExact]], factored so the
+    * equivalence specs read the same prefix buckets as the join.
     */
-  private case class SetJoinParts(perdoc: DataFrame, buckets: DataFrame,
+  private[graft] case class SetJoinParts(perdoc: DataFrame, buckets: DataFrame,
       cand: DataFrame)
 
   def similarityJoinExact(docs: DataFrame, threshold: Double): DataFrame = {
@@ -1215,7 +1206,7 @@ object DedupOps {
       .filter(col("jaccard") >= threshold)
   }
 
-  private def setJoinParts(docs: DataFrame, threshold: Double): SetJoinParts = {
+  private[graft] def setJoinParts(docs: DataFrame, threshold: Double): SetJoinParts = {
     val sh = shingled(docs).cache() // distinct (doc_id, shingle)
     // global canonical order: rarest shingles first
     val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
@@ -1263,10 +1254,6 @@ object DedupOps {
     // and passes — so the pair survives the union over occurrences.
     // Subsumes the length filter (the bound is ≤ min(n_a, n_b)).
     // Measured: 409k → far fewer verify candidates at sf0.1, t=0.5.
-    // r16: the in-bucket positional-bound expansion runs in the native
-    // [[graft.expressions.BlockPairs]] generator — the HOF form (kept
-    // as [[setJoinExpandHof]], the property-test reference) was the
-    // same interpreted slice-copy shape as the LSH bucket expansion
     val buckets = prefix
       .groupBy("shingle")
       .agg(sort_array(collect_set(struct(col("doc_id"), col("rk"), col("n"))))
@@ -1279,35 +1266,6 @@ object DedupOps {
       .cache()
     SetJoinParts(perdoc, buckets, cand)
   }
-
-  /** The original higher-order-function form of the prefix candidate
-    * expansion — the equivalence reference for the
-    * [[graft.expressions.BlockPairs]] prefix-bound scorer: same bucket
-    * entry frame (shingle, es) in, same (doc_a, doc_b) rows out.
-    */
-  private[graft] def setJoinExpandHof(buckets: DataFrame,
-      threshold: Double): DataFrame = {
-    val eps = 1e-9
-    buckets
-      .select(explode(flatten(transform(col("es"), (a, i) =>
-        filter(
-          transform(slice(col("es"), i + 2, size(col("es"))), b =>
-            struct(a.getField("doc_id").as("doc_a"),
-              b.getField("doc_id").as("doc_b"),
-              (least(a.getField("n") - a.getField("rk"),
-                b.getField("n") - b.getField("rk")) + 1 >=
-                ceil(lit(threshold / (1 + threshold)) *
-                  (a.getField("n") + b.getField("n")) - lit(eps))).as("ok"))),
-          p => p.getField("ok"))))).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
-  }
-
-  /** The prefix bucket entry frame (shingle, es) — the spec entry point
-    * letting the native and HOF expansions read identical buckets.
-    */
-  private[graft] def setJoinBuckets(docs: DataFrame,
-      threshold: Double): DataFrame =
-    setJoinParts(docs, threshold).buckets
 
   /** SimHash bit width: 16 hex digits of md5 × 4 bits. */
   val SimhashBits = 64

@@ -461,11 +461,17 @@ object RetrievalOps {
       k: Int, lambda: Double = 0.5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(candidates >= 1, s"candidates must be >= 1, got $candidates")
+    // a zero or non-finite norm has no cosine: raise by name, not as a
+    // NaN micro-unit cast; a null one (no embedding) sorts last as before
+    val normed = corpus.withColumn("nrm", when(col("nrm").isNull ||
+      (col("nrm") > 0 && col("nrm") < Double.PositiveInfinity), col("nrm"))
+      .otherwise(raise_error(concat(lit("mmrRerank: neighbor_id "), col("vec_id").cast("string"),
+        lit(" has a zero or non-finite norm (a zero vector or a NaN component)")))))
     val cand = SimilarityOps.bruteTopK(
-      corpus, corpus.filter(col("vec_id") === queryVecId), candidates)
+      normed, normed.filter(col("vec_id") === queryVecId), candidates)
       .select(col("neighbor_id"),
         round(col("cos_sim") * 1e6).cast("long").as("rel_u"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
+      .join(normed.select(col("vec_id").as("neighbor_id"),
         col("embedding"), col("nrm")), Seq("neighbor_id"))
       .cache()
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.expressions.{BlockPairs, CellOutput, CentroidBook, CentroidDistances, RowScore}
-import graft.expressions.PairScorer.Cosine
+import graft.expressions.PairScorer.{AllPairs, Cosine}
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and IVF-style
@@ -656,8 +656,8 @@ object SimilarityOps {
     val bits = bitsRow(0).getInt(0)
     val batchN = batch.select(col("vec_id"), col("embedding"), col("nrm"))
     val batchDots = withPlaneDots(batchN.withColumn("__bits", lit(bits)), tables)
-    val ent = entries
-      .select(col("vec_id"), col("t"), col("sig"), col("pk"))
+    val ent = entries // a persisted pk may read back as bigint
+      .select(col("vec_id"), col("t"), col("sig"), col("pk").cast("int").as("pk"))
       .withColumn("side", lit(0))
       .unionAll(
         lshBucketEntriesAtWidth(batchDots, tables, probes)
@@ -674,21 +674,7 @@ object SimilarityOps {
           maxBucket.toLong * (1 + probes) * 2,
           "nearDupPairsLshCrossSlim bucket").as("ms"))
       .filter(size(col("ms")) > 1)
-    // members sort (side, vec_id, pk): cross pairs always read
-    // (existing a, batch b); same-side and probe×probe pairs drop
-    val cand = members
-      .select(explode(flatten(transform(col("ms"), (a, i) =>
-        transform(
-          filter(slice(col("ms"), i + 2, size(col("ms"))), b =>
-            a.getField("side") < b.getField("side") &&
-              !(a.getField("pk") === 1 && b.getField("pk") === 1)),
-          b =>
-            struct(a.getField("vec_id").as("existing_id"),
-              b.getField("vec_id").as("batch_id")))))).as("p"))
-      .select(col("p.existing_id").as("existing_id"),
-        col("p.batch_id").as("batch_id"))
-      .distinct()
-    cand
+    lshCrossCandidates(members)
       .join(vectors.select(col("vec_id").as("existing_id"),
         col("embedding").as("__ea"), col("nrm").as("__na")),
         Seq("existing_id"))
@@ -702,6 +688,12 @@ object SimilarityOps {
       .select(col("existing_id"), col("batch_id"),
         round(col("__cos"), 6).as("cos_sim"))
   }
+
+  /** The cross probe's distinct candidates from its (side, vec_id, pk) buckets. */
+  private[graft] def lshCrossCandidates(members: DataFrame): DataFrame =
+    members.select(explode(BlockPairs.of(col("ms"), AllPairs)).as("p"))
+      .select(col("p.a.vec_id").as("existing_id"), col("p.b.vec_id").as("batch_id"))
+      .distinct()
 
   /** The shared bucket-ENTRY stage of the LSH pair family: from a
     * [[lshAutoSignatureStage]] frame, the per-(vector, table) home
@@ -789,13 +781,8 @@ object SimilarityOps {
       probes: Int,
       withMinT: Boolean,
       fromTable: Int = 0): DataFrame = {
-    // r16: the in-bucket pair expansion + exact-cosine filter run in
-    // the native [[graft.expressions.BlockPairs]] generator — the HOF
-    // chain (kept as [[lshScoredPairsHof]], the property-test
-    // reference) was interpreted and copied both 64-double embeddings
-    // into a struct per CANDIDATE pair before the threshold cut; the
-    // native loop allocates only for pairs that survive. A zero-norm
-    // vector's cosine is NaN and passes (NativeFoldEquivalenceSpec).
+    // expansion fused with the exact-cosine cut; a zero-norm vector's
+    // cosine is NaN and passes (NativeFoldEquivalenceSpec)
     val scored = lshBucketMembers(sigs, targetBucket, tables, maxBucket,
         probes, fromTable)
       .select(col("t"), explode(BlockPairs.of(col("ms"),
@@ -811,29 +798,6 @@ object SimilarityOps {
       scored.groupBy("vec_a", "vec_b")
         .agg(round(max(col("cos")), 6).as("cos_sim"))
   }
-
-  /** The original higher-order-function in-bucket expansion — kept as
-    * the equivalence reference the [[graft.expressions.BlockPairs]]
-    * cosine scorer is property-tested against (the canonicalizeRegex
-    * pattern): same member frame in, same (t, vec_a, vec_b, cos) rows out.
-    */
-  private[graft] def lshScoredPairsHof(members: DataFrame,
-      threshold: Double): DataFrame =
-    members
-      .select(col("t"), explode(flatten(transform(col("ms"), (a, i) =>
-        transform(
-          filter(slice(col("ms"), i + 2, size(col("ms"))), b =>
-            !(a.getField("pk") === 1 && b.getField("pk") === 1)),
-          b =>
-            struct(a.getField("vec_id").as("vec_a"),
-              b.getField("vec_id").as("vec_b"),
-              a.getField("embedding").as("ea"),
-              b.getField("embedding").as("eb"),
-              a.getField("nrm").as("na"),
-              b.getField("nrm").as("nb")))))).as("p"))
-      .select(col("t"), col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
-        cosine(col("p.ea"), col("p.eb"), col("p.na"), col("p.nb")).as("cos"))
-      .filter(col("cos") >= threshold)
 
   /** The sorted bucket member lists (t, ms) of a table range — read by
     * [[lshPairsCoreFromTable]], and by the specs so that the native and
@@ -1919,37 +1883,14 @@ object SimilarityOps {
       .select(graft.ops.SessionOps.hotKeyGuarded(
         col("ms"), size(col("ms")).cast("long"), col("label").cast("string"),
         maxBucket.toLong, "nearDupPairs cell").as("ms"))
-    // r17: fused native expand+cosine+threshold ([[BlockPairs]]; label
-    // cells carry no probe keys) — the HOF form below ([[cellPairsHof]])
-    // materialized a struct carrying both 64-double embeddings per
-    // CANDIDATE pair before the cosine ran; at ×100 cell occupancy that
-    // allocation was the wall. Survivors only reach the explode; values
-    // bit-identical, and a zero-norm member raises DIVIDE_BY_ZERO like
-    // the HOF form's ANSI divide (CellCosinePairsSpec).
+    // label cells carry no rule fields; a zero-norm member raises
+    // DIVIDE_BY_ZERO like Spark's ANSI divide (CellCosinePairsSpec)
     members
       .select(explode(BlockPairs.of(col("ms"),
         Cosine(threshold, raiseOnZeroNorm = true))).as("p"))
       .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
         round(col("p.cos"), 6).as("cos_sim"))
   }
-
-  /** The pre-r17 interpreted expansion of [[nearDupPairs]]'s collect
-    * arm — kept as the equivalence reference for the
-    * [[graft.expressions.BlockPairs]] cosine scorer (CellCosinePairsSpec
-    * pins the two identical, and both raising on a zero-norm member).
-    */
-  private[graft] def cellPairsHof(members: DataFrame,
-      threshold: Double): DataFrame =
-    members
-      .select(explode(flatten(transform(col("ms"), (a, i) =>
-        transform(slice(col("ms"), i + 2, size(col("ms"))), b =>
-          struct(a.getField("vec_id").as("vec_a"), b.getField("vec_id").as("vec_b"),
-            a.getField("embedding").as("ea"), b.getField("embedding").as("eb"),
-            a.getField("nrm").as("na"), b.getField("nrm").as("nb")))))).as("p"))
-      .select(col("p.vec_a").as("vec_a"), col("p.vec_b").as("vec_b"),
-        cosine(col("p.ea"), col("p.eb"), col("p.na"), col("p.nb")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), round(col("cos"), 6).as("cos_sim"))
 
   /** SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication", 2023): cluster the
@@ -2008,10 +1949,7 @@ object SimilarityOps {
         col("best").getField("d").as("cdist"))
     // Sort key: (−cdist, vec_id) ascending ≡ centroid distance
     // descending — struct sort is lexicographic, so the survivor
-    // ordering is pinned before the pair expansion. Pairs are
-    // (earlier a, later b); b is dropped when cos(a,b) clears the
-    // threshold. distinct() because b may near-dup several earlier
-    // members.
+    // ordering is pinned before the pair expansion.
     // Trained cells bound the expansion in expectation, but a
     // degenerate centroid (all-zero embeddings collapsing into one
     // cell) would make one task's pair array quadratic — the same
@@ -2025,23 +1963,20 @@ object SimilarityOps {
       .select(col("cell"), graft.ops.SessionOps.hotKeyGuarded(col("ms0"),
         col("__n"), col("cell"), maxPerCell, "semanticDedup").as("ms"))
       .filter(size(col("ms")) > 1)
-    val dropped = members
-      .select(explode(flatten(transform(col("ms"), (a, i) =>
-        transform(slice(col("ms"), i + 2, size(col("ms"))), b =>
-          struct(b.getField("vec_id").as("dup_id"),
-            a.getField("embedding").as("ea"),
-            b.getField("embedding").as("eb"),
-            a.getField("nrm").as("na"),
-            b.getField("nrm").as("nb")))))).as("p"))
-      .select(col("p.dup_id").as("vec_id"),
-        cosine(col("p.ea"), col("p.eb"), col("p.na"), col("p.nb")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_id")).distinct()
     assigned
-      .join(dropped.withColumn("__dup", lit(1L)), Seq("vec_id"), "left")
+      .join(semanticDedupDropped(members, threshold).withColumn("__dup", lit(1L)),
+        Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
         when(col("__dup").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
   }
+
+  /** SemDeDup's dropped vectors: each later member of a near-dup pair, once. */
+  private[graft] def semanticDedupDropped(members: DataFrame, threshold: Double): DataFrame =
+    members
+      .select(explode(BlockPairs.of(col("ms"),
+        Cosine(threshold, raiseOnZeroNorm = true))).as("p"))
+      .select(col("p.vec_b").as("vec_id"))
+      .distinct()
 
   // ─── Product quantization (Jégou, Douze, Schmid, "Product Quantization
   //     for Nearest Neighbor Search", TPAMI 2011) ────────────────────────

@@ -672,12 +672,7 @@ object TimeSeriesOps {
       tsCol: String,
       valCol: String,
       maxEventsPerKey: Long = DefaultMaxPointsQuadratic): DataFrame = {
-    // r16: the quadratic pair expansion + sort + median pick run in the
-    // native [[graft.expressions.TheilSenStats]] expression — the HOF
-    // chain (kept below as [[theilSenHof]], the property-test
-    // reference) evaluated interpreted and `slice`-copied an O(m)
-    // struct suffix per anchor, making this the suite's slowest row
-    // (~1 µs/slope of allocation at sf0.1, vs arithmetic's ~ns).
+    // pair slopes, sort and median pick run in the native TheilSenStats
     val pts = sort_array(collect_list(struct(
       col(tsCol).cast("long").as("t"), col(valCol).cast("double").as("v"))))
     val arr = events
@@ -695,44 +690,6 @@ object TimeSeriesOps {
       .select(col(keyCol), col("n_pts"),
         col("st.n_pairs").as("n_pairs"),
         round(col("st.median") * lit(1000000.0))
-          .cast("long").as("slope_micro"))
-  }
-
-  /** The original higher-order-function form of [[theilSen]] — kept as
-    * the equivalence reference the native expression is property-tested
-    * against (the canonicalizeRegex pattern).
-    */
-  private[graft] def theilSenHof(
-      events: DataFrame,
-      keyCol: String,
-      tsCol: String,
-      valCol: String,
-      maxEventsPerKey: Long = DefaultMaxPointsQuadratic): DataFrame = {
-    val pts = sort_array(collect_list(struct(
-      col(tsCol).cast("long").as("t"), col(valCol).cast("double").as("v"))))
-    val arr = events
-      .filter(col(keyCol).isNotNull && col(tsCol).isNotNull &&
-        col(valCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(pts.as("pts"), count(lit(1)).as("__n"))
-    val slopes = filter(
-      flatten(transform(col("pts"), (p, i) =>
-        transform(slice(col("pts"), i + 2, size(col("pts"))), q =>
-          when(q.getField("t") > p.getField("t"),
-            (q.getField("v") - p.getField("v")) /
-              ((q.getField("t") - p.getField("t")).cast("double") /
-                lit(1000000.0)))
-            .otherwise(lit(null).cast("double"))))),
-      s => s.isNotNull)
-    arr
-      .select(col(keyCol), size(col("pts")).cast("long").as("n_pts"),
-        SessionOps.hotKeyGuarded(array_sort(slopes), col("__n"),
-          col(keyCol), maxEventsPerKey, "theilSen").as("ss"))
-      .filter(size(col("ss")) > 0)
-      .select(col(keyCol), col("n_pts"),
-        size(col("ss")).cast("long").as("n_pairs"),
-        round(element_at(col("ss"),
-          ((size(col("ss")) + 1) / lit(2)).cast("int")) * lit(1000000.0))
           .cast("long").as("slope_micro"))
   }
 

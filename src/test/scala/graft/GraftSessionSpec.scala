@@ -47,27 +47,54 @@ class GraftSessionSpec extends AnyFunSuite {
       s"read the environment in an entry point and pass the value, not in: ${readers.mkString(", ")}")
   }
 
-  test("no main source unrolls a trained matrix as dot(…, typedlit(…))") {
-    // one vec_dot per literal matrix row grows generated methods past
-    // HotSpot's JIT limit and, for wide matrices, past Janino's 64 KB;
-    // a trained matrix rides as one CentroidBook into CentroidDistances
-    val call = "(?<![\\w$])dot\\(".r
-    val unrolled = sources.flatMap { p =>
+  /** `file:line` of every call `name(` in the main sources whose
+    * top-level arguments pass `bad`.
+    */
+  private def callsWhere(name: String, skip: String => Boolean = _ => false)(
+      bad: Seq[String] => Boolean): Seq[String] = {
+    val call = s"(?<![\\w$$])$name\\(".r
+    sources.filterNot(p => skip(p.toString)).flatMap { p =>
       val text = Files.readString(p)
       call.findAllMatchIn(text).flatMap { m =>
-        // the argument list: up to the parenthesis that closes this call
+        // the arguments: split at top-level commas, up to the
+        // parenthesis that closes this call
+        val args = scala.collection.mutable.ArrayBuffer(new StringBuilder)
         var depth = 1
         var i = m.end
         while (i < text.length && depth > 0) {
-          if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+          text(i) match {
+            case '(' => depth += 1; args.last += '('
+            case ')' => depth -= 1; if (depth > 0) args.last += ')'
+            case ',' if depth == 1 => args += new StringBuilder
+            case c => args.last += c
+          }
           i += 1
         }
-        if (text.substring(m.end, i).contains("typedlit("))
+        if (bad(args.map(_.toString.trim).toSeq))
           Some(s"$p:${text.substring(0, m.start).count(_ == '\n') + 1}")
         else None
       }
     }
+  }
+
+  test("no main source unrolls a trained matrix as dot(…, typedlit(…))") {
+    // one vec_dot per literal matrix row grows generated methods past
+    // HotSpot's JIT limit and, for wide matrices, past Janino's 64 KB;
+    // a trained matrix rides as one CentroidBook into CentroidDistances
+    val unrolled = callsWhere("dot")(_.exists(_.contains("typedlit(")))
     assert(unrolled.isEmpty,
       s"apply the matrix with CentroidDistances, not unrolled dots, at: ${unrolled.mkString(", ")}")
+  }
+
+  test("no main source outside BlockPairs.scala expands pairs as slice(…, i + 2, …)") {
+    // the (i, j > i) loop over a member array is BlockPairs' job: a
+    // composed transform/slice loop runs interpreted, allocates every
+    // candidate pair, and decides which pairs are candidates elsewhere.
+    // Such a slice starts at the lambda's 0-based index + 2: the member
+    // after the anchor, in slice's 1-based positions.
+    val loops = callsWhere("slice", _.endsWith("/expressions/BlockPairs.scala"))(
+      _.lift(1).exists(_.matches("[a-z]\\s*\\+\\s*2")))
+    assert(loops.isEmpty,
+      s"expand in-block pairs with BlockPairs, not a slice loop, at: ${loops.mkString(", ")}")
   }
 }

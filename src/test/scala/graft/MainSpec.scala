@@ -32,6 +32,35 @@ class MainSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Main.parseArgs(Seq("--data-dir", "/d")))
   }
 
+  test("a value-taking flag given last fails by name") {
+    Seq("--data-dir", "--output-dir", "--rate-cpu-su", "--start").foreach { flag =>
+      val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+        "--data-dir", "/d", "--output-dir", "/o", flag)))
+      assert(e.getMessage == s"$flag expects a value", e.getMessage)
+    }
+  }
+
+  test("a malformed decimal rate fails naming the flag and the value") {
+    val e = intercept[IllegalArgumentException](Main.parseArgs(Seq(
+      "--data-dir", "/d", "--output-dir", "/o", "--rate-gpu-a2-su", "1,5")))
+    assert(e.getMessage.contains("--rate-gpu-a2-su") && e.getMessage.contains("'1,5'"),
+      e.getMessage)
+  }
+
+  test("a malformed date or datetime fails naming the flag and the value") {
+    def msg(flags: String*) = intercept[IllegalArgumentException](Main.parseArgs(
+      Seq("--output-dir", "/o") ++ flags)).getMessage
+    val fetch = msg("--fetch-dump", "/b", "--fetch-date", "2024-13-01")
+    assert(fetch.contains("--fetch-date") && fetch.contains("'2024-13-01'"), fetch)
+    val start = msg("--data-dir", "/d", "--start", "2024-01-05 06:30")
+    assert(start.contains("--start") && start.contains("'2024-01-05 06:30'"), start)
+    val end = msg("--data-dir", "/d", "--end", "yesterday")
+    assert(end.contains("--end") && end.contains("'yesterday'"), end)
+    val interval = msg("--data-dir", "/d", "--exclude-interval", "2024-01-10,soon")
+    assert(interval.contains("--exclude-interval") && interval.contains("'2024-01-10,soon'"),
+      interval)
+  }
+
   test("more than one input source fails by name") {
     def sources(flags: String*) = intercept[IllegalArgumentException](
       Main.parseArgs(flags.flatMap(f => Seq(f, "/x")) ++ Seq("--output-dir", "/o")))

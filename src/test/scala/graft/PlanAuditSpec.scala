@@ -698,6 +698,46 @@ class PlanAuditSpec extends AnyFunSuite {
       p.linesIterator.take(30).mkString("\n"))
   }
 
+  test("pair stages expand in block_pairs, never a HOF loop over the members") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform}
+    import graft.expressions.BlockPairs
+    import graft.ops.{DedupOps, SimilarityOps}
+    val emb = SimilarityOps.withNorm(graft.etl.Ingest.table(spark, dir, "embeddings"))
+    val existing = emb.filter(pmod(col("vec_id"), lit(2)) === 0)
+    // the incremental query hands back its checkpointed probe, so the
+    // probe is built unmemoized here, as the query builds it
+    val stages: Seq[(String, DataFrame)] = Seq(
+      "dedup_embedding_incremental" -> SimilarityOps.nearDupPairsLshCrossSlim(
+        SimilarityOps.lshIndexEntriesSlim(existing), SimilarityOps.lshIndexVectors(existing),
+        emb.filter(pmod(col("vec_id"), lit(2)) === 1),
+        graft.queries.PipelineQueries.NearDupThreshold),
+      "dedup_semantic" -> SparkEntry.queries("dedup_semantic")(spark, dir),
+      "dedup_editdist segmented arm" -> DedupOps.editDistancePairsAuto(
+        graft.etl.Ingest.table(spark, dir, "documents"),
+        strCol = substring(col("text"), 9, 16),
+        blockCol = concat(lpad(length(col("lang")).cast("string"), 2, "0"),
+          col("lang"), substring(col("text"), 1, 8)),
+        maxDist = 4, segmentMinPairs = 0L))
+    for ((name, df) <- stages) {
+      val exprs = df.queryExecution.optimizedPlan
+        .flatMap(_.expressions).flatMap(_.collect { case e => e })
+      // the member array is the guarded `ms` column each site expands
+      def overMembers(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+        e.references.exists(_.name == "ms")
+      assert(exprs.exists { case b: BlockPairs => overMembers(b.child); case _ => false },
+        s"$name: no block_pairs over the member array")
+      val hofs = exprs.collect {
+        case f: ArrayTransform if overMembers(f.argument) => f
+        case f: ArrayFilter if overMembers(f.argument) => f
+      }
+      assert(hofs.isEmpty, s"$name: ${hofs.map(_.sql).mkString("; ")}")
+      assert(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode).contains("block_pairs("), name)
+    }
+  }
+
   test("profile_source_overlap: in-row pair expansion, zero joins, two shuffles") {
     // per-gram source sets collapse via ONE gram-keyed aggregation;
     // pairs explode in-row (Generate) bounded by |sources|²; the only

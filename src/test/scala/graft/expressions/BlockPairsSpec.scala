@@ -45,6 +45,22 @@ class BlockPairsSpec extends AnyFunSuite {
     }
   }
 
+  test("a side or pk rule field that is not int fails the type check") {
+    val ids = sequence(lit(1L), lit(3L))
+    def ms(side: Column, pk: Column) = transform(ids, i => struct(side.as("side"),
+      i.as("vec_id"), pk.as("pk"), array(lit(1.0)).as("embedding"), lit(1.0).as("nrm")))
+    val scorers = Seq(PairScorer.AllPairs, PairScorer.Cosine(0.5, raiseOnZeroNorm = false))
+    for (scorer <- scorers; (side, pk) <- Seq((lit(0L), lit(0)), (lit(0), lit(1L)))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.range(1).select(BlockPairs.of(ms(side, pk), scorer)).collect())
+      assert(e.getMessage.contains("block_pairs") &&
+        e.getMessage.contains("any side or pk field int"), e.getMessage)
+    }
+    for (scorer <- scorers)
+      assert(spark.range(1).select(size(BlockPairs.of(ms(lit(0), lit(1)), scorer)))
+        .head().getInt(0) == 0, s"$scorer: same side, both probes: no pair")
+  }
+
   test("rebuilt similarityJoinExact and nearDupPairs plans are the same result") {
     def plan(df: DataFrame) = df.queryExecution.executedPlan
     val docs = (0 until 40).map { i =>

@@ -3,12 +3,12 @@ package graft.expressions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
-import graft.ops.SimilarityOps
+import graft.ops.{PairExpansionReference, SimilarityOps}
 
 /** Pins the fused cell expansion (the [[BlockPairs]] cosine scorer,
   * nearDupPairs's r17 collect arm) to the interpreted HOF chain it replaces
-  * (SimilarityOps.cellPairsHof): identical (vec_a, vec_b, cos_sim)
-  * rows on random cells — including sub-threshold pairs dropped, pair
+  * (PairExpansionReference.cellPairsHof): identical (vec_a, vec_b, cos_sim)
+  * rows on random cells, and SemDeDup's pair stage to its HOF form — including sub-threshold pairs dropped, pair
   * orientation from the sorted member array, and the zero-norm
   * NaN-cosine edge the r17 session-2 regression pin documented.
   */
@@ -42,9 +42,13 @@ class CellCosinePairsSpec extends AnyFunSuite {
     val ms = membersOf(rows)
     for (t <- Seq(-1.0, 0.0, 0.3, 0.9)) {
       val got = native(ms, t).orderBy("vec_a", "vec_b").collect().toSeq
-      val want = SimilarityOps.cellPairsHof(ms, t)
+      val want = PairExpansionReference.cellPairsHof(ms, t)
         .orderBy("vec_a", "vec_b").collect().toSeq
       assert(got == want, s"threshold $t")
+      // SemDeDup's pair stage over the same cells: the later members
+      assert(SimilarityOps.semanticDedupDropped(ms, t).collect().toSet ==
+        PairExpansionReference.semanticDedupDroppedHof(ms, t).collect().toSet,
+        s"semanticDedup threshold $t")
     }
   }
 
@@ -66,7 +70,9 @@ class CellCosinePairsSpec extends AnyFunSuite {
               .exists(c => String.valueOf(c.getMessage).contains("DIVIDE_BY_ZERO"))
       }
     assert(raises(native(ms, 0.5).collect()))
-    assert(raises(SimilarityOps.cellPairsHof(ms, 0.5).collect()))
+    assert(raises(PairExpansionReference.cellPairsHof(ms, 0.5).collect()))
+    assert(raises(SimilarityOps.semanticDedupDropped(ms, 0.5).collect()))
+    assert(raises(PairExpansionReference.semanticDedupDroppedHof(ms, 0.5).collect()))
   }
 
   test("duplicate embeddings and exact-threshold cosines keep boundary pairs") {
@@ -74,7 +80,7 @@ class CellCosinePairsSpec extends AnyFunSuite {
     val rows = Seq((0L, v), (3L, v), (6L, Seq(0.8, 0.6)))
     val ms = membersOf(rows)
     val got = native(ms, 0.96).orderBy("vec_a", "vec_b").collect().toSeq
-    val want = SimilarityOps.cellPairsHof(ms, 0.96)
+    val want = PairExpansionReference.cellPairsHof(ms, 0.96)
       .orderBy("vec_a", "vec_b").collect().toSeq
     assert(got == want)
   }

@@ -75,6 +75,42 @@ class LshCrossSpec extends AnyFunSuite {
     assert(small.subsetOf(grown), s"$small not in $grown")
   }
 
+  test("cross candidates: the generator's side and pk rules == the HOF loop") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(61)
+    // home (pk 0) and probe (pk 1) entries on both sides, in buckets
+    // holding both sides or one side only (b % 4 of 0 and 1)
+    val buckets = (0 until 60).map { b =>
+      val sides = b % 4 match { case 0 => Seq(0); case 1 => Seq(1); case _ => Seq(0, 1) }
+      b -> (0 until 2 + rnd.nextInt(8)).map { _ =>
+        val side = sides(rnd.nextInt(sides.size))
+        (side, side * 1000L + rnd.nextInt(25), rnd.nextInt(2))
+      }.distinct.sorted
+    }.toDF("b", "ms")
+      .select(col("b"), col("ms").cast("array<struct<side:int,vec_id:bigint,pk:int>>").as("ms"))
+    def pairs(d: DataFrame) = d.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = pairs(SimilarityOps.lshCrossCandidates(buckets))
+    assert(got == pairs(PairExpansionReference.lshCrossCandidatesHof(buckets)))
+    assert(got.nonEmpty && got.forall { case (e, b) => e < 1000L && b >= 1000L }, got)
+    assert(SimilarityOps.lshCrossCandidates(
+      buckets.filter(pmod(col("b"), lit(4)) < 2)).count() == 0,
+      "a one-sided bucket has no cross pair")
+  }
+
+  test("a bigint pk in the persisted entries probes as the int pk does") {
+    val existing = emb(randomRows(200, 16, 0L))
+    val batch = emb(randomRows(60, 16, 1000L))
+    val entries = SimilarityOps.lshIndexEntriesSlim(existing)
+    // threshold -1 keeps every candidate, so the output is the candidate set
+    def pairs(ent: DataFrame) = SimilarityOps.nearDupPairsLshCrossSlim(ent,
+      SimilarityOps.lshIndexVectors(existing), batch, -1.0)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val asInt = pairs(entries)
+    assert(pairs(entries.withColumn("pk", col("pk").cast("long"))) == asInt)
+    // the data has probe×probe co-occupancy for the pk rule to drop
+    assert(pairs(entries.withColumn("pk", lit(0))) != asInt)
+  }
+
   test("a degenerate bucket fails BY NAME at the scaled ceiling") {
     val one = vec(42L, 16)
     val existing = emb((0 until 30).map(i => (i.toLong, one)))

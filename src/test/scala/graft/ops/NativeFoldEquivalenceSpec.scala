@@ -43,7 +43,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
         .select(col("k"), col("t"), col("v"))
       assert(
         collectSorted(TimeSeriesOps.theilSen(ev, "k", "t", "v")) ==
-          collectSorted(TimeSeriesOps.theilSenHof(ev, "k", "t", "v")),
+          collectSorted(PairExpansionReference.theilSenHof(ev, "k", "t", "v")),
         s"seed $seed")
     }
   }
@@ -115,7 +115,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
     val members = SimilarityOps.lshBucketMembers(
       sigs, targetBucket = 8, tables = 4,
       maxBucket = DedupOps.DefaultMaxBucket, probes = 2)
-    val hof = SimilarityOps.lshScoredPairsHof(members, 0.2)
+    val hof = PairExpansionReference.lshScoredPairsHof(members, 0.2)
       .groupBy("vec_a", "vec_b")
       .agg(round(max(col("cos")), 6).as("cos_sim"), min(col("t")).as("min_t"))
     val native = SimilarityOps.nearDupPairsLshByTable(
@@ -226,14 +226,14 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
         else base.init :+ words(rnd.nextInt(words.length))
       (i.toLong, mutated.mkString(" "))
     }.toDF("doc_id", "text")
-    val buckets = DedupOps.setJoinBuckets(docs, 0.5)
+    val buckets = PairExpansionReference.setJoinBuckets(docs, 0.5)
     val nat = buckets
       .select(explode(org.apache.spark.sql.graft.ColumnBridge.column(
         graft.expressions.BlockPairs(
           org.apache.spark.sql.graft.ColumnBridge.expression(col("es")),
           graft.expressions.PairScorer.PrefixBound(0.5, 1e-9)))).as("p"))
       .select(col("p.doc_a"), col("p.doc_b"))
-    val hof = DedupOps.setJoinExpandHof(buckets, 0.5)
+    val hof = PairExpansionReference.setJoinExpandHof(buckets, 0.5)
     assert(collectSorted(nat) == collectSorted(hof))
     // end-to-end: the full operator still returns a non-trivial result
     // (the oracle pins exact values; this pins non-degeneracy)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
@@ -158,6 +159,31 @@ class RetrievalOpsSpec extends AnyFunSuite {
     // candidate list shorter than k: everything selected, nothing padded
     assert(RetrievalOps.mmrRerank(corpus, 0L, candidates = 3, k = 5)
       .count() == 3L)
+  }
+
+  test("mmrRerank: a zero-norm candidate raises by name, not as a cast overflow") {
+    val corpus = SimilarityOps.withNorm(Seq(
+      (0L, Array(1.0, 0.0)),
+      (1L, Array(4.0, 3.0)),
+      (7L, Array(0.0, 0.0))
+    ).toDF("vec_id", "embedding"))
+    val e = intercept[Exception](
+      RetrievalOps.mmrRerank(corpus, 0L, candidates = 2, k = 2).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("mmrRerank") && m.contains("neighbor_id 7")),
+      msgs.mkString("\n"))
+    assert(!msgs.exists(_.contains("CAST_OVERFLOW")), msgs.mkString("\n"))
+  }
+
+  test("mmrRerank: a row without an embedding (null norm) sorts last, no raise") {
+    val rows = Seq((0L, Array(1.0, 0.0)), (1L, Array(4.0, 3.0)), (2L, Array(0.0, 1.0)))
+    val corpus = SimilarityOps.withNorm(rows.toDF("vec_id", "embedding"))
+    val withNull = corpus.unionByName(SimilarityOps.withNorm(
+      Seq((9L, null: Array[Double])).toDF("vec_id", "embedding")))
+    def run(c: DataFrame) =
+      RetrievalOps.mmrRerank(c, 0L, candidates = 3, k = 2).collect().toSeq
+    assert(run(withNull) == run(corpus))
   }
 
   test("prfExpandTopK: expansion mines FEEDBACK docs only, ≡ hand-expanded query") {

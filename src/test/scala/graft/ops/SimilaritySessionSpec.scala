@@ -514,6 +514,13 @@ class SimilaritySessionSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("semanticDedup") &&
       e.getMessage.contains("0"), e.getMessage)
+    // a zero vector sharing a cell raises ANSI DIVIDE_BY_ZERO, as the
+    // cosine's Spark `/` does
+    val zero = emb.unionAll(Seq((5L, Array(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding"))
+    val z = intercept[Exception](SimilarityOps.semanticDedup(zero, cents,
+      threshold = 0.95, roundDp = 6).collect())
+    assert(Iterator.iterate[Throwable](z)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")), z.toString)
   }
 
   test("random projection: deterministic sparse ±1 matrix, exact dot products") {

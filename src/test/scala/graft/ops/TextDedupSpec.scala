@@ -571,6 +571,25 @@ class TextDedupSpec extends AnyFunSuite {
         s"only-sfx=${segmentedSfx.keySet -- blockedFull.keySet}")
   }
 
+  test("PassJoin candidates: the generator's side rule == the HOF loop") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(67)
+    // index (side 0) and probe (side 1) entries of equal and different
+    // lengths; a doc may sit on both sides of one bucket
+    val buckets = (0 until 60).map { b =>
+      b -> (0 until 2 + rnd.nextInt(8)).map { _ =>
+        val doc = rnd.nextInt(20).toLong
+        (rnd.nextInt(2), doc, 10 + (doc % 3).toInt, s"s$doc")
+      }.distinct.sorted
+    }.toDF("b", "ms")
+      .select(col("b"),
+        col("ms").cast("array<struct<side:int,doc_id:bigint,len:int,s:string>>").as("ms"))
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+    val got = rows(DedupOps.passJoinCandidates(buckets))
+    assert(got.nonEmpty)
+    assert(got == rows(PairExpansionReference.passJoinCandidatesHof(buckets)))
+  }
+
   test("editDistancePairsAuto: both arms emit identical pairs and the " +
       "selector routes on the measured in-block candidate volume") {
     import spark.implicits._
