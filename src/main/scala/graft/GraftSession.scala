@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.expressions.GraftExtensions
 
 /** The one place a graft SparkSession is configured. Every main builds
   * its session with [[local]]; the shared test session starts from
@@ -8,11 +9,14 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** `local[cpus]` with one shuffle partition per core, UTC, no UI and a
-    * sized generated-class cache.
+  /** `local[cpus]` with one shuffle partition per core, UTC, no UI, a
+    * sized generated-class cache and graft's native functions, planner
+    * strategy and optimizer rule ([[GraftExtensions]]), installed once
+    * when the session is created, so no query registers them itself.
     */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

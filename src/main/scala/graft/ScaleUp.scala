@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.util.control.NonFatal
 
 /** Scale-up measurement tool: writes an N× synthetic copy of an sf dir
   * (ids offset per copy so joins/dedup keys stay consistent and no
@@ -14,8 +13,10 @@ import scala.util.control.NonFatal
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_SCALE_OUT
   * (default /tmp/graft_scaleup), SPARK_GRAFT_CPUS (default 4, via
-  * [[GraftSession.local]]). Unknown query names fail before any data is
-  * written; a query that fails at either scale prints FAILED.
+  * [[GraftSession.local]]). Each query's result is produced into the
+  * `noop` sink through [[SparkEntry.produce]]. Unknown query names fail
+  * before any data is written; a query that fails at either scale
+  * prints FAILED.
   */
 object ScaleUp {
 
@@ -49,8 +50,8 @@ object ScaleUp {
   /** Embedding columns that must vary per copy, for the same reason as
     * [[textCols]]: a verbatim-copied vector is a cross-copy EXACT
     * duplicate (cosine 1.0), so every similarity-graph operator sees its
-    * edge set grow ×copies² instead of ×copies — measured 11× wall time
-    * at factor 10 on graph_bfs_hops before this fix, a data artifact,
+    * edge set grow ×copies² instead of ×copies — 11× wall time at
+    * factor 10 on graph_bfs_hops with verbatim copies, a data artifact,
     * not engine cost. The per-copy transform is an ORTHOGONAL map
     * composed of a circular shift by (copy mod dim) and a sign-flip
     * mask drawn from xxhash64(copy div dim, dim-index) — within-copy
@@ -59,8 +60,8 @@ object ScaleUp {
     * shift permutes), while cross-copy alignment is destroyed: two
     * copies share a transform only when BOTH the shift and the mask
     * group coincide, i.e. only at the same copy index — so any factor
-    * gets a distinct isometry (the old shift-only form repeated
-    * verbatim at copy ≡ copy′ (mod dim), capping the harness at ×64).
+    * gets a distinct isometry (a shift alone would repeat verbatim at
+    * copy ≡ copy′ (mod dim), capping the factor at ×64).
     * ScaleUpSpec measures the worst surviving cross-copy cosine.
     */
   val vecCols: Map[String, Seq[String]] = Map("embeddings" -> Seq("embedding"))
@@ -73,16 +74,15 @@ object ScaleUp {
     * ±1 factors square away; the permutation only reorders the dot's
     * additions), while two DIFFERENT copies always relate by a
     * non-trivial isometry: within a group the shifts differ (copies
-    * 1..dim−1 are the r10 shift-only transforms COMPOSED with the one
-    * fixed group-0 mask — the mask is applied in every group, group 0
-    * included, so no copy is shift-only); across groups the masks
-    * differ AND the 17·q offset de-phases the shifts, because a mask
-    * alone decorrelates this data's embeddings too weakly (measured on
+    * 1..dim−1 are plain shifts COMPOSED with the one fixed group-0
+    * mask — the mask is applied in every group, group 0 included, so
+    * no copy is shift-only); across groups the masks differ AND the
+    * 17·q offset de-phases the shifts, because a mask alone
+    * decorrelates this data's embeddings too weakly (measured on
     * sf0.01 same-origin images: mean cross-copy |cos| ≈ 0.21 mask-only
-    * vs ≈ 0.10 shift+mask — identical to the ≈ 0.10 of the accepted
-    * shift-only within-group pairs, i.e. cross-group copies are now
-    * exactly as decorrelated as the r10 harness's in-range copies
-    * were). Copy 0 is the IDENTITY, matching [[scaleTable]], which
+    * vs ≈ 0.10 shift+mask — the same ≈ 0.10 as shift-only pairs within
+    * a group, so cross-group copies are exactly as decorrelated as
+    * in-group ones). Copy 0 is the IDENTITY, matching [[scaleTable]], which
     * leaves the c = 0 copy untransformed — so identity-vs-copy is the
     * relation any (0, b) comparison exercises. Distinctness at ANY
     * factor: (shift, mask) = ((c + 17q) mod dim, q) collides only for
@@ -170,19 +170,11 @@ object ScaleUp {
       }
     }
 
+    // a warm-up run, then the min of three; a failed run stops the query
     def bench(dir: String, name: String): Option[Double] = {
-      val fn = selected(name)
-      try {
-        fn(spark, dir).count()
-        Some((1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
-        }.min)
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[scaleup] $name at $dir failed: ${e.getMessage}")
-        None
-      }
+      def run() = SparkEntry.produce(name, selected(name)(spark, dir), SparkEntry.noop)
+      if (run() < 0) None
+      else Some(Seq.fill(3)(run())).filter(_.forall(_ >= 0)).map(_.min)
     }
     println(f"| Query | 1x | ${factor}x | ratio |")
     println("|---|---|---|---|")

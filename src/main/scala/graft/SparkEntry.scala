@@ -6,7 +6,10 @@ import graft.core.Types.Rates
 import graft.etl.{Billing, Enrich, InvoiceSink}
 import graft.queries.{CoreOracles, CoreQueries, PipelineOracles, PipelineQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The program's entry contract (SURVEY.md §7): the flagship billing
+  * run, the query map with its oracle SQL, and the one runner that
+  * produces a query into a sink.
+  */
 object SparkEntry {
 
   /** Flagship: the complete reference pipeline (EP1-EP3 of SURVEY.md §3)
@@ -74,7 +77,7 @@ object SparkEntry {
     CoreQueries.queries ++ PipelineQueries.queries
 
   /** The queries a comma-separated name list selects (the
-    * `SPARK_GRAFT_*_ONLY` variables), or all of them when the list is
+    * `SPARK_GRAFT_ONLY` variable), or all of them when the list is
     * unset. A name that is not a query, or a list that names none, is an
     * error: a typo must not pass for a fast, clean, empty run.
     */
@@ -88,6 +91,26 @@ object SparkEntry {
       require(names.nonEmpty, s"query list '$list' names no query")
       all.filter { case (k, _) => names(k) }
     }
+
+  /** Builds query `name`'s frame, writes it to `sink` and returns the
+    * wall seconds of both. A failure prints `[produce] <name> failed: …`
+    * to stderr and returns -1, so it never reads as a fast run. Any
+    * throwable is caught, a StackOverflowError from a deep plan
+    * included: one query's failure must not end a many-query run.
+    */
+  def produce(name: String, build: => DataFrame, sink: DataFrame => Unit): Double = {
+    val t0 = System.nanoTime()
+    try { sink(build); (System.nanoTime() - t0) / 1e9 }
+    catch { case e: Throwable =>
+      System.err.println(s"[produce] $name failed: $e")
+      -1.0
+    }
+  }
+
+  /** The sink that computes every row and column of a frame and keeps
+    * nothing: the timed action of Bench and ScaleUp.
+    */
+  val noop: DataFrame => Unit = _.write.format("noop").mode("overwrite").save()
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

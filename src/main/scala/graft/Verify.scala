@@ -1,29 +1,34 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import org.apache.spark.sql.DataFrame
+
+/** Correctness dump: each selected query's result → `<outDir>/<name>/`
+  * parquet, plus `oracle_sql.json`, for the DuckDB compare. A failed
+  * query does not stop the rest; the compare counts its missing result
+  * as a mismatch, and one stderr line at the end names every failure.
+  * The exit code stays 0.
+  */
 object Verify {
+
+  /** The sink the compare reads: one parquet file in `dir`. */
+  def parquetSink(dir: String): DataFrame => Unit =
+    _.coalesce(1).write.mode("overwrite").parquet(dir)
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = args match {
       case Array(s, o) => (s, o)
       case _ => throw new IllegalArgumentException(
         "usage: graft.Verify <sfDir> <outDir>")
     }
-    // SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump — an iteration
-    // aid; the driver's run leaves it unset.
-    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = selected.toSeq.filter { case (name, fn) =>
+      SparkEntry.produce(name, fn(spark, sfDir), parquetSink(s"$outDir/$name")) < 0
+    }.map(_._1)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in the oracle SQL would otherwise make the
+    // compare's json.load fail and void every query's check.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -36,6 +41,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.sorted.mkString(", ")}")
     spark.stop()
   }
 }

@@ -7,13 +7,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registration surface for graft's native expressions.
   *
-  * Two paths:
+  * Three paths:
+  *  - [[graft.GraftSession]] installs it on every session it builds;
   *  - config: `spark.sql.extensions=graft.expressions.GraftExtensions`
-  *    (the standard plugin route for clusters);
-  *  - runtime: `GraftExtensions.register(spark)` for sessions created
-  *    before the library is on the classpath (tests, Verify/Bench mains).
+  *    (the standard plugin route for clusters, and what a session not
+  *    built by GraftSession needs);
+  *  - runtime: `GraftExtensions.register(spark)` for a session that
+  *    already exists without either.
   *
-  * After either, `bit_hamming(a, b)` resolves in SQL and `expr(...)`.
+  * After any of them, `bit_hamming(a, b)` resolves in SQL and `expr(...)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -92,13 +94,16 @@ object GraftExtensions {
         KmvDistinct(args.head, k)
       }))
 
-  /** Idempotent runtime registration into an existing session. */
+  /** Idempotent runtime registration into an existing session: a
+    * strategy the session already plans with (from the extension or an
+    * earlier call) is not added twice.
+    */
   def register(spark: SparkSession): Unit = {
     val registry: FunctionRegistry = spark.sessionState.functionRegistry
     functions.foreach { case (name, info, builder) =>
       registry.registerFunction(FunctionIdentifier(name), info, builder)
     }
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
+    if (!spark.sessionState.planner.strategies.contains(graft.plans.AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
     if (!spark.experimental.extraOptimizations.contains(graft.plans.PushFilterThroughAsOfJoin))

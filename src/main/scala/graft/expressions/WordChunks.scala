@@ -12,9 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[WordShingles]] for the stride-windowed form
   * ([[graft.ops.TextOps.chunks]]): windows of `width` tokens starting
   * every `stride` tokens, each emitted as a (chunk_start, chunk-text)
-  * struct. Same rationale: the HOF form (kept as `chunksHof`, the
-  * equivalence reference) evaluated interpreted with a sliced array
-  * copy + join buffer per window.
+  * struct. Same rationale: the higher-order form (the equivalence
+  * reference, in test sources) evaluates interpreted with a sliced
+  * array copy + join buffer per window.
   *
   * Start positions replicate the original `sequence(1, bound, stride)`
   * with bound = max(n − width + 1, 1) + (stride − 1): a doc shorter

@@ -207,7 +207,7 @@ object DedupOps {
     *      with the geometry's needed band count.
     *
     * Unlike the hyperplane twin, whose corpus-ADAPTIVE prefix makes
-    * recall decay with n at a fixed threshold (the r11 finding), a
+    * recall decay with n at a fixed threshold (measured at ×10), a
     * band key here is exact minhash equality — per-pair recall depends
     * on the pair's Jaccard ALONE, so the calibration transfers across
     * corpus scale and the solved b is a property of the dup-similarity
@@ -475,7 +475,7 @@ object DedupOps {
         col("__e.__seg").as("__seg"), col("doc_id"), col("__len"),
         col("__s"))
       .withColumn("__side", lit(1))
-    // the ceiling counts DISTINCT docs per segment bucket (r15, advice):
+    // the ceiling counts DISTINCT docs per segment bucket:
     // entry rows duplicate a doc up to ~(k+1)(2k+1) times (index
     // partition + probe positions), so an entry-count ceiling would
     // raise on dense clumps the blocked form's per-block DOC-count
@@ -517,7 +517,7 @@ object DedupOps {
   /** The regime boundary for [[editDistancePairsAuto]], in IN-BLOCK
     * CANDIDATE PAIRS (Σ over blocks of n·(n−1)/2): below it the plain
     * blocked quadratic wins; above it the PassJoin segment filter does.
-    * Calibrated from the r14 measurements on the bench corpus — blocked
+    * Calibrated from measurements on the sf0.1 bench corpus — blocked
     * 0.34 s at 91k pairs / 3.11 s at 911k (≈3.4 µs per candidate's
     * early-exit DP), segmented 1.28 s / 2.09 s (≈1.1 s of fixed
     * multi-stage probe overhead + ≈1.0 µs marginal) — the two linear
@@ -540,7 +540,7 @@ object DedupOps {
         .cast("long"))
       .collect()(0).getLong(0)
 
-  /** Cost-routed edit-distance pairs (r15, the r14 `weak` mark): the
+  /** Cost-routed edit-distance pairs: the
     * blocked quadratic ([[editDistancePairs]]) and the PassJoin
     * segment filter ([[editDistancePairsSegmented]]) emit IDENTICAL
     * pairs (the pigeonhole guarantee, property-pinned in
@@ -560,13 +560,12 @@ object DedupOps {
       maxPerBlock: Long = SessionOps.DefaultMaxQuadraticPerKey,
       segmentMinPairs: Long = EditDistSegmentMinPairs,
       volumeCacheKey: Option[String] = None): DataFrame = {
-    // r16 (verdict item 4): the routing statistic is session-memoized
-    // per caller-supplied key (the ModelCache card pattern every other
-    // calibration statistic uses) — it is deterministic in the input
-    // table, so re-measuring it on every invocation was one wasted
-    // column-pruned scan per call (a whole extra corpus scan at the
-    // north star). Callers without a stable input identity (key=None)
-    // keep the measured-per-call behavior.
+    // the routing statistic is session-memoized per caller-supplied
+    // key (the ModelCache card pattern every other calibration
+    // statistic uses) — it is deterministic in the input table, so
+    // re-measuring it on every invocation would cost one column-pruned
+    // corpus scan per call. Callers without a stable input identity
+    // (key=None) measure per call.
     val volume = volumeCacheKey match {
       case Some(key) => ModelCache.cached(s"$key|inBlockPairCount") {
         java.lang.Long.valueOf(inBlockPairCount(docs, blockCol))
@@ -1047,9 +1046,9 @@ object DedupOps {
     // and collect_set — Catalyst cannot push a semi-join below an
     // explode+aggregate, so routing this wrapper through minhashIndex's
     // corpus-wide `sets` plan did strictly more aggregation work on
-    // large corpora with few candidates (r13 advice; the
-    // persisted-artifact path is unaffected — its sets are already
-    // materialized, pruning them is a read-side semi-join)
+    // large corpora with few candidates (the persisted-artifact path
+    // is unaffected — its sets are already materialized, pruning them
+    // is a read-side semi-join)
     incrementalStatusCore(
       existing.select(md5(col("text")).as("h")).distinct(),
       lshBands(minhashSignature(sh)).withColumnRenamed("doc_id", "e_doc"),
@@ -1062,7 +1061,7 @@ object DedupOps {
   }
 
   /** The MinHash incremental-dedup index as persistable ARTIFACTS —
-    * the band-axis twin of [[SimilarityOps.lshIndexEntriesSlim]] (r13):
+    * the band-axis twin of [[SimilarityOps.lshIndexEntriesSlim]]:
     * everything [[incrementalStatus]] needs from the EXISTING corpus,
     * computed once per index generation so a daily batch probe never
     * re-scans (or even references) the existing documents' raw text.
@@ -1110,7 +1109,7 @@ object DedupOps {
     * `setsFor` hook mapping the distinct candidate `e_doc`s to their
     * (e_doc, set_e) shingle-set rows — so the inline wrapper can prune
     * BEFORE shingling while the artifact path prunes its materialized
-    * sets (r13 advice).
+    * sets.
     */
   private def incrementalStatusCore(eHashes: DataFrame, eBands: DataFrame,
       setsFor: DataFrame => DataFrame, batch: DataFrame,
@@ -1182,7 +1181,7 @@ object DedupOps {
         col("hashed_sh").as("h_a"), col("n").as("n_a")), Seq("doc_a"))
       .join(p.perdoc.select(col("doc_id").as("doc_b"),
         col("hashed_sh").as("h_b"), col("n").as("n_b")), Seq("doc_b"))
-      // r16: native merge-scan overlap over the (pre-sorted) hashed
+      // native merge-scan overlap over the (pre-sorted) hashed
       // arrays — identical count to size(array_intersect(h_a, h_b)),
       // property-pinned; zero per-pair allocation
       .filter(ColumnBridge.column(graft.expressions.SortedLongOverlap(
@@ -1220,7 +1219,7 @@ object DedupOps {
       .select(col("doc_id"),
         transform(col("ss"), e => e.getField("shingle")).as("sorted_sh"),
         size(col("ss")).as("n"))
-      // hashed twin of sorted_sh for the stage-1 overlap count; r16:
+      // hashed twin of sorted_sh for the stage-1 overlap count,
       // SORTED (once per doc, inside the cache) so the per-pair count
       // is a native merge scan ([[graft.expressions.SortedLongOverlap]])
       // instead of array_intersect's per-pair hash set — the join's
@@ -1343,12 +1342,12 @@ object DedupOps {
 
   /** SimHash near-dup pairs: block-bucket candidates, then exact Hamming
     * via the native codegen'd [[graft.expressions.BitStringHamming]]
-    * expression (registered as `bit_hamming`). Same single-branch shape
+    * expression, built through the Column API so the op does not depend
+    * on the session's function registry. Same single-branch shape
     * as [[candidatePairs]]: fingerprints ride along in the bucket lists,
     * so the simhash pipeline is planned ONCE.
     */
   def simhashPairs(sims: DataFrame, maxHamming: Int = SimhashMaxHamming): DataFrame = {
-    graft.expressions.GraftExtensions.register(sims.sparkSession)
     val blockLen = SimhashBits / SimhashBlocks
     val blockCols = (0 until SimhashBlocks).map(b =>
       struct(lit(b).as("blk"),
@@ -1363,7 +1362,9 @@ object DedupOps {
       .select(explode(
         BlockPairs.of(col("members"), AllPairs)).as("p"))
       .select(col("p.a.doc_id").as("doc_a"), col("p.b.doc_id").as("doc_b"),
-        expr("bit_hamming(p.a.simhash, p.b.simhash)").as("hamming"))
+        ColumnBridge.column(graft.expressions.BitStringHamming(
+          ColumnBridge.expression(col("p.a.simhash")),
+          ColumnBridge.expression(col("p.b.simhash")))).as("hamming"))
       .distinct()
       // between, not <=: bit_hamming returns -1 on length mismatch, which
       // must reject the pair rather than count as "0 bits apart"

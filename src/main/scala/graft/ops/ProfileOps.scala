@@ -464,8 +464,7 @@ object ProfileOps {
     // one native moment pass over exact micro-longs (128-bit MACs)
     // instead of 2k + k(k−1)/2 wide-decimal sums — the BigDecimal
     // accumulator path was the whole cost of the query; values are
-    // bit-identical (CorrMomentsSpec pins agg == composed decimal sums,
-    // corrCardComposed below is the kept reference form)
+    // bit-identical (CorrMomentsSpec pins agg == composed decimal sums)
     import org.apache.spark.sql.graft.ColumnBridge
     val mm = ColumnBridge.column(
       graft.expressions.CorrMomentsAgg(
@@ -475,30 +474,10 @@ object ProfileOps {
     corrPairsFromMoments(m, cols)
   }
 
-  /** The pre-r17 composable moment pass — decimal products summed by
-    * Spark's `sum` — kept as the equivalence reference for
-    * [[graft.expressions.CorrMomentsAgg]] (CorrMomentsSpec pins the
-    * two bit-equal).
-    */
-  def corrCardComposed(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.size >= 2, "corrCard needs at least two columns")
-    def v(c: String) = round(col(c).cast("double"), 6).cast("decimal(18,6)")
-    val momentAggs =
-      count(lit(1)).as("n") +:
-        cols.flatMap(c => Seq(
-          sum(v(c)).as(s"sx_$c"),
-          sum(v(c) * v(c)).as(s"sxx_$c"))) ++:
-        cols.combinations(2).toSeq.map { case Seq(a, b) =>
-          sum(v(a) * v(b)).as(s"sxy_${a}_$b")
-        }
-    val m = df.agg(momentAggs.head, momentAggs.tail: _*)
-    corrPairsFromMoments(m, cols)
-  }
-
   /** Shared Pearson tail: the fixed-order double arithmetic over the
     * exact moment row (whichever pass produced it).
     */
-  private def corrPairsFromMoments(m: DataFrame, cols: Seq[String]): DataFrame = {
+  private[graft] def corrPairsFromMoments(m: DataFrame, cols: Seq[String]): DataFrame = {
     val dn = col("n").cast("double")
     def d(name: String) = col(name).cast("double")
     val pairs = cols.combinations(2).toSeq.map { case Seq(a, b) =>

@@ -357,7 +357,7 @@ object SimilarityOps {
   // The fixed-cardinality blockings (label cells in [[nearDupPairs]],
   // the 6-bit tables above) are DEGENERATE at scale: the cell count is
   // constant, so per-cell membership grows ∝ n and in-cell pairs grow
-  // ∝ n² — measured ×103 pairs at ×10 data in the round-9 scale run.
+  // ∝ n² — measured ×103 pairs at ×10 data.
   // The fix is to size the signature to the corpus: with
   // bits = ⌈log₂(n / targetBucket)⌉, bucket count grows ∝ n while the
   // EXPECTED bucket size stays pinned at targetBucket — candidates are
@@ -384,8 +384,8 @@ object SimilarityOps {
     * What is NOT scale-free is absolute-threshold recall: the prefix
     * widens as n grows, so per-table collision for a FIXED angle θ
     * decays as (n/targetBucket)^log₂p(θ) — measured 0.99 at n = 500 →
-    * 0.22 at n = 20 000 for the 0.3-threshold truth set (PLANS.md
-    * round 11). That is LSH geometry, not a tuning miss: holding a
+    * 0.22 at n = 20 000 for the 0.3-threshold truth set (PLANS.md).
+    * That is LSH geometry, not a tuning miss: holding a
     * fixed low-cosine threshold at growing n costs L ∝ n^ρ tables
     * (ρ = −log₂ p(θ) ≈ 0.74 at cos 0.3), which
     * `dedup_lsh_tables_frontier` prices, while scale consumers that
@@ -414,9 +414,8 @@ object SimilarityOps {
     * recall target the 32-table geometry cannot reach (the ×10 auto-L
     * raise names L ≈ 146) can OPT INTO a wider stage — cost is linear
     * in L and table t's bits are bit-identical at every width, so a
-    * 64-table run's min_t < 32 slice IS the 32-table run (r12 verdict
-    * item 4: the operator diagnosed a fix the engine could not
-    * execute; now it can, up to this pool).
+    * 64-table run's min_t < 32 slice IS the 32-table run. Without
+    * it the operator would diagnose a fix the engine cannot execute.
     */
   val LshWideMaxTables = 64
 
@@ -519,7 +518,7 @@ object SimilarityOps {
       probes, withMinT = false)
 
   /** Pairs of the table RANGE [fromTable, tables) only — the
-    * incremental-escalation probe (r16, verdict item 3): the wide-pool
+    * incremental-escalation probe: the wide-pool
     * design guarantees table t's hyperplanes are bit-identical at every
     * pool width, so an escalation from L to L′ can keep its already-
     * built L-table pair surface and union in ONLY the new tables'
@@ -561,14 +560,14 @@ object SimilarityOps {
     * was sized when it was built, a probe batch reads it and does not
     * reshape it — carried as an explicit `bits` column. Entries carry
     * ids only, no embedding payload (a vector copied onto each of its
-    * (1+probes)·tables entry rows is ~24 copies at the defaults; r13
-    * verdict item 1): the vectors live ONCE, in the [[lshIndexVectors]]
+    * (1+probes)·tables entry rows is ~24 copies at the defaults):
+    * the vectors live ONCE, in the [[lshIndexVectors]]
     * side table, and [[nearDupPairsLshCrossSlim]] joins them back on
     * the CANDIDATE pairs only. Build once per index generation, persist
     * both frames, and hand every daily batch to
     * [[nearDupPairsLshCrossSlim]] — a probe then touches only the
-    * artifact pair, never the raw existing corpus (r12 verdict item 1:
-    * an artifact read repeatedly is a table, not a plan).
+    * artifact pair, never the raw existing corpus (an artifact read
+    * repeatedly is a table, not a plan).
     *
     * Returns (vec_id, t, sig, pk, bits); persist next to
     * [[lshIndexVectors]]'s (vec_id, embedding, nrm).
@@ -768,7 +767,7 @@ object SimilarityOps {
   }
 
   /** The in-corpus LSH pairs of the table RANGE [fromTable, tables) —
-    * the incremental-escalation engine (r16): table t's hyperplanes are
+    * the incremental-escalation engine: table t's hyperplanes are
     * bit-identical at every pool width, so the pairs of an L′-table run
     * are exactly (pairs of the first L tables) ∪ (pairs of tables
     * [L, L′)) de-duplicated — an escalation can probe ONLY the new
@@ -815,7 +814,7 @@ object SimilarityOps {
         // the ceiling is stated in HOME members; multi-probe multiplies
         // expected bucket ENTRIES by (1+probes), so the guard scales
         // with it — a corpus that sat under the guard at probes=0 keeps
-        // the same headroom at any probe count (r11-advice)
+        // the same headroom at any probe count
         graft.ops.SessionOps.hotKeyGuarded(col("ms0"), col("__cnt"),
           concat(col("t").cast("string"), lit("/"), col("sig")),
           maxBucket.toLong * (1 + probes), "nearDupPairsLsh bucket").as("ms"))
@@ -863,7 +862,7 @@ object SimilarityOps {
   final case class LshRouteSolved(solved: LshAtRecall)
     extends LshRecallRoute
   /** The fallback arm carries a `release` handle for the internal pair
-    * cache (r15, advice): the arc build leaves the candidate pair
+    * cache: the arc build leaves the candidate pair
     * surface cached for the consumers' reads — call release() once the
     * arcs are consumed, exactly like [[LshAtRecall.release]] on the
     * solved arm.
@@ -872,8 +871,7 @@ object SimilarityOps {
       release: () => Unit)
     extends LshRecallRoute
 
-  /** [[nearDupPairsLshAtRecall]] WITH the second arm of the r12
-    * either/or implemented (r13 verdict item 3): try to solve the
+  /** [[nearDupPairsLshAtRecall]] WITH a second arm: try to solve the
     * absolute-threshold recall target up to the FULL wide pool
     * ([[LshWideMaxTables]] tables); if even that ceiling cannot reach
     * it — the regime the ×10 corpus demonstrates, where the geometry
@@ -908,10 +906,10 @@ object SimilarityOps {
     }
 
   /** RECALL-TARGETING LSH near-dup pairs — the operator that closes the
-    * loop the r11 frontier cards opened: fixed-absolute-threshold LSH
+    * loop the frontier cards open: fixed-absolute-threshold LSH
     * recall decays with corpus size by ρ-geometry (per-table collision
     * for a fixed angle is p(θ)^bits and bits grows with n — measured
-    * 0.99 at n = 500 → 0.14 at 60 000, PLANS round 11), and holding a
+    * 0.99 at n = 500 → 0.14 at 60 000, PLANS.md), and holding a
     * recall target needs L ∝ n^ρ tables. Instead of making the caller
     * hand-compute L from the `dedup_lsh_tables_frontier` card, this
     * operator measures per-table collision ON THIS CORPUS AT THIS
@@ -923,7 +921,7 @@ object SimilarityOps {
     *      against the broadcast stripe — stripe size is FIXED, so the
     *      calibration is linear in the corpus at any scale).
     *   2. SOLVE: per-table miss is (1−r₁)^(1/calibTables) under the
-    *      OR-amplification model 1−(1−x)^L that the r11 frontier
+    *      OR-amplification model 1−(1−x)^L that the frontier
     *      measurements ride to three decimals (×10 AND ×30) — so the
     *      predicted miss at k·calibTables tables is (1−r₁)^k, an
     *      INTEGER power computed in micro space with per-step floor
@@ -1048,17 +1046,16 @@ object SimilarityOps {
 
   /** [[graft.ops.GraphOps.knnGraph]] over the LSH candidate pairs WITH
     * a minimum head-recall CONTRACT — the enforcement form of the
-    * `dedup_embedding_lsh_topk_recall` card (r11 verdict item 7: the
-    * consumers had instruments but no automatic response to a bad
-    * reading). Before returning the arcs, the operator measures
+    * `dedup_embedding_lsh_topk_recall` card (the card is an
+    * instrument; this is the automatic response to a bad reading).
+    * Before returning the arcs, the operator measures
     * top-of-ranking recall on a fixed `calibQueries` stripe: of each
     * stripe vector's true top-`k` ≥-threshold partners (exact cosine,
     * one corpus scan against the broadcast stripe), the fraction the
     * bucketed generator surfaced, pooled over the stripe in floor-micro
     * integers. If the reading is below `minHeadRecall`, the operator
-    * APPLIES the frontier fix itself (r15 — found by the ×100 probe,
-    * where the 8-table reading was 0.156 against a 0.25 contract and
-    * the raise named "rebuild with tables = 16" without doing it):
+    * APPLIES the frontier fix itself (at ×100 the 8-table reading is
+    * 0.156 against a 0.25 contract):
     * solve the smallest L the validated 1−(1−x)^L geometry predicts
     * clears the contract, rebuild the pair surface at that L, and
     * re-measure — the auto-L escalation `nearDupPairsLshAtRecall`
@@ -1070,7 +1067,7 @@ object SimilarityOps {
     *
     * Ranking-head recall is the right contract for a kNN-graph build:
     * absolute-threshold recall decays with corpus size by LSH geometry
-    * (the r11 finding), but the arc-capped graph only consumes each
+    * (measured at ×10), but the arc-capped graph only consumes each
     * vector's k STRONGEST partners — measured 0.99 at sf0.01 yet 0.31
     * at ×10 on the synthetic corpus whose whole top-8 sits at
     * cos 0.39–0.43, sign-LSH's hardest regime. This operator is how a
@@ -1090,7 +1087,7 @@ object SimilarityOps {
       calibQueries, targetBucket, tables, maxBucket, probes)._1
 
   /** [[knnGraphAtHeadRecall]] plus a release handle for the internal
-    * candidate-pair cache (r15, advice): on the success path the arcs'
+    * candidate-pair cache: on the success path the arcs'
     * plan reads the cached pairs, so the cache must outlive the build —
     * but a consumer that has COUNTED/materialized the arcs should
     * release it rather than leave the surface pinned for the session
@@ -1153,31 +1150,31 @@ object SimilarityOps {
       (GraphOps.knnGraph(pairs, "vec_a", "vec_b", "cos_sim", k),
         () => { pairs.unpersist(); () })
     } else {
-      // the frontier fix, APPLIED (r15 — the ×100 probe found the
-      // operator NAMING "rebuild with tables = 16" instead of doing
-      // it): head miss shrinks ∝ (1−x)^L like threshold miss — solve
-      // the smallest multiple of `tables` whose predicted head recall
-      // clears the contract (same integer chain as
-      // nearDupPairsLshAtRecall), ESCALATE to the solved count, and
-      // re-MEASURE on the same stripe — the contract passes or raises
-      // on measurement, never on prediction. Only a target past even
-      // the solver's ceiling (or a reading the geometry's prediction
-      // overestimated) still raises by name.
+      // the frontier fix, APPLIED: head miss shrinks ∝ (1−x)^L like
+      // threshold miss — solve the smallest multiple of `tables` whose
+      // predicted head recall clears the contract (RecallMath, the
+      // integer chain nearDupPairsLshAtRecall uses), ESCALATE to the
+      // solved count, and re-MEASURE on the same stripe — the contract
+      // passes or raises on measurement, never on prediction. Only a
+      // target past even the solver's ceiling (or a reading the
+      // geometry's prediction overestimated) still raises by name; a
+      // base table count above the ceiling leaves no multiple to solve.
       //
-      // r16 (verdict item 3): the escalation is INCREMENTAL — the
-      // already-built `tables`-table pair surface is kept and only the
-      // NEW tables [tables, l) are probed, the two unioned and
-      // pair-deduplicated. Table t's hyperplanes are bit-identical at
-      // every pool width (the wide-pool prefix property), so the union
-      // IS the from-scratch l-table surface (escalation-identity test
-      // in NativeFoldEquivalenceSpec); the from-scratch rebuild paid
+      // The escalation is INCREMENTAL — the already-built
+      // `tables`-table pair surface is kept and only the NEW tables
+      // [tables, l) are probed, the two unioned and pair-deduplicated.
+      // Table t's hyperplanes are bit-identical at every pool width
+      // (the wide-pool prefix property), so the union IS the
+      // from-scratch l-table surface (escalation-identity test in
+      // NativeFoldEquivalenceSpec); a from-scratch rebuild would pay
       // the first `tables` tables' signature scan, bucket shuffle and
-      // in-bucket expansion a second time — at the ×100 probe's scale
-      // that rebuild was 515 s, ~tables/l of it re-derivation.
-      val m1 = 1000000L - rMicro
-      val ks = (1 to LshAutoMaxTables / tables).toList
-      val missAt = ks.scanLeft(1000000L)((m, _) => m * m1 / 1000000L).drop(1)
-      ks.find(kk => kk > 1 && 1000000L - missAt(kk - 1) >= minMicro) match {
+      // in-bucket expansion a second time (515 s at ×100, ~tables/l of
+      // it re-derivation).
+      val kmax = LshAutoMaxTables / tables
+      val solved =
+        if (kmax < 1) None
+        else RecallMath.solveUnits(1000000L - rMicro, minMicro, kmax)
+      solved match {
         case None =>
           pairs.unpersist()
           topk.unpersist()
@@ -1186,7 +1183,7 @@ object SimilarityOps {
               s"(top-$k, $tables tables, stripe vec_id < $calibQueries) " +
               s"is BELOW the $minHeadRecall contract — the kNN graph " +
               "would be missing its strongest edges; NO table count <= " +
-              s"${(LshAutoMaxTables / tables) * tables} (the solver's " +
+              s"${kmax * tables} (the solver's " +
               "ceiling in multiples of the current table count) reaches " +
               "the contract at this threshold — lower minHeadRecall, " +
               "lower the threshold, or use an exact generator")
@@ -1485,9 +1482,9 @@ object SimilarityOps {
     *      queries with `vec_id < calibQueries` (one corpus scan against
     *      the broadcast stripe; stripe size is FIXED, so the exact
     *      truth costs O(|corpus|·calibQueries) at any query-batch size
-    *      — the same stripe contract as the LSH/MinHash twins, r12
-    *      verdict item 3: the previous full-query-set truth was
-    *      O(|corpus|·|Q|), the cost the index exists to avoid).
+    *      — the same stripe contract as the LSH/MinHash twins; a
+    *      full-query-set truth would be O(|corpus|·|Q|), the cost the
+    *      index exists to avoid).
     *   2. SCAN ONCE at `maxProbe`, tag candidates with the probe rank,
     *      pull the ≤ `maxProbe`-row rank histogram of the STRIPE's
     *      truth hits.
@@ -1844,10 +1841,10 @@ object SimilarityOps {
     * above a cosine threshold. Bucketed self-join — quadratic only within
     * cells.
     *
-    * r17 (the ×100 probe's finding): label blocking is FIXED-cardinality
-    * (see the auto-sized-LSH header above) — cell occupancy grows ∝ n,
-    * so at ×100 the collect arm's hot-cell guard fired by name and the
-    * operator could not run at all. Cost-routed now (the
+    * Label blocking is FIXED-cardinality (see the auto-sized-LSH
+    * header above) — cell occupancy grows ∝ n, so at ×100 the collect
+    * arm's hot-cell guard fires by name and that arm cannot run at
+    * all. Hence cost-routed (the
     * [[DedupOps.editDistancePairsAuto]] regime pattern): the measured
     * max cell size picks the collect arm (one scan + one shuffle,
     * optimal while cells fit) or the join arm ([[nearDupPairsJoined]],
@@ -2495,15 +2492,15 @@ object SimilarityOps {
     * One corpus explode feeds everything: df derives FROM tf (no second
     * scan), and the pruned weight table is cached — it is read three
     * times (norms + both sides of the posting-list self-join) and is
-    * df-bounded per shingle, not raw-corpus-sized (the r3 raw-shingle
-    * lesson does not apply to the post-aggregation table).
+    * df-bounded per shingle, not raw-corpus-sized (caching a raw
+    * shingle explode would be; this post-aggregation table is not).
     */
   def sparseCosinePairs(docs: DataFrame, shingleK: Int, maxDf: Long,
       minCosMicro: Long): DataFrame =
     sparseCosinePairsHandle(docs, shingleK, maxDf, minCosMicro)._1
 
   /** [[sparseCosinePairs]] plus a release handle for the internal
-    * pruned-weight cache (r15): a consumer that MATERIALIZES the pair
+    * pruned-weight cache: a consumer that MATERIALIZES the pair
     * surface (the session memo feeding the dump + its top-k twin) no
     * longer needs the weight table pinned afterwards — release it after
     * the checkpoint instead of accumulating blocks for the session (the

@@ -51,31 +51,13 @@ object TextOps {
     * chunk (itself); the last window clamps at the doc end. Emitted as
     * an array of (start, chunk-text) structs to explode scan-side — at
     * 100 TB chunking is a Generate in the scan stage, never a shuffle.
+    * One native pass, [[graft.expressions.WordChunks]].
     */
-  def chunkStarts(toks: Column, width: Int, stride: Int): Column =
-    // bound = (n−width+1) + (stride−1): guarantees one start lands in
-    // (n−width, n−width+stride], so the tail tokens past the last full
-    // window are still covered by a clamped final chunk
-    sequence(lit(1),
-      greatest(size(toks) - (width - 1), lit(1)) + (stride - 1), lit(stride))
-
   def chunks(toks: Column, width: Int, stride: Int): Column = {
-    // r16: native single-pass [[graft.expressions.WordChunks]] — the
-    // HOF form below is kept as the equivalence reference.
     require(width > 0 && stride > 0, "width and stride must be positive")
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(graft.expressions.WordChunks(
       ColumnBridge.expression(toks), width, stride))
-  }
-
-  /** The original higher-order-function form of [[chunks]] — the
-    * equivalence reference for the native expression's spec.
-    */
-  private[graft] def chunksHof(toks: Column, width: Int, stride: Int): Column = {
-    require(width > 0 && stride > 0, "width and stride must be positive")
-    transform(chunkStarts(toks, width, stride), start =>
-      struct(start.as("chunk_start"),
-        array_join(slice(toks, start, lit(width)), " ").as("chunk")))
   }
 
   /** Canonical text form for "fuzzy-exact" dedup: lowercase, non-
@@ -83,25 +65,17 @@ object TextOps {
     * documents differing only in case/punctuation/whitespace canonicalize
     * identically, so exact-dedup machinery over md5(canonical) catches
     * them — the standard first pass before MinHash. Computed by the
-    * native single-pass [[graft.expressions.CanonicalText]] expression
-    * (r15: the two-regex chain was the suite's heaviest per-row scalar;
-    * the byte scan is exactly equivalent — property-pinned against
-    * [[canonicalizeRegex]] — and stays in whole-stage codegen).
+    * native single-pass [[graft.expressions.CanonicalText]] expression:
+    * the equivalent two-regex chain would be the suite's heaviest
+    * per-row scalar, while the byte scan is exactly equivalent
+    * (property-pinned against the regex form) and stays in whole-stage
+    * codegen.
     */
   def canonicalize(text: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       graft.expressions.CanonicalText(ColumnBridge.expression(text)))
   }
-
-  /** The reference two-regex form of [[canonicalize]] — kept as the
-    * equivalence oracle the native expression is property-tested
-    * against (and the form the DuckDB oracle replays verbatim).
-    */
-  private[graft] def canonicalizeRegex(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(text), "[^a-z0-9 ]", " "),
-      " +", " "))
 
   /** PII scrubbing patterns — deliberately restricted to syntax valid in
     * BOTH Java regex (Spark) and RE2 (the DuckDB oracle): character
@@ -197,28 +171,17 @@ object TextOps {
   val ShingleK = 3
 
   /** k-word shingles joined by a space; empty array when the doc is
-    * shorter than k. r16: computed by the native single-pass
-    * [[graft.expressions.WordShingles]] (the HOF form below evaluated
-    * interpreted and allocated a sliced k-array + join buffer per
+    * shorter than k. Computed by the native single-pass
+    * [[graft.expressions.WordShingles]] (a higher-order form evaluates
+    * interpreted and allocates a sliced k-array + join buffer per
     * shingle on every corpus pass of ~10 consumers); byte-identical
-    * output, property-pinned against [[shinglesHof]].
+    * output, property-pinned against that form.
     */
   def shingles(toks: Column, k: Int = ShingleK): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(
       graft.expressions.WordShingles(ColumnBridge.expression(toks), k))
   }
-
-  /** The original higher-order-function form of [[shingles]] — kept as
-    * the equivalence reference for the native expression's spec (the
-    * canonicalizeRegex pattern). Guard note: Spark `sequence(1, n)`
-    * with n<1 would count DOWN, hence the size(toks) < k branch.
-    */
-  private[graft] def shinglesHof(toks: Column, k: Int = ShingleK): Column =
-    when(size(toks) < k, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), size(toks) - (k - 1)),
-        i => array_join(slice(toks, i, lit(k)), " ")))
 
   /** Document fingerprint: lexicographic min of md5(shingle) — a
     * deterministic rolling-hash analog, null for too-short docs.
@@ -404,13 +367,13 @@ object TextOps {
       (col("c").cast("double") - lit(discount)) / col("cv").cast("double") +
         lit(discount) * col("n1v").cast("double") / col("cv").cast("double") *
           (col("n1w").cast("double") / col("n1all").cast("double"))
-    // r17: the model the scoring join reads is the FULLY-FOLDED
+    // the model the scoring join reads is the FULLY-FOLDED
     // per-(v,w) log-probability table, cached as one artifact — ln P is
     // a function of (v,w) alone, the same double for every doc, so
     // folding it into the cached model changes nothing downstream while
-    // a warm invocation drops from four model-side jobs + broadcasts
-    // (pc hit, lm, rm, tt re-aggregated per call) to ONE broadcast of
-    // this table: the scoring plan is explode → per-doc tf aggregate →
+    // a warm invocation runs ONE broadcast of this table instead of
+    // four model-side jobs + broadcasts (pc hit, lm, rm, tt
+    // re-aggregated per call): the scoring plan is explode → per-doc tf aggregate →
     // one broadcast join → per-doc sum. Still vocab²-bounded (same row
     // count as pc).
     val model = pc

@@ -15,10 +15,10 @@ import org.apache.spark.sql.graft.ColumnBridge
   * Exchange+Sort per SIDE and a linear per-partition merge — instead of
   * the union+window sweep.
   *
-  * The session must have [[AsOfJoinStrategy]] registered
-  * (`GraftExtensions.register(spark)` or the
-  * `spark.sql.extensions=graft.expressions.GraftExtensions` config);
-  * otherwise planning fails with an assertion naming the fix.
+  * The session must plan with [[AsOfJoinStrategy]]: every session
+  * [[graft.GraftSession]] builds does, and any other needs the
+  * `spark.sql.extensions=graft.expressions.GraftExtensions` config;
+  * otherwise planning fails with a requirement naming the fix.
   */
 object AsOfJoin {
 
@@ -45,8 +45,8 @@ object AsOfJoin {
     require(
       spark.experimental.extraStrategies.contains(AsOfJoinStrategy) ||
         spark.sessionState.planner.strategies.contains(AsOfJoinStrategy),
-      "AsOfJoinStrategy is not registered — call GraftExtensions.register(spark) " +
-        "or set spark.sql.extensions=graft.expressions.GraftExtensions")
+      "AsOfJoinStrategy is not registered — build the session with " +
+        "graft.GraftSession or set spark.sql.extensions=graft.expressions.GraftExtensions")
     val lplan = ColumnBridge.analyzed(left)
     val rplan = ColumnBridge.analyzed(right)
     val lt = attr(lplan, leftTs, "left")

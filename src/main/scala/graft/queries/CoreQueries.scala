@@ -21,11 +21,11 @@ import graft.sql.RuntimeSql
   *   - money/DECIMAL result columns are surfaced as STRINGS at the query
   *     edge (math stays exact DECIMAL internally). Both engines print a
   *     DECIMAL(p,s) with its full scale ("1.50", not "1.5"), so the
-  *     strings are byte-identical — whereas the driver's hash of a raw
-  *     decimal column is dtype/representation-sensitive and mismatched in
-  *     round 1 on every decimal-typed query;
-  *   - array columns are `array_join`ed to strings — the driver's pandas
-  *     sort cannot order ndarray cells (round-1 r5 harness error).
+  *     strings are byte-identical — whereas the compare's hash of a raw
+  *     decimal column is dtype/representation-sensitive and mismatches
+  *     on every decimal-typed query;
+  *   - array columns are `array_join`ed to strings — the compare's
+  *     pandas sort cannot order ndarray cells.
   */
 object CoreQueries {
 
@@ -493,7 +493,6 @@ object CoreQueries {
     // AJ1's oracle SQL — the two implementations must agree with DuckDB
     // ASOF independently.
     "aj4_asof_native" -> ((s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       val ev = table(s, dir, "events").select(
         col("event_id"), col("user_id").as("key"),
         unix_micros(col("ts")).as("ts_us"))
@@ -1350,7 +1349,7 @@ object CoreQueries {
     // integer-threshold inverse CDF), replicate means in exact decimal
     // moments, CI = the 2.5%/97.5% order statistics. The at-scale
     // bootstrap — no per-replicate shuffles or sampling coordination;
-    // one JOB end-to-end (r15): the global mean and the CI order
+    // one JOB end-to-end: the global mean and the CI order
     // statistics ride the replicate aggregation itself instead of
     // re-deriving the pipeline in three plan branches.
     "a19_bootstrap_ci" -> ((s, dir) =>
@@ -1426,7 +1425,6 @@ object CoreQueries {
     // here from the publicly-surfaced expressions (GraftExtensions
     // registers Spark's internal bloom_filter_agg / might_contain).
     "bf1_bloom_prune" -> ((s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       table(s, dir, "orders").createOrReplaceTempView("orders_bfv")
       table(s, dir, "customer").createOrReplaceTempView("customer_bfv")
       val pruned = s.sql(

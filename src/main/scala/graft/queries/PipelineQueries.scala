@@ -140,7 +140,7 @@ object PipelineQueries {
     * fixed count (not a stride) keeps the eval LINEAR in the corpus:
     * queries stay constant as n grows, so cosines ∝ n — the stride
     * form was the suite's designed quadratic (queries ∝ n ⇒ cosines
-    * ∝ n²/mod, measured 4.9× at ×10; r11 verdict item 3).
+    * ∝ n²/mod, measured 4.9× at ×10).
     */
   val KnnQueryCount = 200
   val KnnK = 5
@@ -287,15 +287,13 @@ object PipelineQueries {
     SimilarityOps.withNorm(table(s, dir, "embeddings"))
 
   /** The session-shared LSH signature stage, built ONCE at the full
-    * 32-table ceiling and sliced by every consumer (r12): table t's
+    * 32-table ceiling and sliced by every consumer: table t's
     * bits are bit-identical at every signature width, and the
     * signature is threshold-INDEPENDENT, so one cached scan serves
     * dedup_embedding_lsh (+topk), both frontier cards, the auto-L
-    * operator's two passes, and the TriangleCos graph chain. (r11
-    * cached only the frontier's stage at 8 tables; widening it to 32
-    * for the tables card silently cost dedup_embedding_lsh its cache
-    * hit — measured 1.30 → 3.57 s — which this helper repairs for the
-    * whole family at once.)
+    * operator's two passes, and the TriangleCos graph chain. (A
+    * per-consumer stage at its own width misses the shared cache:
+    * dedup_embedding_lsh measured 1.30 s with it, 3.57 s without.)
     */
   private def cachedLshSigs(s: SparkSession, dir: String): DataFrame =
     SimilarityOps.lshAutoSignatureStage(
@@ -306,8 +304,8 @@ object PipelineQueries {
     * an artifact read repeatedly is a table, not a plan): both
     * incremental queries probe this frame, and a second batch in the
     * same session pays only its own signing + the shared shuffle,
-    * never an existing-side re-scan (r12 verdict item 1 — the inline
-    * form measured 3.2× for ×10 index size at a fixed batch). The
+    * never an existing-side re-scan (an inline form measured 3.2× for
+    * ×10 index size at a fixed batch). The
     * artifact is the slim pair: id-sized bucket entries plus a
     * single-copy vector side table.
     */
@@ -324,9 +322,9 @@ object PipelineQueries {
     * output shapes (the uncapped dump and its per-batch-vector top-k
     * cap — the same daily batch probed once, consumed twice), memoized
     * like the index itself: cross-pair surfaces are id+cosine rows
-    * bounded by the batch's dup density, cheap to pin. The probe COST
-    * itself is measured by `graft.RecallProbe cross`, which times an
-    * un-memoized probe against a freshly materialized index.
+    * bounded by the batch's dup density, cheap to pin. The un-memoized
+    * probe cost is dedup_embedding_incremental's `cold` seconds in
+    * `graft.Bench`.
     */
   private def lshCrossPairs(s: SparkSession, dir: String): DataFrame =
     ModelCache.sessionCached(s, s"$dir|lshCrossPairs") {
@@ -339,9 +337,9 @@ object PipelineQueries {
 
   /** The persisted MinHash incremental-dedup index over the existing
     * (even doc_id) half — hashes/bands/shingle-sets materialized once
-    * per session (r13: the band-axis twin of [[lshCrossIndex]]; the
-    * inline form re-shingled and re-banded the whole existing corpus
-    * on every batch probe).
+    * per session (the band-axis twin of [[lshCrossIndex]]; an inline
+    * form re-shingles and re-bands the whole existing corpus on every
+    * batch probe).
     */
   private def minhashCrossIndex(s: SparkSession,
       dir: String): DedupOps.MinhashIndex =
@@ -356,9 +354,9 @@ object PipelineQueries {
   /** The shared default (8-table) near-dup pair surface at
     * [[NearDupThreshold]], materialized once per session per dir:
     * three queries consume exactly this frame (the dump, its top-k
-    * cap, and the recall card), and the r12 bench measured the card
-    * re-running the pair pass from the cached signature frame on every
-    * invocation (0.50 → 0.83 s — the round's one regression). Pair
+    * cap, and the recall card); without it the card re-runs the pair
+    * pass from the cached signature frame on every invocation
+    * (measured 0.50 → 0.83 s). Pair
     * surfaces are id+cosine rows (≤ candidate volume, ∝ n·targetBucket
     * per table), so pinning the artifact is cheap at any scale.
     */
@@ -369,7 +367,7 @@ object PipelineQueries {
     }
 
   /** The shared blocked Jaro-Winkler pair surface at [[JaroMinMicro]],
-    * materialized once per session per dir (r14): the dump
+    * materialized once per session per dir: the dump
     * (`dedup_jaro`) and its per-doc top-k cap (`dedup_jaro_topk`) read
     * exactly this frame. Pair surfaces are id+score rows bounded by
     * the corpus's match density — artifact-sized, cheap to pin.
@@ -385,7 +383,7 @@ object PipelineQueries {
 
   /** The shared sparse TF-IDF cosine pair surface at
     * [[SparseMinCosMicro]], materialized once per session per dir
-    * (r15): the dump (`sim_sparse_cosine`) and its per-doc top-k cap
+    * the dump (`sim_sparse_cosine`) and its per-doc top-k cap
     * (`sim_sparse_topk`) read exactly this frame — the jaro-twin
     * pattern. The operator's internal pruned-weight cache is released
     * after the checkpoint (the frame is an id+score artifact; the
@@ -403,7 +401,7 @@ object PipelineQueries {
 
   /** Shared LSH-bucket candidate pairs at the threshold-graph cut —
     * ONE materialization read by sim_dbscan / graph_bfs_hops /
-    * graph_bfs_knn / graph_ppr (the r9 materialize-once pattern: the
+    * graph_bfs_knn / graph_ppr (the materialize-once pattern: the
     * signature+bucket+cosine work runs once per JVM per dir, every
     * graph query downstream starts from the cached pair list).
     */
@@ -425,12 +423,12 @@ object PipelineQueries {
 
   /** The DEGREE-CAPPED undirected kNN edge set over [[lshPairsTri]] —
     * the default graph surface every scale-facing graph analytic rides
-    * (BFS and PPR since r10; triangles / link-pred / label-prop /
-    * modularity since r12): LSH candidates (linear volume) cut to each
+    * (BFS, PPR, triangles, link-pred, label-prop, modularity): LSH
+    * candidates (linear volume) cut to each
     * node's top-[[BfsKnnK]] arcs, symmetrized to distinct undirected
     * edges, so |E| ≤ k·n at ANY corpus size where the raw threshold
     * graph's |E| is a data property measured growing superlinearly
-    * (5.9× pairs for 3× data at ×30 — PLANS round 11).
+    * (5.9× pairs for 3× data at ×30 — PLANS.md).
     */
   private def knnEdgesTri(s: SparkSession, dir: String): DataFrame =
     ModelCache.sessionCached(s, s"$dir|knnEdgesTri") {
@@ -805,7 +803,7 @@ object PipelineQueries {
     // graph-completion answer to "these two docs are probably dups the
     // generator missed" (a recall repair for the LSH layer), top-50 by
     // shared count then neighborhood Jaccard. On the capped edge set
-    // (r12 re-point) the wedge join is bounded by k·|E| ≤ k²·n.
+    // the wedge join is bounded by k·|E| ≤ k²·n.
     "graph_linkpred" -> ((s, dir) =>
       GraphOps.linkPrediction(
         knnEdgesTri(s, dir),
@@ -815,9 +813,9 @@ object PipelineQueries {
     // fringe members cascade away — the cluster-core extractor beside
     // triangles' local density. Bounded synchronous rounds, each a
     // degree aggregation + two semi-joins on the shrinking edge set.
-    // r13: rides the shared degree-capped kNN edge artifact like the
-    // rest of the graph family — the exact label-cell pair pass it
-    // used to rebuild per run is quadratic in cell size (measured
+    // Rides the shared degree-capped kNN edge artifact like the rest
+    // of the graph family — an exact label-cell pair pass rebuilt per
+    // run is quadratic in cell size (measured
     // 16.6 s of a 17.1 s total at ×10: 10 cells × 2000 members →
     // 20M candidates, 103× the 1× pair count).
     "graph_kcore" -> ((s, dir) =>
@@ -1116,7 +1114,7 @@ object PipelineQueries {
     // exercised: +100000 copies of existing docs (exact_dup_existing),
     // +200000 copies of in-batch docs (exact_dup_in_batch); cross-half
     // near-dups surface via band collision + Jaccard ≥ 0.5 confirm.
-    // r13: the batch probes the persisted MinhashIndex ARTIFACT
+    // The batch probes the persisted MinhashIndex ARTIFACT
     // (hashes/bands/shingle-sets, materialized once per session) — the
     // band-axis twin of the embedding index treatment: no existing-side
     // text re-scan anywhere in the probe.
@@ -1249,10 +1247,10 @@ object PipelineQueries {
       // the CARD is a handful of longs from a deterministic
       // calibrate→solve run — session-memoized like every other
       // trained artifact (train once, serve many), with the operator's
-      // cached scan released as soon as the counts are collected (r13
-      // advice: the release is the block bound; the memo is why
-      // releasing does not turn every bench pass into a re-solve —
-      // the un-memoized cost is priced by `RecallProbe ivf`)
+      // cached scan released as soon as the counts are collected (the
+      // release is the block bound; the memo is why releasing does not
+      // turn every bench pass into a re-solve — the un-memoized cost is
+      // the query's `cold` seconds in `graft.Bench`)
       val row = ModelCache.sessionCachedRef(s, s"$dir|ivfAutoRecallCard") {
         val base = normed(s, dir)
         val r = SimilarityOps.ivfTopKAtRecall(
@@ -1561,7 +1559,7 @@ object PipelineQueries {
     // only, exact-cosine verified.
     "dedup_embedding_incremental" -> ((s, dir) => lshCrossPairs(s, dir)),
 
-    // the OUTPUT-BOUNDED incremental surface (r12 verdict item 2): the
+    // the OUTPUT-BOUNDED incremental surface: the
     // same frozen-index probe (shared — one batch probed once, read
     // twice), capped to each BATCH vector's k best existing-side
     // partners — ≤ |batch|·k rows at any index size, where the
@@ -1593,14 +1591,13 @@ object PipelineQueries {
           SimilarityOps.cosine(
             col("embedding"), col("qe"), col("nrm"), col("qn")).as("cos"))
         .filter(col("cos") >= NearDupThreshold)
-      // r16 single-pass restructure: the old form unionAll'd one branch
-      // per target, each re-evaluating the truth subtree and carrying
-      // its own join+agg+crossJoin (3× truth, 6 broadcasts, a 390 KB
-      // plan). Now the three targets' pair sets union ONCE with a
-      // target tag, per-(query, other) hit flags aggregate per target,
+      // single pass: one branch per target would re-evaluate the truth
+      // subtree and carry its own join+agg+crossJoin (3× truth, 6
+      // broadcasts, a 390 KB plan). Instead the three targets' pair
+      // sets union ONCE with a target tag, per-(query, other) hit flags aggregate per target,
       // the truth joins a single broadcast, and one row explodes into
-      // the same three — values unchanged (same counts, same rounded
-      // ratio), plan ~3× smaller, truth evaluated once (guide §2.4).
+      // the same three — same counts, same rounded ratio, a ~3×
+      // smaller plan, truth evaluated once.
       val tagged = LshFrontierTargets.map { t =>
         SimilarityOps.nearDupPairsLshFrom(sigs, NearDupThreshold,
           targetBucket = t)
@@ -1679,7 +1676,7 @@ object PipelineQueries {
           SimilarityOps.cosine(
             col("embedding"), col("qe"), col("nrm"), col("qn")).as("cos"))
         .filter(col("cos") >= NearDupThreshold)
-      // r16 single-pass restructure (the dedup_lsh_frontier pattern):
+      // single pass (the dedup_lsh_frontier pattern):
       // min_t < L selects an L-table run, so per-L hits and volumes are
       // CONDITIONAL SUMS; pair rows (both directions) and truth rows
       // ride ONE union into one (query, other) grouping and one 1-row
@@ -1715,7 +1712,7 @@ object PipelineQueries {
           col("r.recall"), col("r.n_pairs"))
     }),
 
-    // the RECALL-TARGETING auto-L operator's card (r11 verdict item 1):
+    // the RECALL-TARGETING auto-L operator's card:
     // calibrate at 8 tables on the query stripe, solve 1-(1-x)^L >=
     // target with integer-exact micro arithmetic, rebuild at the
     // solved L, report MEASURED achieved recall — every number on the
@@ -1723,7 +1720,7 @@ object PipelineQueries {
     "dedup_lsh_auto_recall" -> ((s, dir) => {
       import s.implicits._
       // session-memoized card + released operator cache — see the
-      // sim_ivf_auto_recall note (un-memoized cost: `RecallProbe lsh`)
+      // sim_ivf_auto_recall note
       val row = ModelCache.sessionCachedRef(s, s"$dir|lshAutoRecallCard") {
         val r = SimilarityOps.nearDupPairsLshAtRecall(
           normed(s, dir), NearDupThreshold, LshAutoRecallTarget,
@@ -1739,7 +1736,7 @@ object PipelineQueries {
         "n_pairs")
     }),
 
-    // the WIDE-POOL escalation card (r13 verdict item 3): the same
+    // the WIDE-POOL escalation card: the same
     // auto-L decision with the 64-table pool as the ceiling, at a
     // threshold/target pair whose geometry at the bench SF genuinely
     // needs it — at sf0.1 the measured calibration recall (0.724886 at
@@ -1754,8 +1751,8 @@ object PipelineQueries {
       import s.implicits._
       // session-memoized card + released operator cache — see the
       // sim_ivf_auto_recall note; the wide solve (a fresh 48-table
-      // build at sf0.1) is paid once per session, priced un-memoized
-      // by `RecallProbe lsh <dir> 0.2 0.999 64`
+      // build at sf0.1) is paid once per session, in the query's
+      // `cold` seconds
       val row = ModelCache.sessionCachedRef(s,
         s"$dir|lshAutoRecallWideCard") {
         val r = SimilarityOps.nearDupPairsLshAtRecall(
@@ -1773,7 +1770,7 @@ object PipelineQueries {
         "n_pairs")
     }),
 
-    // the ROUTED recall decision end-to-end (r14): same regime as the
+    // the ROUTED recall decision end-to-end: same regime as the
     // wide card, but through nearDupPairsLshAtRecallOrTopK — at the
     // oracle SFs the target solves inside the wide pool (the SOLVED
     // arm, decision replayed in DuckDB like the wide card, with the
@@ -1795,8 +1792,8 @@ object PipelineQueries {
             r.release()
             ("solved", r.tables.toLong, n)
           case SimilarityOps.LshRouteTopK(arcs, _, release) =>
-            // count, then release the arm's internal pair cache (r15,
-            // advice) — the card memoizes the scalars, so nothing reads
+            // count, then release the arm's internal pair cache — the
+            // card memoizes the scalars, so nothing reads
             // the frame again this session
             val n = arcs.count()
             release()
@@ -1814,7 +1811,7 @@ object PipelineQueries {
     "dedup_minhash_auto_recall" -> ((s, dir) => {
       import s.implicits._
       // session-memoized card + released operator cache — see the
-      // sim_ivf_auto_recall note (un-memoized: `RecallProbe minhash`)
+      // sim_ivf_auto_recall note
       val row = ModelCache.sessionCachedRef(s,
         s"$dir|minhashAutoRecallCard") {
         val r = DedupOps.minhashPairsAtRecall(
@@ -1907,7 +1904,7 @@ object PipelineQueries {
     }),
 
     // blocked fuzzy matching: Levenshtein ≤ 4 over 24-char prefixes,
-    // COST-ROUTED (r15, the r14 weak mark) between the plain in-block
+    // COST-ROUTED between the plain in-block
     // quadratic and PassJoin SEGMENT blocking on the measured in-block
     // candidate volume: at sf0.1 (~91k candidates) the blocked DP wins
     // (the segmented probe's fixed ~6-stage overhead measured 3.8×);
@@ -1918,17 +1915,16 @@ object PipelineQueries {
     // SUFFIX: two same-block strings share their first min(8, len)
     // chars EXACTLY, and Levenshtein is invariant under stripping a
     // shared prefix — so suffix distance IS the 24-char distance. The
-    // block key is LENGTH-PREFIXED (r15, advice): an injective encoding
-    // of (lang, prefix8), so "same block ⟹ shared prefix verbatim" is
-    // structural — a lang containing the old '|' separator can no
-    // longer collide two different prefixes into one block and silently
-    // break the suffix-stripping invariant. The order-sensitive
+    // block key is LENGTH-PREFIXED: an injective encoding of (lang,
+    // prefix8), so "same block ⟹ shared prefix verbatim" is
+    // structural — a lang containing a separator character cannot
+    // collide two different prefixes into one block and silently break
+    // the suffix-stripping invariant. The order-sensitive
     // record-linkage pass the shingle family can't express; early-exit
     // threshold DP on both arms.
-    // r16: the routing statistic (in-block candidate volume) is
+    // The routing statistic (in-block candidate volume) is
     // session-memoized per dir — one statistics scan per session, not
-    // one per invocation (verdict item 4); the routing decision and the
-    // pair output are unchanged (the memoized long IS the measurement).
+    // one per invocation; the memoized long IS the measurement.
     "dedup_editdist" -> ((s, dir) =>
       DedupOps.editDistancePairsAuto(
         table(s, dir, "documents"),
@@ -1943,12 +1939,12 @@ object PipelineQueries {
     // transposition-tolerant metric next to dedup_editdist, computed by
     // the native exact-integer expression (graft.expressions
     // .JaroWinkler) so the threshold is integer-decided on both
-    // engines. The pair surface is session-memoized (r14): two queries
+    // engines. The pair surface is session-memoized: two queries
     // consume exactly this frame (the dump and its top-k cap), and the
     // surface is id+score rows bounded by the corpus's match density.
     "dedup_jaro" -> ((s, dir) => jaroPairsShared(s, dir)),
 
-    // the OUTPUT-BOUNDED jaro surface (r14): the same blocked pair
+    // the OUTPUT-BOUNDED jaro surface: the same blocked pair
     // chain, capped to each doc's k best partners — ≤ n·k rows at any
     // scale, where the uncapped dump grows with the corpus's true
     // match density (measured QUADRATIC in clump size on the bench
@@ -2036,7 +2032,6 @@ object PipelineQueries {
     // registered codegen expression resolving by name (the
     // SparkSessionExtensions path a SQL-only user would take).
     "sql1_ext_fns" -> ((s, dir) => {
-      graft.expressions.GraftExtensions.register(s)
       table(s, dir, "embeddings").createOrReplaceTempView("embeddings_sqlv")
       s.sql("""SELECT vec_id, round(vec_dot(embedding, embedding), 6) AS self_dot
               |FROM embeddings_sqlv""".stripMargin)
@@ -2913,9 +2908,9 @@ object PipelineQueries {
     // clustering density (how clique-like each doc's dup neighborhood
     // is). Degree-ordered orientation bounds the wedge join by the
     // oriented out-degree (O(√m)), the MapReduce triangle shape; the
-    // capped edge set (r12 re-point) makes m itself ≤ k·n, so the
-    // whole count is linear in the corpus where the raw threshold
-    // graph's m grew superlinearly.
+    // capped edge set makes m itself ≤ k·n, so the whole count is
+    // linear in the corpus where the raw threshold graph's m grows
+    // superlinearly.
     "graph_triangles" -> ((s, dir) =>
       GraphOps.triangleCounts(
         knnEdgesTri(s, dir),
@@ -3202,8 +3197,8 @@ object PipelineQueries {
 
     // onion decomposition of the cosine graph: kCore's peel with the
     // removal round recorded — layer = how deep into the fringe a node
-    // sits, 0 = the surviving core. r13: on the capped kNN edge
-    // artifact, same rationale as graph_kcore.
+    // sits, 0 = the surviving core. On the capped kNN edge artifact,
+    // same rationale as graph_kcore.
     "graph_onion" -> ((s, dir) =>
       GraphOps.onionLayers(knnEdgesTri(s, dir),
         "vec_a", "vec_b", KCoreK, KCoreRounds)),
@@ -3245,7 +3240,7 @@ object PipelineQueries {
     // layer above exact connected components: every round one
     // co-partitioned edges⋈labels join + per-node majority argmax
     // (count DESC, label ASC). Per-round cost is linear in |E| ≤ k·n
-    // on the capped edge set (r12 re-point).
+    // on the capped edge set.
     "graph_label_prop" -> ((s, dir) =>
       GraphOps.labelPropagation(
         knnEdgesTri(s, dir),
@@ -3254,9 +3249,9 @@ object PipelineQueries {
     // hubs-link-hubs or hubs-link-leaves? degree assortativity of the
     // capped kNN dup graph — negative r is the canonical-center star
     // shape near-dup clusters produce (out-arcs are capped at k but
-    // in-degree is not, so hub structure still shows). Re-pointed with
-    // the rest of the graph family in r12: the label-cell pair surface
-    // it rode OOM'd a 16 GiB ×10 run inside the pair explode — the
+    // in-degree is not, so hub structure still shows). On the capped
+    // edge set like the rest of the graph family: a label-cell pair
+    // surface OOMs a 16 GiB ×10 run inside the pair explode — the
     // measured form of "fixed cells go quadratic".
     "graph_assortativity" -> ((s, dir) =>
       GraphOps.degreeAssortativity(
@@ -3267,7 +3262,7 @@ object PipelineQueries {
     // terms per community as EXACT integer rationals (q_num/q_den —
     // signed division left to the consumer; the trunc-vs-floor
     // division trap stays out of the hash surface). Rides the shared
-    // capped kNN edge set (r12 re-point) — already cached, and the
+    // capped kNN edge set — already cached, and the
     // label source is the SAME graph graph_label_prop reads.
     "graph_modularity" -> ((s, dir) => {
       val edges = knnEdgesTri(s, dir)
@@ -3310,11 +3305,11 @@ object PipelineQueries {
     // steps-to-curated-seed): per hop one co-partitioned
     // edges⋈frontier join + a visited anti-join, each node expanded
     // exactly once; the oracle replays it as a recursive CTE.
-    // the cosine graph's edges now come from the LSH-bucket candidate
+    // the cosine graph's edges come from the LSH-bucket candidate
     // generator: candidate volume is linear in the corpus (auto-sized
     // buckets) where the label-cell graph's was measured quadratic at
-    // ×10 — the r9-verdict re-point. BFS semantics are unchanged;
-    // the graph is the LSH-recall subgraph of the threshold graph.
+    // ×10. BFS semantics are the threshold graph's; the graph is its
+    // LSH-recall subgraph.
     "graph_bfs_hops" -> ((s, dir) =>
       GraphOps.bfsHops(
         lshPairsTri(s, dir),
@@ -3337,16 +3332,16 @@ object PipelineQueries {
     // shingles (posting lists ≤ maxDf ⇒ per-shingle pair expansion
     // ≤ maxDf² — bounded regardless of corpus size; the all-pairs join
     // never exists). Decimal-exact dots/norms, micro-integer cosine.
-    // The pair surface is session-memoized (r15): the dump and its
+    // The pair surface is session-memoized: the dump and its
     // top-k twin read exactly this frame. SCALE NOTE: this dump's
     // volume is |vocab|·maxDf²-bounded but |vocab| grows with the
     // corpus — at 100× consume `sim_sparse_topk` instead.
     "sim_sparse_cosine" -> ((s, dir) => sparsePairsShared(s, dir)),
 
-    // the OUTPUT-BOUNDED sparse-cosine surface (r15, r14 verdict item
-    // 2): the same posting-list pair chain, capped to each doc's k
-    // best partners — ≤ n·k rows at any scale, where the uncapped dump
-    // was the suite's largest non-instrument ×10 row (5.90 s / 3.54×:
+    // the OUTPUT-BOUNDED sparse-cosine surface: the same posting-list
+    // pair chain, capped to each doc's k best partners — ≤ n·k rows at
+    // any scale, where the uncapped dump is the suite's largest
+    // non-instrument ×10 row (5.90 s / 3.54×:
     // join volume is |vocab|·maxDf² and |vocab| grows ~linearly with
     // the corpus). The bounded CONSUMER surface for the text-similarity
     // family, exactly as dedup_jaro_topk is to dedup_jaro and
@@ -3577,7 +3572,7 @@ object PipelineQueries {
 
     // BFS over the DEGREE-CAPPED kNN graph — the default production
     // BFS surface: candidates from the LSH-bucket generator (linear
-    // candidate volume — r10), then top-BfsKnnK arcs per node
+    // candidate volume), then top-BfsKnnK arcs per node
     // (|E| ≤ k·n), so EVERY stage of the chain is linear in the
     // corpus. graph_bfs_hops remains the threshold-graph diagnostic.
     "graph_bfs_knn" -> ((s, dir) =>

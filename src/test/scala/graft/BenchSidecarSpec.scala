@@ -2,25 +2,29 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench sidecar is the variance record the per-round BENCH artifact
+/** The bench sidecar is the variance record a one-number-per-query view
   * lacks: each query carries min AND max of its timed runs so an outlier
-  * in the driver's one-number-per-query view is attributable (max >> min
-  * ⇒ host stall; max ~= min ⇒ real cost). This pins the schema.
+  * is attributable (max >> min ⇒ host stall; max ~= min ⇒ real cost),
+  * and its cold (warm-up) seconds beside them. This pins the schema.
   */
 class BenchSidecarSpec extends AnyFunSuite {
 
   test("sidecar is one JSON object with min/max per query") {
+    // cold is the warm-up's own reading: a failed warm-up leaves the
+    // passes' min/max standing
     val line = Bench.sidecarJson(Seq(
-      "q_fast" -> (0.0861, 0.0912),
-      "q_stalled" -> (0.09, 8.4321)))
+      "q_fast" -> Bench.Times(cold = 2.5, min = 0.0861, max = 0.0912),
+      "q_stalled" -> Bench.Times(cold = 0.7, min = 0.09, max = 8.4321),
+      "q_flaky" -> Bench.Times(cold = -1.0, min = 0.25, max = 0.5)))
     assert(line ==
-      """{"q_fast":{"min":0.0861,"max":0.0912},""" +
-      """"q_stalled":{"min":0.0900,"max":8.4321}}""")
+      """{"q_fast":{"min":0.0861,"max":0.0912,"cold":2.5000},""" +
+      """"q_stalled":{"min":0.0900,"max":8.4321,"cold":0.7000},""" +
+      """"q_flaky":{"min":0.2500,"max":0.5000,"cold":-1.0000}}""")
   }
 
   test("a failed query records -1 in both fields, not a fast run") {
-    val line = Bench.sidecarJson(Seq("q_bad" -> (-1.0, -1.0)))
-    assert(line == """{"q_bad":{"min":-1.0000,"max":-1.0000}}""")
+    val line = Bench.sidecarJson(Seq("q_bad" -> Bench.Times(-1.0, -1.0, -1.0)))
+    assert(line == """{"q_bad":{"min":-1.0000,"max":-1.0000,"cold":-1.0000}}""")
   }
 
   // The calibration probe is the artifact's host-health defense: fixed

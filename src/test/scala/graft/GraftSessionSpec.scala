@@ -35,7 +35,7 @@ class GraftSessionSpec extends AnyFunSuite {
     // settings are read where a process starts; below that they are
     // parameters. The staging directory is a deployment path.
     val entryPoints = Set("GraftSession.scala", "Bench.scala", "Verify.scala",
-      "ScaleUp.scala", "Profile.scala")
+      "ScaleUp.scala")
     val staging = "sys.env.getOrElse(\"SPARK_GRAFT_STAGING_DIR\","
     assert(sources.exists(name(_) == "DumpConvert.scala"))
     val readers = sources.filter { p =>
@@ -84,6 +84,15 @@ class GraftSessionSpec extends AnyFunSuite {
     val unrolled = callsWhere("dot")(_.exists(_.contains("typedlit(")))
     assert(unrolled.isEmpty,
       s"apply the matrix with CentroidDistances, not unrolled dots, at: ${unrolled.mkString(", ")}")
+  }
+
+  test("no main source outside GraftExtensions.scala registers the extensions itself") {
+    // GraftSession installs them once when it builds a session; an op or
+    // query that registers them depends on the session it runs in
+    val calls = callsWhere("GraftExtensions\\.register",
+      _.endsWith("/expressions/GraftExtensions.scala"))(_ => true)
+    assert(calls.isEmpty,
+      s"rely on GraftSession's install, not a register call, at: ${calls.mkString(", ")}")
   }
 
   test("no main source outside BlockPairs.scala expands pairs as slice(…, i + 2, …)") {

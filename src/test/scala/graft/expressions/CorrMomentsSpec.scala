@@ -3,9 +3,9 @@ package graft.expressions
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
-import graft.ops.ProfileOps
+import graft.ops.{CorrCardReference, ProfileOps}
 
-/** Pins the native 128-bit moment aggregate (CorrMomentsAgg, the r17
+/** Pins the native 128-bit moment aggregate (CorrMomentsAgg, the
   * corrCard engine) bit-equal to the composable wide-decimal-sum form
   * it replaces (`corrCardComposed`) — same rows, same r_micro longs —
   * on data that exercises every accumulation path: negative values,
@@ -19,7 +19,7 @@ class CorrMomentsSpec extends AnyFunSuite {
   private def pin(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Unit = {
     val got = ProfileOps.corrCard(df, cols)
       .orderBy("col_a", "col_b").collect().toSeq
-    val want = ProfileOps.corrCardComposed(df, cols)
+    val want = CorrCardReference.corrCardComposed(df, cols)
       .orderBy("col_a", "col_b").collect().toSeq
     assert(got == want)
   }

@@ -56,17 +56,28 @@ class KnnGraphContractSpec extends AnyFunSuite {
     // near-orthogonal cosines — a PERFECT-recall contract (0.999999,
     // the allowed maximum) is past what the 1-(1-x)^L geometry
     // predicts for ANY L <= the 32-table ceiling, so the operator
-    // raises (r15: feasible fixes are now APPLIED, not named — a 0.999
-    // contract on this geometry now escalates and SUCCEEDS; only the
-    // infeasible or prediction-overestimated regime raises)
-    val e = intercept[IllegalArgumentException] {
-      SimilarityOps.knnGraphAtHeadRecall(
-        randomEmb(2000, 32), threshold = 0.0, k = 8,
-        minHeadRecall = 0.999999, calibQueries = 30)
+    // raises (feasible fixes are APPLIED, not named — a 0.999 contract
+    // on this geometry escalates and SUCCEEDS; only the infeasible or
+    // prediction-overestimated regime raises). A base table count above
+    // the ceiling leaves no multiple to solve (kmax = 0): the same
+    // raise by name, not the solver's own argument error (its narrow
+    // 2-member buckets keep 40 tables below the contract).
+    for ((tables, bucket) <- Seq(
+        (SimilarityOps.LshTables, SimilarityOps.LshAutoTargetBucket),
+        (SimilarityOps.LshAutoMaxTables + 8, 2))) {
+      val e = intercept[IllegalArgumentException] {
+        SimilarityOps.knnGraphAtHeadRecall(
+          randomEmb(2000, 32), threshold = 0.0, k = 8,
+          minHeadRecall = 0.999999, calibQueries = 30,
+          targetBucket = bucket, tables = tables)
+      }
+      assert(e.getMessage.contains("BELOW"), e.getMessage)
+      if (tables > SimilarityOps.LshAutoMaxTables)
+        assert(e.getMessage.contains("NO table count <= 0"), e.getMessage)
+      else
+        assert(e.getMessage.contains("NO table count") ||
+          e.getMessage.contains("ESCALATED"), e.getMessage)
     }
-    assert(e.getMessage.contains("BELOW"), e.getMessage)
-    assert(e.getMessage.contains("NO table count") ||
-      e.getMessage.contains("ESCALATED"), e.getMessage)
   }
 
   test("a feasible contract above the default reading ESCALATES instead of raising") {
@@ -101,9 +112,9 @@ class KnnGraphContractSpec extends AnyFunSuite {
     val r1 = topk.join(both, Seq("query_id", "other_id"), "left_semi")
       .count().toDouble / nTrue
     assert(r1 > 0.05 && r1 < 0.97, s"geometry drifted: r1=$r1")
-    // a contract just above the 8-table reading: pre-r15 this raised
-    // ("rebuild with tables = 16"); now the operator rebuilds at the
-    // solved L, re-measures, and returns the arcs
+    // a contract just above the 8-table reading: the operator rebuilds
+    // at the solved L, re-measures, and returns the arcs instead of
+    // raising
     val (arcs, release) = SimilarityOps.knnGraphAtHeadRecallReleasable(
       corpus, threshold, k, minHeadRecall = r1 + 0.02,
       calibQueries = calibQ)

@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r16 equivalence pins: every operator whose hot path moved from an
-  * interpreted higher-order-function chain to a native expression is
-  * property-tested against the ORIGINAL Column formulation (kept in the
-  * ops object as the `*Hof` reference — the canonicalizeRegex pattern),
+/** Equivalence pins: every operator whose hot path runs in a native
+  * expression instead of an interpreted higher-order-function chain is
+  * property-tested against the composed Column formulation (the `*Hof`
+  * references in test sources: SmoothingFoldReference,
+  * TextFormReference, PairExpansionReference),
   * on randomized inputs that exercise duplicate timestamps, negative
   * values, and round-half boundaries.
   */
@@ -53,7 +54,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
       val ev = randomEvents(seed + 10, keys = 7, perKey = 25)
       assert(
         collectSorted(TimeSeriesOps.emaSmooth(ev, "k", "t", "q", "v")) ==
-          collectSorted(TimeSeriesOps.emaSmoothHof(ev, "k", "t", "q", "v")),
+          collectSorted(SmoothingFoldReference.emaSmoothHof(ev, "k", "t", "q", "v")),
         s"seed $seed")
     }
   }
@@ -63,7 +64,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
       val ev = randomEvents(seed + 20, keys = 7, perKey = 25)
       assert(
         collectSorted(TimeSeriesOps.holtSmooth(ev, "k", "t", "q", "v")) ==
-          collectSorted(TimeSeriesOps.holtSmoothHof(ev, "k", "t", "q", "v")),
+          collectSorted(SmoothingFoldReference.holtSmoothHof(ev, "k", "t", "q", "v")),
         s"seed $seed")
     }
   }
@@ -75,7 +76,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
         collectSorted(
           TimeSeriesOps.holtWintersSmooth(ev, "k", "t", "q", "v", p)) ==
           collectSorted(
-            TimeSeriesOps.holtWintersSmoothHof(ev, "k", "t", "q", "v", p)),
+            SmoothingFoldReference.holtWintersSmoothHof(ev, "k", "t", "q", "v", p)),
         s"period $p")
     }
   }
@@ -126,8 +127,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
 
   test("lshPairsCore: zero-norm NaN-cosine pairs survive identically " +
     "(the edge an ANSI-divide restructure would break)") {
-    // r17 regression pin from the measured-and-rejected SLIM collect
-    // (OPTIMIZATION_r17.md): any restructure that moves the cosine out
+    // regression pin: any restructure that moves the cosine out
     // of the in-bucket native into a Column-level divide hits ANSI
     // DIVIDE_BY_ZERO on zero-norm vectors, where the native's Java
     // division yields NaN — which then SURVIVES the nan-safe >=
@@ -140,7 +140,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
     val members = SimilarityOps.lshBucketMembers(
       sigs, targetBucket = 8, tables = 4,
       maxBucket = DedupOps.DefaultMaxBucket, probes = 2)
-    // reference = the r16 in-bucket fused native (the BlockPairs cosine
+    // reference = the in-bucket fused native (the BlockPairs cosine
     // scorer) over the FAT member frame — the HOF column chain would
     // itself raise under ANSI on the zero divisor; the in-bucket native's
     // Java division is the semantics the operator always had
@@ -172,7 +172,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
       val nat = docs.select(col("doc_id"),
         TextOps.shingles(col("toks"), k).as("g"))
       val hof = docs.select(col("doc_id"),
-        TextOps.shinglesHof(col("toks"), k).as("g"))
+        TextFormReference.shinglesHof(col("toks"), k).as("g"))
       assert(collectSorted(nat) == collectSorted(hof), s"k=$k")
     }
   }
@@ -188,7 +188,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
       val nat = docs.select(col("doc_id"),
         TextOps.chunks(col("toks"), w, st).as("c"))
       val hof = docs.select(col("doc_id"),
-        TextOps.chunksHof(col("toks"), w, st).as("c"))
+        TextFormReference.chunksHof(col("toks"), w, st).as("c"))
       assert(collectSorted(nat) == collectSorted(hof), s"width=$w stride=$st")
     }
   }
@@ -242,10 +242,9 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
 
   test("setjoin: operator == brute-force jaccard join " +
     "(no false negatives, ground truth)") {
-    // r17: ground-truth pin added while evaluating candidate-volume
-    // tightenings (the PPJoin indexing-prefix filter measured ZERO
-    // candidate reduction — it is provably subsumed by the positional
-    // bound, see OPTIMIZATION_r17.md — and was not kept). Any future
+    // ground-truth pin for candidate-volume tightenings (the PPJoin
+    // indexing-prefix filter removes ZERO candidates — it is provably
+    // subsumed by the positional bound, see OPTIMIZATION_r17.md). Any
     // candidate pruning must keep this exact equality on clumped
     // corpora at two thresholds.
     Seq(0.5, 0.7).foreach { t =>

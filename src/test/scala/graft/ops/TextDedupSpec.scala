@@ -633,7 +633,7 @@ class TextDedupSpec extends AnyFunSuite {
     // a dense clump of m identical strings: every segment bucket holds
     // all m docs but MANY more entry rows (index partition + probe
     // positions per doc) — an entry-count ceiling would raise where the
-    // blocked form's doc-count guard admits the clump (r15 advice)
+    // blocked form's doc-count guard admits the clump
     val m = 6
     val clump = (0 until m).map(i => (i.toLong, "abcdefghijkl", "b1"))
       .toDF("doc_id", "s", "blk")
@@ -677,7 +677,7 @@ class TextDedupSpec extends AnyFunSuite {
     val df = rows.toDF("id", "t")
     val bad = df.select(col("id"),
       TextOps.canonicalize(col("t")).as("native"),
-      TextOps.canonicalizeRegex(col("t")).as("regex"))
+      TextFormReference.canonicalizeRegex(col("t")).as("regex"))
       .filter(col("native") =!= col("regex") ||
         col("native").isNull =!= col("regex").isNull)
       .collect()
