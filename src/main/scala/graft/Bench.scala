@@ -83,48 +83,30 @@ object Bench {
     dt
   }
 
-  /** `SPARK_GRAFT_BENCH_EVICT`'s query interval; below 1 fails by name. */
-  def evictInterval(setting: Option[String]): Option[Int] =
-    setting.map(_.toInt).map { n =>
-      require(n >= 1, s"SPARK_GRAFT_BENCH_EVICT must be >= 1, got $n"); n
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
-    val evictEvery = evictInterval(sys.env.get("SPARK_GRAFT_BENCH_EVICT"))
     val spark = GraftSession.local()
     val ordered = selected.toIndexedSeq.sortBy(_._1)
 
-    // SPARK_GRAFT_BENCH_EVICT=N clears the cached frames and the
-    // ModelCache memos every N queries (same positions in warm-up and
-    // every timed pass): the scale-run memory bound, since the suite
-    // holds ~all family caches at once, which at ×10 data exceeds the
-    // default heap. Queries right after a boundary rebuild their
-    // family's cache in every pass, so the headline run leaves it unset.
-    // Dropping a memo reference lets the ContextCleaner reclaim its
-    // checkpointed blocks.
-    def maybeEvict(i: Int): Unit = evictEvery.foreach { n =>
-      if ((i + 1) % n == 0) {
-        spark.catalog.clearCache()
-        graft.ops.ModelCache.clear()
-      }
-    }
-
     // One sweep over the suite: each query's produced seconds, -1 for a
     // failed run (a failure must look like one, not like a fast run).
-    def sweep(): Seq[Double] = ordered.zipWithIndex.map { case ((name, fn), i) =>
-      val dt = SparkEntry.produce(name, fn(spark, sfDir), SparkEntry.noop)
-      maybeEvict(i)
-      dt
+    def sweep(): Seq[Double] = ordered.map { case (name, fn) =>
+      SparkEntry.produce(name, fn(spark, sfDir), SparkEntry.noop)
     }
 
     // JIT the probe itself before trusting its first reading.
     calibrate()
 
-    // The warm-up sweep absorbs JVM/codegen/parquet-footer cost,
-    // populates the plan-canonical caches and trains the ModelCache
-    // artifacts, so the timed passes measure steady-state serving.
+    // The JVM's and the session's first job (class loading, the first
+    // parquet read, the first shuffle) is no query's cost: one
+    // throwaway job pays it, reported as its own key.
+    val firstJob = SparkEntry.produce("first_job", graft.etl.Ingest.table(spark, sfDir, "events")
+      .groupBy("event_type").count(), SparkEntry.noop)
+
+    // The warm-up sweep absorbs codegen and parquet-footer cost, fills
+    // the plan-canonical caches and trains the memos, so the timed
+    // passes measure steady-state serving.
     val cold = sweep()
     val calibs = scala.collection.mutable.ArrayBuffer.empty[Double]
     val passes = Seq.fill(3) { calibs += calibrate(); sweep() }
@@ -140,12 +122,13 @@ object Bench {
     // The per-query map also lands at a fixed sidecar path: 331 queries
     // of detail do not fit a short stdout tail. `queries` is the
     // {"name": sec} map (min per query, the same seconds the total
-    // sums); `detail` keeps min, max and cold. SPARK_GRAFT_BENCH_OUT
-    // overrides the path.
+    // sums); `detail` keeps min, max and cold; `memo` the memo layer's
+    // counters. SPARK_GRAFT_BENCH_OUT overrides the path.
     val perQueryJson = {
       val mins = results.map { case (k, t) => "\"" + k + "\":" + f"${t.min}%.4f" }
         .mkString("{", ",", "}")
-      s"""{"metric":"per_query","sf":"$sfDir","queries":$mins,"detail":$qs}"""
+      val m = graft.ops.ModelCache.stats
+      s"""{"metric":"per_query","sf":"$sfDir","queries":$mins,"detail":$qs,"memo":{"hits":${m.hits},"misses":${m.misses},"entries":${m.entries},"bytes":${m.bytes},"evictions":${m.evictions}}}"""
     }
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_per_query.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), perQueryJson)
@@ -156,11 +139,12 @@ object Bench {
     val total = okSum(results.map(_._2.min))
     val failed = results.count(_._2.min < 0)
     def arr(xs: Seq[Double]): String = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
-    // cold: the warm-up sweep's produced seconds. calib: fixed-work
-    // probe seconds (healthy band ~ the committed history; >>band ⇒
-    // host-tainted). passes: per-pass totals (divergence ⇒ within-run
-    // drift; the min-aggregate already routes around it).
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"failed":$failed,"cold":${okSum(cold)}%.3f,"calib":${arr(calibs.toSeq)},"passes":${arr(passes.map(okSum))},"sf":"$sfDir"}""")
+    // cold: the warm-up sweep's produced seconds. first_job: the
+    // throwaway job's seconds. calib: fixed-work probe seconds (healthy
+    // band ~ the committed history; >>band ⇒ host-tainted). passes:
+    // per-pass totals (divergence ⇒ within-run drift; the min-aggregate
+    // already routes around it).
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"failed":$failed,"cold":${okSum(cold)}%.3f,"first_job":$firstJob%.3f,"calib":${arr(calibs.toSeq)},"passes":${arr(passes.map(okSum))},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

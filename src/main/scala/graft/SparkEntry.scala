@@ -97,14 +97,22 @@ object SparkEntry {
     * to stderr and returns -1, so it never reads as a fast run. Any
     * throwable is caught, a StackOverflowError from a deep plan
     * included: one query's failure must not end a many-query run.
+    * After the query, untimed, the memo layer is held to its storage
+    * budget ([[graft.ops.ModelCache.enforceBound]]).
     */
   def produce(name: String, build: => DataFrame, sink: DataFrame => Unit): Double = {
     val t0 = System.nanoTime()
     try { sink(build); (System.nanoTime() - t0) / 1e9 }
     catch { case e: Throwable =>
-      System.err.println(s"[produce] $name failed: $e")
+      // an overflow carries no message: its top frames name the recursion
+      val at = e match {
+        case _: StackOverflowError => e.getStackTrace.take(16).mkString(" at ", " < ", "")
+        case _ => ""
+      }
+      System.err.println(s"[produce] $name failed: $e$at")
       -1.0
     }
+    finally SparkSession.getActiveSession.foreach(graft.ops.ModelCache.enforceBound(_))
   }
 
   /** The sink that computes every row and column of a frame and keeps

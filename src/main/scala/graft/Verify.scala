@@ -41,6 +41,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[memo] ${graft.ops.ModelCache.stats} budget=${graft.ops.ModelCache.budget(spark)}")
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} failed: ${failed.sorted.mkString(", ")}")
     spark.stop()

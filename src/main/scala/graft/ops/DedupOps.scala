@@ -558,20 +558,16 @@ object DedupOps {
       blockCol: Column,
       maxDist: Int,
       maxPerBlock: Long = SessionOps.DefaultMaxQuadraticPerKey,
-      segmentMinPairs: Long = EditDistSegmentMinPairs,
-      volumeCacheKey: Option[String] = None): DataFrame = {
-    // the routing statistic is session-memoized per caller-supplied
-    // key (the ModelCache card pattern every other calibration
-    // statistic uses) — it is deterministic in the input table, so
-    // re-measuring it on every invocation would cost one column-pruned
-    // corpus scan per call. Callers without a stable input identity
-    // (key=None) measure per call.
-    val volume = volumeCacheKey match {
-      case Some(key) => ModelCache.cached(s"$key|inBlockPairCount") {
-        java.lang.Long.valueOf(inBlockPairCount(docs, blockCol))
-      }.longValue()
-      case None => inBlockPairCount(docs, blockCol)
-    }
+      segmentMinPairs: Long = EditDistSegmentMinPairs): DataFrame = {
+    // the routing statistic is memoized by the block column's content:
+    // it is deterministic in the input, so re-measuring it would cost
+    // one column-pruned corpus scan per call
+    val volume = ModelCache.value("inBlockPairCount")(docs.select(blockCol)) {
+      val v = inBlockPairCount(docs, blockCol)
+      System.err.println(s"[route] editDistancePairsAuto: in-block pairs $v, threshold " +
+        s"$segmentMinPairs, arm ${if (v > segmentMinPairs) "segmented" else "blocked"}")
+      java.lang.Long.valueOf(v)
+    }.longValue()
     if (volume > segmentMinPairs)
       editDistancePairsSegmented(docs, strCol, blockCol, maxDist, maxPerBlock)
     else

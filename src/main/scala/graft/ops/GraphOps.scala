@@ -110,11 +110,11 @@ object GraphOps {
               col("dm").cast("double") / col("n_nodes")), 6).as("rank"))
         // contribs AND the dangling mass both read each iterate: the
         // checkpoint stops the 2-way reference from doubling evaluation
-        // per iteration (2^iters). r17: LAZY — materializes (and
+        // per iteration (2^iters). LAZY: it materializes (and
         // truncates lineage) when the final action first computes it,
         // saving one driver job barrier per iteration; both consumers
         // then read the materialized blocks exactly as with the eager
-        // form (measured at sf0.1 and ×10, OPTIMIZATION_r17.md)
+        // form (measured at sf0.1 and ×10, archive/OPTIMIZATION_r17.md)
         .localCheckpoint(false)
     }
     ranks
@@ -203,7 +203,7 @@ object GraphOps {
         // each iterate feeds BOTH the next contribution join and the
         // next dangling mass — without the checkpoint the 2-way
         // reference doubles evaluation per iteration (2^iters).
-        // r17: LAZY, same rationale as [[pagerankDirected]]'s loop
+        // LAZY, same rationale as [[pagerankDirected]]'s loop
         .localCheckpoint(false)
     }
     nodes.join(ranks, Seq("node"))

@@ -1,123 +1,191 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.util.SizeEstimator
 
-/** Driver-side memo of TRAINED model artifacts — k-means centroid
-  * matrices, PQ codebooks, DSIR log-ratio models — keyed by (input
-  * path, hyperparameters).
+/** The engine's one memo layer: trained model artifacts (k-means
+  * centroids, PQ codebooks, DSIR models, routing statistics, recall
+  * cards) and materialized frames (the tokenized corpus, shared pair
+  * surfaces, persisted indexes).
   *
-  * Why this exists: every trained-model artifact in this engine is
-  * deterministic in its inputs (seeded init, decimal-exact updates,
-  * rounded arithmetic — the oracle replays each one bit-for-bit), so a
-  * second training run over the same table at the same hyperparameters
-  * is pure waste. The real workflow at 100 TB is train ONCE, evaluate /
-  * serve MANY: an IVF index is built in one job and probed by millions
-  * of queries; retraining per query would be absurd. This cache gives
-  * the query layer that shape — the first query that needs a model
-  * trains it (a bounded driver pull: k×dim centroids, m×k×subDim
-  * codebooks, ≤dim-long DSIR models), and every later query in the same
-  * JVM reuses the collected artifact.
+  * A memo's key is the op's name with its hyperparameters plus the
+  * CONTENT of every input frame: the input's canonical plan, and for
+  * each file it reads, the (path, length, modification time) that
+  * Hadoop FS reports now. A table rewritten in place therefore misses
+  * and rebuilds; a prior result is reused only while its inputs are
+  * provably unchanged. An input built on a memo frame fingerprints by
+  * that frame's RDD, so a rebuilt source misses its derived memos.
   *
-  * Correctness is unaffected BY CONSTRUCTION: the cached value is
-  * exactly what the training call would return (determinism is already
-  * a hard contract — it is what lets DuckDB replay the training chain),
-  * so a cache hit and a retrain are indistinguishable to any consumer.
-  * The key embeds the data directory, so sf0.001 / sf0.01 / sf0.1 runs
-  * in one JVM never cross-contaminate.
+  * Every artifact here is deterministic in its inputs (seeded init,
+  * decimal-exact updates; the oracle replays each one), so a hit and a
+  * rebuild are indistinguishable to any consumer.
+  *
+  * Two value kinds:
+  *  - [[value]]: a driver value, valid in any session.
+  *  - [[frame]]: a frame materialized by `localCheckpoint`, bound to its
+  *    SparkContext, keyed by the context's `applicationId` and dropped
+  *    when that context stops. A hit returns the same frame object, so
+  *    plan-keyed caches downstream of it keep matching. A `persist`ed
+  *    frame would not do: Spark's CacheManager serves a persisted plan
+  *    to any later plan equal to it, stale inputs included.
+  *
+  * Memory is bounded by [[enforceBound]], which `SparkEntry.produce`
+  * calls after each query.
   */
 object ModelCache {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private final case class Key(name: String, params: Seq[Any], inputs: Seq[String],
+      appId: Option[String])
 
-  /** applicationIds whose evict-on-stop listener is already registered.
-    * Deliberately OUTSIDE `cache`: the registration is a fact about the
-    * SparkContext's listener bus, not an evictable artifact — when the
-    * bench's evict knob calls [[clear]], the listener stays on the bus,
-    * so tracking it under an evictable key would re-register a duplicate
-    * listener on every post-evict [[sessionCached]] call (r13 advice: a
-    * slow listener leak over a long evicting bench run). One short
-    * string per application ever started in the JVM — bounded.
-    */
-  private val listenerRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The artifact under `key`, training it with `train` on first use.
-    * `train` may run Spark actions (all trainers here do) — which is
-    * why this is NOT computeIfAbsent: holding a hash-bin lock across a
-    * multi-second training job would block unrelated keys in the same
-    * bin and deadlock (IllegalStateException) any trainer that itself
-    * consults the cache. get-then-putIfAbsent admits a rare duplicate
-    * train under a race, which determinism makes harmless: both racers
-    * compute the identical artifact and either may win.
-    */
-  def cached[T <: AnyRef](key: String)(train: => T): T = {
-    val hit = cache.get(key)
-    if (hit ne null) return hit.asInstanceOf[T]
-    val computed = train
-    val prev = cache.putIfAbsent(key, computed)
-    (if (prev ne null) prev else computed).asInstanceOf[T]
+  private final class Entry(val value: AnyRef, val rdd: Option[RDD[_]], val bytes: Long) {
+    @volatile var lastUse: Long = tick.incrementAndGet()
   }
 
-  /** Entry count — observability for specs. */
-  def size: Int = cache.size()
+  private val entries = new ConcurrentHashMap[Key, Entry]()
+  private val tick, hits, misses, evictions = new AtomicLong()
 
-  /** Whether `key` is currently memoized — observability for specs. */
-  def contains(key: String): Boolean = cache.containsKey(key)
-
-  /** Drop everything (tests that mutate their input between runs, and
-    * the bench's evict knob — driver memos are part of the cache
-    * volume the knob bounds, not an exemption from it).
+  /** applicationIds whose evict-on-stop listener is registered. Kept
+    * apart from the entries: [[clear]] drops entries, but the listener
+    * stays on the context's bus, and re-registering it after each clear
+    * would add a duplicate listener every time.
     */
-  def clear(): Unit = cache.clear()
+  private val listenerRegistered = ConcurrentHashMap.newKeySet[String]()
 
-  /** Drop every entry whose key starts with `prefix`. */
-  def evictPrefix(prefix: String): Unit =
-    cache.keySet().removeIf(_.startsWith(prefix))
-
-  /** Drop every [[sessionCached]] entry owned by `applicationId` — the
-    * listener path, public so specs can drive the eviction directly
-    * (stopping a second local SparkContext inside a shared-session test
-    * JVM is not possible).
+  /** The driver value `name(params)` over `inputs`, computed by `train`
+    * on a miss. `train` may run Spark jobs and consult the memo itself,
+    * which is why this is not `computeIfAbsent`: holding a hash-bin lock
+    * across a training job would block unrelated keys and throw on a
+    * reentrant trainer. A rare duplicate train under a race is harmless,
+    * since both racers compute the same artifact.
     */
-  def evictSession(applicationId: String): Unit =
-    evictPrefix(s"__session|$applicationId|")
+  def value[T <: AnyRef](name: String, params: Any*)(inputs: DataFrame*)(train: => T): T =
+    memo(Key(name, params, inputs.map(fingerprint), None)) {
+      val v = train
+      (v, None, SizeEstimator.estimate(v))
+    }.asInstanceOf[T]
 
-  /** SESSION-SCOPED memo of materialized DataFrame artifacts (the
-    * localCheckpoint'd kNN edge/arc sets, the cross-probe LSH index):
-    * unlike the model artifacts above — plain driver values valid in
-    * any session — a checkpointed DataFrame is BOUND to its
-    * SparkContext, so these entries key by the context's
-    * `applicationId` (stable and never reused within a JVM, where an
-    * identity hash can be recycled after GC) and are EVICTED when the
-    * context stops, so a later session is never handed a frame backed
-    * by a stopped context and multi-session JVMs do not grow without
-    * bound (r12 advice).
+  /** The frame `name(params)` over `inputs`, built by `build` and
+    * materialized with `localCheckpoint` on a miss.
     */
-  def sessionCached(s: org.apache.spark.sql.SparkSession, key: String)(
-      build: => DataFrame): DataFrame =
-    sessionCachedRef(s, key)(build)
-
-  /** [[sessionCached]] for an arbitrary session-bound artifact (e.g. a
-    * case class bundling several checkpointed frames) — same key
-    * scheme, same evict-on-stop listener.
-    */
-  def sessionCachedRef[T <: AnyRef](s: org.apache.spark.sql.SparkSession,
-      key: String)(build: => T): T = {
-    val appId = s.sparkContext.applicationId
+  def frame(name: String, params: Any*)(inputs: DataFrame*)(build: => DataFrame): DataFrame = {
+    val spark = inputs.headOption.fold(SparkSession.active)(_.sparkSession)
+    val appId = spark.sparkContext.applicationId
     if (listenerRegistered.add(appId)) {
-      s.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(
-            e: SparkListenerApplicationEnd): Unit = evictSession(appId)
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = evictSession(appId)
       })
     }
-    cached(s"__session|$appId|$key")(build)
+    val key = Key(name, params, inputs.map(fingerprint), Some(appId))
+    memo(key) {
+      val df = build.localCheckpoint()
+      val rdd = df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+      (df, rdd, rdd.flatMap(r => storedBytes(spark).get(r.id)).getOrElse(0L))
+    }.asInstanceOf[DataFrame]
   }
 
-  /** Whether `applicationId`'s evict-on-stop listener is registered —
-    * observability for specs (the registration must survive [[clear]],
-    * which is exactly what keeping it outside `cache` guarantees).
+  private def memo(key: Key)(compute: => (AnyRef, Option[RDD[_]], Long)): AnyRef = {
+    val hit = entries.get(key)
+    if (hit ne null) { hits.incrementAndGet(); hit.lastUse = tick.incrementAndGet(); return hit.value }
+    misses.incrementAndGet()
+    val (v, rdd, bytes) = compute
+    val prev = entries.putIfAbsent(key, new Entry(v, rdd, bytes))
+    if (prev eq null) v
+    else { rdd.foreach(_.unpersist(blocking = false)); prev.value }
+  }
+
+  /** A frame's content: its canonical plan, plus per leaf what the plan
+    * string omits: each file's path, length and modification time, a
+    * materialized RDD's id, a local relation's rows.
     */
+  private def fingerprint(df: DataFrame): String = {
+    val plan = df.queryExecution.analyzed
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val leaves = plan.collectLeaves().map {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.inputFiles.sorted.map { f =>
+          val p = new Path(f)
+          val st = p.getFileSystem(conf).getFileStatus(p)
+          s"$f:${st.getLen}:${st.getModificationTime}"
+        }.mkString(",")
+        case other => other.toString
+      }
+      case r: LogicalRDD => s"rdd:${r.rdd.sparkContext.applicationId}:${r.rdd.id}"
+      case l: LocalRelation => l.data.hashCode.toString
+      case _ => ""
+    }
+    plan.canonicalized.treeString(verbose = false, maxFields = Int.MaxValue) +
+      leaves.mkString("|", "|", "")
+  }
+
+  /** Stored bytes (memory + disk) per persisted RDD id. */
+  private def storedBytes(spark: SparkSession): Map[Int, Long] =
+    spark.sparkContext.getRDDStorageInfo.map(i => i.id -> (i.memSize + i.diskSize)).toMap
+
+  /** Hit, miss, entry, byte and eviction counts. */
+  final case class Stats(hits: Long, misses: Long, entries: Int, bytes: Long, evictions: Long) {
+    override def toString = s"hits=$hits misses=$misses entries=$entries bytes=$bytes evictions=$evictions"
+  }
+
+  def stats: Stats = Stats(hits.get, misses.get, entries.size,
+    entries.values.asScala.map(_.bytes).sum, evictions.get)
+
+  /** Entry count. */
+  def size: Int = entries.size()
+
+  /** The memo budget: half the block managers' storage memory, leaving
+    * the rest to the ops' own caches and to execution.
+    */
+  def budget(spark: SparkSession): Long =
+    spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum / 2
+
+  /** When the bytes this bound can free exceed `budget`, clears Spark's
+    * plan cache, which the ops' internal `.cache()` frames fill, and
+    * evicts the least recently used memos until the rest fit. An evicted
+    * frame's blocks are released. The freeable bytes are the memos' and
+    * the plan cache's: every persisted RDD that is not a checkpoint. An
+    * op's own `localCheckpoint` is left out; nothing here can free it,
+    * and Spark's context cleaner does once the op drops it.
+    */
+  def enforceBound(spark: SparkSession, budget: Long): Unit = {
+    val held = entries.asScala.toSeq.sortBy(_._2.lastUse)
+    var bytes = held.map(_._2.bytes).sum
+    val stored = storedBytes(spark)
+    val planCache = spark.sparkContext.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(r => stored.getOrElse(r.id, 0L)).sum
+    if (bytes + planCache > budget) {
+      spark.catalog.clearCache()
+      for ((k, e) <- held if bytes > budget && entries.remove(k, e)) {
+        e.rdd.foreach(_.unpersist(blocking = false))
+        evictions.incrementAndGet()
+        bytes -= e.bytes
+      }
+    }
+  }
+
+  def enforceBound(spark: SparkSession): Unit = enforceBound(spark, budget(spark))
+
+  /** Drop every entry. A dropped frame stays readable; Spark's context
+    * cleaner frees its blocks once nothing references it.
+    */
+  def clear(): Unit = entries.clear()
+
+  /** Drop every frame bound to `applicationId`: the evict-on-stop
+    * listener's path, public so specs can drive it (a second local
+    * SparkContext cannot be stopped inside a shared-session test JVM).
+    */
+  def evictSession(applicationId: String): Unit =
+    entries.keySet().removeIf(_.appId.contains(applicationId))
+
+  /** Whether `applicationId`'s evict-on-stop listener is registered. */
   def listenerRegisteredFor(applicationId: String): Boolean =
     listenerRegistered.contains(applicationId)
 }

@@ -43,7 +43,7 @@ object RetrievalOps {
     */
   /** The corpus as a per-invocation TOKENIZED projection (doc_id, toks),
     * materialized once with `localCheckpoint` — the shared forward-index
-    * scan for multi-pass retrieval operators (r17, guide §2.4): PRF's
+    * scan for multi-pass retrieval operators: PRF's
     * three passes (retrieve, mine, re-retrieve) and MaxScore's
     * stats+contributions each re-tokenized the corpus from parquet;
     * sharing one materialized projection makes each invocation ONE
@@ -209,13 +209,13 @@ object RetrievalOps {
       k1: Double = DefaultK1,
       b: Double = DefaultB): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopKMaxScore needs a query term")
-    // r17: ONE corpus tokenize per invocation — the dl-stats pass and
-    // the posting build both read the shared projection; the
-    // contribution relation the sequential MaxScore passes (UB collect,
-    // θ probe, final aggregation) re-read is likewise a per-invocation
-    // localCheckpoint instead of the old plan-keyed `.cache()`, so
-    // nothing persists across invocations and each timed run computes
-    // from parquet exactly once.
+    // ONE corpus tokenize per invocation — the dl-stats pass and the
+    // posting build both read the shared projection; the contribution
+    // relation the sequential MaxScore passes (UB collect, θ probe,
+    // final aggregation) re-read is likewise a per-invocation
+    // localCheckpoint, not a plan-keyed `.cache()`, so nothing persists
+    // across invocations and each timed run computes from parquet
+    // exactly once.
     val toked = tokenizedDocs(docs)
     val lengths = toked.select(col("doc_id"),
       size(col("toks")).cast("long").as("dl"))
@@ -683,7 +683,7 @@ object RetrievalOps {
       .select(size(col("ctoks")).cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"),
         (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
-    // r17: tf (the query-term-filtered per-chunk posting aggregate —
+    // tf (the query-term-filtered per-chunk posting aggregate —
     // tiny, term-bounded) is consumed twice (the df pass and the
     // scoring pass); as a plain val each reference re-expanded the
     // whole chunk+tokenize subtree from parquet, so the operator paid
@@ -693,7 +693,7 @@ object RetrievalOps {
     // the small filtered aggregate (checkpointing the corpus-sized
     // chunk relation itself was measured 1.5× WORSE at ×100 — chunk
     // overlap expands the corpus, so that materialization costs more
-    // than the scan it saves; probe numbers in OPTIMIZATION_r17.md).
+    // than the scan it saves; probe numbers in archive/OPTIMIZATION_r17.md).
     val tf = chunked
       .select(col("doc_id"), col("cs"),
         size(col("ctoks")).cast("long").as("dl"),
@@ -756,7 +756,7 @@ object RetrievalOps {
       feedbackDocs: Int,
       expandTerms: Int,
       k: Int): DataFrame = {
-    // r17: the three passes PRF is (retrieve, mine, re-retrieve) share
+    // the three passes PRF is (retrieve, mine, re-retrieve) share
     // ONE per-invocation tokenized projection — one FileScan of
     // documents per invocation instead of five (each bm25 pass paid a
     // stats scan + a posting scan, the mining pass a third tokenize).

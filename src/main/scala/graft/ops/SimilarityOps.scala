@@ -1849,20 +1849,17 @@ object SimilarityOps {
     * max cell size picks the collect arm (one scan + one shuffle,
     * optimal while cells fit) or the join arm ([[nearDupPairsJoined]],
     * scan-twice but cell-size-unbounded) — identical pairs either way,
-    * so the choice is pure cost. The statistic is session-memoized per
-    * caller-supplied key (the editdist `volumeCacheKey` pattern — a
-    * routing long, never a result); callers without a stable input
-    * identity keep measured-per-call.
+    * so the choice is pure cost. The statistic, a routing long and never
+    * a result, is memoized by the content of the corpus's labels.
     */
   def nearDupPairs(corpus: DataFrame, threshold: Double,
-      maxBucket: Int = DedupOps.DefaultMaxBucket,
-      cellStatCacheKey: Option[String] = None): DataFrame = {
-    val maxCell = cellStatCacheKey match {
-      case Some(key) => ModelCache.cached(s"$key|nearDupMaxCell") {
-        java.lang.Long.valueOf(maxLabelCell(corpus))
-      }.longValue()
-      case None => maxLabelCell(corpus)
-    }
+      maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
+    val maxCell = ModelCache.value("maxLabelCell")(corpus.select("label")) {
+      val m = maxLabelCell(corpus)
+      System.err.println(s"[route] nearDupPairs: max cell $m, maxBucket $maxBucket, arm " +
+        (if (m > maxBucket) "join" else "collect"))
+      java.lang.Long.valueOf(m)
+    }.longValue()
     if (maxCell > maxBucket) return nearDupPairsJoined(corpus, threshold)
     // Same single-branch shape as DedupOps.candidatePairs: ONE corpus
     // scan + one shuffle on the cell key, pairs expanded from collected

@@ -221,296 +221,325 @@ object PipelineQueries {
   val StratifiedFractions: Map[String, Double] =
     Map("en" -> 0.1, "de" -> 0.5, "fr" -> 0.5, "es" -> 0.5, "zh" -> 0.5)
 
-  /** The tokenized documents relation — CACHED, the stage a production
-    * pipeline materializes ONCE and every text/dedup/retrieval query
-    * reads from (tokenize-once, query-many). CacheManager keys on the
-    * canonicalized plan, so each query may rebuild this expression
-    * independently and still hit the same in-memory relation; the
-    * InMemoryTableScan prunes to the columns each consumer selects.
-    * Storage level is the default MEMORY_AND_DISK — at 100 TB the same
-    * stage writes parquet instead, but the shape (one tokenize pass
-    * feeding the family) is identical.
+  /** `build` over `dir`'s table `t`, memoized as the frame `name(params)`
+    * keyed by that table's content.
+    */
+  private def tableFrame(s: SparkSession, dir: String, t: String, name: String,
+      params: Any*)(build: DataFrame => DataFrame): DataFrame = {
+    val in = table(s, dir, t)
+    ModelCache.frame(name, params: _*)(in)(build(in))
+  }
+
+  /** `train` over `dir`'s table `t`, memoized as the driver value
+    * `name(params)` keyed by that table's content.
+    */
+  private def tableValue[T <: AnyRef](s: SparkSession, dir: String, t: String, name: String,
+      params: Any*)(train: DataFrame => T): T = {
+    val in = table(s, dir, t)
+    ModelCache.value(name, params: _*)(in)(train(in))
+  }
+
+  /** The tokenized documents relation: the stage a production pipeline
+    * materializes once and every text, dedup and retrieval query reads
+    * (tokenize once, query many). At 100 TB the same stage writes
+    * parquet; the shape, one tokenize pass feeding the family, is the
+    * same.
     */
   private def docsTok(s: SparkSession, dir: String): DataFrame =
-    table(s, dir, "documents")
-      .withColumn("toks", TextOps.tokens(col("text")))
-      .cache()
+    tableFrame(s, dir, "documents", "docsTok")(_.withColumn("toks", TextOps.tokens(col("text"))))
 
-  /** Shared per-(doc, token) term-frequency relation — the aggregated
-    * gram table the TF-consuming family (tfidf, repetition, lm_score,
-    * burstiness) previously each rebuilt with its own explode+groupBy
-    * over the corpus. One explode + one shuffle, materialized once.
+  /** Shared per-(doc, token) term frequencies, read by the TF family
+    * (tfidf, repetition, lm_score, burstiness): one explode and one
+    * shuffle over the corpus.
     */
   private def docTokTf(s: SparkSession, dir: String): DataFrame =
-    docsTok(s, dir)
-      .select(col("doc_id"), explode(col("toks")).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      .cache()
+    tableFrame(s, dir, "documents", "docTokTf") { _ =>
+      docsTok(s, dir).select(col("doc_id"), explode(col("toks")).as("tok"))
+        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+    }
 
-  /** Shared per-(source, token) count relation — the source-keyed twin
-    * of [[docTokTf]] (vocab stats, source entropy).
+  /** Shared per-(source, token) counts, the source-keyed twin of
+    * [[docTokTf]] (vocab stats, source entropy).
     */
   private def srcTokCounts(s: SparkSession, dir: String): DataFrame =
-    docsTok(s, dir)
-      .select(col("source"), explode(col("toks")).as("tok"))
-      .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-      .cache()
+    tableFrame(s, dir, "documents", "srcTokCounts") { _ =>
+      docsTok(s, dir).select(col("source"), explode(col("toks")).as("tok"))
+        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
+    }
 
-  /** Shared exploded (source, shingle) relation at the default gram
-    * order — the sketch family's input (HLL registers/estimates, KMV
-    * set algebra), shingled once.
+  /** Shared exploded (source, shingle) rows at the default gram order,
+    * the sketch family's input (HLL registers and estimates, KMV set
+    * algebra).
     */
   private def srcShingles(s: SparkSession, dir: String): DataFrame =
-    docsTok(s, dir)
-      .select(col("source"),
-        explode(TextOps.shingles(col("toks"))).as("shingle"))
-      .cache()
+    tableFrame(s, dir, "documents", "srcShingles") { _ =>
+      docsTok(s, dir).select(col("source"), explode(TextOps.shingles(col("toks"))).as("shingle"))
+    }
 
-  /** Shared per-doc DISTINCT bigram relation (doc_id, source, gram) at
-    * order [[NoveltyN]] — novelty scoring and the cross-source overlap
-    * card read this one materialization.
+  /** Shared per-doc distinct bigrams (doc_id, source, gram) at order
+    * [[NoveltyN]], read by novelty scoring and the cross-source overlap
+    * card.
     */
   private def docBigrams(s: SparkSession, dir: String): DataFrame =
-    docsTok(s, dir)
-      .select(col("doc_id"), col("source"),
-        explode(array_distinct(
-          TextOps.shingles(col("toks"), NoveltyN))).as("gram"))
-      .cache()
+    tableFrame(s, dir, "documents", "docBigrams", NoveltyN) { _ =>
+      docsTok(s, dir).select(col("doc_id"), col("source"),
+        explode(array_distinct(TextOps.shingles(col("toks"), NoveltyN))).as("gram"))
+    }
 
-  /** Shared winnowing fingerprint index — built once, read by both the
-    * fingerprint dump and the candidate-pair expansion.
+  /** Shared winnowing fingerprint index, read by the fingerprint dump
+    * and the candidate-pair expansion.
     */
   private def winnowFp(s: SparkSession, dir: String): DataFrame =
-    TextOps.winnowFingerprints(docsTok(s, dir)).cache()
+    tableFrame(s, dir, "documents", "winnowFp")(_ => TextOps.winnowFingerprints(docsTok(s, dir)))
 
   private def normed(s: SparkSession, dir: String): DataFrame =
     SimilarityOps.withNorm(table(s, dir, "embeddings"))
 
-  /** The session-shared LSH signature stage, built ONCE at the full
-    * 32-table ceiling and sliced by every consumer: table t's
-    * bits are bit-identical at every signature width, and the
-    * signature is threshold-INDEPENDENT, so one cached scan serves
-    * dedup_embedding_lsh (+topk), both frontier cards, the auto-L
-    * operator's two passes, and the TriangleCos graph chain. (A
-    * per-consumer stage at its own width misses the shared cache:
-    * dedup_embedding_lsh measured 1.30 s with it, 3.57 s without.)
+  /** The shared LSH signature stage at the 32-table ceiling, sliced by
+    * every consumer: table t's bits are the same at every signature
+    * width, and the signature does not depend on the threshold, so one
+    * stage serves dedup_embedding_lsh (+topk), both frontier cards, the
+    * auto-L operator's two passes and the TriangleCos graph chain. (A
+    * per-consumer stage at its own width measured 3.57 s against 1.30 s
+    * for dedup_embedding_lsh.)
     */
-  private def cachedLshSigs(s: SparkSession, dir: String): DataFrame =
-    SimilarityOps.lshAutoSignatureStage(
-      normed(s, dir), SimilarityOps.LshAutoMaxTables).cache()
-
-  /** The FROZEN cross-probe LSH index over the existing (even vec_id)
-    * half, materialized ONCE per session per dir (localCheckpoint —
-    * an artifact read repeatedly is a table, not a plan): both
-    * incremental queries probe this frame, and a second batch in the
-    * same session pays only its own signing + the shared shuffle,
-    * never an existing-side re-scan (an inline form measured 3.2× for
-    * ×10 index size at a fixed batch). The
-    * artifact is the slim pair: id-sized bucket entries plus a
-    * single-copy vector side table.
-    */
-  private def lshCrossIndex(s: SparkSession,
-      dir: String): SimilarityOps.LshSlimIndex =
-    ModelCache.sessionCachedRef(s, s"$dir|lshCrossIndexSlim") {
-      val existing = normed(s, dir).filter(pmod(col("vec_id"), lit(2)) === 0)
-      SimilarityOps.LshSlimIndex(
-        SimilarityOps.lshIndexEntriesSlim(existing).localCheckpoint(),
-        SimilarityOps.lshIndexVectors(existing).localCheckpoint())
+  private def lshSigs(s: SparkSession, dir: String): DataFrame =
+    tableFrame(s, dir, "embeddings", "lshSigs", SimilarityOps.LshAutoMaxTables) { emb =>
+      SimilarityOps.lshAutoSignatureStage(SimilarityOps.withNorm(emb),
+        SimilarityOps.LshAutoMaxTables)
     }
 
-  /** ONE batch probe of the frozen index, shared by both incremental
+  /** The frozen cross-probe LSH index over the existing (even vec_id)
+    * half: both incremental queries probe it, and a second batch pays
+    * only its own signing plus the shared shuffle, never an
+    * existing-side re-scan (an inline form measured 3.2× for ×10 index
+    * size at a fixed batch). The slim pair: id-sized bucket entries
+    * plus a single-copy vector side table.
+    */
+  private def lshCrossIndex(s: SparkSession, dir: String): SimilarityOps.LshSlimIndex = {
+    def existing(emb: DataFrame) =
+      SimilarityOps.withNorm(emb).filter(pmod(col("vec_id"), lit(2)) === 0)
+    SimilarityOps.LshSlimIndex(
+      tableFrame(s, dir, "embeddings", "lshCrossEntries")(
+        emb => SimilarityOps.lshIndexEntriesSlim(existing(emb))),
+      tableFrame(s, dir, "embeddings", "lshCrossVectors")(
+        emb => SimilarityOps.lshIndexVectors(existing(emb))))
+  }
+
+  /** One batch probe of the frozen index, shared by both incremental
     * output shapes (the uncapped dump and its per-batch-vector top-k
-    * cap — the same daily batch probed once, consumed twice), memoized
-    * like the index itself: cross-pair surfaces are id+cosine rows
-    * bounded by the batch's dup density, cheap to pin. The un-memoized
-    * probe cost is dedup_embedding_incremental's `cold` seconds in
-    * `graft.Bench`.
+    * cap). Cross pairs are id+cosine rows bounded by the batch's dup
+    * density, cheap to hold. The probe's cost is
+    * dedup_embedding_incremental's `cold` seconds in `graft.Bench`.
     */
   private def lshCrossPairs(s: SparkSession, dir: String): DataFrame =
-    ModelCache.sessionCached(s, s"$dir|lshCrossPairs") {
+    tableFrame(s, dir, "embeddings", "lshCrossPairs", NearDupThreshold) { emb =>
       val idx = lshCrossIndex(s, dir)
-      SimilarityOps.nearDupPairsLshCrossSlim(
-        idx.entries, idx.vectors,
-        normed(s, dir).filter(pmod(col("vec_id"), lit(2)) === 1),
-        NearDupThreshold).localCheckpoint()
+      SimilarityOps.nearDupPairsLshCrossSlim(idx.entries, idx.vectors,
+        SimilarityOps.withNorm(emb).filter(pmod(col("vec_id"), lit(2)) === 1), NearDupThreshold)
     }
 
-  /** The persisted MinHash incremental-dedup index over the existing
-    * (even doc_id) half — hashes/bands/shingle-sets materialized once
-    * per session (the band-axis twin of [[lshCrossIndex]]; an inline
-    * form re-shingles and re-bands the whole existing corpus on every
-    * batch probe).
+  /** The MinHash incremental-dedup index over the existing (even
+    * doc_id) half: hashes, bands and shingle sets, the band-axis twin of
+    * [[lshCrossIndex]] (an inline form re-shingles and re-bands the
+    * whole existing corpus on every batch probe).
     */
-  private def minhashCrossIndex(s: SparkSession,
-      dir: String): DedupOps.MinhashIndex =
-    ModelCache.sessionCachedRef(s, s"$dir|minhashCrossIndex") {
-      val idx = DedupOps.minhashIndex(
-        table(s, dir, "documents").select("doc_id", "text")
-          .filter(pmod(col("doc_id"), lit(2)) === 0))
-      DedupOps.MinhashIndex(idx.hashes.localCheckpoint(),
-        idx.bands.localCheckpoint(), idx.sets.localCheckpoint())
-    }
+  private def minhashCrossIndex(s: SparkSession, dir: String): DedupOps.MinhashIndex = {
+    def idx(docs: DataFrame) = DedupOps.minhashIndex(
+      docs.select("doc_id", "text").filter(pmod(col("doc_id"), lit(2)) === 0))
+    DedupOps.MinhashIndex(
+      tableFrame(s, dir, "documents", "minhashCrossHashes")(idx(_).hashes),
+      tableFrame(s, dir, "documents", "minhashCrossBands")(idx(_).bands),
+      tableFrame(s, dir, "documents", "minhashCrossSets")(idx(_).sets))
+  }
 
-  /** The shared default (8-table) near-dup pair surface at
-    * [[NearDupThreshold]], materialized once per session per dir:
-    * three queries consume exactly this frame (the dump, its top-k
-    * cap, and the recall card); without it the card re-runs the pair
-    * pass from the cached signature frame on every invocation
-    * (measured 0.50 → 0.83 s). Pair
-    * surfaces are id+cosine rows (≤ candidate volume, ∝ n·targetBucket
-    * per table), so pinning the artifact is cheap at any scale.
+  /** The default (8-table) near-dup pair surface at [[NearDupThreshold]]:
+    * the dump, its top-k cap and the recall card read this frame
+    * (without it the card re-runs the pair pass, measured 0.50 → 0.83 s).
+    * Pair surfaces are id+cosine rows, at most the candidate volume.
     */
   private def lshPairsNearDup(s: SparkSession, dir: String): DataFrame =
-    ModelCache.sessionCached(s, s"$dir|lshPairsNearDup") {
-      SimilarityOps.nearDupPairsLshFrom(cachedLshSigs(s, dir),
-        NearDupThreshold).localCheckpoint()
-    }
+    tableFrame(s, dir, "embeddings", "lshPairsNearDup", NearDupThreshold)(
+      _ => SimilarityOps.nearDupPairsLshFrom(lshSigs(s, dir), NearDupThreshold))
 
-  /** The shared blocked Jaro-Winkler pair surface at [[JaroMinMicro]],
-    * materialized once per session per dir: the dump
-    * (`dedup_jaro`) and its per-doc top-k cap (`dedup_jaro_topk`) read
-    * exactly this frame. Pair surfaces are id+score rows bounded by
-    * the corpus's match density — artifact-sized, cheap to pin.
+  /** The blocked Jaro-Winkler pair surface at [[JaroMinMicro]], read by
+    * the dump (`dedup_jaro`) and its per-doc top-k cap
+    * (`dedup_jaro_topk`). Bounded by the corpus's match density.
     */
   private def jaroPairsShared(s: SparkSession, dir: String): DataFrame =
-    ModelCache.sessionCached(s, s"$dir|jaroPairs") {
-      DedupOps.jaroPairs(
-        table(s, dir, "documents"),
-        strCol = substring(col("text"), 1, 24),
-        blockCol = concat_ws("|", col("lang"), substring(col("text"), 1, 8)),
-        minMicro = JaroMinMicro).localCheckpoint()
-    }
+    tableFrame(s, dir, "documents", "jaroPairs", JaroMinMicro)(DedupOps.jaroPairs(_,
+      strCol = substring(col("text"), 1, 24),
+      blockCol = concat_ws("|", col("lang"), substring(col("text"), 1, 8)),
+      minMicro = JaroMinMicro))
 
-  /** The shared sparse TF-IDF cosine pair surface at
-    * [[SparseMinCosMicro]], materialized once per session per dir
-    * the dump (`sim_sparse_cosine`) and its per-doc top-k cap
-    * (`sim_sparse_topk`) read exactly this frame — the jaro-twin
-    * pattern. The operator's internal pruned-weight cache is released
-    * after the checkpoint (the frame is an id+score artifact; the
-    * weight table would otherwise stay pinned for the session).
+  /** The sparse TF-IDF cosine pair surface at [[SparseMinCosMicro]],
+    * read by the dump (`sim_sparse_cosine`) and its per-doc top-k cap
+    * (`sim_sparse_topk`). The operator's pruned-weight cache is released
+    * once the pairs are materialized: the weight table would otherwise
+    * stay pinned.
     */
-  private def sparsePairsShared(s: SparkSession, dir: String): DataFrame =
-    ModelCache.sessionCached(s, s"$dir|sparseCosinePairs") {
-      val (pairs, release) = SimilarityOps.sparseCosinePairsHandle(
-        table(s, dir, "documents"),
+  private def sparsePairsShared(s: SparkSession, dir: String): DataFrame = {
+    var release: () => Unit = () => ()
+    val pairs = tableFrame(s, dir, "documents", "sparseCosinePairs", SparseShingleK,
+        SparseMaxDf, SparseMinCosMicro) { docs =>
+      val (p, r) = SimilarityOps.sparseCosinePairsHandle(docs,
         SparseShingleK, SparseMaxDf, SparseMinCosMicro)
-      val ck = pairs.localCheckpoint()
-      release()
-      ck
+      release = r
+      p
     }
+    release()
+    pairs
+  }
 
-  /** Shared LSH-bucket candidate pairs at the threshold-graph cut —
-    * ONE materialization read by sim_dbscan / graph_bfs_hops /
-    * graph_bfs_knn / graph_ppr (the materialize-once pattern: the
-    * signature+bucket+cosine work runs once per JVM per dir, every
-    * graph query downstream starts from the cached pair list).
+  /** LSH-bucket candidate pairs at the threshold-graph cut, read by
+    * sim_dbscan, graph_bfs_hops, graph_bfs_knn and graph_ppr: the
+    * signature, bucket and cosine work runs once per input.
     */
   private def lshPairsTri(s: SparkSession, dir: String): DataFrame =
-    SimilarityOps.nearDupPairsLsh(normed(s, dir), TriangleCos).cache()
+    tableFrame(s, dir, "embeddings", "lshPairsTri", TriangleCos)(
+      emb => SimilarityOps.nearDupPairsLsh(SimilarityOps.withNorm(emb), TriangleCos))
 
-  /** The DIRECTED top-[[BfsKnnK]] arc set over [[lshPairsTri]] — what
+  /** The directed top-[[BfsKnnK]] arc set over [[lshPairsTri]], what
     * BFS-kNN and personalized PageRank traverse (each node's k best
-    * partners as out-arcs). Same memo rationale as [[knnEdgesTri]]:
-    * two queries re-ran this window per bench pass through the plan
-    * registry; the memo hands both the one materialized frame
-    * (session-scoped: a checkpointed frame is bound to its context).
+    * partners as out-arcs).
     */
   private def knnArcsTri(s: SparkSession, dir: String): DataFrame =
-    ModelCache.sessionCached(s, s"$dir|knnArcsTri") {
-      GraphOps.knnGraph(lshPairsTri(s, dir), "vec_a", "vec_b", "cos_sim",
-        BfsKnnK).localCheckpoint()
-    }
+    tableFrame(s, dir, "embeddings", "knnArcsTri", TriangleCos, BfsKnnK)(
+      _ => GraphOps.knnGraph(lshPairsTri(s, dir), "vec_a", "vec_b", "cos_sim", BfsKnnK))
 
-  /** The DEGREE-CAPPED undirected kNN edge set over [[lshPairsTri]] —
-    * the default graph surface every scale-facing graph analytic rides
-    * (BFS, PPR, triangles, link-pred, label-prop, modularity): LSH
-    * candidates (linear volume) cut to each
-    * node's top-[[BfsKnnK]] arcs, symmetrized to distinct undirected
-    * edges, so |E| ≤ k·n at ANY corpus size where the raw threshold
-    * graph's |E| is a data property measured growing superlinearly
-    * (5.9× pairs for 3× data at ×30 — PLANS.md).
+  /** The degree-capped undirected kNN edge set over [[lshPairsTri]], the
+    * graph surface every scale-facing graph analytic rides (BFS, PPR,
+    * triangles, link-pred, label-prop, modularity): LSH candidates cut
+    * to each node's top-[[BfsKnnK]] arcs, symmetrized to distinct
+    * undirected edges, so |E| ≤ k·n at any corpus size, where the raw
+    * threshold graph's |E| grows superlinearly (5.9× pairs for 3× data
+    * at ×30). Label propagation iterates over it, so it is a
+    * materialized frame, not a plan.
     */
   private def knnEdgesTri(s: SparkSession, dir: String): DataFrame =
-    ModelCache.sessionCached(s, s"$dir|knnEdgesTri") {
-      // localCheckpoint + driver-side memo instead of .cache(): six
-      // queries read this edge set and label propagation ITERATES over
-      // it, and the plan-registry route proved fragile for plans this
-      // nested (measured: every graph consumer silently re-ran the
-      // window+distinct per bench pass, ~+1-2 s each). The memo returns
-      // the SAME materialized-RDD-backed frame every call — no plan
-      // matching involved; the edge set is ≤ k·n rows of two longs, so
-      // pinning it is cheap at any scale. Symmetrized from the shared
-      // [[knnArcsTri]] so the arc window itself also runs once.
-      knnArcsTri(s, dir)
-        .select(least(col("src"), col("dst")).as("vec_a"),
-          greatest(col("src"), col("dst")).as("vec_b"))
-        .distinct()
-        .localCheckpoint()
+    tableFrame(s, dir, "embeddings", "knnEdgesTri", TriangleCos, BfsKnnK) { _ =>
+      knnArcsTri(s, dir).select(least(col("src"), col("dst")).as("vec_a"),
+        greatest(col("src"), col("dst")).as("vec_b")).distinct()
     }
 
   private def eventsUs(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
 
-  /** The LSH bands table (doc_id, band, h) — the one shared, CACHED
-    * artifact of the MinHash dedup family. One short row per doc×band
-    * (vs one per shingle), so materializing it is cheap and every query
-    * downstream of it (buckets, candidate pairs, Jaccard verification)
-    * skips the tokenize→shingle→md5→min-agg pipeline on re-use
-    * (CacheManager keys on the canonicalized plan, so each query may
-    * rebuild this expression independently and still hit the cache).
-    */
-  /** Trained k-means centroid matrix for `dir`'s embeddings — trained
-    * ONCE per JVM per directory and shared by the whole recall family
-    * (cells, nprobe, SPANN, SemDeDup). Training is deterministic (the
-    * oracle replays it), so a cache hit is indistinguishable from a
-    * retrain; what it models is the real workflow: the index is built in
-    * one job and probed by every query after it.
+  /** Trained k-means centroids for `dir`'s embeddings, shared by the
+    * recall family (cells, nprobe, SPANN, SemDeDup): the index is built
+    * in one job and probed by every query after it.
     */
   private def cachedCentroids(s: SparkSession, dir: String): Seq[(Long, Array[Double])] =
-    ModelCache.cached(s"$dir|kmeans|k=$KmeansK,iters=$KmeansIters") {
-      SimilarityOps.kmeansCentroids(table(s, dir, "embeddings"), KmeansK, KmeansIters)
-    }
+    tableValue(s, dir, "embeddings", "kmeans", KmeansK, KmeansIters)(
+      SimilarityOps.kmeansCentroids(_, KmeansK, KmeansIters))
 
-  /** Trained PQ codebooks for `dir`'s embeddings — same train-once
-    * contract as [[cachedCentroids]], shared by codes + both serving
-    * evaluations.
+  /** Trained PQ codebooks for `dir`'s embeddings, shared by the codes
+    * and both serving evaluations.
     */
   private def cachedBooks(s: SparkSession, dir: String): Seq[Seq[(Long, Array[Double])]] =
-    ModelCache.cached(s"$dir|pq|m=$PqM,sub=$PqSubDim,k=$PqK,iters=$PqIters") {
-      SimilarityOps.pqCodebooks(table(s, dir, "embeddings"), PqM, PqSubDim, PqK, PqIters)
-    }
+    tableValue(s, dir, "embeddings", "pq", PqM, PqSubDim, PqK, PqIters)(
+      SimilarityOps.pqCodebooks(_, PqM, PqSubDim, PqK, PqIters))
 
-  /** Fitted DSIR log-ratio model (target = lang='en') for `dir`'s
-    * documents — one fit serves both the weights and the selection.
+  /** Fitted DSIR log-ratio model (target = lang='en'); one fit serves
+    * both the weights and the selection.
     */
   private def cachedDsirModel(s: SparkSession, dir: String): Array[Long] =
-    ModelCache.cached(s"$dir|dsir|en|dim=${DsirOps.DefaultDim}") {
-      val d = docsTok(s, dir)
-      DsirOps.logRatioMicro(s,
-        DsirOps.fitCounts(d, DsirOps.featureBuckets(col("toks")), col("lang") === "en"))
+    tableValue(s, dir, "documents", "dsir", "en", DsirOps.DefaultDim) { _ =>
+      DsirOps.logRatioMicro(s, DsirOps.fitCounts(docsTok(s, dir),
+        DsirOps.featureBuckets(col("toks")), col("lang") === "en"))
     }
 
-  /** The BM25 top-k list — k-bounded (Bm25K rows), CACHED so the lexical
-    * query and the hybrid fusion share one corpus scoring pass.
+  /** The is-English logistic-regression weights, shared by the quality
+    * scorer family.
+    */
+  private def lrWeights(s: SparkSession, dir: String): Seq[Double] =
+    tableValue(s, dir, "documents", "lr", "en", ClassifierOps.DefaultIters)(_ =>
+      ClassifierOps.trainLogistic(docsTok(s, dir),
+        ClassifierOps.features(col("toks")), col("lang") === "en"))
+
+  /** Each featurable doc's fixed-point LR logit (`logit_fp`) and
+    * is-English label (`y`), shared by the quality scorer family.
+    */
+  private def lrScored(s: SparkSession, dir: String): DataFrame =
+    tableFrame(s, dir, "documents", "lrScored", ClassifierOps.DefaultIters) { _ =>
+      docsTok(s, dir).filter(ClassifierOps.featurable(col("toks")))
+        .select(col("doc_id"), col("lang"), ClassifierOps.marginFixed(lrWeights(s, dir),
+            ClassifierOps.microFeatures(col("toks"))).as("logit_fp"),
+          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
+    }
+
+  /** The trained BPE merge list, shared by the tokenizer family. */
+  private def bpeMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
+    tableValue(s, dir, "documents", "bpe", BpeMergeCount)(
+      TokenizerOps.bpeMerges(_, BpeMergeCount))
+
+  /** The trained unigram-LM piece vocabulary. */
+  private def unigramVocab(s: SparkSession, dir: String): Seq[(String, Long, Long)] =
+    tableValue(s, dir, "documents", "unigram", UnigramPieceLen, UnigramSeedK,
+        UnigramFinalK, UnigramRounds, UnigramMaxWord)(TokenizerOps.unigramTrain(_,
+      UnigramPieceLen, UnigramSeedK, UnigramFinalK, UnigramRounds, UnigramMaxWord))
+
+  /** The top PCA component (mean, direction) of `dir`'s embeddings. */
+  private def pcaModel(s: SparkSession, dir: String): (Array[Double], Array[Long]) =
+    tableValue(s, dir, "embeddings", "pca", EmbDim, PcaIters)(
+      SimilarityOps.pcaComponent(_, EmbDim, PcaIters))
+
+  /** The BM25 top-k list (Bm25K rows), shared by the lexical query and
+    * the hybrid fusion.
     */
   private def bm25Cached(s: SparkSession, dir: String): DataFrame =
-    RetrievalOps.bm25TopK(table(s, dir, "documents"), Bm25Terms, Bm25K).cache()
+    tableFrame(s, dir, "documents", "bm25", Bm25Terms, Bm25K)(
+      RetrievalOps.bm25TopK(_, Bm25Terms, Bm25K))
 
-  /** The multi-query BM25 batch — k-bounded per query, CACHED so the
-    * batch query and the batched hybrid fusion share one corpus pass.
+  /** The multi-query BM25 batch, k-bounded per query, shared by the
+    * batch query and the batched hybrid fusion.
     */
   private def bm25MultiCached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    RetrievalOps.bm25TopKQueries(
-      table(s, dir, "documents"),
-      Bm25Queries.toDF("query_id", "term"), HybridK).cache()
+    tableFrame(s, dir, "documents", "bm25Multi", Bm25Queries, HybridK)(
+      RetrievalOps.bm25TopKQueries(_, Bm25Queries.toDF("query_id", "term"), HybridK))
   }
 
+  /** The MinHash LSH bands table (doc_id, band, h): one short row per
+    * doc×band, the dedup family's shared artifact. Every query
+    * downstream of it (buckets, candidate pairs, Jaccard verification)
+    * skips the tokenize→shingle→md5→min-agg pipeline.
+    */
   private def dedupBands(s: SparkSession, dir: String): DataFrame =
-    DedupOps.lshBands(
-      DedupOps.minhashSignature(DedupOps.shingledAll(table(s, dir, "documents"))))
-      .cache()
+    tableFrame(s, dir, "documents", "dedupBands")(docs =>
+      DedupOps.lshBands(DedupOps.minhashSignature(DedupOps.shingledAll(docs))))
+
+  /** The MinHash candidate pairs over [[dedupBands]], read by the
+    * Jaccard, containment, cluster and graph queries.
+    */
+  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    tableFrame(s, dir, "documents", "minhashPairs")(
+      _ => DedupOps.candidatePairs(dedupBands(s, dir)))
+
+  /** The candidate docs' shingle-set arrays beside [[minhashPairs]]:
+    * the docs are semi-filtered to pair endpoints before tokenization,
+    * so the shingle work stays candidate-sized, and collect_set folds
+    * the distinct into the one shuffle. (Earlier forms, each measured
+    * slower at sf0.1: a corpus-wide distinct 2×, a post-explode endpoint
+    * filter ~2×, a 6-stage shingle-equi-join Jaccard 2.5×.)
+    */
+  private def minhashPairSets(s: SparkSession, dir: String): DataFrame =
+    tableFrame(s, dir, "documents", "minhashPairSets")(
+      DedupOps.candidateShingleSets(minhashPairs(s, dir), _))
+
+  /** Per-doc 64-bit simhash fingerprints: one short row per doc, read
+    * by the fingerprint dump and the Hamming pair expansion.
+    */
+  private def simhash(s: SparkSession, dir: String): DataFrame =
+    tableFrame(s, dir, "documents", "simhash")(DedupOps.simhash)
+
+  /** The packed image bitstreams: the decode queries' fixture,
+    * synthesized because no real media column exists. Materializing it
+    * makes those queries measure the decode operator, not the encoding.
+    */
+  private def imageIo(s: SparkSession, dir: String): DataFrame =
+    tableFrame(s, dir, "documents", "imageIo")(MultimodalOps.packImageIo)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- text analysis ----------------------------------------------------
@@ -660,19 +689,20 @@ object PipelineQueries {
 
     // Retrieval-index flagship: chunk → HashingTF embed → cosine top-k,
     // the whole build-a-RAG-index path as ONE oracle-checked plan. The
-    // chunk-vector table is computed once and cached (corpus AND query
-    // sides read it); the query side broadcasts; integer bucket counts
-    // make every cosine bit-reproducible cross-engine.
+    // chunk-vector table is materialized once (corpus AND query sides
+    // read it); the query side broadcasts; integer bucket counts make
+    // every cosine bit-reproducible cross-engine.
     "pipeline_index" -> ((s, dir) => {
-      val ch = docsTok(s, dir)
-        .select(col("doc_id"),
-          explode(TextOps.chunks(col("toks"), 32, 24)).as("c"))
-        .select(col("doc_id"),
-          col("c.chunk_start").cast("long").as("chunk_start"),
-          TextOps.tokens(col("c.chunk")).as("ctoks"))
-      val vecs = SimilarityOps.withNorm(
-        SimilarityOps.hashingTf(ch, Seq("doc_id", "chunk_start"), "ctoks",
-          IndexDim)).cache()
+      val vecs = tableFrame(s, dir, "documents", "chunkVecs", IndexDim) { _ =>
+        val ch = docsTok(s, dir)
+          .select(col("doc_id"),
+            explode(TextOps.chunks(col("toks"), 32, 24)).as("c"))
+          .select(col("doc_id"),
+            col("c.chunk_start").cast("long").as("chunk_start"),
+            TextOps.tokens(col("c.chunk")).as("ctoks"))
+        SimilarityOps.withNorm(
+          SimilarityOps.hashingTf(ch, Seq("doc_id", "chunk_start"), "ctoks", IndexDim))
+      }
       val q = vecs.filter(col("doc_id") < IndexQueryDocs &&
           col("chunk_start") === 1)
         .select(col("doc_id").as("query_doc"),
@@ -917,48 +947,30 @@ object PipelineQueries {
 
     // shingledAll, not shingled: the signature's min-agg is duplicate-
     // insensitive, so the LSH-only path skips the distinct shuffle.
-    // lshBands(...) is the family's shared cache point (below): one row
-    // per doc×band — the buckets/pairs/jaccard prefixes all canonically
-    // match it, and it is ~1000× smaller than the raw shingle table (an
-    // earlier raw-shingle cache made THIS query 2.5× slower than
-    // recomputing: scanning the materialized exploded shingles cost more
-    // than the codegen explode it saved).
+    // The bands table is the family's shared memo: one row per
+    // doc×band, ~1000× smaller than the raw shingle table (materializing
+    // the raw shingles made THIS query 2.5× slower than recomputing:
+    // scanning the exploded shingles cost more than the codegen explode
+    // it saved).
     "dedup_minhash_buckets" -> ((s, dir) =>
       DedupOps.lshBuckets(dedupBands(s, dir))),
 
-    "dedup_minhash_pairs" -> ((s, dir) =>
-      DedupOps.candidatePairs(dedupBands(s, dir))),
+    "dedup_minhash_pairs" -> ((s, dir) => minhashPairs(s, dir)),
 
     "dedup_jaccard" -> ((s, dir) => {
-      // R9-style reuse, three cache points sized to their reuse: the tiny
-      // bands table (shared with the two LSH queries above), the candidate
-      // pair list (evaluated twice here — once as the broadcast endpoint
-      // filter, once as the jaccard join's left side — and canonically
-      // identical to dedup_minhash_pairs' whole plan, so that query hits
-      // it too), and the candidate docs' PRE-AGGREGATED shingle-set
-      // arrays: semi-filtering the docs table to pair endpoints BEFORE
-      // tokenization keeps the shingle work candidate-sized, collect_set
-      // folds the distinct into the one shuffle, and caching the arrays
-      // (not the exploded rows) means re-runs are two joins and nothing
-      // else. (Earlier forms, each measured slower at sf0.1: corpus-wide
-      // distinct cache 2×, post-explode endpoint filter ~2×, the
-      // 6-stage shingle-equi-join jaccard 2.5×.)
-      val pairs = DedupOps.candidatePairs(dedupBands(s, dir)).cache()
-      val docsets = DedupOps.candidateShingleSets(pairs,
-        table(s, dir, "documents")).cache()
-      DedupOps.ngramJaccardSets(pairs, docsets)
+      // three memos sized to their reuse: the bands table, the candidate
+      // pair list (read twice here: as the broadcast endpoint filter and
+      // as the jaccard join's left side) and the candidate docs'
+      // pre-aggregated shingle sets, so a re-run is two joins
+      DedupOps.ngramJaccardSets(minhashPairs(s, dir), minhashPairSets(s, dir))
     }),
 
     // asymmetric containment: the quote/subset-dup signal Jaccard
     // misses (a short doc quoted whole inside a long one unions big →
     // low Jaccard, but containment ≈ 1 on the short side). Rides the
-    // same cached candidate artifacts as dedup_jaccard.
-    "dedup_containment" -> ((s, dir) => {
-      val pairs = DedupOps.candidatePairs(dedupBands(s, dir)).cache()
-      val docsets = DedupOps.candidateShingleSets(pairs,
-        table(s, dir, "documents")).cache()
-      DedupOps.ngramContainmentSets(pairs, docsets)
-    }),
+    // same candidate memos as dedup_jaccard.
+    "dedup_containment" -> ((s, dir) =>
+      DedupOps.ngramContainmentSets(minhashPairs(s, dir), minhashPairSets(s, dir))),
 
     // deterministic fixed-size uniform sample per stratum: the k
     // smallest hash draws per language — "give me 20 random docs per
@@ -980,13 +992,10 @@ object PipelineQueries {
     // bands/pairs/shingle-set artifacts as dedup_jaccard (candidate
     // generation is shared, not recomputed); split labels are scan-side
     // expressions of the ids, so the audit itself adds zero shuffles.
-    "dedup_split_leakage" -> ((s, dir) => {
-      val pairs = DedupOps.candidatePairs(dedupBands(s, dir)).cache()
-      val docsets = DedupOps.candidateShingleSets(pairs,
-        table(s, dir, "documents")).cache()
+    "dedup_split_leakage" -> ((s, dir) =>
       DedupOps.splitLeakage(
-        DedupOps.ngramJaccardSets(pairs, docsets), LeakJaccard)
-    }),
+        DedupOps.ngramJaccardSets(minhashPairs(s, dir), minhashPairSets(s, dir)),
+        LeakJaccard)),
 
     // EXACT similarity self-join (prefix filtering, PPJoin-style): every
     // pair with jaccard >= 0.5, NO false negatives — the exact
@@ -997,18 +1006,14 @@ object PipelineQueries {
       DedupOps.similarityJoinExact(
         table(s, dir, "documents"), SetJoinThreshold)),
 
-    // cached: one short row per doc, and dedup_simhash_pairs' prefix
-    // canonically matches it — the pairs query then starts from the
-    // fingerprints instead of replanning tokenize+explode+md5.
     // transitive duplicate clusters over the LSH candidate graph —
     // the keep-one-per-cluster id assignment (connected components).
-    // pairs cached: duplicateClusters evaluates them twice (the size
-    // check + the collect/loop), and the plan is canonically identical
-    // to dedup_jaccard's cached pairs — one shared cache entry.
+    // The pairs are the shared memo: duplicateClusters reads them twice
+    // (the size check and the collect/loop).
     "dedup_clusters" -> ((s, dir) =>
       DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache(),
+        minhashPairs(s, dir),
         driverMaxEdges = 1L << 20)),
 
     // per-source duplication-rate data card: which ingest source is
@@ -1018,7 +1023,7 @@ object PipelineQueries {
     "profile_dedup_rate" -> ((s, dir) => {
       val clusters = DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache())
+        minhashPairs(s, dir))
       val sizes = clusters.groupBy("cluster_id")
         .agg(count(lit(1)).as("sz"))
       clusters.join(sizes, Seq("cluster_id"))
@@ -1040,7 +1045,7 @@ object PipelineQueries {
     "dedup_survivorship" -> ((s, dir) => {
       val clusters = DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache())
+        minhashPairs(s, dir))
       clusters
         .join(table(s, dir, "documents").select("doc_id", "n_chars"),
           Seq("doc_id"))
@@ -1058,7 +1063,7 @@ object PipelineQueries {
     "dedup_cluster_sizes" -> ((s, dir) =>
       DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache(),
+        minhashPairs(s, dir),
         driverMaxEdges = 1L << 20)
         .groupBy("cluster_id").agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("cluster_size"))
@@ -1083,7 +1088,7 @@ object PipelineQueries {
     // node ids; the rank vector never leaves the executors.
     "graph_pagerank" -> ((s, dir) =>
       GraphOps.pagerank(
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache(), "doc_a", "doc_b")),
+        minhashPairs(s, dir), "doc_a", "doc_b")),
 
     // the DIRECTED form over the same pairs, oriented doc_a → doc_b
     // (earlier id → later id, a DAG): rank flows toward the latest
@@ -1092,7 +1097,7 @@ object PipelineQueries {
     // is exactly what the undirected variant never has to face.
     "graph_pagerank_directed" -> ((s, dir) =>
       GraphOps.pagerankDirected(
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache(), "doc_a", "doc_b")),
+        minhashPairs(s, dir), "doc_a", "doc_b")),
 
     // the REMEDY for what dedup_split_leakage detects: split by
     // duplicate-CLUSTER id instead of doc id, so every near-dup group
@@ -1103,7 +1108,7 @@ object PipelineQueries {
     "split_leakproof" -> ((s, dir) =>
       DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache(),
+        minhashPairs(s, dir),
         driverMaxEdges = 1L << 20)
         .select(col("doc_id"), col("cluster_id"),
           SampleOps.splitOf(col("cluster_id")).as("split"))),
@@ -1115,7 +1120,7 @@ object PipelineQueries {
     // +200000 copies of in-batch docs (exact_dup_in_batch); cross-half
     // near-dups surface via band collision + Jaccard ≥ 0.5 confirm.
     // The batch probes the persisted MinhashIndex ARTIFACT
-    // (hashes/bands/shingle-sets, materialized once per session) — the
+    // (hashes/bands/shingle-sets, materialized once per input) — the
     // band-axis twin of the embedding index treatment: no existing-side
     // text re-scan anywhere in the probe.
     "dedup_incremental" -> ((s, dir) => {
@@ -1129,11 +1134,10 @@ object PipelineQueries {
         minhashCrossIndex(s, dir), batch, SetJoinThreshold)
     }),
 
-    "dedup_simhash" -> ((s, dir) =>
-      DedupOps.simhash(table(s, dir, "documents")).cache()),
+    "dedup_simhash" -> ((s, dir) => simhash(s, dir)),
 
     "dedup_simhash_pairs" -> ((s, dir) =>
-      DedupOps.simhashPairs(DedupOps.simhash(table(s, dir, "documents")).cache())),
+      DedupOps.simhashPairs(simhash(s, dir))),
 
     // -- embeddings / similarity -----------------------------------------
     "emb_norm" -> ((s, dir) =>
@@ -1245,13 +1249,14 @@ object PipelineQueries {
     "sim_ivf_auto_recall" -> ((s, dir) => {
       import s.implicits._
       // the CARD is a handful of longs from a deterministic
-      // calibrate→solve run — session-memoized like every other
-      // trained artifact (train once, serve many), with the operator's
-      // cached scan released as soon as the counts are collected (the
-      // release is the block bound; the memo is why releasing does not
-      // turn every bench pass into a re-solve — the un-memoized cost is
-      // the query's `cold` seconds in `graft.Bench`)
-      val row = ModelCache.sessionCachedRef(s, s"$dir|ivfAutoRecallCard") {
+      // calibrate→solve run, memoized like every other trained artifact
+      // (train once, serve many), with the operator's cached scan
+      // released as soon as the counts are collected (the release is
+      // the block bound; the memo is why releasing does not turn every
+      // bench pass into a re-solve — the un-memoized cost is the
+      // query's `cold` seconds in `graft.Bench`)
+      val row = tableValue(s, dir, "embeddings", "ivfAutoRecallCard", IvfK,
+          IvfAutoRecallTarget) { _ =>
         val base = normed(s, dir)
         val r = SimilarityOps.ivfTopKAtRecall(
           base, base.filter(col("vec_id") < IvfQueryCount),
@@ -1539,8 +1544,7 @@ object PipelineQueries {
     }),
 
     "dedup_embedding" -> ((s, dir) =>
-      SimilarityOps.nearDupPairs(normed(s, dir), NearDupThreshold,
-        cellStatCacheKey = Some(s"$dir|neardup"))),
+      SimilarityOps.nearDupPairs(normed(s, dir), NearDupThreshold)),
 
     // the SCALE-PATH twin of dedup_embedding: candidates from
     // auto-sized LSH signature-prefix buckets (bucket count grows with
@@ -1552,7 +1556,7 @@ object PipelineQueries {
     // cross-corpus near-dup probe — the embedding daily-increment
     // (vector twin of dedup_incremental / sim_ivf_append): the batch
     // (odd vec_ids) probes the FROZEN index ARTIFACT of the existing
-    // corpus (even vec_ids — built ONCE per session by
+    // corpus (even vec_ids — built ONCE per input by
     // [[lshCrossIndex]]; the prefix width rides the artifact's bits
     // column, so the probe plan never touches the existing side's raw
     // embeddings), one shared bucket-collect shuffle, cross-side pairs
@@ -1581,7 +1585,7 @@ object PipelineQueries {
       // the tables frontier, dedup_embedding_lsh(+topk), the auto-L
       // operator, and the TriangleCos graph chain (this card reads
       // only the first LshTables dot columns of it)
-      val sigs = cachedLshSigs(s, dir)
+      val sigs = lshSigs(s, dir)
       val qs = corpus.filter(col("vec_id") < LshQueryCount)
       val truth = corpus
         .join(broadcast(qs.select(col("vec_id").as("query_id"),
@@ -1611,7 +1615,7 @@ object PipelineQueries {
       // tried and measured SLOWER: it funnels every directed row and
       // the truth through a wide shuffle, where this form's second
       // evaluation of the tagged union is a cheap pipeline; see
-      // OPTIMIZATION_r16.md.)
+      // archive/OPTIMIZATION_r16.md.)
       val flags = tagged
         .select(col("tgt"), col("vec_a").as("query_id"),
           col("vec_b").as("other_id"))
@@ -1663,10 +1667,11 @@ object PipelineQueries {
     // flat per table, not recall). One row per L.
     "dedup_lsh_tables_frontier" -> ((s, dir) => {
       val corpus = normed(s, dir)
-      val sigs = cachedLshSigs(s, dir)
-      val pairs = SimilarityOps.nearDupPairsLshByTable(
-        sigs, NearDupThreshold,
-        tables = SimilarityOps.LshAutoMaxTables).cache()
+      val pairs = tableFrame(s, dir, "embeddings", "lshPairsByTable", NearDupThreshold,
+          SimilarityOps.LshAutoMaxTables) { _ =>
+        SimilarityOps.nearDupPairsLshByTable(lshSigs(s, dir), NearDupThreshold,
+          tables = SimilarityOps.LshAutoMaxTables)
+      }
       val qs = corpus.filter(col("vec_id") < LshQueryCount)
       val truth = corpus
         .join(broadcast(qs.select(col("vec_id").as("query_id"),
@@ -1719,12 +1724,13 @@ object PipelineQueries {
     // card replays in the oracle, decision included. One row.
     "dedup_lsh_auto_recall" -> ((s, dir) => {
       import s.implicits._
-      // session-memoized card + released operator cache — see the
+      // memoized card + released operator cache — see the
       // sim_ivf_auto_recall note
-      val row = ModelCache.sessionCachedRef(s, s"$dir|lshAutoRecallCard") {
+      val row = tableValue(s, dir, "embeddings", "lshAutoRecallCard", NearDupThreshold,
+          LshAutoRecallTarget) { _ =>
         val r = SimilarityOps.nearDupPairsLshAtRecall(
           normed(s, dir), NearDupThreshold, LshAutoRecallTarget,
-          LshQueryCount, sigs = Some(cachedLshSigs(s, dir)))
+          LshQueryCount, sigs = Some(lshSigs(s, dir)))
         val nPairs = r.pairs.count()
         r.release()
         (r.targetMicro, r.nTrue, r.calibTables.toLong,
@@ -1749,16 +1755,16 @@ object PipelineQueries {
     // makes it the same pairs a persisted 64-wide stage would give).
     "dedup_lsh_auto_recall_wide" -> ((s, dir) => {
       import s.implicits._
-      // session-memoized card + released operator cache — see the
+      // memoized card + released operator cache — see the
       // sim_ivf_auto_recall note; the wide solve (a fresh 48-table
-      // build at sf0.1) is paid once per session, in the query's
-      // `cold` seconds
-      val row = ModelCache.sessionCachedRef(s,
-        s"$dir|lshAutoRecallWideCard") {
+      // build at sf0.1) is paid once per input, in the query's `cold`
+      // seconds
+      val row = tableValue(s, dir, "embeddings", "lshAutoRecallWideCard", LshWideThreshold,
+          LshWideRecallTarget) { _ =>
         val r = SimilarityOps.nearDupPairsLshAtRecall(
           normed(s, dir), LshWideThreshold, LshWideRecallTarget,
           LshQueryCount, maxTables = SimilarityOps.LshWideMaxTables,
-          sigs = Some(cachedLshSigs(s, dir)))
+          sigs = Some(lshSigs(s, dir)))
         val nPairs = r.pairs.count()
         r.release()
         (r.targetMicro, r.nTrue, r.calibTables.toLong,
@@ -1782,19 +1788,20 @@ object PipelineQueries {
     // to the bounded consumer surface", never dead-end.
     "dedup_lsh_recall_routed" -> ((s, dir) => {
       import s.implicits._
-      val row = ModelCache.sessionCachedRef(s, s"$dir|lshRecallRoutedCard") {
+      val row = tableValue(s, dir, "embeddings", "lshRecallRoutedCard", LshWideThreshold,
+          LshWideRecallTarget, LshTopKPerVector, RoutedMinHeadRecall) { _ =>
         SimilarityOps.nearDupPairsLshAtRecallOrTopK(
           normed(s, dir), LshWideThreshold, LshWideRecallTarget,
           LshTopKPerVector, RoutedMinHeadRecall, LshQueryCount,
-          sigs = Some(cachedLshSigs(s, dir))) match {
+          sigs = Some(lshSigs(s, dir))) match {
           case SimilarityOps.LshRouteSolved(r) =>
             val n = r.pairs.count()
             r.release()
             ("solved", r.tables.toLong, n)
           case SimilarityOps.LshRouteTopK(arcs, _, release) =>
             // count, then release the arm's internal pair cache — the
-            // card memoizes the scalars, so nothing reads
-            // the frame again this session
+            // card memoizes the scalars, so nothing reads the frame
+            // again
             val n = arcs.count()
             release()
             ("topk_head_recall", -1L, n)
@@ -1810,14 +1817,12 @@ object PipelineQueries {
     // hyperplane twin this decision TRANSFERS across scale.
     "dedup_minhash_auto_recall" -> ((s, dir) => {
       import s.implicits._
-      // session-memoized card + released operator cache — see the
+      // memoized card + released operator cache — see the
       // sim_ivf_auto_recall note
-      val row = ModelCache.sessionCachedRef(s,
-        s"$dir|minhashAutoRecallCard") {
-        val r = DedupOps.minhashPairsAtRecall(
-          table(s, dir, "documents"), MinhashRecallJaccard,
-          MinhashRecallTarget, MinhashQueryCount,
-          maxBands = MinhashMaxBands)
+      val row = tableValue(s, dir, "documents", "minhashAutoRecallCard", MinhashRecallJaccard,
+          MinhashRecallTarget, MinhashQueryCount, MinhashMaxBands) { docs =>
+        val r = DedupOps.minhashPairsAtRecall(docs, MinhashRecallJaccard,
+          MinhashRecallTarget, MinhashQueryCount, maxBands = MinhashMaxBands)
         val nPairs = r.pairs.count()
         r.release()
         (r.targetMicro, r.nTrue, r.calibBands.toLong,
@@ -1922,9 +1927,9 @@ object PipelineQueries {
     // the suffix-stripping invariant. The order-sensitive
     // record-linkage pass the shingle family can't express; early-exit
     // threshold DP on both arms.
-    // The routing statistic (in-block candidate volume) is
-    // session-memoized per dir — one statistics scan per session, not
-    // one per invocation; the memoized long IS the measurement.
+    // The routing statistic (in-block candidate volume) is memoized by
+    // its input's content — one statistics scan per input, not one per
+    // invocation; the memoized long IS the measurement.
     "dedup_editdist" -> ((s, dir) =>
       DedupOps.editDistancePairsAuto(
         table(s, dir, "documents"),
@@ -1932,14 +1937,13 @@ object PipelineQueries {
         blockCol = concat(
           lpad(length(col("lang")).cast("string"), 2, "0"),
           col("lang"), substring(col("text"), 1, 8)),
-        maxDist = 4,
-        volumeCacheKey = Some(s"$dir|editdist"))),
+        maxDist = 4)),
 
     // blocked Jaro-Winkler fuzzy linkage — the normalized,
     // transposition-tolerant metric next to dedup_editdist, computed by
     // the native exact-integer expression (graft.expressions
     // .JaroWinkler) so the threshold is integer-decided on both
-    // engines. The pair surface is session-memoized: two queries
+    // engines. The pair surface is memoized: two queries
     // consume exactly this frame (the dump and its top-k cap), and the
     // surface is id+score rows bounded by the corpus's match density.
     "dedup_jaro" -> ((s, dir) => jaroPairsShared(s, dir)),
@@ -1990,11 +1994,9 @@ object PipelineQueries {
     // indexes story.
     "sim_ivf_append" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val cents = ModelCache.cached(
-        s"$dir|kmeans-existing|k=$KmeansK,iters=$KmeansIters") {
+      val cents = ModelCache.value("kmeansExisting", KmeansK, KmeansIters)(emb)(
         SimilarityOps.kmeansCentroids(
-          emb.filter(pmod(col("vec_id"), lit(2)) === 0), KmeansK, KmeansIters)
-      }
+          emb.filter(pmod(col("vec_id"), lit(2)) === 0), KmeansK, KmeansIters))
       SimilarityOps.kmeansCells(emb, cents, 6)
         .withColumn("is_new", pmod(col("vec_id"), lit(2)) === 1)
     }),
@@ -2008,9 +2010,8 @@ object PipelineQueries {
     "sim_kcenter_coreset" -> ((s, dir) =>
       SimilarityOps.kcenterAssign(
         table(s, dir, "embeddings"),
-        ModelCache.cached(s"$dir|kcenter|k=$KcenterK") {
-          SimilarityOps.kcenterCenters(table(s, dir, "embeddings"), KcenterK)
-        })),
+        tableValue(s, dir, "embeddings", "kcenter", KcenterK)(
+          SimilarityOps.kcenterCenters(_, KcenterK)))),
 
     // the same coreset contract seeded the SCALABLE way (k-means||-
     // style batched oversampling, Bahmani 2012): `rounds` corpus scans
@@ -2021,11 +2022,9 @@ object PipelineQueries {
     "sim_kcenter_parallel" -> ((s, dir) =>
       SimilarityOps.kcenterAssign(
         table(s, dir, "embeddings"),
-        ModelCache.cached(
-          s"$dir|kcenter-par|k=$KcenterK,r=$KcenterRounds,l=$KcenterOversample") {
-          SimilarityOps.kcenterParallelCenters(table(s, dir, "embeddings"),
-            KcenterK, KcenterRounds, KcenterOversample)
-        })),
+        tableValue(s, dir, "embeddings", "kcenterParallel", KcenterK, KcenterRounds,
+            KcenterOversample)(SimilarityOps.kcenterParallelCenters(_,
+          KcenterK, KcenterRounds, KcenterOversample)))),
 
     // -- SQL surface ------------------------------------------------------
     // the same engine through pure SQL: temp view + the natively-
@@ -2148,7 +2147,9 @@ object PipelineQueries {
       val contaminated = DedupOps.shingledAll(deduped)
         .join(benchSh, Seq("shingle"))
         .select("doc_id").distinct()
-      val clean = deduped.join(contaminated, Seq("doc_id"), "left_anti").cache()
+      val clean = ModelCache.frame("pipelineClean")(all) {
+        deduped.join(contaminated, Seq("doc_id"), "left_anti")
+      }
       val pairs = DedupOps.candidatePairs(DedupOps.lshBands(
         DedupOps.minhashSignature(DedupOps.shingledAll(clean))))
       val clusters = DedupOps.duplicateClusters(
@@ -2242,40 +2243,21 @@ object PipelineQueries {
     // (pred ⟺ logit ≥ 0), and calibration all survive unchanged;
     // training is robust regardless (a single-row ulp flip shifts the
     // 6dp-rounded gradient MEAN by ~1e-10, which rounds away).
-    "quality_lr_score" -> ((s, dir) => {
-      val d = docsTok(s, dir)
-      val xs = ClassifierOps.features(col("toks"))
-      val w = ModelCache.cached(s"$dir|lr|en|i=${ClassifierOps.DefaultIters}") {
-        ClassifierOps.trainLogistic(d, xs, col("lang") === "en")
-      }
-      val mxs = ClassifierOps.microFeatures(col("toks"))
-      d.filter(ClassifierOps.featurable(col("toks")))
-        .select(col("doc_id"),
-          ClassifierOps.marginFixed(w, mxs).as("logit_fp"),
-          (ClassifierOps.marginFixed(w, mxs) >= 0L).as("pred"),
-          (col("lang") === "en").as("label"))
-    }),
+    "quality_lr_score" -> ((s, dir) =>
+      lrScored(s, dir).select(col("doc_id"), col("logit_fp"),
+        (col("logit_fp") >= 0L).as("pred"), (col("lang") === "en").as("label"))),
 
     // active learning's query step: the k most UNCERTAIN docs under the
     // trained classifier (|score − 0.5| smallest) — the rows a labeling
     // budget should go to next. TakeOrderedAndProject: only k rows
     // leave the executors.
-    "sample_uncertainty" -> ((s, dir) => {
-      val d = docsTok(s, dir)
-      val xs = ClassifierOps.features(col("toks"))
-      val w = ModelCache.cached(s"$dir|lr|en|i=${ClassifierOps.DefaultIters}") {
-        ClassifierOps.trainLogistic(d, xs, col("lang") === "en")
-      }
-      // |logit| ascending ≡ |sigmoid − 0.5| ascending (monotone +
-      // symmetric), so the selected set is identical and hash-exact
-      val mxs = ClassifierOps.microFeatures(col("toks"))
-      d.filter(ClassifierOps.featurable(col("toks")))
-        .select(col("doc_id"),
-          ClassifierOps.marginFixed(w, mxs).as("logit_fp"),
-          abs(ClassifierOps.marginFixed(w, mxs)).as("margin_fp"))
+    // |logit| ascending ≡ |sigmoid − 0.5| ascending (monotone +
+    // symmetric), so the selected set is identical and hash-exact
+    "sample_uncertainty" -> ((s, dir) =>
+      lrScored(s, dir)
+        .select(col("doc_id"), col("logit_fp"), abs(col("logit_fp")).as("margin_fp"))
         .orderBy(col("margin_fp").asc, col("doc_id").asc)
-        .limit(25)
-    }),
+        .limit(25)),
 
     // the classifier's reliability diagram: scores binned into 10 equal
     // slices of the OBSERVED score range (min/max travel as a broadcast
@@ -2289,18 +2271,7 @@ object PipelineQueries {
     // integer-ppm ratios. The "where do I set the keep threshold"
     // curve a curation run reads before committing a cutoff.
     "quality_pr_curve" -> ((s, dir) => {
-      val d = docsTok(s, dir)
-      val xs = ClassifierOps.features(col("toks"))
-      val w = ModelCache.cached(s"$dir|lr|en|i=${ClassifierOps.DefaultIters}") {
-        ClassifierOps.trainLogistic(d, xs, col("lang") === "en")
-      }
-      val mxs = ClassifierOps.microFeatures(col("toks"))
-      val scored = d.filter(ClassifierOps.featurable(col("toks")))
-        .select(col("doc_id"),
-          ClassifierOps.marginFixed(w, mxs).as("logit_fp"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
-        .withColumn("neg", -col("logit_fp"))
-        .cache()
+      val scored = lrScored(s, dir).withColumn("neg", -col("logit_fp"))
       val ranked = PrefixOps.globalRowNumber(scored, "neg", Seq("doc_id"), "pos")
         .select(col("doc_id"), col("pos"))
       val cum = PrefixOps.globalCumsum(scored, "neg", Seq("doc_id"), "y", "cum_tp")
@@ -2321,15 +2292,7 @@ object PipelineQueries {
     // sum — AUC = (R⁺·2 − P(P+1))·10⁶ div (2PN), pure integers end to
     // end. The single-number ranking summary beside the PR curve.
     "quality_auc" -> ((s, dir) => {
-      val d = docsTok(s, dir)
-      val xs = ClassifierOps.features(col("toks"))
-      val w = ModelCache.cached(s"$dir|lr|en|i=${ClassifierOps.DefaultIters}") {
-        ClassifierOps.trainLogistic(d, xs, col("lang") === "en")
-      }
-      val mxs = ClassifierOps.microFeatures(col("toks"))
-      val g = d.filter(ClassifierOps.featurable(col("toks")))
-        .select(ClassifierOps.marginFixed(w, mxs).as("logit_fp"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
+      val g = lrScored(s, dir)
         .groupBy("logit_fp")
         .agg(count(lit(1)).as("cnt"), sum("y").as("pc"))
       val cum = PrefixOps.globalCumsum(g, "logit_fp", Seq.empty, "cnt", "cumc")
@@ -2345,17 +2308,9 @@ object PipelineQueries {
     }),
 
     "quality_lr_calibration" -> ((s, dir) => {
-      val d = docsTok(s, dir)
-      val xs = ClassifierOps.features(col("toks"))
-      val w = ModelCache.cached(s"$dir|lr|en|i=${ClassifierOps.DefaultIters}") {
-        ClassifierOps.trainLogistic(d, xs, col("lang") === "en")
-      }
       // logit-space bins (a monotone reparametrization of the score
       // axis — still a reliability diagram, now hash-exact end to end)
-      val mxs = ClassifierOps.microFeatures(col("toks"))
-      val scored = d.filter(ClassifierOps.featurable(col("toks")))
-        .select(ClassifierOps.marginFixed(w, mxs).as("logit_fp"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
+      val scored = lrScored(s, dir)
       val range = scored.agg(min(col("logit_fp")).as("mn"), max(col("logit_fp")).as("mx"))
       scored.crossJoin(broadcast(range))
         .select(
@@ -2380,9 +2335,7 @@ object PipelineQueries {
     // merge CTEs. Shares the train-once cache.
     "text_bpe_merges" -> ((s, dir) =>
       TokenizerOps.mergeTable(s,
-        ModelCache.cached(s"$dir|bpe|t=$BpeMergeCount") {
-          TokenizerOps.bpeMerges(table(s, dir, "documents"), BpeMergeCount)
-        })),
+        bpeMerges(s, dir))),
 
     // the learned tokenizer APPLIED: per-doc word vs subword counts
     // after segmenting with the trained merges — the compression the
@@ -2392,9 +2345,7 @@ object PipelineQueries {
     "text_bpe_segment" -> ((s, dir) =>
       TokenizerOps.segmentStats(
         table(s, dir, "documents"),
-        ModelCache.cached(s"$dir|bpe|t=$BpeMergeCount") {
-          TokenizerOps.bpeMerges(table(s, dir, "documents"), BpeMergeCount)
-        })),
+        bpeMerges(s, dir))),
 
     // WordPiece greedy longest-match inference (the BERT tokenizer's
     // algorithm) against a vocab of the full alphabet plus the trained
@@ -2403,9 +2354,7 @@ object PipelineQueries {
     // measured as pieces-per-word beside text_bpe_segment's
     // merge-order replay. Segmentation runs once per DISTINCT word.
     "text_wordpiece" -> ((s, dir) => {
-      val merges = ModelCache.cached(s"$dir|bpe|t=$BpeMergeCount") {
-        TokenizerOps.bpeMerges(table(s, dir, "documents"), BpeMergeCount)
-      }
+      val merges = bpeMerges(s, dir)
       val vocab = (('a' to 'z').map(_.toString) ++ merges.map(_._3))
         .flatMap(p => Seq(p, "##" + p))
       TokenizerOps.wordpieceStats(table(s, dir, "documents"), vocab,
@@ -2424,11 +2373,7 @@ object PipelineQueries {
     // in the oracle's unrolled DP CTEs.
     "text_unigram_train" -> ((s, dir) =>
       TokenizerOps.unigramVocabTable(s,
-        ModelCache.cached(s"$dir|unigram|$UnigramPieceLen|$UnigramSeedK|$UnigramFinalK|$UnigramRounds|$UnigramMaxWord") {
-          TokenizerOps.unigramTrain(table(s, dir, "documents"),
-            UnigramPieceLen, UnigramSeedK, UnigramFinalK, UnigramRounds,
-            UnigramMaxWord)
-        })),
+        unigramVocab(s, dir))),
 
     // the trained unigram vocab APPLIED: per-doc words / pieces / exact
     // integer negative-log-likelihood of the Viterbi best path — the
@@ -2438,11 +2383,7 @@ object PipelineQueries {
     "text_unigram_segment" -> ((s, dir) =>
       TokenizerOps.unigramSegmentStats(
         table(s, dir, "documents"),
-        ModelCache.cached(s"$dir|unigram|$UnigramPieceLen|$UnigramSeedK|$UnigramFinalK|$UnigramRounds|$UnigramMaxWord") {
-          TokenizerOps.unigramTrain(table(s, dir, "documents"),
-            UnigramPieceLen, UnigramSeedK, UnigramFinalK, UnigramRounds,
-            UnigramMaxWord)
-        },
+        unigramVocab(s, dir),
         UnigramPieceLen, UnigramMaxWord)),
 
     // weak supervision (Snorkel pattern): three scan-side labeling
@@ -2585,7 +2526,7 @@ object PipelineQueries {
       // because no real media column exists); caching them makes the
       // timed query measure the decode operator, not fixture encoding
       val dec = MultimodalOps.decodeMedia(
-        MultimodalOps.packImageIo(table(s, dir, "documents")).cache())
+        imageIo(s, dir))
       val png = col("mime") === "image/png"
       val pngExact =
         lit(3L) * aggregate(
@@ -2628,7 +2569,7 @@ object PipelineQueries {
 
     "mm_phash_dedup" -> ((s, dir) =>
       MultimodalOps.perceptualHash(
-        MultimodalOps.packImageIo(table(s, dir, "documents")).cache())
+        imageIo(s, dir))
         .groupBy("width", "height", "ahash")
         .agg(count(lit(1)).as("n_imgs"), min("media_id").as("first_media"))
         .filter(col("n_imgs") > 1)),
@@ -2756,9 +2697,7 @@ object PipelineQueries {
     // arithmetic contract end to end.
     "sim_rocchio_confusion" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val protos = ModelCache.cached(s"$dir|rocchio") {
-        SimilarityOps.labelPrototypes(emb)
-      }
+      val protos = ModelCache.value("rocchio")(emb)(SimilarityOps.labelPrototypes(emb))
       emb.select(col("label").cast("long").as("label"),
           SimilarityOps.assignCell(protos, 6).as("predicted"))
         .groupBy("label", "predicted")
@@ -2773,9 +2712,7 @@ object PipelineQueries {
     // cached Rocchio prototypes.
     "quality_conformal" -> ((s, dir) => {
       val emb = table(s, dir, "embeddings")
-      val protos = ModelCache.cached(s"$dir|rocchio") {
-        SimilarityOps.labelPrototypes(emb)
-      }
+      val protos = ModelCache.value("rocchio")(emb)(SimilarityOps.labelPrototypes(emb))
       ClassifierOps.conformalEval(emb, protos)
     }),
 
@@ -2803,7 +2740,7 @@ object PipelineQueries {
     "mix_dedup_weights" -> ((s, dir) => {
       val cl = DedupOps.duplicateClusters(
         table(s, dir, "documents").select("doc_id"),
-        DedupOps.candidatePairs(dedupBands(s, dir)).cache(),
+        minhashPairs(s, dir),
         driverMaxEdges = 1L << 20)
       val w = org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")
       cl.withColumn("cluster_size", count(lit(1)).over(w))
@@ -2878,16 +2815,17 @@ object PipelineQueries {
     // × candidate-bounded shingle-set Jaccard.
     "dedup_paraphrase" -> ((s, dir) => {
       // pairs (pair-bounded) and the candidate shingle sets (endpoint-
-      // bounded) are each read twice downstream — cache both so the
+      // bounded) are each read twice downstream — materialize both so the
       // embeddings corpus is scanned once and the documents corpus once
       // (8 planned scans collapse to 2)
-      val pairs = SimilarityOps.nearDupPairs(normed(s, dir), NearDupThreshold,
-        cellStatCacheKey = Some(s"$dir|neardup"))
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
-          col("cos_sim"))
-        .cache()
-      val sets = DedupOps.candidateShingleSets(
-        pairs, table(s, dir, "documents")).cache()
+      val pairs = tableFrame(s, dir, "embeddings", "paraphrasePairs", NearDupThreshold) { emb =>
+        SimilarityOps.nearDupPairs(SimilarityOps.withNorm(emb), NearDupThreshold)
+          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"), col("cos_sim"))
+      }
+      val docs = table(s, dir, "documents")
+      val sets = ModelCache.frame("paraphraseSets")(pairs, docs) {
+        DedupOps.candidateShingleSets(pairs, docs)
+      }
       pairs
         .join(DedupOps.ngramJaccardSets(pairs, sets), Seq("doc_a", "doc_b"))
         .select(col("doc_a"), col("doc_b"), col("cos_sim"), col("jaccard"),
@@ -2947,9 +2885,7 @@ object PipelineQueries {
     "text_bpe_fertility" -> ((s, dir) =>
       TokenizerOps.fertilityBySource(
         table(s, dir, "documents"),
-        ModelCache.cached(s"$dir|bpe|t=$BpeMergeCount") {
-          TokenizerOps.bpeMerges(table(s, dir, "documents"), BpeMergeCount)
-        })),
+        bpeMerges(s, dir))),
 
     // binary (sign-bit) embedding recall — the fifth compression axis
     // on the shared frontier: 64 floats → 8 bytes, similarity = two
@@ -3097,10 +3033,7 @@ object PipelineQueries {
     // scan with the model as literals, per-dim micro-long terms summed
     // exactly. Shares the train-once cache.
     "sim_pca_project" -> ((s, dir) => {
-      val (mu, v) = ModelCache.cached(s"$dir|pca|iters=$PcaIters") {
-        SimilarityOps.pcaComponent(
-          table(s, dir, "embeddings"), EmbDim, PcaIters)
-      }
+      val (mu, v) = pcaModel(s, dir)
       SimilarityOps.pcaProject(table(s, dir, "embeddings"), mu, v)
     }),
 
@@ -3108,16 +3041,11 @@ object PipelineQueries {
     // (vᵀSv/vᵀv)/trace(S) — how much corpus variance one projected
     // dimension keeps; the compression analog of the recall frontier.
     "sim_pca_var" -> ((s, dir) => {
-      val (mu, v) = ModelCache.cached(s"$dir|pca|iters=$PcaIters") {
-        SimilarityOps.pcaComponent(
-          table(s, dir, "embeddings"), EmbDim, PcaIters)
-      }
-      // the scatter is itself a dim²-bounded trained artifact: cache it
-      // so the quotient never re-pays the corpus pass at serve time
-      val scat = ModelCache.cached(s"$dir|pca-scatter") {
-        SimilarityOps.pcaScatterVector(
-          table(s, dir, "embeddings"), mu, EmbDim)
-      }
+      val (mu, v) = pcaModel(s, dir)
+      // the scatter is itself a dim²-bounded trained artifact: memoize
+      // it so the quotient never re-pays the corpus pass at serve time
+      val scat = tableValue(s, dir, "embeddings", "pcaScatter", EmbDim, PcaIters)(
+        SimilarityOps.pcaScatterVector(_, mu, EmbDim))
       SimilarityOps.pcaVarFromScatter(s, scat, EmbDim, v)
     }),
 
@@ -3332,7 +3260,7 @@ object PipelineQueries {
     // shingles (posting lists ≤ maxDf ⇒ per-shingle pair expansion
     // ≤ maxDf² — bounded regardless of corpus size; the all-pairs join
     // never exists). Decimal-exact dots/norms, micro-integer cosine.
-    // The pair surface is session-memoized: the dump and its
+    // The pair surface is memoized: the dump and its
     // top-k twin read exactly this frame. SCALE NOTE: this dump's
     // volume is |vocab|·maxDf²-bounded but |vocab| grows with the
     // corpus — at 100× consume `sim_sparse_topk` instead.
@@ -3381,10 +3309,9 @@ object PipelineQueries {
     // false negatives without all-pairs), so the measurement itself
     // scales.
     "dedup_lsh_recall" -> ((s, dir) => {
-      val truth = DedupOps.similarityJoinExact(
-        table(s, dir, "documents"), SetJoinThreshold)
-        .select("doc_a", "doc_b").cache()
-      val cand = DedupOps.candidatePairs(dedupBands(s, dir)).cache()
+      val truth = tableFrame(s, dir, "documents", "setJoinTruth", SetJoinThreshold)(
+        DedupOps.similarityJoinExact(_, SetJoinThreshold).select("doc_a", "doc_b"))
+      val cand = minhashPairs(s, dir)
       truth.agg(count(lit(1)).as("n_true"))
         .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
         .crossJoin(truth.join(cand, Seq("doc_a", "doc_b"), "left_semi")
@@ -3411,18 +3338,19 @@ object PipelineQueries {
             col("n_bigrams").cast("double")).cast("long").as("nll_micro"))
       val wl = org.apache.spark.sql.expressions.Window
         .partitionBy("lang").orderBy(col("nll_micro"), col("doc_id"))
-      // one short row per doc; CACHED because globalRowNumber reads its
-      // input twice (the bin-boundary quantile probe + the window pass)
-      // — uncached, each read replays the whole KN scoring join
-      // (measured 3.50 → 1.9s at sf0.1)
-      val keyed = scored.withColumn("tercile", ntile(3).over(wl))
-        .select(col("doc_id"), col("lang"),
-          col("tercile").cast("long").as("tercile"),
-          (col("tercile").cast("long") * lit(4294967296L) +
-            graft.expressions.Md5PrefixLong.draw(concat(lit("42:"),
-              col("doc_id").cast("string")), 8))
-            .as("ck"))
-        .cache()
+      // one short row per doc, materialized because globalRowNumber
+      // reads its input twice (the bin-boundary quantile probe + the
+      // window pass) — unmaterialized, each read replays the whole KN
+      // scoring join (measured 3.50 → 1.9s at sf0.1)
+      val keyed = tableFrame(s, dir, "documents", "curriculumKeys", KnDiscount) { _ =>
+        scored.withColumn("tercile", ntile(3).over(wl))
+          .select(col("doc_id"), col("lang"),
+            col("tercile").cast("long").as("tercile"),
+            (col("tercile").cast("long") * lit(4294967296L) +
+              graft.expressions.Md5PrefixLong.draw(concat(lit("42:"),
+                col("doc_id").cast("string")), 8))
+              .as("ck"))
+      }
       PrefixOps.globalRowNumber(keyed, "ck", Seq("doc_id"), "pos")
         .select(col("doc_id"), col("lang"), col("tercile"), col("pos"))
     }),
@@ -3603,7 +3531,7 @@ object PipelineQueries {
     // for iteration.
     "dedup_fs_em" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
-      val mh = DedupOps.candidatePairs(dedupBands(s, dir))
+      val mh = minhashPairs(s, dir)
         .select(col("doc_a").as("a"), col("doc_b").as("b"))
       val ids = docs.select(col("doc_id"), md5(col("text")).as("h"))
       val shift = ids
@@ -3674,15 +3602,7 @@ object PipelineQueries {
     // Σ gap·n / N IS the ECE. frac_pos tells calibration DIRECTION;
     // this card prices it.
     "quality_ece" -> ((s, dir) => {
-      val d = docsTok(s, dir)
-      val w = ModelCache.cached(s"$dir|lr|en|i=${ClassifierOps.DefaultIters}") {
-        ClassifierOps.trainLogistic(d, ClassifierOps.features(col("toks")),
-          col("lang") === "en")
-      }
-      val mxs = ClassifierOps.microFeatures(col("toks"))
-      val scored = d.filter(ClassifierOps.featurable(col("toks")))
-        .select(ClassifierOps.marginFixed(w, mxs).as("logit_fp"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
+      val scored = lrScored(s, dir)
       val prob = round(lit(1.0) / (lit(1.0) +
         exp(col("logit_fp").cast("double") / lit(-1000000.0))), 6)
       val range = scored.agg(min(col("logit_fp")).as("mn"),
@@ -3711,15 +3631,7 @@ object PipelineQueries {
     // sum in DECIMAL (order-independent); probabilities clamp to
     // [1e-6, 1-1e-6] so a saturated sigmoid cannot emit ln(0).
     "quality_brier" -> ((s, dir) => {
-      val d = docsTok(s, dir)
-      val w = ModelCache.cached(s"$dir|lr|en|i=${ClassifierOps.DefaultIters}") {
-        ClassifierOps.trainLogistic(d, ClassifierOps.features(col("toks")),
-          col("lang") === "en")
-      }
-      val mxs = ClassifierOps.microFeatures(col("toks"))
-      val scored = d.filter(ClassifierOps.featurable(col("toks")))
-        .select(ClassifierOps.marginFixed(w, mxs).as("logit_fp"),
-          when(col("lang") === "en", 1L).otherwise(0L).as("y"))
+      val scored = lrScored(s, dir)
       val p = round(lit(1.0) / (lit(1.0) +
         exp(col("logit_fp").cast("double") / lit(-1000000.0))), 6)
       val pc = least(greatest(p, lit(0.000001)), lit(0.999999))

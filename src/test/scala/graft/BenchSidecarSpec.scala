@@ -40,13 +40,4 @@ class BenchSidecarSpec extends AnyFunSuite {
     assert(math.max(a, b) / math.min(a, b) < 3.0,
       s"probe not repeatable on this host right now: $a vs $b")
   }
-
-  test("an eviction interval below 1 fails by name before any session starts") {
-    assert(Bench.evictInterval(None).isEmpty)
-    assert(Bench.evictInterval(Some("3")).contains(3))
-    for (bad <- Seq("0", "-1")) {
-      val e = intercept[IllegalArgumentException](Bench.evictInterval(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_EVICT must be >= 1"), e.getMessage)
-    }
-  }
 }

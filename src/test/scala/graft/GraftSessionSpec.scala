@@ -106,4 +106,32 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(loops.isEmpty,
       s"expand in-block pairs with BlockPairs, not a slice loop, at: ${loops.mkString(", ")}")
   }
+
+  test("no source under queries/ memoizes with .cache() or .persist(") {
+    // a plan-keyed cache serves a stale relation after its input is
+    // rewritten in place, since the plan does not change; a shared or
+    // reused frame is a ModelCache.frame, keyed by its input's content
+    val memo = "\\.cache\\(\\)|\\.persist\\(".r
+    val hits = sources.filter(_.toString.contains("/graft/queries/")).flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if !line.trim.startsWith("//") && !line.trim.startsWith("*") &&
+            memo.findFirstIn(line).isDefined => s"$p:${i + 1}"
+      }
+    }
+    assert(sources.exists(_.toString.contains("/graft/queries/")))
+    assert(hits.isEmpty,
+      s"memoize with ModelCache.frame, not a plan-keyed cache, at: ${hits.mkString(", ")}")
+  }
+
+  test("no main source builds a ModelCache key as a string") {
+    // a hand-built key (the data dir's path joined with a name) names a
+    // location, not content: the memo then serves a stale artifact after
+    // the table is rewritten. The name is a literal; hyperparameters are
+    // separate arguments; the inputs are frames.
+    val built = callsWhere("ModelCache\\.\\w+")(_.exists(a =>
+      a.startsWith("s\"") || a.startsWith("f\"") || a.startsWith("raw\"") ||
+        a.contains("\" +") || a.contains("+ \"")))
+    assert(built.isEmpty,
+      s"pass a literal name and input frames, not a string key, at: ${built.mkString(", ")}")
+  }
 }

@@ -16,6 +16,31 @@ class PlanAuditSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
 
+  /** [[plan]] plus the plan of every memo frame the query builds. A
+    * memo is materialized by `localCheckpoint`, so the query's own plan
+    * reads it as `Scan ExistingRDD` and the corpus work runs in the
+    * memo's build. The memos are dropped first, so every build the
+    * query needs runs here and is audited with it.
+    */
+  private def planWithBuilds(name: String): String = {
+    val builds = scala.collection.mutable.ArrayBuffer.empty[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") builds.synchronized { builds += qe.analyzed }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    graft.ops.ModelCache.clear()
+    spark.listenerManager.register(listener)
+    try {
+      val p = plan(name)
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      (builds.map(org.apache.spark.sql.graft.TestPlans.explain(spark, _)) :+ p).mkString("\n")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   private def countOf(hay: String, needle: String): Int =
     needle.r.findAllMatchIn(hay).length
 
@@ -44,7 +69,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("dedup_minhash_pairs scans the corpus once") {
-    val p = plan("dedup_minhash_pairs")
+    val p = planWithBuilds("dedup_minhash_pairs")
     // the documents table appears in exactly one scan — whether read
     // directly or inside the cached bands table's build plan — never as
     // two planned copies of the shingle pipeline (the self-join shape)
@@ -125,12 +150,12 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("pipeline_index: one corpus scan, cached vectors reused, broadcast queries, pushed top-k") {
-    val p = plan("pipeline_index")
+    val p = planWithBuilds("pipeline_index")
     assert(countOf(p, "Scan parquet") >= 1)
-    // the chunk-vector table is cached and consumed by both the corpus
-    // and query sides (other suites may have warmed further caches, so
-    // bound below, and the corpus parquet appears in at most one scan)
-    assert(countOf(p, "\\(\\d+\\) InMemoryTableScan") >= 2, p.linesIterator.take(30).mkString("\n"))
+    // the chunk-vector table is a memo frame consumed by both the
+    // corpus and query sides (bound below, and the corpus parquet
+    // appears in at most one scan)
+    assert(countOf(p, "\\(\\d+\\) Scan ExistingRDD") >= 2, p.linesIterator.take(30).mkString("\n"))
     assert(countOf(p, "InMemoryFileIndex \\[file:[^\\]]*documents") <= 1)
     assert(p.contains("BroadcastExchange"))
     // per-partition top-k runs BEFORE the final per-query shuffle
@@ -148,7 +173,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("text_bigrams plans the global top-20 as TakeOrderedAndProject") {
     // orderBy+limit → per-partition bounded heaps + driver merge of K·20
     // rows; a global row_number window would sort everything in ONE task
-    val p = plan("text_bigrams")
+    val p = planWithBuilds("text_bigrams")
     assert(p.contains("TakeOrderedAndProject"), p.linesIterator.take(20).mkString("\n"))
     assert(!p.contains("Window"), "top-20 must not plan a global window")
   }
@@ -267,7 +292,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("text_tfidf_topterms: dims broadcast, top-3 pruned by WindowGroupLimit") {
-    val p = plan("text_tfidf_topterms")
+    val p = planWithBuilds("text_tfidf_topterms")
     // df and n_docs ride the broadcast side; the corpus is never
     // shuffled for a join, and rk<=3 prunes before the final sort
     assert(!p.contains("SortMergeJoin"), p.linesIterator.take(30).mkString("\n"))
@@ -276,12 +301,12 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("text_bm25_topk: term filter before aggregation, top-k via TakeOrderedAndProject") {
-    val p = plan("text_bm25_topk")
+    val p = planWithBuilds("text_bm25_topk")
     // the query-term filter kills non-matching tokens straight off the
     // explode (before any exchange), the result is served from the
-    // shared multi-query cache, and the global top-k plans as
+    // shared multi-query memo, and the global top-k plans as
     // TakeOrderedAndProject (per-partition heaps), never a full sort
-    assert(p.contains("InMemoryTableScan"), "bm25 serves from the shared cached pass")
+    assert(p.contains("Scan ExistingRDD"), "bm25 serves from the shared memoized pass")
     assert(p.contains("TakeOrderedAndProject"), p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("SortMergeJoin"))
   }
@@ -325,7 +350,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("pipeline_full: the composed DAG plans clean — no nested-loop joins, no cartesian") {
-    val p = plan("pipeline_full")
+    val p = planWithBuilds("pipeline_full")
     // the decontamination anti-join and dedup semi-join must stay
     // equi-joins; a NOT-IN-style rewrite degenerating to a nested loop
     // would be quadratic at 100 TB
@@ -352,7 +377,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("dedup_paraphrase: embeddings once + documents once (cached pairs/sets)") {
-    val p = plan("dedup_paraphrase")
+    val p = planWithBuilds("dedup_paraphrase")
     assert(corpusScans(p) == 2, p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("CartesianProduct"))
   }
@@ -411,7 +436,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("weak_kappa: every pair's statistics in ONE aggregation — no joins") {
-    val p = plan("weak_kappa")
+    val p = planWithBuilds("weak_kappa")
     assert(!p.contains("Join"), p.linesIterator.take(20).mkString("\n"))
     // one exchange to the 1-row global aggregate; the 3 pair branches
     // read it via union, never re-scan the corpus per pair
@@ -439,7 +464,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("text_winnow: grams exploded once, hashed once, one doc-keyed window") {
-    val p = plan("text_winnow")
+    val p = planWithBuilds("text_winnow")
     // the CollapseProject lesson, pinned: ONE Generate (the posexplode)
     // and the md5 only in its post-explode projection — the in-row form
     // this replaced planned the hash array into every window element
@@ -451,7 +476,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("sim_sparse_cosine: the dump serves the checkpointed shared surface") {
     val p = plan("sim_sparse_cosine")
-    // r15: the dump and sim_sparse_topk read the session-memoized,
+    // the dump and sim_sparse_topk read the memoized,
     // localCheckpoint'd pair surface — the serving plan is a bare
     // artifact scan (zero corpus reads, zero joins); the tf/df/weight
     // chain runs once inside the memo's build (its shape is pinned by
@@ -473,7 +498,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("dedup_cdc_chunks: the chunk rollup reuses the window's doc partitioning") {
-    val p = plan("dedup_cdc_chunks")
+    val p = planWithBuilds("dedup_cdc_chunks")
     // hash(doc_id) from the cut-count window satisfies the
     // (doc_id, chunk_id) aggregation's clustering, so the whole chain is
     // TWO exchanges: to the doc key, then to the fingerprint rollup
@@ -513,7 +538,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("profile_hll_registers: one scan, one shuffle, zero joins") {
-    val p = plan("profile_hll_registers")
+    val p = planWithBuilds("profile_hll_registers")
     assert(countOf(p, "\\(\\d+\\) Scan parquet") == 1,
       p.linesIterator.take(25).mkString("\n"))
     assert(countOf(p, "\\(\\d+\\) Exchange") == 1,
@@ -539,7 +564,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("graph_linkpred: top-k via TakeOrderedAndProject, degree dims broadcast") {
-    val p = plan("graph_linkpred")
+    val p = planWithBuilds("graph_linkpred")
     assert(p.contains("TakeOrderedAndProject"),
       p.linesIterator.take(30).mkString("\n"))
     assert(countOf(p, "\\(\\d+\\) BroadcastHashJoin") >= 2,
@@ -580,7 +605,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("quality_pr_curve: rank and prefix-sum ride the bin partitioning") {
-    val p = plan("quality_pr_curve")
+    val p = planWithBuilds("quality_pr_curve")
     assert(countOf(p, "hashpartitioning\\(__bin") >= 2,
       p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("rangepartitioning"), "no global sort of the data")
@@ -635,8 +660,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // the per-hop localCheckpoint cadence means the frontier loop's
     // joins all ran at build time; the plan handed back is a single
     // materialized RDD scan — no union chain, no retained joins, no
-    // exchange. (Drift here = someone removed the checkpoint and
-    // reintroduced the maxHops-deep lineage the r8 verdict flagged.)
+    // exchange. (Drift here = the checkpoint is gone and the lineage
+    // grows maxHops deep again.)
     val p = plan("graph_bfs_hops")
     assert(p.contains("Scan ExistingRDD"), p.linesIterator.take(15).mkString("\n"))
     assert(!p.contains("Join") && countOf(p, "\\(\\d+\\) Exchange") == 0,
@@ -644,10 +669,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("dedup_embedding_lsh: one sig scan, 1-row count broadcast, three shuffles") {
-    // since r13 the QUERY hands back the session-memoized
-    // materialized pair artifact (three consumers, one pair pass — the
-    // r12 bench measured the recall card re-running this pass every
-    // invocation), so its own plan is one flat checkpointed scan...
+    // the QUERY hands back the memoized materialized pair artifact
+    // (three consumers share one pair pass instead of the recall card
+    // re-running it every invocation), so its own plan is one flat
+    // checkpointed scan...
     val q = plan("dedup_embedding_lsh")
     assert(q.contains("Scan ExistingRDD"), q.linesIterator.take(10).mkString("\n"))
     assert(!q.contains("Join") && countOf(q, "\\(\\d+\\) Exchange") == 0,
@@ -658,8 +683,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // broadcast into the adaptive prefix width, and the only exchanges
     // are count-agg + bucket-collect + per-pair dedup. A SortMergeJoin
     // or a data-sized nested-loop here would mean the bucketing
-    // collapsed back into a corpus self-join. Since r12 the signature
-    // stage is the session-shared CACHED 32-table frame (this build
+    // collapsed back into a corpus self-join. The signature stage is
+    // the shared CACHED 32-table frame (this build
     // slices its first 8 dot columns), so the sig scan appears as an
     // InMemoryTableScan whose build plan holds the one parquet scan.
     val p = graft.ops.SimilarityOps.nearDupPairsLshFrom(
@@ -742,7 +767,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // per-gram source sets collapse via ONE gram-keyed aggregation;
     // pairs explode in-row (Generate) bounded by |sources|²; the only
     // other shuffle is the final (source_a, source_b) rollup
-    val p = plan("profile_source_overlap")
+    val p = planWithBuilds("profile_source_overlap")
     assert(!p.contains("Join"), p.linesIterator.take(25).mkString("\n"))
     assert(countOf(p, "\\(\\d+\\) Exchange") == 2,
       p.linesIterator.take(25).mkString("\n"))
@@ -752,7 +777,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // pass 1 scores the seed query, pass 2 rescans with the expanded
     // term list; the feedback mining is semi-join-bounded and every
     // join (term semi-joins, avgdl dim, expansion terms) is broadcast;
-    // per-doc top-k rides WindowGroupLimit. r17: all passes read the
+    // per-doc top-k rides WindowGroupLimit. All passes read the
     // per-invocation tokenized localCheckpoint projection — documents
     // is FileScanned exactly once (at the checkpoint build, outside
     // this final plan), so the returned plan carries ONLY checkpoint
@@ -767,7 +792,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ret_passage_topk: tf checkpoint shared — stats is the only corpus scan") {
-    // r17: tf (the query-term-filtered per-chunk posting aggregate) is
+    // tf (the query-term-filtered per-chunk posting aggregate) is
     // consumed by both the df pass and the scoring pass; as a plain val
     // each reference re-expanded the whole chunk+tokenize subtree, so
     // the operator paid THREE corpus chunk passes. With tf
@@ -790,7 +815,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the candidate generator groups by fp (df cap filters boilerplate
     // BEFORE the expansion) and explodes pairs in-row — the pair count
     // is bounded per fingerprint and the corpus is scanned once
-    val p = plan("dedup_winnow_pairs")
+    val p = planWithBuilds("dedup_winnow_pairs")
     assert(!p.contains("Join"), p.linesIterator.take(25).mkString("\n"))
     assert(countOf(p, "documents\\.parquet\\]") == 1,
       p.linesIterator.take(25).mkString("\n"))
@@ -812,7 +837,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("graph_pagerank_directed: returned plan is a flat checkpointed scan") {
-    // r10: each iterate localCheckpoints (contribs AND the dangling
+    // each iterate localCheckpoints (contribs AND the dangling
     // mass both read it — the eager checkpoint stops the 2-way
     // reference doubling evaluation per iteration), so the returned
     // plan is the materialized final vector — no join chain retained
@@ -896,7 +921,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("eval_rouge: co-keyed equi-joins only, never a gram cross product") {
-    val p = plan("eval_rouge")
+    val p = planWithBuilds("eval_rouge")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       p.linesIterator.take(30).mkString("\n"))
@@ -939,7 +964,7 @@ class PlanAuditSpec extends AnyFunSuite {
   test("eval_rouge_l: the LCS DP stays in-row — exactly the pair join's shuffles") {
     // one doc-keyed self-join builds the pairs; the DP itself adds no
     // exchange, no extra scan of documents beyond the two pair sides
-    val p = plan("eval_rouge_l")
+    val p = planWithBuilds("eval_rouge_l")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       p.linesIterator.take(25).mkString("\n"))

@@ -63,6 +63,15 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(err.contains("[produce] q_no_build failed") && err.contains("no frame"), err)
   }
 
+  test("an overflow reports -1 with its top frames, which name the recursion") {
+    def recurse(n: Long): Long = recurse(n + 1) + 1
+    val (secs, err) = capturingErr(SparkEntry.produce("q_deep",
+      { recurse(0); words }, SparkEntry.noop))
+    assert(secs == -1.0)
+    assert(err.contains("[produce] q_deep failed: java.lang.StackOverflowError at ") &&
+      err.contains("recurse"), err)
+  }
+
   test("produce into the parquet sink writes the frame's rows and returns its seconds") {
     val df = words.filter(col("id") % 7 === 0)
     val dir = Files.createTempDirectory("graft-produce").resolve("q").toString

@@ -244,7 +244,7 @@ class NativeFoldEquivalenceSpec extends AnyFunSuite {
     "(no false negatives, ground truth)") {
     // ground-truth pin for candidate-volume tightenings (the PPJoin
     // indexing-prefix filter removes ZERO candidates — it is provably
-    // subsumed by the positional bound, see OPTIMIZATION_r17.md). Any
+    // subsumed by the positional bound, see archive/OPTIMIZATION_r17.md). Any
     // candidate pruning must keep this exact equality on clumped
     // corpora at two thresholds.
     Seq(0.5, 0.7).foreach { t =>
